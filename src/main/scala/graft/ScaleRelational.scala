@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * ranges, then times the join/agg family against the linear fit
   * `t(sf) = fixed + rate·sf` derived from the committed sf0.01/sf0.1
   * artifacts. The corpus surface has its 200×-sf0.1 evidence in
-  * `ScaleDemo`; this closes the same gap for the relational family,
+  * SCALE.md (measured by a since-retired main, reproducible from
+  * commit 53c0810); this closes the same gap for the relational family,
   * where the crossover claim was extrapolated from two points.
   *
   * Key shifting preserves every join's semantics at k× the data:

@@ -38,7 +38,11 @@ object Cluster {
     * quality signal (sum over clusters = the k-means inertia).
     */
   def kmeansAssign(s: SparkSession, emb: DataFrame, k: Int,
-                   iters: Int = 5): DataFrame = {
+                   iters: Int = 5): DataFrame =
+    kmeansAssign(s, emb, k, iters, loop = false)
+
+  private[graft] def kmeansAssign(s: SparkSession, emb: DataFrame, k: Int,
+                                  iters: Int, loop: Boolean): DataFrame = {
     // ONE persisted vector relation feeds both the Lloyd train and the
     // final assignment (r18 fixed-cost pass: the assignment previously
     // re-derived scan + cast + repartition that the train had already
@@ -48,7 +52,7 @@ object Cluster {
     val e = vectors(s, emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val centroids = kmeansCentroidsOn(e, k, iters)
+      val centroids = kmeansCentroidsOn(e, k, iters, loop = loop)
       e.select(col("vec_id"), col("v"),
           assignExpr(s, centroids).getField("cid").as("cluster_id"),
           assignExpr(s, centroids).getField("d2").as("vd2"))
@@ -118,14 +122,20 @@ object Cluster {
     */
   def kmeansCentroids(s: SparkSession, emb: DataFrame, k: Int, iters: Int,
                       init: Option[Array[Array[Double]]])
-      : Array[Array[Double]] = {
+      : Array[Array[Double]] =
+    kmeansCentroids(s, emb, k, iters, init, loop = false)
+
+  private[graft] def kmeansCentroids(s: SparkSession, emb: DataFrame, k: Int,
+                                     iters: Int,
+                                     init: Option[Array[Array[Double]]],
+                                     loop: Boolean): Array[Array[Double]] = {
     // persist across the Lloyd loop: every iteration re-reads the
     // vector relation otherwise (scan + cast per round). Standard
     // practice for iterative algorithms; released before returning.
     val e = vectors(s, emb).persist()
     // finally, not straight-line: a mid-loop failure (executor loss,
     // bad cast) must not leave the vector blocks pinned on the session
-    try kmeansCentroidsOn(e, k, iters, init)
+    try kmeansCentroidsOn(e, k, iters, init, loop)
     finally e.unpersist(blocking = false)
   }
 
@@ -136,7 +146,8 @@ object Cluster {
     * instead of re-deriving scan + cast + repartition per consumer.
     */
   private[ops] def kmeansCentroidsOn(e: DataFrame, k: Int, iters: Int,
-                                     init: Option[Array[Array[Double]]] = None)
+                                     init: Option[Array[Array[Double]]] = None,
+                                     loop: Boolean = false)
       : Array[Array[Double]] = {
     require(k >= 1, s"k must be positive, got $k")
     require(iters >= 1, s"iters must be positive, got $iters")
@@ -178,15 +189,9 @@ object Cluster {
     // bit-exactly), so both paths return identical matrices —
     // KmeansChainSpec pins the bit-parity. A WARM start keeps the
     // driver loop: its typical payoff IS the early exit after 1–2
-    // rounds, worth more than the chained job saving.
-    // SPARK_GRAFT_KMEANS_CHAIN=off (env) or spark.graft.kmeansChain=off
-    // (session conf — the spec-testable spelling) forces the legacy
-    // loop: the A/B hatch KmeansChainSpec drives for bit-parity.
-    val chainOff = sys.env.get("SPARK_GRAFT_KMEANS_CHAIN")
-      .exists(_.equalsIgnoreCase("off")) ||
-      s.conf.getOption("spark.graft.kmeansChain")
-        .exists(_.equalsIgnoreCase("off"))
-    if (init.isEmpty && !chainOff) return chainedCentroids(healthy, k, iters)
+    // rounds, worth more than the chained job saving. `loop` forces
+    // the loop on a cold start: KmeansChainSpec's bit-parity reference.
+    if (init.isEmpty && !loop) return chainedCentroids(healthy, k, iters)
     var centroids: Array[Array[Double]] = init.getOrElse(
       healthy.orderBy("vec_id").limit(k)
         .collect().map(_.getSeq[Double](1).toArray))

@@ -1337,10 +1337,11 @@ object NearDup {
     * can never race a caller's concurrent queries on the shared
     * session — the footgun the conf-mutation spelling documented is
     * deleted rather than documented. Getting the isolation to parity
-    * took three measured fixes (graft.CcAb, 1M-doc ngram pair set,
-    * interleaved min-of-3 per arm): the naive `createDataFrame(
-    * edges.rdd, schema)` handoff re-encoded every edge per scan
-    * (+0.9 s/call); a stats-less `LogicalRDD` degraded the loop's
+    * took three measured fixes (NOTES_r19 #5: the CC-alone A/B over a
+    * 1M-doc ngram pair set, interleaved min-of-3 per arm; its main is
+    * retired, reproducible from commit 53c0810): the naive
+    * `createDataFrame(edges.rdd, schema)` handoff re-encoded every
+    * edge per scan (+0.9 s/call); a stats-less `LogicalRDD` degraded the loop's
     * broadcast joins to sort-merge (round job 2×); and a fresh
     * `newSession()` per call re-paid first-analysis warmup
     * (+0.3–0.5 s). With the internal-row bridge carrying
@@ -1355,41 +1356,29 @@ object NearDup {
     val sess = edges.sparkSession
     val defaultParts = sess.sessionState.conf.numShufflePartitions
     val parts = math.max(1L, math.min(edgeCount / 65536 + 1, defaultParts.toLong))
-    locally {
-      val ccDebug = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-      def ph[A](name: String)(f: => A): A = {
-        if (!ccDebug) f else {
-          val t0 = System.nanoTime()
-          val r = f
-          Console.err.println(
-            f"cc_phase $name ${(System.nanoTime() - t0) / 1e9}%.3f")
-          r
-        }
-      }
-      // the isolated-child machinery (cached child, conf copy-AND-UNDO,
-      // monitor held for the loop so concurrent CC calls serialize
-      // their phases) lives in [[SessionIso]] since r20 — the chained
-      // k-means trainer shares it. The r20 ADVICE fix rides there: a
-      // key the caller set before an earlier CC call and later unset
-      // on the parent is unset on the reused child too, so the loop
-      // can never plan under drifted semantics.
-      SessionIso.withChild(sess,
-        Map("spark.sql.shuffle.partitions" -> parts.toString)) { loopSess =>
-        // internal-row handoff with stats + partitioning preserved —
-        // NOT `createDataFrame(edges.rdd, schema)`: the external-Row
-        // spelling deserializes + re-encodes every edge per scan
-        // (measured +0.9 s per CC call, graft.CcAb), and a stats-less
-        // handoff degrades the loop's broadcast joins to sort-merge
-        // (measured: round job doubled). See the bridge's scaladoc.
-        import org.apache.spark.sql.graftbridge.InternalRows
-        val loopEdges = ph("bridge")(InternalRows.rebind(loopSess, edges))
-        val out = ph("ccLoop")(ccLoop(loopEdges, maxIters))
-        // re-bind the (checkpointed or lazily-planned) result to the
-        // caller's session: the RDD lineage was compiled under the
-        // child's conf, so downstream consumers can join it with
-        // parent-session frames while the loop's sizing stays baked in
-        InternalRows.rebind(sess, out)
-      }
+    // the isolated-child machinery (cached child, conf copy-AND-UNDO,
+    // monitor held for the loop so concurrent CC calls serialize
+    // their phases) lives in [[SessionIso]] since r20 — the chained
+    // k-means trainer shares it. The r20 ADVICE fix rides there: a
+    // key the caller set before an earlier CC call and later unset
+    // on the parent is unset on the reused child too, so the loop
+    // can never plan under drifted semantics.
+    SessionIso.withChild(sess,
+      Map("spark.sql.shuffle.partitions" -> parts.toString)) { loopSess =>
+      // internal-row handoff with stats + partitioning preserved —
+      // NOT `createDataFrame(edges.rdd, schema)`: the external-Row
+      // spelling deserializes + re-encodes every edge per scan
+      // (measured +0.9 s per CC call, NOTES_r19 #5), and a stats-less
+      // handoff degrades the loop's broadcast joins to sort-merge
+      // (measured: round job doubled). See the bridge's scaladoc.
+      import org.apache.spark.sql.graftbridge.InternalRows
+      val loopEdges = InternalRows.rebind(loopSess, edges)
+      val out = ccLoop(loopEdges, maxIters)
+      // re-bind the (checkpointed or lazily-planned) result to the
+      // caller's session: the RDD lineage was compiled under the
+      // child's conf, so downstream consumers can join it with
+      // parent-session frames while the loop's sizing stays baked in
+      InternalRows.rebind(sess, out)
     }
   }
 
@@ -1422,13 +1411,11 @@ object NearDup {
       var labels: DataFrame = init
       var converged = false
       var iter = 0
-      val debug = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
       while (!converged && iter < maxIters) {
         val obs = org.apache.spark.sql.Observation()
         val neighborMin = edges.join(labels,
             edges("doc_b") === labels("doc_id"))
           .groupBy(edges("doc_a").as("nbr_of")).agg(min(col("label")).as("nmin"))
-        val t0 = if (debug) System.nanoTime() else 0L
         val next = labels.join(neighborMin,
             labels("doc_id") === col("nbr_of"), "left")
           .select(col("doc_id"), col("label").as("old_label"),
@@ -1439,18 +1426,9 @@ object NearDup {
             lit(0L)).as("changed"))
           .select(col("doc_id"), col("label"))
           .localCheckpoint()
-        val t1 = if (debug) System.nanoTime() else 0L
         if (iter == 0) { init.unpersist(blocking = false); initLive = None }
         labels = next
         converged = obs.get("changed").asInstanceOf[Long] == 0L
-        if (debug) {
-          val t2 = System.nanoTime()
-          // separates the checkpoint job (t1-t0) from the wait for the
-          // listener bus to deliver the observation (t2-t1): in a long
-          // bench session a lagging bus shows up ONLY in the second term
-          Console.err.println(
-            f"cc_round iter=$iter job=${(t1 - t0) / 1e9}%.3f obs_wait=${(t2 - t1) / 1e9}%.3f")
-        }
         iter += 1
       }
       if (converged)

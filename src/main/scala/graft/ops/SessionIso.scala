@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * cached blocks but owns its conf), extracted in r20 so the chained
   * k-means trainer can use the same pattern. A fresh `newSession()`
   * per call re-pays first-analysis session-state warmup (~0.3–0.5 s
-  * measured, graft.CcAb), hence the cache; WeakHashMap so a discarded
+  * measured, NOTES_r19 #5), hence the cache; WeakHashMap so a discarded
   * caller session releases its child.
   *
   * Conf contract (r20 ADVICE): each use copies the caller's CURRENT

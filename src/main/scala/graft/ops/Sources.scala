@@ -1,6 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, SubqueryAlias, Union}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{expr, input_file_name}
 import org.apache.spark.sql.types._
 
@@ -216,11 +220,25 @@ object Sources {
     * already provide — pure waste at 100 TB. The gate makes the
     * spread a no-op exactly there: splits >= cores -> `df` passes
     * through untouched, NO exchange in the plan.
+    *
+    * Only a SCAN-ROOTED input (Project / Filter / Union / aliases over
+    * file, DataSource V2, RDD or local relations) is counted: building
+    * the RDD of an aggregate or join runs jobs under AQE, so such an
+    * input passes through untouched. Split counts are memoized per session like
+    * the relation cache: call [[evictCache]] when a dir's files change.
     */
   def spreadIfNarrow(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (scanSplits(df) >= cores) df
+    if (!scanRooted(df.queryExecution.analyzed) || scanSplits(df) >= cores) df
     else df.repartition(cores)
+  }
+
+  private def scanRooted(p: LogicalPlan): Boolean = p match {
+    case _: Project | _: Filter | _: Union | _: SubqueryAlias =>
+      p.children.forall(scanRooted)
+    case _: LogicalRelation | _: LogicalRDD | _: LocalRelation |
+         _: DataSourceV2Relation => true
+    case _ => false
   }
 
   // One relation per (session, dir, table) — the registered-catalog

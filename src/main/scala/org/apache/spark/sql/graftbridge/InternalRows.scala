@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StructType
   * already-compiled frame to another session WITHOUT the
   * `Dataset.rdd` → `createDataFrame` round-trip, which deserializes
   * every row to an external `Row` and re-encodes it back on every
-  * scan. Measured on the CC loop (graft.CcAb, 1M-doc pair set): the
+  * scan. Measured on the CC loop (NOTES_r19 #5, 1M-doc pair set): the
   * external-Row handoff cost ~+0.9 s per call on a ~100k-edge graph.
   *
   * [[rebind]] additionally carries the source plan's `Statistics`

@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
   * compiles the seed + every iteration into ONE Spark job via the
   * column-matrix argmin and SQL-re-nested means. This suite pins the
   * contract: bit-parity with the legacy per-round driver loop (which
-  * stays reachable via the spark.graft.kmeansChain=off hatch), the
+  * warm starts still use, reached here on a cold start through the
+  * package-private `loop` parameter), the
   * single-job claim, and the loud failure modes (empty corpus, ragged
   * dims, wrong-dimension warm starts).
   */
@@ -16,10 +17,9 @@ class KmeansChainSpec extends SparkSpec {
 
   private def embeddings = ops.Sources.table(spark, sf, "embeddings")
 
-  private def legacy[A](f: => A): A = {
-    spark.conf.set("spark.graft.kmeansChain", "off")
-    try f finally spark.conf.unset("spark.graft.kmeansChain")
-  }
+  private def legacy(df: org.apache.spark.sql.DataFrame, k: Int,
+                     iters: Int): Array[Array[Double]] =
+    ops.Cluster.kmeansCentroids(spark, df, k, iters, None, loop = true)
 
   private def assertSameCentroids(a: Array[Array[Double]],
                                   b: Array[Array[Double]]): Unit = {
@@ -34,8 +34,7 @@ class KmeansChainSpec extends SparkSpec {
   test("chained centroids are bit-identical to the legacy driver loop" +
       " on the fixture (k=8, iters=3)") {
     val chained = ops.Cluster.kmeansCentroids(spark, embeddings, 8, 3)
-    val loop = legacy(
-      ops.Cluster.kmeansCentroids(spark, embeddings, 8, 3))
+    val loop = legacy(embeddings, 8, 3)
     assertSameCentroids(chained, loop)
   }
 
@@ -51,15 +50,14 @@ class KmeansChainSpec extends SparkSpec {
       (20L, Array(9.9, 9.9)))
     val df = rows.toDF("vec_id", "embedding")
     val chained = ops.Cluster.kmeansCentroids(spark, df, 3, 4)
-    val loop = legacy(ops.Cluster.kmeansCentroids(spark, df, 3, 4))
+    val loop = legacy(df, 3, 4)
     assertSameCentroids(chained, loop)
   }
 
   test("bit-parity across a SEGMENT boundary (iters=7 > chainSegment=5" +
       " — the plan-tree-doubling guard re-seeds from literals)") {
     val chained = ops.Cluster.kmeansCentroids(spark, embeddings, 6, 7)
-    val loop = legacy(
-      ops.Cluster.kmeansCentroids(spark, embeddings, 6, 7))
+    val loop = legacy(embeddings, 6, 7)
     assertSameCentroids(chained, loop)
   }
 
@@ -72,7 +70,7 @@ class KmeansChainSpec extends SparkSpec {
       (6L, Array(Double.NaN, 1.0)), (7L, Array(0.0, 0.0)))
     val df = rows.toDF("vec_id", "embedding")
     val chained = ops.Cluster.kmeansCentroids(spark, df, 2, 3)
-    val loop = legacy(ops.Cluster.kmeansCentroids(spark, df, 2, 3))
+    val loop = legacy(df, 2, 3)
     assertSameCentroids(chained, loop)
   }
 
@@ -82,7 +80,7 @@ class KmeansChainSpec extends SparkSpec {
     val df = Seq((1L, Array(1.0, 2.0)), (2L, Array(3.0, 4.0)))
       .toDF("vec_id", "embedding")
     val chained = ops.Cluster.kmeansCentroids(spark, df, 5, 2)
-    val loop = legacy(ops.Cluster.kmeansCentroids(spark, df, 5, 2))
+    val loop = legacy(df, 5, 2)
     assert(chained.length == 2)
     assertSameCentroids(chained, loop)
   }
@@ -178,11 +176,9 @@ class KmeansChainSpec extends SparkSpec {
     val chained = ops.Cluster.kmeansAssign(spark, embeddings, 8, 3)
       .select("vec_id", "cluster_id", "dist2").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
-    val loop = legacy(
-      ops.Cluster.kmeansAssign(spark, embeddings, 8, 3)
-        .select("vec_id", "cluster_id", "dist2").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-        .sortBy(_._1))
+    val loop = ops.Cluster.kmeansAssign(spark, embeddings, 8, 3, loop = true)
+      .select("vec_id", "cluster_id", "dist2").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
     assert(chained === loop)
   }
 }
