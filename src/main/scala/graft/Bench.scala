@@ -6,60 +6,66 @@ object Bench {
     run(session(sfDir), sfDir)
   }
 
+  /** The bench session's SQL confs — also the canonical session
+    * ExplainDump and PlanSnap record plans under. Two deliberate
+    * deviations from the engine defaults (Verify runs the stock
+    * config), both measured at sf0.1 (see README "bench recipe" +
+    * SCALE.md):
+    *  - AQE off: its per-exchange materialize-and-replan cycle buys
+    *    nothing at this scale (fixed partitions, sub-second stages)
+    *    and costs driver latency on every shuffle. Same static plans
+    *    Verify proved correct, minus runtime re-planning.
+    *    58.6 s -> 38.0 s on the full 147-query pass.
+    *  - 8 shuffle partitions: the static equivalent of what AQE
+    *    coalescing picks for a few-MB shuffle (32 tasks of <25k rows
+    *    each pay more per-task launch than they win in parallelism;
+    *    scans still split by file). 38.0 s -> 32.4 s. A production
+    *    deployment sizes this to data volume — that sizing IS the
+    *    knob, not a bench trick. r6 swept the neighborhood under one
+    *    load window: 4 -> 30.5 s, 8 -> 31.1 s, 16 -> 32.5 s; the
+    *    r12 re-sweep under noop forcing (full materialization)
+    *    confirmed the shape: 8 -> 51.4 oracle-subset (min-of-3),
+    *    single passes 16 -> 63.2, 32 -> 81.3. 8 stays.
+    *    r22 re-audit of the static 8 at the sf1 rung (heavy-subset
+    *    min-of-pairs, 32 cores): parts=8 total 196.1 s, parts=32
+    *    144.0 (sim_knn_bucketed_full 1.76x BUT
+    *    dedup_ngram/dedup_survivor 0.44x — their surviving pair sets
+    *    are small and 32-wide shuffles are pure overhead), AQE+32
+    *    154.2 (re-planning latency on every exchange). No
+    *    session-wide constant wins both regimes, so the width fix
+    *    lives in the OPERATOR that needs it (fewKeySaltedJoin sizes
+    *    its salted exchange to max(conf, cores)) and the session
+    *    default stays 8 — best observed on everything else at BOTH
+    *    rungs, and the committed numbers stay methodology-identical
+    *    across rounds.
+    *  - UTC, like Verify: events.ts loads as TIMESTAMP_NTZ on the µs
+    *    fixtures and the cast to TimestampType is
+    *    session-timezone-dependent — an unpinned bench on a non-UTC
+    *    host would time DIFFERENT row sets than Verify verifies.
+    */
+  val defaultConfs: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC")
+
   /** The bench session — confs, fixture schema check, table warm-up —
     * shared with [[ProfileFixed]] so a probe measures what Bench times. */
   def session(sfDir: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Bench-session tuning (engine defaults unchanged; Verify runs the
-    // stock config). Two deliberate deviations, both measured at sf0.1
-    // (see README "bench recipe" + SCALE.md):
-    //  - AQE off: its per-exchange materialize-and-replan cycle buys
-    //    nothing at this scale (fixed partitions, sub-second stages)
-    //    and costs driver latency on every shuffle. Same static plans
-    //    Verify proved correct, minus runtime re-planning.
-    //    58.6 s -> 38.0 s on the full 147-query pass.
-    //  - 8 shuffle partitions: the static equivalent of what AQE
-    //    coalescing picks for a few-MB shuffle (32 tasks of <25k rows
-    //    each pay more per-task launch than they win in parallelism;
-    //    scans still split by file). 38.0 s -> 32.4 s. A production
-    //    deployment sizes this to data volume — that sizing IS the
-    //    knob, not a bench trick. r6 swept the neighborhood under one
-    //    load window: 4 -> 30.5 s, 8 -> 31.1 s, 16 -> 32.5 s; the
-    //    r12 re-sweep under noop forcing (full materialization)
-    //    confirmed the shape: 8 -> 51.4 oracle-subset (min-of-3),
-    //    single passes 16 -> 63.2, 32 -> 81.3. 8 stays.
-    // Overridable for A/B runs: SPARK_GRAFT_AQE=true,
-    //   SPARK_GRAFT_PARTS=32, SPARK_GRAFT_RUNS=1
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    // r22 re-audit of the static 8 at the sf1 rung (heavy-subset
-    // min-of-pairs, 32 cores): parts=8 total 196.1 s, parts=32 144.0
-    // (sim_knn_bucketed_full 1.76x BUT dedup_ngram/dedup_survivor
-    // 0.44x — their surviving pair sets are small and 32-wide
-    // shuffles are pure overhead), AQE+32 154.2 (re-planning latency
-    // on every exchange). No session-wide constant wins both
-    // regimes, so the width fix lives in the OPERATOR that needs it
-    // (fewKeySaltedJoin sizes its salted exchange to
-    // max(conf, cores)) and the session default stays 8 — best
-    // observed on everything else at BOTH rungs, and the committed
-    // numbers stay methodology-identical across rounds.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "8")
-    // Extra SQL confs for A/B profiling runs, semicolon-separated:
+    // Overrides of [[defaultConfs]] for A/B runs: SPARK_GRAFT_AQE=true,
+    //   SPARK_GRAFT_PARTS=32, and extra SQL confs, semicolon-separated:
     //   SPARK_GRAFT_CONF="spark.sql.join.preferSortMergeJoin=false"
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('=')
-        (kv.take(i).trim, kv.drop(i + 1).trim) } // "k = v" spacing ok
+    val overrides =
+      sys.env.get("SPARK_GRAFT_PARTS").map("spark.sql.shuffle.partitions" -> _) ++
+      sys.env.get("SPARK_GRAFT_AQE").map("spark.sql.adaptive.enabled" -> _) ++
+      sys.env.get("SPARK_GRAFT_CONF").toSeq
+        .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
+        .map { kv => val i = kv.indexOf('=')
+          (kv.take(i).trim, kv.drop(i + 1).trim) } // "k = v" spacing ok
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", aqe)
-      // pin UTC like Verify does: events.ts loads as TIMESTAMP_NTZ on
-      // the µs fixtures and the cast to TimestampType is
-      // session-timezone-dependent — an unpinned bench on a non-UTC
-      // host would time DIFFERENT row sets than Verify verifies
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
+    (defaultConfs ++ overrides).foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // fail fast with one clear message on fixture schema drift

@@ -21,12 +21,12 @@ import org.apache.spark.sql.SparkSession
 object ExplainDump {
   val DefaultSf = "/root/testdata/sf0.01"
 
-  /** The canonical session the recorded plans come from: AQE off so
-    * they are the static plans the bench executes (and the ones a
-    * plan reviewer can reason about without runtime re-planning in
-    * the way), 8 shuffle partitions (the bench session's sizing),
-    * UTC so time expressions render identically everywhere.
-    * Verify still runs stock config.
+  /** The canonical session the recorded plans come from:
+    * [[Bench.defaultConfs]] as is — AQE off so they are the static
+    * plans the bench executes (and the ones a plan reviewer can reason
+    * about without runtime re-planning in the way), 8 shuffle
+    * partitions (the bench session's sizing), UTC so time expressions
+    * render identically everywhere. Verify still runs stock config.
     *
     * Returns (session, owned). If a SparkSession is already active in
     * this JVM (the shared test session), the canonical confs are
@@ -40,20 +40,15 @@ object ExplainDump {
       .filterNot(_.sparkContext.isStopped) match {
       case Some(parent) =>
         val s = parent.newSession()
-        canonicalConfs.foreach { case (k, v) => s.conf.set(k, v) }
+        Bench.defaultConfs.foreach { case (k, v) => s.conf.set(k, v) }
         (s, false)
       case None =>
         val b = SparkSession.builder()
           .master("local[8]")
           .config("spark.ui.enabled", "false")
-        canonicalConfs.foreach { case (k, v) => b.config(k, v) }
+        Bench.defaultConfs.foreach { case (k, v) => b.config(k, v) }
         (b.getOrCreate(), true)
     }
-
-  private val canonicalConfs = Seq(
-    "spark.sql.shuffle.partitions" -> "8",
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.session.timeZone" -> "UTC")
 
   /** Remap every JVM-global counter that leaks into `explain` text to
     * per-plan sequential values in order of first appearance, so the

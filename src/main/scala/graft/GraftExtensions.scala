@@ -1,53 +1,20 @@
 package graft
 
-import graft.functions.{DotProduct, DotProductRewrite, ShingleHash, Winnow}
+import graft.functions.{DotProductRewrite, VectorFunctions}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Cluster-deployment registration of the engine's custom Catalyst
   * expressions: set `spark.sql.extensions=graft.GraftExtensions` (or
   * `SparkSession.builder().withExtensions(new GraftExtensions)`) and
-  * `graft_dot` / `graft_winnow` resolve in every session on the
-  * cluster — no per-session registerAll call needed. The builders are
-  * the same ones `VectorFunctions.registerAll` uses for ad-hoc local
-  * sessions.
+  * every function in [[VectorFunctions.functions]] resolves in every
+  * session on the cluster — no per-session `registerAll` call needed.
+  * Both paths read that one table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     // plan rewrite: HOF dot-product idiom → codegen'd DotProduct
     e.injectOptimizerRule(_ => DotProductRewrite)
-    e.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getCanonicalName, "graft_dot"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"graft_dot expects 2 arguments, got ${exprs.length}")
-        DotProduct(exprs.head, exprs(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[Winnow].getCanonicalName, "graft_winnow"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3,
-          s"graft_winnow expects (text, k, w), got ${exprs.length} args")
-        Winnow(exprs.head,
-          graft.functions.VectorFunctions.literalInt(
-            "graft_winnow", "k", exprs(1)),
-          graft.functions.VectorFunctions.literalInt(
-            "graft_winnow", "w", exprs(2)))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("graft_shingle"),
-      new ExpressionInfo(classOf[ShingleHash].getCanonicalName,
-        "graft_shingle"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"graft_shingle expects (toks, n), got ${exprs.length} args")
-        ShingleHash(exprs.head,
-          graft.functions.VectorFunctions.literalInt(
-            "graft_shingle", "n", exprs(1)))
-      }))
+    VectorFunctions.functions.foreach(e.injectFunction)
   }
 }

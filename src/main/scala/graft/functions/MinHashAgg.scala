@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, CreateArray, Expression, If, IsNull, Least, Literal, XxHash64}
@@ -34,7 +33,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * corpus — consistent with the update method passing the JIT's
   * huge-method threshold and running unoptimized.
   *
-  * Usage: register via [[MinHashAgg.register]] then
+  * Usage: `graft_minhash(token[, numHashes])` from SQL once the
+  * function table is registered ([[VectorFunctions.registerAll]] or
+  * [[graft.GraftExtensions]]), e.g.
   * `groupBy("doc_id").agg(call_function("graft_minhash", col("token")))`.
   */
 case class MinHashSigAgg(child: Expression, numHashes: Int)
@@ -84,22 +85,4 @@ case class MinHashSigAgg(child: Expression, numHashes: Int)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MinHashSigAgg =
     copy(child = newChildren.head)
-}
-
-object MinHashAgg {
-  /** Idempotently register `graft_minhash(token[, numHashes])`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash",
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(c) => MinHashSigAgg(c, 64)
-          case Seq(c, n) =>
-            MinHashSigAgg(c,
-              VectorFunctions.literalInt("graft_minhash", "numHashes", n))
-          case _ => throw new IllegalArgumentException(
-            s"graft_minhash expects (token[, numHashes]), got ${exprs.length} args")
-        }
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, BitwiseAnd, Expression, GreaterThan, If, IsNull, Literal, ShiftRight, XxHash64}
@@ -102,17 +101,4 @@ case class SimHashSigAgg(child: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): SimHashSigAgg =
     copy(child = newChildren.head)
-}
-
-object SimHashAgg {
-  /** Idempotently register `graft_simhash(token)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1,
-          s"graft_simhash expects (token), got ${exprs.length} args")
-        SimHashSigAgg(exprs.head)
-      },
-      "built-in")
 }

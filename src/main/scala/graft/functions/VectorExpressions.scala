@@ -1,12 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.Columns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import scala.reflect.{ClassTag, classTag}
 
 /** Native (whole-stage-codegen'd) dot product over two double arrays.
   *
@@ -907,10 +909,12 @@ case class DoubleOrderBits(child: Expression)
   * and the matrix lives flat in memory (sequential access, no
   * per-centroid object graph).
   *
-  * The matrix travels plan-side as a BinaryType literal
-  * (k·d big-endian doubles) — one literal node regardless of k, where
-  * the `array(array(lit…))` form would be k·d Literal nodes and die
-  * in analysis long before 110k cells.
+  * The matrix travels plan-side as this node's own flat `double[]`
+  * field — one expression regardless of k, where the
+  * `array(array(lit…))` form would be k·d Literal nodes and die in
+  * analysis long before 110k cells. It is a Column-only kernel
+  * ([[VectorFunctions.centroidArgmin]]); SQL text reaches the same
+  * loop through `graft_argmin_centroid_col`.
   *
   * Null semantics: null vector → null result; vectors shorter than
   * `d` dot only their first `n` components (DotProduct's min-length
@@ -1038,11 +1042,11 @@ case class CentroidArgmin(child: Expression, cents: Array[Double],
   *
   * Hot-path note: in the chained trainer the matrix column is
   * CONSTANT within a partition (it comes from a 1-row join side), so
-  * the trainer's spelling (`cached = true`, registered only as the
-  * internal `graft_argmin_centroid_col_cached`) keeps a per-task flat
+  * the trainer's spelling (`cached = true`, reachable only from the
+  * Column helper) keeps a per-task flat
   * `double[]` image keyed on the backing storage plus a first/last-
   * word content fingerprint — the inner loop then runs over primitive
-  * arrays exactly like the literal form. The PUBLIC registration
+  * arrays exactly like [[CentroidArgmin]]. The SQL function
   * `graft_argmin_centroid_col` takes arbitrary columns, where a
   * recycled row buffer (same base/offset/length, new bytes) could
   * alias a per-row-varying matrix past a storage-keyed cache; that
@@ -1212,8 +1216,8 @@ object CentroidArgminCol {
   }
 }
 
-/** Registration + Column-level entry points for the native vector
-  * expressions.
+/** The SQL-callable function table + Column-level entry points for the
+  * native vector expressions.
   */
 object VectorFunctions {
 
@@ -1223,8 +1227,8 @@ object VectorFunctions {
     * NullPointerException/ClassCastException from eval() during
     * resolution.
     */
-  private[graft] def literalInt(fn: String, arg: String,
-                                e: Expression): Int = {
+  private def literalInt(fn: String, arg: String,
+                        e: Expression): Int = {
     if (!e.foldable)
       throw new IllegalArgumentException(
         s"$fn: argument '$arg' must be an integer literal, got " +
@@ -1236,215 +1240,104 @@ object VectorFunctions {
     }
   }
 
-  /** Register every graft expression in one call — the library's
-    * session-setup hook (the per-cluster equivalent is injecting these
-    * via SparkSessionExtensions.injectFunction from a
-    * `spark.sql.extensions` class; the builders below are the exact
-    * functions that injection would use).
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    register(spark)
-    registerWinnow(spark)
-    registerShingle(spark)
-  }
+  /** One table entry: `name` accepts any of `arities` arguments. */
+  private def fn[T <: Expression: ClassTag](name: String, arities: Int*)(
+      build: Seq[Expression] => T): SparkSessionExtensions#FunctionDescription =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classTag[T].runtimeClass.getCanonicalName, name),
+      { (exprs: Seq[Expression]) =>
+        require(arities.contains(exprs.length),
+          s"$name expects ${arities.mkString(" or ")} arguments, got " +
+            s"${exprs.length}")
+        build(exprs)
+      })
 
-  /** Idempotently register `graft_shingle(toks, n)` (n must be an
-    * integer literal — it parameterizes the generated operator).
+  /** Every SQL-callable graft function, each name once:
+    * [[registerAll]] registers the table into one session,
+    * [[graft.GraftExtensions]] injects it into every session of a
+    * cluster. Integer parameters parameterize the generated operator
+    * and must be literals ([[literalInt]]).
     */
-  def registerShingle(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2,
-          s"graft_shingle expects (toks, n), got ${exprs.length} args")
-        ShingleHash(exprs.head, literalInt("graft_shingle", "n", exprs(1)))
-      },
-      "built-in")
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    fn("graft_dot", 2)(a => DotProduct(a(0), a(1))),
+    fn("graft_winnow", 3)(a => Winnow(a(0),
+      literalInt("graft_winnow", "k", a(1)),
+      literalInt("graft_winnow", "w", a(2)))),
+    fn("graft_winnow_md5", 3)(a => WinnowMd5Summary(a(0),
+      literalInt("graft_winnow_md5", "k", a(1)),
+      literalInt("graft_winnow_md5", "w", a(2)))),
+    fn("graft_shingle", 2)(a =>
+      ShingleHash(a(0), literalInt("graft_shingle", "n", a(1)))),
+    fn("graft_shingle_str", 2)(a =>
+      ShingleStrings(a(0), literalInt("graft_shingle_str", "n", a(1)))),
+    fn("graft_shingle2", 2)(a =>
+      ShingleHash2(a(0), literalInt("graft_shingle2", "n", a(1)))),
+    fn("graft_bigram_top", 1)(a => BigramTopCount(a(0))),
+    fn("graft_token_entropy", 1)(a => TokenEntropyStats(a(0))),
+    fn("graft_token_counts", 1)(a => TokenCounts(a(0))),
+    fn("graft_token_counts_text", 1)(a => TokenCountsText(a(0))),
+    // arbitrary columns: per-row matrix copy, never the per-task cache
+    fn("graft_argmin_centroid_col", 3)(a =>
+      CentroidArgminCol(a(0), a(1), a(2), cached = false)),
+    fn("graft_centroid_sums", 5)(a =>
+      CentroidSumAgg(a(0), a(1), a(2), a(3), a(4))),
+    fn("graft_dbits", 1)(a => DoubleOrderBits(a(0))),
+    fn("graft_minhash", 1, 2)(a => MinHashSigAgg(a(0),
+      a.lift(1).fold(64)(literalInt("graft_minhash", "numHashes", _)))),
+    fn("graft_simhash", 1)(a => SimHashSigAgg(a(0))))
+
+  /** Register [[functions]] into `spark`'s registry (session-scoped,
+    * no catalog writes; idempotent) — the local-session counterpart of
+    * the `spark.sql.extensions` deployment through
+    * [[graft.GraftExtensions]].
+    */
+  def registerAll(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
 
   /** Shingle hashes as a Column (n-token windows over a token array). */
-  def shingle(spark: SparkSession, toks: Column, n: Int = 3): Column = {
-    registerShingle(spark)
-    call_function("graft_shingle", toks,
-      org.apache.spark.sql.functions.lit(n))
-  }
-
-  /** Idempotently register `graft_shingle_str(toks, n)` — the
-    * string-output variant ([[ShingleStrings]]).
-    */
-  def registerShingleStrings(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_str",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2,
-          s"graft_shingle_str expects (toks, n), got ${exprs.length} args")
-        ShingleStrings(exprs.head,
-          literalInt("graft_shingle_str", "n", exprs(1)))
-      },
-      "built-in")
+  def shingle(spark: SparkSession, toks: Column, n: Int = 3): Column =
+    column(ShingleHash(expression(toks), n))
 
   /** Shingle STRINGS as a Column (n-token windows joined with " "). */
   def shingleStrings(spark: SparkSession, toks: Column,
-                     n: Int = 3): Column = {
-    registerShingleStrings(spark)
-    call_function("graft_shingle_str", toks,
-      org.apache.spark.sql.functions.lit(n))
-  }
+                     n: Int = 3): Column =
+    column(ShingleStrings(expression(toks), n))
 
-  /** Idempotently register `graft_bigram_top(toks)` — the top-bigram
-    * multiplicity kernel ([[BigramTopCount]]).
-    */
-  def registerBigramTop(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bigram_top",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1,
-          s"graft_bigram_top expects (toks), got ${exprs.length} args")
-        BigramTopCount(exprs.head)
-      },
-      "built-in")
-
-  /** Top-bigram multiplicity as a Column. */
-  def bigramTop(spark: SparkSession, toks: Column): Column = {
-    registerBigramTop(spark)
-    call_function("graft_bigram_top", toks)
-  }
-
-  /** Idempotently register `graft_token_entropy(toks)` — the per-doc
-    * entropy-statistics kernel ([[TokenEntropyStats]]).
-    */
-  def registerTokenEntropy(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_entropy",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1,
-          s"graft_token_entropy expects (toks), got ${exprs.length} args")
-        TokenEntropyStats(exprs.head)
-      },
-      "built-in")
+  /** Top-bigram multiplicity as a Column ([[BigramTopCount]]). */
+  def bigramTop(spark: SparkSession, toks: Column): Column =
+    column(BigramTopCount(expression(toks)))
 
   /** Per-doc entropy statistics as a Column
     * (`struct<n_tokens, n_distinct, term_sum>`, null when tokenless).
     */
-  def tokenEntropy(spark: SparkSession, toks: Column): Column = {
-    registerTokenEntropy(spark)
-    call_function("graft_token_entropy", toks)
-  }
-
-  /** Idempotently register `graft_token_counts(toks)` — the per-doc
-    * token-frequency kernel ([[TokenCounts]]).
-    */
-  def registerTokenCounts(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_counts",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1,
-          s"graft_token_counts expects (toks), got ${exprs.length} args")
-        TokenCounts(exprs.head)
-      },
-      "built-in")
+  def tokenEntropy(spark: SparkSession, toks: Column): Column =
+    column(TokenEntropyStats(expression(toks)))
 
   /** Per-doc token frequencies as a Column
     * (`array<struct<token, tf>>`, null when tokenless).
     */
-  def tokenCounts(spark: SparkSession, toks: Column): Column = {
-    registerTokenCounts(spark)
-    call_function("graft_token_counts", toks)
-  }
-
-  /** Idempotently register `graft_token_counts_text(text)` — the
-    * fused tokenize+count kernel ([[TokenCountsText]]).
-    */
-  def registerTokenCountsText(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_counts_text",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1,
-          s"graft_token_counts_text expects (text), got ${exprs.length} args")
-        TokenCountsText(exprs.head)
-      },
-      "built-in")
+  def tokenCounts(spark: SparkSession, toks: Column): Column =
+    column(TokenCounts(expression(toks)))
 
   /** Fused per-doc token frequencies straight off the text column
     * (`array<struct<token, tf>>`, null when tokenless) — see
     * [[TokenCountsText]] for the equivalence contract with
     * `tokenCounts(split(lower(text), "\\s+"))`.
     */
-  def tokenCountsText(spark: SparkSession, text: Column): Column = {
-    registerTokenCountsText(spark)
-    call_function("graft_token_counts_text", text)
-  }
-
-  /** Idempotently register `graft_shingle2(toks, n)` — the 128-bit
-    * fingerprint variant ([[ShingleHash2]]).
-    */
-  def registerShingle2(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle2",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2,
-          s"graft_shingle2 expects (toks, n), got ${exprs.length} args")
-        ShingleHash2(exprs.head, literalInt("graft_shingle2", "n", exprs(1)))
-      },
-      "built-in")
+  def tokenCountsText(spark: SparkSession, text: Column): Column =
+    column(TokenCountsText(expression(text)))
 
   /** 128-bit shingle fingerprints as a Column
     * (`array<struct<h1,h2>>`, one per n-token window).
     */
-  def shingle2(spark: SparkSession, toks: Column, n: Int): Column = {
-    registerShingle2(spark)
-    call_function("graft_shingle2", toks,
-      org.apache.spark.sql.functions.lit(n))
-  }
-
-  /** Idempotently register `graft_argmin_centroid(vec, packed, d)` —
-    * `packed` must be a binary literal of k·d big-endian doubles and
-    * `d` an integer literal (they parameterize the generated
-    * operator).
-    */
-  def registerCentroidArgmin(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_argmin_centroid",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3,
-          s"graft_argmin_centroid expects (vec, packed, d), got " +
-            s"${exprs.length} args")
-        val packed = exprs(1)
-        if (!packed.foldable)
-          throw new IllegalArgumentException(
-            "graft_argmin_centroid: 'packed' must be a binary literal")
-        val bytes = packed.eval() match {
-          case b: Array[Byte] => b
-          case other => throw new IllegalArgumentException(
-            s"graft_argmin_centroid: 'packed' must be binary, got $other")
-        }
-        val d = literalInt("graft_argmin_centroid", "d", exprs(2))
-        require(d >= 1 && bytes.length % (8 * d) == 0,
-          s"graft_argmin_centroid: ${bytes.length} bytes is not a " +
-            s"whole number of $d-dim double rows")
-        // k=0 would sail through the modulo check and then assign
-        // every row to a nonexistent centroid 0 (the eval loop never
-        // runs) — the SQL registration path must refuse it like the
-        // Column entry point does
-        require(bytes.nonEmpty,
-          "graft_argmin_centroid: need at least 1 centroid row")
-        val buf = java.nio.ByteBuffer.wrap(bytes)
-        val cents = Array.fill(bytes.length / 8)(buf.getDouble)
-        val k = cents.length / d
-        // norms summed left-to-right per row — the exact fold the
-        // least(struct…) formulation used (`c.map(x => x*x).sum`)
-        val norms = Array.tabulate(k) { c =>
-          var acc = 0.0
-          var i = 0
-          while (i < d) { acc += cents(c * d + i) * cents(c * d + i); i += 1 }
-          acc
-        }
-        CentroidArgmin(exprs.head, cents, norms, d)
-      },
-      "built-in")
+  def shingle2(spark: SparkSession, toks: Column, n: Int): Column =
+    column(ShingleHash2(expression(toks), n))
 
   /** Argmin centroid assignment as a Column: `struct(d2, cid)` of the
-    * nearest centroid per vector. The matrix is packed into ONE binary
-    * literal, so plan size is independent of k.
+    * nearest centroid per vector. The matrix rides in the expression
+    * as ONE flat `double[]`, so plan size is independent of k.
     */
   def centroidArgmin(spark: SparkSession, vec: Column,
                      centroids: Array[Array[Double]]): Column = {
@@ -1452,42 +1345,10 @@ object VectorFunctions {
     val d = centroids.head.length
     require(centroids.forall(_.length == d),
       "centroidArgmin: ragged centroid matrix")
-    registerCentroidArgmin(spark)
-    val buf = java.nio.ByteBuffer.allocate(centroids.length * d * 8)
-    centroids.foreach(_.foreach(buf.putDouble))
-    call_function("graft_argmin_centroid", vec,
-      org.apache.spark.sql.functions.lit(buf.array()),
-      org.apache.spark.sql.functions.lit(d))
-  }
-
-  /** Idempotently register `graft_argmin_centroid_col(v, mat, norms)`
-    * ([[CentroidArgminCol]] — the column-matrix form the chained Lloyd
-    * trainer uses).
-    */
-  def registerCentroidArgminCol(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_argmin_centroid_col",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3,
-          "graft_argmin_centroid_col expects (v, mat, norms), got " +
-            s"${exprs.length} args")
-        // public spelling: arbitrary columns → per-row copy, no cache
-        CentroidArgminCol(exprs(0), exprs(1), exprs(2), cached = false)
-      },
-      "built-in")
-    // internal trainer spelling: the matrix column is partition-
-    // constant (1-row nested-loop join side), so the per-task
-    // flat-array cache is sound there — and it carries a first/last-
-    // word fingerprint as insurance anyway
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_argmin_centroid_col_cached",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3,
-          "graft_argmin_centroid_col_cached expects (v, mat, norms), " +
-            s"got ${exprs.length} args")
-        CentroidArgminCol(exprs(0), exprs(1), exprs(2), cached = true)
-      },
-      "built-in")
+    // norms summed left-to-right per row — the exact fold the
+    // least(struct…) formulation used (`c.map(x => x*x).sum`)
+    val norms = centroids.map(_.foldLeft(0.0)((acc, x) => acc + x * x))
+    column(CentroidArgmin(expression(vec), centroids.flatten, norms, d))
   }
 
   /** Column-matrix argmin assignment: `struct(d2, cid)` of the nearest
@@ -1500,120 +1361,34 @@ object VectorFunctions {
     * per-task flat-array reuse. Leave it false for arbitrary inputs.
     */
   def centroidArgminCol(spark: SparkSession, vec: Column, mat: Column,
-                        norms: Column, cached: Boolean = false): Column = {
-    registerCentroidArgminCol(spark)
-    call_function(
-      if (cached) "graft_argmin_centroid_col_cached"
-      else "graft_argmin_centroid_col",
-      vec, mat, norms)
-  }
-
-  /** Idempotently register `graft_centroid_sums(cid, v, mat, kk, d)`
-    * ([[CentroidSumAgg]] — the fused Lloyd-round statistics aggregate
-    * the chained trainer uses).
-    */
-  def registerCentroidSums(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_centroid_sums",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 5,
-          "graft_centroid_sums expects (cid, v, mat, kk, d), got " +
-            s"${exprs.length} args")
-        CentroidSumAgg(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))
-      },
-      "built-in")
+                        norms: Column, cached: Boolean = false): Column =
+    column(CentroidArgminCol(expression(vec), expression(mat),
+      expression(norms), cached))
 
   /** One Lloyd round's per-slot decimal sums + counts as a single
     * global aggregate Column — `struct(old, kk, d, sums, cnts)`.
     */
   def centroidSums(spark: SparkSession, cid: Column, v: Column,
-                   mat: Column, kk: Column, d: Column): Column = {
-    registerCentroidSums(spark)
-    call_function("graft_centroid_sums", cid, v, mat, kk, d)
-  }
-
-  /** Idempotently register `graft_dbits(d)` ([[DoubleOrderBits]]). */
-  def registerDbits(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dbits",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1,
-          s"graft_dbits expects (d), got ${exprs.length} args")
-        DoubleOrderBits(exprs.head)
-      },
-      "built-in")
+                   mat: Column, kk: Column, d: Column): Column =
+    column(CentroidSumAgg(expression(cid), expression(v), expression(mat),
+      expression(kk), expression(d)))
 
   /** Order-preserving long image of a double as a Column. */
-  def dbits(spark: SparkSession, d: Column): Column = {
-    registerDbits(spark)
-    call_function("graft_dbits", d)
-  }
-
-  /** Idempotently register `graft_winnow(text, k, w)` (k and w must
-    * be integer literals — they parameterize the generated operator).
-    */
-  def registerWinnow(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3,
-          s"graft_winnow expects (text, k, w), got ${exprs.length} args")
-        Winnow(exprs.head,
-          literalInt("graft_winnow", "k", exprs(1)),
-          literalInt("graft_winnow", "w", exprs(2)))
-      },
-      "built-in")
-
-  /** Idempotently register `graft_winnow_md5(text, k, w)` — the
-    * portable-twin summary kernel ([[WinnowMd5Summary]]).
-    */
-  def registerWinnowMd5(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow_md5",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3,
-          s"graft_winnow_md5 expects (text, k, w), got ${exprs.length} args")
-        WinnowMd5Summary(exprs.head,
-          literalInt("graft_winnow_md5", "k", exprs(1)),
-          literalInt("graft_winnow_md5", "w", exprs(2)))
-      },
-      "built-in")
+  def dbits(spark: SparkSession, d: Column): Column =
+    column(DoubleOrderBits(expression(d)))
 
   /** Portable winnow summary as a Column — see [[WinnowMd5Summary]]. */
-  def winnowMd5(spark: SparkSession, c: Column, k: Int, w: Int): Column = {
-    registerWinnowMd5(spark)
-    call_function("graft_winnow_md5", c,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
-  }
+  def winnowMd5(spark: SparkSession, c: Column, k: Int, w: Int): Column =
+    column(WinnowMd5Summary(expression(c), k, w))
 
   /** Winnowing fingerprints as a Column (k-byte shingles, w-window). */
   def winnow(spark: SparkSession, c: Column, k: Int = 12,
-             w: Int = 4): Column = {
-    registerWinnow(spark)
-    call_function("graft_winnow", c,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
-  }
+             w: Int = 4): Column =
+    column(Winnow(expression(c), k, w))
 
-  /** Idempotently register `graft_dot` in the session's function
-    * registry (temp function — session-scoped, no catalog writes).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2,
-          s"graft_dot expects 2 arguments, got ${exprs.length}")
-        DotProduct(exprs.head, exprs(1))
-      },
-      "built-in")
-
-  /** Codegen'd dot product as a Column (registers on first use). */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot", a, b)
-  }
+  /** Codegen'd dot product as a Column. */
+  def dot(spark: SparkSession, a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
   /** Codegen'd cosine similarity from one dot + two norms. */
   def cosine(spark: SparkSession, a: Column, b: Column): Column = {
@@ -1621,37 +1396,11 @@ object VectorFunctions {
     dot(spark, a, b) / (sqrt(dot(spark, a, a)) * sqrt(dot(spark, b, b)))
   }
 
-  private val mightContainSeq = new java.util.concurrent.atomic.AtomicLong
-
-  /** Register a `graft_might_contain_<n>(h)` bound to THIS broadcast
-    * Bloom filter ([[BloomProbe]]) and return the generated name. The
-    * name is UNIQUE PER REGISTRATION: a session-global fixed name
-    * would let two threads sharing one SparkSession race —
-    * `createOrReplaceTempFunction` from thread B could swap the
-    * builder between thread A's `call_function` and its DataFrame's
-    * analysis, silently binding A's probe to B's filter. One registry
-    * entry per [[graft.ops.NearDup.dedupBloom]] call is the price
-    * (bounded by calls per session, each entry a closure over a
-    * broadcast HANDLE).
+  /** Codegen'd Bloom membership probe over THIS broadcast filter as a
+    * Column ([[BloomProbe]]).
     */
-  def registerMightContain(spark: SparkSession,
-      bf: org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.BloomFilter]): String = {
-    val name = s"graft_might_contain_${mightContainSeq.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1,
-          s"$name expects (h), got ${exprs.length} args")
-        BloomProbe(exprs.head, bf)
-      },
-      "built-in")
-    name
-  }
-
-  /** Codegen'd Bloom membership probe as a Column. */
   def mightContain(spark: SparkSession, h: Column,
       bf: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.sketch.BloomFilter]): Column =
-    call_function(registerMightContain(spark, bf), h)
+    column(BloomProbe(expression(h), bf))
 }

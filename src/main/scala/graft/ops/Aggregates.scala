@@ -732,8 +732,8 @@ object Aggregates {
     */
   def aggMinmaxBy(s: SparkSession, events: DataFrame): DataFrame = {
     val twoTo63 = "CAST('9223372036854775808' AS DECIMAL(19,0))"
-    graft.functions.VectorFunctions.registerDbits(s)
-    val ub = expr(s"CAST(graft_dbits(value) AS DECIMAL(20,0)) + $twoTo63")
+    val ub = graft.functions.VectorFunctions.dbits(s, col("value"))
+      .cast(DecimalType(20, 0)) + expr(twoTo63)
     events
       .filter(col("value").isNotNull && col("event_type").isNotNull &&
         col("event_id").isNotNull)

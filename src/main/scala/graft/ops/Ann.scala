@@ -130,6 +130,9 @@ object Ann {
     */
   private def assignLists(e: DataFrame, centroids: DataFrame,
                           nProbe: Option[Int]): DataFrame = {
+    // the SQL-text lambda below resolves graft_dot by name (kept over
+    // the DSL so the plan text and its lambda names stay fixed)
+    graft.functions.VectorFunctions.registerAll(e.sparkSession)
     val base = e.crossJoin(broadcast(centroids))
       .withColumn("norms", expr(
         "transform(cs, c -> graft_dot(v, c) / sqrt(graft_dot(c, c)))"))
@@ -147,7 +150,6 @@ object Ann {
   private def ivfSearch(s: SparkSession, e: DataFrame, centroids: DataFrame,
                         queryId: Long, k: Int, nProbe: Int): DataFrame = {
     val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(s, a, b)
-    graft.functions.VectorFunctions.register(s)
     val assigned = assignLists(e, centroids, None)
     val q = assignLists(e.filter(col("vec_id") === queryId), centroids,
         Some(nProbe))
@@ -232,7 +234,6 @@ object Ann {
     require(nProbe >= 1 && nProbe <= nLists,
       s"nProbe must be in [1, $nLists], got $nProbe")
     val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(s, a, b)
-    graft.functions.VectorFunctions.register(s)
     val e = nonZero(s, emb)
       .withColumn("nrm", sqrt(nd(col("v"), col("v"))))
     val centroids = e.orderBy("vec_id").limit(nLists)

@@ -994,14 +994,14 @@ object TextSim {
 
   /** [[textRepetition]] over any `(doc_id, text)` relation. */
   def textRepetition(docs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.registerBigramTop(docs.sparkSession)
     docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
       .filter(size(col("words")) >= 2)
       .select(col("doc_id"), size(col("words")).cast(LongType).as("n_words"),
         size(array_distinct(col("words"))).cast(LongType).as("distinct_words"),
         (size(col("words")) - 1).cast(LongType).as("n_bigrams"),
-        call_function("graft_bigram_top", col("words")).as("top_bigram_n"))
+        graft.functions.VectorFunctions.bigramTop(docs.sparkSession,
+          col("words")).as("top_bigram_n"))
       .select(col("doc_id"), col("n_words"), col("top_bigram_n"),
         round(col("top_bigram_n") / col("n_bigrams"), 4).as("top_bigram_frac"),
         col("distinct_words"),

@@ -8,9 +8,10 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
-/** The one `private[sql]` access point the library uses, kept in its
-  * own clearly-marked bridge package (the standard Spark-ecosystem
-  * device — connector libraries ship the same shim): re-bind an
+/** One of the library's two `private[sql]` access points (the other is
+  * [[Columns]], expression <-> Column), both kept in this
+  * clearly-marked bridge package (the standard Spark-ecosystem
+  * device — connector libraries ship the same shim). This one: re-bind an
   * already-compiled frame to another session WITHOUT the
   * `Dataset.rdd` → `createDataFrame` round-trip, which deserializes
   * every row to an external `Row` and re-encodes it back on every

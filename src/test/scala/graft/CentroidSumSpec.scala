@@ -39,8 +39,8 @@ class CentroidSumSpec extends SparkSpec {
 
   private def newRound(assigned: DataFrame, matDf: DataFrame): DataFrame = {
     assigned.crossJoin(matDf)
-      // register on the INPUT's session — the non-finite test runs on
-      // ANSI-toggled child sessions, which have their own registries
+      // the non-finite test runs on ANSI-toggled child sessions: the
+      // aggregate must follow the INPUT's session, not the caller's
       .agg(VectorFunctions.centroidSums(assigned.sparkSession,
         col("cid"), col("v"), col("mat"), col("kk"), col("d")).as("st"))
       .select(expr("transform(sequence(0, greatest(size(st.old), 1) - 1), " +

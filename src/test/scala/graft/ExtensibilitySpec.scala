@@ -71,7 +71,6 @@ class ExtensibilitySpec extends SparkSpec {
   test("function builders reject non-literal operator parameters") {
     import spark.implicits._
     graft.functions.VectorFunctions.registerAll(spark)
-    graft.functions.MinHashAgg.register(spark)
     val df = Seq(("abcdefghijklmnopqrstuvwxyz", 5)).toDF("text", "n")
     val winnowErr = intercept[Exception] {
       df.selectExpr("graft_winnow(text, n, 4)").collect()

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.InternalRows
+import org.apache.spark.sql.graftbridge.{Columns, InternalRows}
 
-/** The upgrade contract for the one `private[sql]` bridge the library
+/** The upgrade contract for the `private[sql]` bridges the library
   * ships (r19 VERDICT ask #4): every behavioral promise
   * `InternalRows.rebind` makes is asserted HERE, against a
   * checkpointed frame — the exact shape the CC loop hands across
@@ -12,7 +12,9 @@ import org.apache.spark.sql.graftbridge.InternalRows
   * `internalCreateDataFrame` semantics fails this suite with a message
   * pointing at the bridge and its fallback, not as a mystery perf
   * regression three layers up. (A SIGNATURE change fails the bridge's
-  * compile, which is the loudest possible message.)
+  * compile, which is the loudest possible message.) The last case
+  * pins `Columns`, the expression <-> Column bridge every graft Column
+  * helper builds its kernel through.
   */
 class GraftBridgeContractSpec extends SparkSpec {
 
@@ -107,5 +109,23 @@ class GraftBridgeContractSpec extends SparkSpec {
     assert(a === b,
       "rebindPortable diverged from rebind — the documented fallback " +
         "is not a drop-in")
+  }
+
+  test("Columns: a graft kernel built through column/expression " +
+      "resolves, returns the right rows, and round-trips by identity") {
+    val drift = "graftbridge upgrade contract violated: the " +
+      "classic.ExpressionUtils column/expression surface drifted under " +
+      "this Spark version; see Columns.scala"
+    val e = graft.functions.DotProduct(Columns.expression(col("a")),
+      Columns.expression(col("b")))
+    assert(Columns.expression(Columns.column(e)) eq e,
+      s"$drift (expression(column(e)) is no longer e)")
+    // a fresh child session: nothing registered, nothing needed
+    val child = spark.newSession()
+    val df = child.createDataFrame(Seq(
+      (Seq(1.0, 2.0), Seq(3.0, 4.0)), (Seq(0.5), Seq(4.0, 9.0))))
+      .toDF("a", "b")
+    val got = df.select(Columns.column(e).as("d")).collect().map(_.getDouble(0))
+    assert(got.toSeq == Seq(11.0, 2.0), s"$drift (rows: ${got.toSeq})")
   }
 }

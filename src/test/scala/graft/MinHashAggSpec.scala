@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.MinHashAgg
+import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
 /** The declarative MinHash aggregate must match the 64-separate-min
@@ -11,7 +11,7 @@ class MinHashAggSpec extends SparkSpec {
 
   test("graft_minhash equals the per-hash min formulation") {
     import spark.implicits._
-    MinHashAgg.register(spark)
+    VectorFunctions.registerAll(spark)
     val tokens = Seq((1L, "alpha"), (1L, "beta"), (1L, "gamma"),
       (2L, "alpha"), (2L, "delta"))
       .toDF("doc_id", "token")
@@ -34,7 +34,7 @@ class MinHashAggSpec extends SparkSpec {
 
   test("null tokens are ignored, empty group keeps the init sentinel") {
     import spark.implicits._
-    MinHashAgg.register(spark)
+    VectorFunctions.registerAll(spark)
     val tokens = Seq((1L, Some("alpha")), (1L, None), (2L, None))
       .toDF("doc_id", "token")
     val sigs = tokens.groupBy("doc_id")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.SimHashAgg
+import graft.functions.VectorFunctions
 import graft.ops.NearDup
 import org.apache.spark.sql.functions._
 
@@ -17,7 +17,7 @@ class PortableHashSpec extends SparkSpec {
   test("graft_simhash over a precomputed long child equals the " +
     "per-bit vote formulation") {
     import spark.implicits._
-    SimHashAgg.register(spark)
+    VectorFunctions.registerAll(spark)
     val hashes = Seq((1L, 0x0FAB1234L), (1L, 0x7FFFL), (1L, 3L),
       (2L, 0L), (2L, 1L << 59), (3L, (1L << 60) - 1))
       .toDF("doc_id", "th").repartition(3)
@@ -41,7 +41,7 @@ class PortableHashSpec extends SparkSpec {
   test("decomposed simhash query path equals the fused graft_simhash " +
     "aggregate (production xxhash64 tokens, incl. negative hashes)") {
     import spark.implicits._
-    SimHashAgg.register(spark)
+    VectorFunctions.registerAll(spark)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs"),

@@ -54,7 +54,7 @@ class RepetitionSubstitutionSpec extends SparkSpec {
       .option("numDocs", 300).load().select("doc_id", "text")
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
       .filter(size(col("words")) >= 2)
-    graft.functions.VectorFunctions.registerBigramTop(spark)
+    graft.functions.VectorFunctions.registerAll(spark)
     val both = docs.select(col("doc_id"),
         call_function("graft_bigram_top", col("words")).as("native"),
         array_sort(expr(
@@ -80,7 +80,7 @@ class RepetitionSubstitutionSpec extends SparkSpec {
 
   test("kernel edge cases: empty, single word, all-equal, crafted runs") {
     import spark.implicits._
-    graft.functions.VectorFunctions.registerBigramTop(spark)
+    graft.functions.VectorFunctions.registerAll(spark)
     val rows = Seq(
       (Seq.empty[String], 0L),                      // no words
       (Seq("a"), 0L),                               // no bigrams

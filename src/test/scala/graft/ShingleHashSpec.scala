@@ -43,14 +43,14 @@ class ShingleHashSpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   test("deterministic across invocations and usable from SQL") {
-    VectorFunctions.registerShingle(spark)
+    VectorFunctions.registerAll(spark)
     val a = spark.sql(
       "SELECT graft_shingle(array('p', 'q', 'r', 's'), 3) AS h").as[Seq[Long]].collect()(0)
     assert(a == hashes(Seq("p", "q", "r", "s")))
   }
 
   test("non-literal n is rejected with a clear message") {
-    VectorFunctions.registerShingle(spark)
+    VectorFunctions.registerAll(spark)
     val e = intercept[Exception] {
       Seq(Tuple1(Seq("a", "b"))).toDF("toks")
         .selectExpr("graft_shingle(toks, size(toks))").collect()

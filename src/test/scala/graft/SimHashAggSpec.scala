@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.SimHashAgg
+import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
 /** The declarative SimHash aggregate must match the explode-per-bit
@@ -11,7 +11,7 @@ class SimHashAggSpec extends SparkSpec {
 
   test("graft_simhash equals the per-bit vote formulation") {
     import spark.implicits._
-    SimHashAgg.register(spark)
+    VectorFunctions.registerAll(spark)
     val tokens = Seq((1L, "alpha"), (1L, "beta"), (1L, "gamma"),
       (2L, "alpha"), (2L, "delta"), (3L, "solo"))
       .toDF("doc_id", "token")

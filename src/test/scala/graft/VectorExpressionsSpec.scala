@@ -24,7 +24,7 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("native dot works from SQL after registration") {
-    VectorFunctions.register(spark)
+    VectorFunctions.registerAll(spark)
     val r = spark.sql(
       "SELECT graft_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D))")
       .collect()(0).getDouble(0)
@@ -32,7 +32,7 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("null array propagates to null result") {
-    VectorFunctions.register(spark)
+    VectorFunctions.registerAll(spark)
     val r = spark.sql(
       "SELECT graft_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0D))")
       .collect()(0)
