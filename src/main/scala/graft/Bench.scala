@@ -7,7 +7,8 @@ object Bench {
   }
 
   /** The bench session's SQL confs — also the canonical session
-    * ExplainDump and PlanSnap record plans under. Two deliberate
+    * ExplainDump and PlanSnap record plans under (both dump through
+    * the one path, `ExplainDump.formatted`). Two deliberate
     * deviations from the engine defaults (Verify runs the stock
     * config), both measured at sf0.1 (see README "bench recipe" +
     * SCALE.md):

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Regenerates EXPLAINS.md: the raw `explain("formatted")` plans for
   * the headline queries SCALE.md's audit table summarizes.
@@ -17,6 +17,10 @@ import org.apache.spark.sql.SparkSession
   * per-plan sequential values in order of first appearance, which
   * keeps same-name columns distinguishable while making the text a
   * pure function of the plan shape).
+  *
+  * [[formatted]] and [[pipelines]] are the one plan-dump path:
+  * [[PlanSnap]] writes the same formatted text per query file, and
+  * dumps the same un-materialized pipelines.
   */
 object ExplainDump {
   val DefaultSf = "/root/testdata/sf0.01"
@@ -65,6 +69,10 @@ object ExplainDump {
     *      counter). Lambda names always render with an `#id` suffix,
     *      which is what the lookahead anchors on — real columns in
     *      this repo never match `name_digits#`.
+    *   4. closure identities — typed-Dataset lambdas render as
+    *      `Outer$$$Lambda$6196/0x00007effb17422b0@2ffc3d5e` (the
+    *      hidden-class number, address and identity hash all differ
+    *      between JVMs), remapped to `$$Lambda$1`, `$$Lambda$2`, ….
     */
   def normalize(plan: String): String = {
     def remap(s: String, pattern: scala.util.matching.Regex,
@@ -75,7 +83,10 @@ object ExplainDump {
         scala.util.matching.Regex.quoteReplacement(render(id))
       })
     }
-    val a = remap(plan, "#(\\d+)".r, i => s"#$i")
+    val closures = remap(plan,
+      "(\\$\\$Lambda(?:\\$\\d+)?/0x\\p{XDigit}+@\\p{XDigit}+)".r,
+      i => "$$Lambda$" + i)
+    val a = remap(closures, "#(\\d+)".r, i => s"#$i")
     val b = remap(a, "plan_id=(\\d+)".r, i => s"plan_id=$i")
     // lambda names: per-base-name sequential (x_47 -> x_1, acc_12 -> acc_1)
     val counters = scala.collection.mutable.Map.empty[String, Int]
@@ -118,17 +129,15 @@ object ExplainDump {
       "scrub_spans" -> "corpus exact-substring scrub (r13): ShingleHash2 emits 128-bit gram fingerprints in one codegen'd pass (no gram strings anywhere), first occurrence = min over a packed (doc_id << 21 | p) long so the per-gram aggregate stays a map-side-combined HashAggregate, join-back keyed on the fingerprint, <= n-row sequence explode per scrubbed occurrence, and reassembly is an indexed filter over the in-row words array (no corpus-sized token explode) — every exchange keyed, nothing pairwise; 279 -> 42 s at 1M docs across the three plan generations")
     // Queries whose public entry point materializes through an eager
     // localCheckpoint (the returned lineage is just a checkpoint
-    // scan): dump the un-materialized pipeline the checkpoint runs,
-    // via the same private plan accessors the plan-shape specs audit.
+    // scan): dump the un-materialized pipeline the checkpoint runs.
+    val pipeline = pipelines(spark, sf).toMap
     val checkpointed = Seq(
       ("dedup_containment",
         "posting-list candidates with RIDING denominators (r7: per-doc gram " +
           "counts travel inside the posting structs — one shingle pass, two " +
           "keyed exchanges, zero joins). Public API materializes this via " +
           "localCheckpoint",
-        () => graft.ops.NearDup.containmentPairsPlan(spark,
-          graft.ops.Sources.table(spark, sf, "documents"), 3,
-          graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinContain)),
+        () => pipeline("dedup_containment_pipeline")()),
       ("dedup_cluster",
         "candidate-EDGE pipeline feeding connected components (shared-rare-" +
           "shingle postings -> bounded pair expansion -> Jaccard filter). The " +
@@ -137,14 +146,7 @@ object ExplainDump {
           "plan depth stays constant via localCheckpoint, so the loop has no " +
           "single static plan to print — this is the one-shot pipeline it " +
           "iterates over",
-        () => {
-          val (pairs, posts) = graft.ops.NearDup.dedupNgramPlan(spark,
-            graft.ops.Sources.table(spark, sf, "documents"), 3,
-            graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinJaccard)
-          val df = pairs.select("doc_a", "doc_b")
-          posts.unpersist(blocking = false) // plan-only dump, nothing ran
-          df
-        }))
+        () => pipeline("dedup_ngram_pipeline")().select("doc_a", "doc_b")))
     val sb = new StringBuilder
     sb.append("# EXPLAINS — formatted physical plans for the headline queries\n\n")
     sb.append(s"Generated by `graft.ExplainDump` at sf dir `$sf`; SCALE.md's\n")
@@ -152,31 +154,56 @@ object ExplainDump {
     sb.append("Expression/plan ids are normalized to per-plan sequential values\n")
     sb.append("so the file is a deterministic function of the plan shapes;\n")
     sb.append("`ExplainsSyncSpec` regenerates it and fails on any drift.\n")
-    // One more session-dependent token: several corpus operators
-    // `repartition(sc.defaultParallelism)` to spread per-token work,
-    // and that width renders as `RoundRobinPartitioning(N)` — N is a
-    // function of the HOST/SESSION (core count), not the plan shape,
-    // so it is rewritten to a symbolic name. Caveat (known, accepted):
-    // the rewrite is textual, so a LITERAL repartition(N) whose N
-    // happens to equal this session's defaultParallelism would also be
-    // rewritten. No declared query uses a literal round-robin
-    // repartition today; if one ever does, give it a count that can't
-    // collide (e.g. a prime > 64) or extend normalize() to track which
-    // plans used the session value.
-    val dp = spark.sparkContext.defaultParallelism
-    def dump(name: String, note: String,
-             df: org.apache.spark.sql.DataFrame): Unit = {
-      val plan = normalize(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-        .replace(s"RoundRobinPartitioning($dp)",
-          "RoundRobinPartitioning(defaultParallelism)")
-      sb.append(s"\n## `$name` — $note\n\n```\n$plan```\n")
-    }
+    def dump(name: String, note: String, df: DataFrame): Unit =
+      sb.append(s"\n## `$name` — $note\n\n```\n${formatted(df)}```\n")
     headline.foreach { case (name, note) =>
       dump(name, note, SparkEntry.queries(name)(spark, sf))
     }
     checkpointed.foreach { case (name, note, mk) => dump(name, note, mk()) }
     sb.toString
+  }
+
+  /** The formatted physical plan of `df` as every dump records it:
+    * [[normalize]]d, plus one more session-dependent token. Several
+    * corpus operators `repartition(sc.defaultParallelism)` to spread
+    * per-token work, and that width renders as
+    * `RoundRobinPartitioning(N)` — N is a function of the HOST/SESSION
+    * (core count), not the plan shape, so it is rewritten to a
+    * symbolic name. Caveat (known, accepted): the rewrite is textual,
+    * so a LITERAL repartition(N) whose N happens to equal this
+    * session's defaultParallelism would also be rewritten. No declared
+    * query uses a literal round-robin repartition today; if one ever
+    * does, give it a count that can't collide (e.g. a prime > 64) or
+    * extend normalize() to track which plans used the session value.
+    */
+  def formatted(df: DataFrame): String = {
+    val dp = df.sparkSession.sparkContext.defaultParallelism
+    normalize(df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
+      .replace(s"RoundRobinPartitioning($dp)",
+        "RoundRobinPartitioning(defaultParallelism)")
+  }
+
+  /** The un-materialized pipelines behind entry points that materialize
+    * through an eager localCheckpoint (whose returned plan is just a
+    * checkpoint scan), keyed by their [[PlanSnap]] name and built via
+    * the same package-private accessors the plan-shape specs audit.
+    * Building one runs nothing: the posting-list cache
+    * `dedupNgramPlan` marks is released unused.
+    */
+  def pipelines(spark: SparkSession,
+                sf: String): Seq[(String, () => DataFrame)] = {
+    def docs = graft.ops.Sources.table(spark, sf, "documents")
+    Seq(
+      "dedup_ngram_pipeline" -> (() => {
+        val (pairs, posts) = graft.ops.NearDup.dedupNgramPlan(spark, docs, 3,
+          graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinJaccard)
+        posts.unpersist(blocking = false)
+        pairs
+      }),
+      "dedup_containment_pipeline" -> (() =>
+        graft.ops.NearDup.containmentPairsPlan(spark, docs, 3,
+          graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinContain)))
   }
 
   def main(args: Array[String]): Unit = {

@@ -4,10 +4,12 @@ package graft
   * per-query files — the before/after plan evidence an optimization
   * round commits under `plans/rNN/` (the judge cannot run Spark, so
   * plan-shape claims in OPTIMIZATION_rNN.md are checked against these
-  * files). Plans go through [[ExplainDump.normalize]] so the text is a
-  * deterministic function of plan shape, and the session is the same
-  * canonical bench config ExplainDump records (AQE off, 8 shuffle
-  * partitions, UTC).
+  * files). Each file is [[ExplainDump.formatted]] — the text
+  * EXPLAINS.md records, a deterministic function of plan shape — from
+  * the same canonical bench session (AQE off, 8 shuffle partitions,
+  * UTC). Entry points that materialize through an eager
+  * localCheckpoint return a checkpoint-scan plan; their real pipelines
+  * ([[ExplainDump.pipelines]]) are dumped under `<name>_pipeline`.
   *
   * Usage:
   *   SPARK_GRAFT_ONLY=dedup_ngram,window_dist \
@@ -25,40 +27,14 @@ object PlanSnap {
     val (spark, owned) = ExplainDump.acquire()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val dp = spark.sparkContext.defaultParallelism
-    // Entry points that materialize through an eager localCheckpoint
-    // return a checkpoint-scan plan; their REAL pipeline is dumped
-    // under "<name>_pipeline" via the same package-private accessors
-    // ExplainDump's checkpointed section uses.
-    def docs = graft.ops.Sources.table(spark, sf, "documents")
-    val internal: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "dedup_ngram_pipeline" -> (() => {
-        val (pairs, posts) = graft.ops.NearDup.dedupNgramPlan(spark, docs, 3,
-          graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinJaccard)
-        posts.unpersist(blocking = false)
-        pairs
-      }),
-      "dedup_containment_pipeline" -> (() =>
-        graft.ops.NearDup.containmentPairsPlan(spark, docs, 3,
-          graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinContain)))
     def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val plan = ExplainDump.normalize(df.queryExecution
-          .explainString(org.apache.spark.sql.execution.FormattedMode))
-        .replace(s"RoundRobinPartitioning($dp)",
-          "RoundRobinPartitioning(defaultParallelism)")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(
+        s"$outDir/${name}_$suffix.txt"), ExplainDump.formatted(df))
       println(s"wrote $outDir/${name}_$suffix.txt")
     }
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        try dump(name, fn(spark, sf))
-        catch { case e: Throwable =>
-          println(s"plansnap: $name FAILED: ${e.getMessage}")
-        }
-      }
-    internal
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+      .map { case (name, fn) => name -> (() => fn(spark, sf)) }
+    (queries ++ ExplainDump.pipelines(spark, sf))
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, mk) =>
         try dump(name, mk())

@@ -236,9 +236,8 @@ object Aggregates {
     * violated, sparse column missed by the sample, interior too big)
     * falls back per-column to the sort-based [[Num.exactPercentiles]]
     * — exactness is unconditional, the sample only bounds where to
-    * look. At n where 5n/√m outgrows [[Num.maxInterior]], the GK
-    * bracket path ([[Num.bracketExpr]], interior 6n/accuracy) is the
-    * documented swap.
+    * look. At n where 5n/√m outgrows [[Num.maxInterior]], every
+    * column takes that sort-path fallback.
     */
   private def profileFit(li0: DataFrame, groupCol: Option[Column])
       : Map[Int, (org.apache.spark.sql.Row, Map[String, Option[Double]])] = {

@@ -16,6 +16,29 @@ import org.apache.spark.sql.types._
   */
 object NearDup {
 
+  /** The eager entry-point policy: run `plan` once through
+    * `localCheckpoint` (lineage truncated to the small result) and
+    * release the persisted intermediates it read — in a `finally`, so
+    * a failed checkpoint job does not leave them cached for the rest
+    * of the session. Plans are exactly the ones the caller built.
+    *
+    * Why eager and not lazy: dropping the persist and the checkpoint
+    * from dedupNgram, dedupContainment, dedupMinhash,
+    * dedupMinhashPortable, dedupMinhashIncr and
+    * dedupSimhashPairsPortable left all 172 sf0.01 result digests
+    * identical but was SLOWER — `graft.ProfileFixed` at sf0.1 (bench
+    * session, 4 cores, two runs per side) measured the 7 affected
+    * queries at 13.3 / 12.6 s of build plus execute eager vs
+    * 15.8 / 17.5 s lazy (`dedup_minhash` 1.27 / 1.31 → 1.85 / 1.95 s,
+    * `dedup_minhash_incr` 1.39 / 1.34 → 2.04 / 1.89 s): without the
+    * cache each persisted intermediate is recomputed by every branch
+    * that reads it.
+    */
+  private[ops] def materialize(plan: DataFrame,
+                               cached: DataFrame*): DataFrame =
+    try plan.localCheckpoint()
+    finally cached.foreach(_.unpersist(blocking = false))
+
   /** 64-bit hashes of the n-token shingles per document (NOT
     * deduplicated — both consumers are duplicate-idempotent: MinHash
     * takes a min, dedupNgram collects a set, so a distinct here would
@@ -175,14 +198,11 @@ object NearDup {
                    bands: Int, minSim: Double): DataFrame = {
     val sigs = minhashSignatures(s, docs, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val est = minhashScoredPairs(sigs, numHashes, bands, minSim)
-    val out = est.agg(
+    materialize(minhashScoredPairs(sigs, numHashes, bands, minSim).agg(
         count(lit(1)).as("n_candidate_pairs"),
         coalesce(round(avg(col("est_jaccard")), 4), lit(0.0))
-          .as("avg_jaccard_sim"))
-      .localCheckpoint()
-    sigs.unpersist(blocking = false)
-    out
+          .as("avg_jaccard_sim")),
+      sigs)
   }
 
   /** Pair-level core of [[dedupMinhash]]: banded candidates from a
@@ -420,18 +440,15 @@ object NearDup {
       s"bands ($bands) must divide numHashes ($numHashes)")
     val sigs = portableSigs(s, docs, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scored = portableScoredPairs(sigs, numHashes, bands, minSim)
-    val out = scored.agg(
+    materialize(portableScoredPairs(sigs, numHashes, bands, minSim).agg(
         count(lit(1)).cast(LongType).as("n_pairs"),
         coalesce(sum(col("matches")), lit(0L)).cast(LongType)
           .as("sum_matches"),
         when(count(lit(1)) === 0, lit(0.0))
           .otherwise(sum(col("matches")).cast(DoubleType) /
             (count(lit(1)).cast(DoubleType) * numHashes))
-          .as("avg_jaccard"))
-      .localCheckpoint()
-    sigs.unpersist(blocking = false)
-    out
+          .as("avg_jaccard")),
+      sigs)
   }
 
   /** Per-document portable SimHash over 3-token SHINGLE hashes —
@@ -483,9 +500,7 @@ object NearDup {
     // per-side subplans 4× → 1×; the persist removes the remaining 2×)
     val sh = simhashShinglePortable(s, Sources.table(s, dir, "documents"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = simhashBandPairs(sh, maxHamming).localCheckpoint()
-    sh.unpersist(blocking = false)
-    out
+    materialize(simhashBandPairs(sh, maxHamming), sh)
   }
 
   /** `doc_fingerprint_portable` — ORACLE-CHECKABLE min-shingle doc
@@ -542,11 +557,8 @@ object NearDup {
         .select(col("doc_id").as("corpus_doc"), col("band_idx"),
           col("band_key")), Seq("band_idx", "band_key"))
       .select("probe_doc", "corpus_doc").distinct()
-    val out = agreementScore(cand, sigsP, sigsC, "probe_doc",
-        "corpus_doc", numHashes, minSim)
-      .localCheckpoint()
-    sigs.unpersist(blocking = false)
-    out
+    materialize(agreementScore(cand, sigsP, sigsC, "probe_doc",
+      "corpus_doc", numHashes, minSim), sigs)
   }
 
   /** One-time banded MinHash index over a corpus — the materialized
@@ -629,9 +641,7 @@ object NearDup {
       .select(col("probe_doc"), col("corpus_doc"),
         sigAgreement(numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= minSim)
-    val out = est.localCheckpoint()
-    newSigs.unpersist(blocking = false)
-    out
+    materialize(est, newSigs)
   }
 
   /** Per-document SimHash from a precomputed non-null hash column
@@ -783,16 +793,11 @@ object NearDup {
   def dedupNgram(s: SparkSession, docs: DataFrame, n: Int,
                  maxDf: Int, minJaccard: Double): DataFrame = {
     val (pairs, posts) = dedupNgramPlan(s, docs, n, maxDf, minJaccard)
-    // eager localCheckpoint: runs the pipeline once (through the
-    // posting-list cache) and truncates lineage to the small
-    // pair-level result, so `posts` can be unpersisted immediately
-    // instead of pinning cached blocks for the session lifetime.
-    // The checkpointed blocks are bounded by the surviving pair
-    // count and are released by the ContextCleaner when the
-    // returned DataFrame is dropped.
-    val out = pairs.localCheckpoint()
-    posts.unpersist(blocking = false)
-    out.orderBy("doc_a", "doc_b")
+    // runs the pipeline once (through the posting-list cache); the
+    // checkpointed blocks are bounded by the surviving pair count and
+    // are released by the ContextCleaner when the returned DataFrame
+    // is dropped
+    materialize(pairs, posts).orderBy("doc_a", "doc_b")
   }
 
   /** The un-materialized candidate-pair plan behind [[dedupNgram]]:
@@ -888,8 +893,7 @@ object NearDup {
     */
   def dedupContainment(s: SparkSession, docs: DataFrame, n: Int,
                        maxDf: Int, minContain: Double): DataFrame =
-    containmentPairsPlan(s, docs, n, maxDf, minContain)
-      .localCheckpoint()
+    materialize(containmentPairsPlan(s, docs, n, maxDf, minContain))
 
   /** The un-materialized candidate-pair plan behind
     * [[dedupContainment]] — exposed (like [[dedupNgramPlan]]) so the
@@ -1105,9 +1109,7 @@ object NearDup {
   def dedupBloom(s: SparkSession, docs: DataFrame, fpp: Double,
                  expectedItems: Option[Long]): DataFrame = {
     val (plan, cached) = dedupBloomPlan(s, docs, fpp, expectedItems)
-    val out = plan.localCheckpoint()
-    cached.foreach(_.unpersist(blocking = false))
-    out
+    materialize(plan, cached: _*)
   }
 
   /** The plan behind [[dedupBloom]], plus the persisted frames the
@@ -1947,14 +1949,11 @@ object NearDup {
     // disjoint by construction (pairDropped ⊆ representatives,
     // exactDropped = non-representatives), so plain union-all — a
     // distinct here would be a whole extra shuffle for nothing
-    val out = marked
+    materialize(marked
       .join(pairDropped.union(exactDropped)
         .withColumn("dup", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster_id").cast(LongType),
-        coalesce(!col("dup"), lit(true)).as("kept"))
-      .localCheckpoint()
-    marked.unpersist(blocking = false)
-    vecs.unpersist(blocking = false)
-    out
+        coalesce(!col("dup"), lit(true)).as("kept")),
+      marked, vecs)
   }
 }

@@ -389,94 +389,9 @@ object Num {
     (maxRank * packShift - packedMax)
       .cast(org.apache.spark.sql.types.LongType)
 
-  /** Rank-error bound of `percentile_approx` at the [[bracketAccuracy]]
-    * used by the bracketed exact-percentile path: ε = 1/accuracy, so a
-    * returned value's true rank is within ±ε·n of its target.
-    */
-  val bracketAccuracy: Int = 10000
-
-  /** `percentile_approx` bracket expression to EMBED IN A CALLER'S
-    * FUSED AGGREGATE: for each requested percentile p, two approximate
-    * probes at p ∓ 3ε whose returned VALUES are guaranteed (by the
-    * Greenwald–Khanna ±ε·n rank bound) to straddle the exact order
-    * statistics at `floor/ceil(p·(n−1))`. The caller hands the 2·|ps|
-    * values to [[exactPercentilesBracketed]], which recovers the EXACT
-    * percentiles in ONE more job — replacing the sort-based
-    * [[exactPercentiles]]' three eager jobs (range-sample, zipWithIndex
-    * count, collect) with one, on top of an aggregate pass the caller
-    * was running anyway. Returns `array<double>` ordered
-    * `[p₁_lo, p₁_hi, p₂_lo, …]`.
-    */
-  def bracketExpr(c: Column, ps: Seq[Double]): Column = {
-    val eps = 3.0 / bracketAccuracy
-    val probes = ps.flatMap(p => Seq(
-      math.max(0.0, p - eps), math.min(1.0, p + eps)))
-    percentile_approx(c.cast(DoubleType),
-      array(probes.map(lit): _*), lit(bracketAccuracy))
-  }
-
-  /** Exact percentiles from [[bracketExpr]] brackets in ONE job:
-    * counts the rows below / equal-to each bracket's edges and
-    * collects the (≈ 6ε·n-row) STRICT-INTERIOR value window, then
-    * reads the exact straddling order statistics out of the sorted
-    * window and applies the same interpolation (and equal-value
-    * shortcut) as [[exactPercentiles]] — bit-identical results,
-    * because only exact order statistics ever reach the arithmetic;
-    * the approximation merely bounds WHERE to look. Edge values enter
-    * as COUNTS, not rows, so a duplicate run landing exactly on a
-    * bracket edge (the common skew pathology: a half-zeros column)
-    * costs two longs, not a collected run. If a bracket misses (GK
-    * rank bound violated — cannot happen, but guarded), that
-    * percentile falls back to the sort-based path, preserving
-    * correctness unconditionally.
-    *
-    * Scale note: interior size grows as 6n/accuracy, so at much larger
-    * n raise `accuracy` in step (GK sketch memory is O(accuracy·log n))
-    * — with interior dup runs bounded by the same 6ε·n because the GK
-    * bound pins both edges' ranks around the target.
-    */
-  def exactPercentilesBracketed(df: org.apache.spark.sql.DataFrame,
-                                c: String, ps: Seq[Double],
-                                knownCount: Long,
-                                brackets: Seq[Double]): Seq[Double] = {
-    // an all-null column yields a null bracket array upstream — fail
-    // with the same descriptive error as the n == 0 check, not an NPE
-    require(brackets != null && knownCount > 0,
-      s"exactPercentilesBracketed($c): no non-null rows")
-    require(brackets.length == 2 * ps.length,
-      s"need 2 bracket values per percentile: got ${brackets.length} " +
-        s"for ${ps.length}")
-    val n = knownCount
-    require(n > 0, s"exactPercentilesBracketed($c): no non-null rows")
-    val vals = df.select(col(c).cast(DoubleType).as("v"))
-      .filter(col("v").isNotNull)
-    val aggs = ps.indices.flatMap { i =>
-      val (blo, bhi) = (brackets(2 * i), brackets(2 * i + 1))
-      Seq(
-        sum(when(col("v") < lit(blo), 1L).otherwise(0L)).as(s"below_$i"),
-        sum(when(col("v") === lit(blo), 1L).otherwise(0L)).as(s"eqlo_$i"),
-        sum(when(col("v") === lit(bhi) && lit(bhi) =!= lit(blo), 1L)
-          .otherwise(0L)).as(s"eqhi_$i"),
-        sort_array(collect_list(
-          when(col("v") > lit(blo) && col("v") < lit(bhi), col("v"))))
-          .as(s"win_$i"))
-    }
-    val row = vals.agg(aggs.head, aggs.tail: _*).collect()(0)
-
-    ps.zipWithIndex.map { case (p, i) =>
-      def cnt(f: String): Long = Option(row.getAs[Any](f))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      percentileFromWindow(n, p, cnt(s"below_$i"), cnt(s"eqlo_$i"),
-        cnt(s"eqhi_$i"), row.getSeq[Double](row.fieldIndex(s"win_$i")),
-        brackets(2 * i), brackets(2 * i + 1))
-        .getOrElse( // bracket miss: exact sort-based fallback
-          exactPercentiles(df, c, Seq(p), n).head)
-    }
-  }
-
   // --- Sampled brackets (r14) --------------------------------------------
   //
-  // bracketExpr's percentile_approx probes are TypedImperativeAggregates,
+  // A `percentile_approx` (GK) bracket probe is a TypedImperativeAggregate,
   // and ONE such function in a fused aggregate demotes the whole pass to
   // ObjectHashAggregateExec — no whole-stage codegen for any of the
   // caller's other metrics (measured at sf0.1: the 15-metric profile fit
@@ -497,11 +412,10 @@ object Num {
   // Scale note: the interior grows as ~5n/√m, so a fixed driver-side
   // sample stops being collectable around n ≈ maxInterior·√m/5; past
   // that the caller falls back to [[exactPercentiles]] (range-partitioned
-  // sort, no driver funnel) or the GK path ([[bracketExpr]], interior
-  // 6n/accuracy with sketch memory O(accuracy·log n)) — both retained.
+  // sort, no driver funnel).
 
   /** Interior-collect cap for the sampled-bracket path: past this the
-    * caller must fall back to the sort or GK path.
+    * caller must fall back to the sort path.
     */
   val maxInterior: Long = 2000000L
 
@@ -610,9 +524,8 @@ object Num {
     * / equal-hi / strictly-inside. `blo`/`bhi` may be any scalar
     * expressions (literals, or a CASE over a group column for grouped
     * fits). Nulls contribute to no bucket. The single authoritative
-    * builder — profileOf, profileDriftQuery, and
-    * exactPercentilesBracketed's spelling all reduce to this shape
-    * (r13 ADVICE: the hand-duplicated copies could drift).
+    * builder — profileOf and profileDriftQuery both reduce to this
+    * shape (r13 ADVICE: the hand-duplicated copies could drift).
     */
   def refineCountAggs(v: Column, blo: Column, bhi: Column,
                       tag: String): Seq[Column] = Seq(
@@ -621,8 +534,8 @@ object Num {
     sum(when(v === bhi && bhi =!= blo, 1L).otherwise(0L)).as(s"eqhi_$tag"),
     sum(when(v > blo && v < bhi, 1L).otherwise(0L)).as(s"inwin_$tag"))
 
-  /** Driver-side reconstruction step shared by
-    * [[exactPercentilesBracketed]] and the fused profile-drift path:
+  /** Driver-side reconstruction step of the sampled-bracket path
+    * (`Aggregates.profileFit`, behind profileOf and profile drift):
     * given the bracket's below/equal-edge counts and sorted interior,
     * return the exact percentile (builtin interpolation + equal-value
     * shortcut), or None if either straddling order statistic falls

@@ -451,17 +451,18 @@ object TimeOps {
     *
     * `maxFilesPerTrigger` bounds how many NEW files one micro-batch
     * consumes — the throughput/latency knob for a drop directory.
-    * MEASURED (StreamProbe r20, real file source, 1,000 small files /
-    * 100k rows, local[32], catch-up regime = whole backlog on disk
-    * before the query starts, the only regime where the cap binds):
-    * wall ≈ 9.5 s + 1.2 s × batches — None → 1 batch / 10.4 s,
-    * cap 250 → 4 / 12.8 s, cap 100 → 10 / 22.2 s, cap 25 → 40 /
-    * 55.9 s. The ~1.2 s per-BATCH fixed cost (listing + checkpoint
-    * commit + archive moves) is near-independent of batch size, so
-    * small caps multiply it ~linearly. In the STEADY-DRIP regime
-    * (files landing while the query runs) batch size tracks the
-    * arrival rate and the cap barely binds: ~310–345 batches at every
-    * setting on the same corpus. RECOMMENDATION: leave it None
+    * MEASURED (SCALE.md, "Streaming over a real file-source drop
+    * directory": real file source, 1,000 small files / 100k rows,
+    * catch-up regime = whole backlog on disk before the query starts,
+    * the only regime where the cap binds): wall grows with the batch
+    * count, not the rows — ≈ 12.5 s + 0.26 s × batches at 4 cores
+    * (cap 25 → 40 batches, 1.9× the uncapped run), ≈ 9.5 s + 1.2 s ×
+    * batches at 32 cores (5.4×). The per-BATCH fixed cost (listing +
+    * checkpoint commit + archive moves) is near-independent of batch
+    * size, so small caps multiply it ~linearly. In the STEADY-DRIP
+    * regime (files landing while the query runs) batch size tracks
+    * the arrival rate and the cap barely binds (374 batches for 1,000
+    * files uncapped at 4 cores). RECOMMENDATION: leave it None
     * (consume everything available — the default, lowest cost per
     * row) unless a single catch-up batch would exceed executor memory
     * or downstream latency SLOs; then size the cap so a batch still

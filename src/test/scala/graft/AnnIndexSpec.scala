@@ -44,8 +44,9 @@ class AnnIndexSpec extends SparkSpec {
     // 200× the sf0.1 fixture — the scale where IVF exists at all.
     // Deterministic end to end (synthetic vectors are pure functions
     // of vec_id, k-means decimal-exact, ties break on vec_id), so
-    // these recalls are the exact numbers recorded in SCALE.md by
-    // AnnRecallDemo, independent of parallelism.
+    // these recalls are the exact numbers recorded in SCALE.md (r12
+    // sweep; its retired main is reproducible from commit 5531381),
+    // independent of parallelism.
     val n = 1000000L
     val k = 10
     val queries = Seq(0L, 1L, 2L)
@@ -83,7 +84,7 @@ class AnnIndexSpec extends SparkSpec {
     // necessarily ranks in the candidate top-k
     assert(byProbe.map(_._2).sliding(2).forall(w => w(0) <= w(1) + 1e-9),
       s"recall not monotone in probe fraction: $byProbe")
-    // floors below the AnnRecallDemo-measured values (SCALE.md: 1.00
+    // floors below the measured values (SCALE.md's r12 sweep: 1.00
     // at every probe fraction on this corpus — uniform high-dim
     // vectors concentrate a query's true neighbors into its own
     // Voronoi cell). The floors are regression guards: a broken

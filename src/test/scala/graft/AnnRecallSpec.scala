@@ -4,8 +4,9 @@ import graft.ops.{Ann, Sources, TextSim}
 import org.apache.spark.sql.functions._
 
 /** Recall gates for the on-the-fly ANN query paths (r13 VERDICT #8:
-  * AnnRecallDemo measured recall but nothing pinned it — a regression
-  * in bucket probing could land silently) and the composed
+  * the r12 sweep recorded in SCALE.md measured recall but nothing
+  * pinned it — a regression in bucket probing could land silently)
+  * and the composed
   * IVF+exact-rerank k-NN join (VERDICT #9). Everything here is
   * deterministic (hash-derived hyperplanes, lowest-id centroids, tie
   * breaks on vec_id), so the measured recalls reproduce exactly and

@@ -84,57 +84,36 @@ class ExactPercentilesSpec extends SparkSpec {
     assert(e.getMessage.contains("no non-null rows"))
   }
 
-  private def bracketed(df: org.apache.spark.sql.DataFrame,
-                        qs: Seq[Double]): Seq[Double] = {
-    val fit = df.agg(count(col("v")).as("n"),
-      Num.bracketExpr(col("v"), qs).as("br")).collect()(0)
-    Num.exactPercentilesBracketed(df, "v", qs,
-      knownCount = fit.getAs[Long]("n"),
-      brackets = fit.getSeq[Double](fit.fieldIndex("br")))
-  }
-
-  test("bracketed path is bit-identical to the builtin on mixed data") {
-    import spark.implicits._
-    val vals = (0 until 1003).map { i =>
-      val x = math.sin(i * 12.9898) * 43758.5453
-      val frac = x - math.floor(x)
-      (if (i % 7 == 0) -1 else 1) * (if (i % 13 == 0) 0.5 else frac) * 100
-    }
-    val df = vals.toDF("v")
-    val got = bracketed(df, ps)
-    val want = builtin(df, "v")
-    got.zip(want).zip(ps).foreach { case ((g, w), p) =>
-      assert(g == w, s"bracketed p=$p: $g != builtin $w")
-    }
-  }
-
-  test("bracketed path survives duplicate runs covering the bracket " +
-    "(edge values enter as counts, including the equal-straddle " +
+  test("percentileFromWindow reconstructs duplicate runs covering the " +
+    "bracket (edge values enter as counts, including the equal-straddle " +
     "shortcut)") {
     import spark.implicits._
-    // half the column is one value: every decile bracket around it
-    // lands INSIDE the run, so both edges equal the run value and the
+    // half the column is one value: the upper percentiles' brackets
+    // land INSIDE the run, so both edges equal the run value and the
     // interior window is empty — the count-based reconstruction (and
-    // for p=0.5 the equal-value shortcut) must still be exact
+    // at p=0.75, pos 751.5, the equal-value shortcut) must still be
+    // exact. Brackets are order statistics 3 ranks either side of the
+    // target, counted the way Num.refineCountAggs counts them.
     val vals = Seq.fill(500)(7.77) ++ (0 until 503).map(_ * 0.013)
-    val df = vals.toDF("v")
+    val sorted = vals.sorted.toIndexedSeq
+    val n = vals.length.toLong
     val qs = Seq(0.1, 0.25, 0.5, 0.75, 0.9)
+    val got = qs.map { p =>
+      val pos = p * (n - 1)
+      val blo = sorted(math.max(0, math.floor(pos).toInt - 3))
+      val bhi = sorted(math.min(n.toInt - 1, math.ceil(pos).toInt + 3))
+      Num.percentileFromWindow(n, p,
+        below = vals.count(_ < blo).toLong,
+        eqLo = vals.count(_ == blo).toLong,
+        eqHi = vals.count(v => v == bhi && bhi != blo).toLong,
+        win = sorted.filter(v => v > blo && v < bhi),
+        blo = blo, bhi = bhi)
+        .getOrElse(fail(s"p=$p: bracket ($blo, $bhi) missed"))
+    }
     val arr = qs.mkString("array(", ",", ")")
-    val want = df.agg(expr(s"percentile(v, $arr)")).collect()(0)
+    val want = vals.toDF("v").agg(expr(s"percentile(v, $arr)")).collect()(0)
       .getSeq[Double](0)
-    assert(bracketed(df, qs) == want)
-  }
-
-  test("bracketed path falls back to the sort path on a bracket miss") {
-    import spark.implicits._
-    val df = (1 to 100).map(_.toDouble).toDF("v")
-    // deliberately WRONG brackets (both sides above the true median):
-    // pick() finds no order statistic inside them, so the result must
-    // come from the sort-based fallback and still be exact
-    val got = Num.exactPercentilesBracketed(df, "v", Seq(0.5),
-      knownCount = 100L, brackets = Seq(90.0, 95.0))
-    val want = df.agg(expr("percentile(v, 0.5)")).collect()(0)
-      .getDouble(0)
-    assert(got == Seq(want))
+    assert(got == want)
+    assert(got(3) == 7.77 && got(4) == 7.77)
   }
 }

@@ -48,4 +48,21 @@ class ExplainsSyncSpec extends AnyFunSuite {
            |$ctx""".stripMargin)
     }
   }
+
+  test("normalize masks typed-Dataset closure identities") {
+    // one plan with two closures, as two JVMs render it: the hidden-
+    // class number, address and identity hash all differ, ids too
+    def plan(f: String, g: String, id: Int): String =
+      "(3) MapElements\nArguments: graft.ops.Multimodal$$$Lambda$" + f +
+        ", obj#" + id + ": struct<doc_id:bigint>\n" +
+        "(4) MapElements\nArguments: graft.ops.Multimodal$$$Lambda$" + g +
+        "\n(5) MapElements\nArguments: graft.ops.Multimodal$$$Lambda$" + f +
+        "\n"
+    val a = ExplainDump.normalize(plan("6196/0x00007effb17422b0@2ffc3d5e",
+      "6197/0x00007effb17424c8@51a3b1f0", 41))
+    val b = ExplainDump.normalize(plan("812/0x000071c2a0b3c9f8@6d1b0a77",
+      "813/0x000071c2a0b3cc10@1f2e3d4c", 7))
+    assert(a == b)
+    assert(a == plan("1", "2", 1), s"unexpected masking:\n$a")
+  }
 }

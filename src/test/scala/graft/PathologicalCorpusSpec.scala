@@ -97,4 +97,25 @@ class PathologicalCorpusSpec extends SparkSpec {
     assert(entVal > 0 && entVal < 16 && !entVal.isNaN, s"entropy $entVal")
     assert(rep.getAs[Boolean]("repetitive"), "a 2000x-repeated doc must flag")
   }
+
+  test("a failing checkpoint job releases the entry point's cache") {
+    // the eager entry points persist an intermediate and release it
+    // after the checkpoint job; when that job throws, the release must
+    // still happen, or the intermediate stays cached for the session.
+    // `text` raises only when a task evaluates it, so building the plan
+    // succeeds and the failure comes from the checkpoint job.
+    def cachedPlans: Int = org.apache.spark.sql.grafttest.CachedPlans.count(spark)
+    val poisoned = spark.range(8).select(col("id").as("doc_id"),
+      expr("CASE WHEN id >= 0 THEN raise_error('poisoned text') " +
+        "ELSE 'unused' END").cast("string").as("text"))
+    val before = cachedPlans
+    val e = intercept[Exception] {
+      NearDup.dedupMinhash(spark, poisoned, 64, 16, 0.4)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("poisoned text"))),
+      s"unexpected failure: $e")
+    assert(cachedPlans == before,
+      s"cached plans went from $before to $cachedPlans")
+  }
 }

@@ -18,7 +18,8 @@ with open(os.path.join(out_dir, "oracle_sql.json")) as f:
     oracle = json.load(f)
 
 # BENCH_DUCK_ONLY=q1,q2 restricts to a named subset (e.g. the 15-query
-# relational family for the ScaleRelational sf0.4 point). A subset run
+# relational family of SCALE.md's sf0.4 point, measured by a since-retired
+# main reproducible from commit 5531381). A subset run
 # is stamped into the output ("only") and refuses the full-baseline
 # paths so a filtered artifact can't masquerade as a full suite.
 only = os.environ.get("BENCH_DUCK_ONLY")
@@ -36,7 +37,7 @@ con.execute("SET threads TO 32")
 for t in ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split():
     p = os.path.join(sf_dir, f"{t}.parquet")
-    if os.path.isdir(p):  # Spark-written multi-file table (e.g. ScaleRelational output)
+    if os.path.isdir(p):  # Spark-written multi-file table (a `write.parquet` dir)
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')")
     elif os.path.exists(p):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

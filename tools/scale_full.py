@@ -2,8 +2,9 @@
 """Build a FULL k-replica fixture dir (every table, not just the corpus
 pair) for the whole-suite oracle pass above sf0.1 (r18 VERDICT ask #3).
 
-Replication rule per table (mirrors ScaleRelational's key-shift design,
-extended to the event/corpus tables):
+Replication rule per table (the key-shift design of SCALE.md's relational
+sf0.4/sf0.8 points, whose since-retired main is reproducible from commit
+5531381, extended to the event/corpus tables):
 
   - orders / lineitem : o_orderkey / l_orderkey shifted into disjoint
     ranges per replica (each replica's orders join only its own
