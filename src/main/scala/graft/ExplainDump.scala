@@ -73,6 +73,9 @@ object ExplainDump {
     *      `Outer$$$Lambda$6196/0x00007effb17422b0@2ffc3d5e` (the
     *      hidden-class number, address and identity hash all differ
     *      between JVMs), remapped to `$$Lambda$1`, `$$Lambda$2`, ….
+    *   5. RDD ids and call-site lines — checkpoint scans carry
+    *      `MapPartitionsRDD[302] at localCheckpoint at NearDup.scala:182`,
+    *      rendered `MapPartitionsRDD[1] at … at NearDup.scala:_`.
     */
   def normalize(plan: String): String = {
     def remap(s: String, pattern: scala.util.matching.Regex,
@@ -86,7 +89,9 @@ object ExplainDump {
     val closures = remap(plan,
       "(\\$\\$Lambda(?:\\$\\d+)?/0x\\p{XDigit}+@\\p{XDigit}+)".r,
       i => "$$Lambda$" + i)
-    val a = remap(closures, "#(\\d+)".r, i => s"#$i")
+    val rdds = remap(closures, "RDD\\[(\\d+)\\]".r, i => s"RDD[$i]")
+    val sites = "\\b(\\w+\\.scala):\\d+\\b".r.replaceAllIn(rdds, "$1:_")
+    val a = remap(sites, "#(\\d+)".r, i => s"#$i")
     val b = remap(a, "plan_id=(\\d+)".r, i => s"plan_id=$i")
     // lambda names: per-base-name sequential (x_47 -> x_1, acc_12 -> acc_1)
     val counters = scala.collection.mutable.Map.empty[String, Int]

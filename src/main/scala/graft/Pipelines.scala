@@ -63,12 +63,13 @@ object Pipelines {
       col("email"),
       current_timestamp().as("processed_at"))
 
-  /** 2016: extract one CSV, transform, load. Returns rows loaded. */
-  def basic2016(spark: SparkSession, inCsv: String, outDir: String): Long = {
-    val out = transformUsers(Sources.csv(spark, inCsv, usersSchema))
-    Sinks.parquet(out).save(outDir)
-    spark.read.parquet(outDir).count()
-  }
+  /** 2016: extract one CSV, transform, load. Returns rows loaded,
+    * counted on the write ([[graft.ops.Sinks.parquetCounted]]), as
+    * every era below counts its outputs.
+    */
+  def basic2016(spark: SparkSession, inCsv: String, outDir: String): Long =
+    Sinks.parquetCounted(
+      transformUsers(Sources.csv(spark, inCsv, usersSchema)), outDir)
 
   case class ValidatedLoad(loaded: Long, rejected: Long)
 
@@ -81,12 +82,11 @@ object Pipelines {
     val good = transformUsers(raw.filter(validUser))
     val bad = raw.filter(!validUser)
       .withColumn("reason", userRejectReason)
-    Sinks.parquet(good).save(outDir)
-    Sinks.parquet(bad).save(rejectDir)
+    val loaded = Sinks.parquetCounted(good, outDir)
+    val rejected = Sinks.parquetCounted(bad, rejectDir)
     // both branches are materialized — release the shared scan cache
     raw.unpersist(blocking = false)
-    ValidatedLoad(spark.read.parquet(outDir).count(),
-      spark.read.parquet(rejectDir).count())
+    ValidatedLoad(loaded, rejected)
   }
 
   /** 2020: multi-file glob (keep `input_*`, skip prior output),
@@ -131,10 +131,10 @@ object Pipelines {
       .withColumn("quality_score", lit(report.validRate))
       .withColumn("batch_id", date_format(current_timestamp(),
         "yyyyMMdd_HHmmss"))
-    Sinks.parquet(cleaned).save(outDir)
+    val loaded = Sinks.parquetCounted(cleaned, outDir)
     // report, alerts, and the load are all materialized by now
     raw.unpersist(blocking = false)
-    QualityRun(spark.read.parquet(outDir).count(), report, alerts)
+    QualityRun(loaded, report, alerts)
   }
 
   /** 2025: the same validated transform as a streaming micro-batch
@@ -171,13 +171,14 @@ object Pipelines {
     * engine's operators. Exact dedup (content hash, keep min doc) →
     * near-dup survivor selection (cluster canonicals from
     * [[graft.ops.NearDup.dedupCluster]]) → eval-set decontamination
-    * ([[graft.ops.NearDup.decontaminate]]) → quality gate (rule
-    * thresholds [[graft.ops.TextSim.textQuality]] + repetition rules +
-    * token-entropy floor) → deterministic train split
-    * (md5 nibble) → PII scrub → fixed-token-budget sequence packing →
-    * parquet load. Every stage is a hash-keyed filter/join, so the
-    * whole pipeline is one lazy plan per count plus the final write —
-    * no driver-side materialization, same shapes at 100 TB.
+    * ([[graft.ops.NearDup.decontaminateSplit]]) → quality gate
+    * ([[graft.ops.TextSim.qualityGate]]: the rule thresholds of
+    * `textQuality`, the repetition rules of `textRepetition` and a
+    * token-entropy floor) → deterministic train split (md5 nibble) →
+    * PII scrub → fixed-token-budget sequence packing → parquet load.
+    * Every stage is a hash-keyed filter/join, so the run is one
+    * per-document verdict plus the final write — no driver-side
+    * materialization, same shapes at 100 TB.
     *
     * `clusterCap` optionally adds embedding-cluster balancing after
     * the quality gate: documents are k-means-clustered in embedding
@@ -206,6 +207,11 @@ object Pipelines {
     * on the `graft-docs` connector at millions of documents, or on a
     * user's crawl. `embeddings` is required only when `clusterCap`
     * asks for semantic balancing.
+    *
+    * `doc_id` is the corpus key: every stage decides per id, and the
+    * packed rows are `docs` joined to the surviving ids. Duplicate ids
+    * are outside the contract: each copy joins every verdict row of
+    * its id, so the stage counts and the packed rows fan out.
     */
   def curationOver(spark: SparkSession, docs: DataFrame,
                    embeddings: Option[DataFrame], outDir: String,
@@ -214,138 +220,117 @@ object Pipelines {
                    survivorPolicy: String = "min-id",
                    spanScrub: Option[Int] = None): CurationRun = {
     import graft.ops.{Cluster, NearDup, Sampling, TextSim}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.storage.StorageLevel
     require(survivorPolicy == "min-id" || survivorPolicy == "quality",
       s"survivorPolicy must be 'min-id' or 'quality', got '$survivorPolicy'")
-    // Each stage's decision is an id-only relation, PERSISTED before
-    // use: the run both packs the survivors (one lineage) and reports
-    // per-stage counts (five more lineages through the same stages),
-    // and without the persist every count re-executes the expensive
-    // upstream work — near-dup clustering and decontamination ran ~4×
-    // each, tripling the 1M-doc wall-clock. Persisting only the
-    // doc_id sets keeps the cached footprint at ~8 bytes/doc/stage
-    // (the text never caches), which is the same per-stage checkpoint
-    // discipline a 100 TB run needs anyway. Unpersisted on exit.
-    import org.apache.spark.storage.StorageLevel
     // 1. exact dedup: canonical = min doc id per normalized content hash
     val exactKeep = docs
       .select(col("doc_id"), sha2(trim(lower(col("text"))), 256).as("h"))
-      .groupBy("h").agg(min("doc_id").as("doc_id")).select("doc_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val d1 = docs.join(exactKeep, "doc_id")
+      .groupBy("h").agg(min("doc_id").as("doc_id"))
+      .select(col("doc_id"), lit(true).as("exact_keep"))
     // 2. near-dup survivors: every cluster member except the survivor
     //    drops. Policies: "min-id" keeps the component canonical
     //    (cluster_id == min doc_id, free from the CC output);
     //    "quality" keeps the LONGEST member (text length, min-id
-    //    tie-break) via the packed-decimal argmax — the
-    //    NearDup.dedupSurvivor policy, running on any corpus (no
-    //    n_chars column needed)
-    val cc = NearDup.connectedComponents(
-      NearDup.dedupNgram(spark, docs, 3, 20, 0.2).select("doc_a", "doc_b"))
-    // branch-local persists that must live until the output is
-    // materialized (released with the others in the finally)
-    val branchPersists = scala.collection.mutable.ArrayBuffer
-      .empty[DataFrame]
-    val nearDrop = (survivorPolicy match {
+    //    tie-break) — the NearDup.dedupSurvivor policy, running on any
+    //    corpus (no n_chars column needed). The clusters come back
+    //    checkpointed, so ranking them re-reads no pair build.
+    val cc = NearDup.dedupCluster(spark, docs.select("doc_id", "text"),
+      maxIters = 20)
+    val nearDrop = survivorPolicy match {
       case "min-id" =>
         cc.filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
       case _ =>
-        // withLen feeds BOTH sides of the survivor self-join (once
-        // directly, once via surv): without a persist the full n-gram
-        // pairing + iterative CC lineage would compute twice inside
-        // the single nearDrop action — the exact recompute cost the
-        // surrounding stages persist to avoid. (cluster_id, doc_id,
-        // packed) is three longs/row, same ~bytes-per-doc budget.
-        val withLen = cc
-          .join(docs.select(col("doc_id"), length(col("text")).as("len")),
+        cc.join(docs.select(col("doc_id"), length(col("text")).as("len")),
             "doc_id")
-          .select(col("cluster_id"), col("doc_id"),
-            graft.ops.Num.packDesc(
-              col("len").cast(org.apache.spark.sql.types.DecimalType(18, 0)),
-              col("doc_id"), "curation survivorPolicy=quality")
-              .as("packed"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        branchPersists += withLen
-        val surv = withLen.groupBy("cluster_id")
-          .agg(max(col("packed")).as("pmx"))
-        withLen.join(surv, "cluster_id")
-          .filter(col("packed") =!= col("pmx")).select("doc_id")
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    val d2 = d1.join(nearDrop, Seq("doc_id"), "left_anti")
+          .withColumn("rn", row_number().over(Window.partitionBy("cluster_id")
+            .orderBy(col("len").desc, col("doc_id"))))
+          .filter(col("rn") > 1).select("doc_id")
+    }
     // 3. decontamination: train docs sharing distinctive grams with the
-    //    held-out split (same md5 rule as the declared query)
-    val isEval = Sampling.hexNibble(col("doc_id")) >= "e"
-    val contaminated = NearDup.decontaminateAgainst(spark,
-        docs.filter(!isEval).select("doc_id", "text"),
-        docs.filter(isEval).select("doc_id", "text"))
-      .select("doc_id")
+    //    held-out split (same md5 rule as the declared query), in one
+    //    labeled scan. A null id is on neither side, so its grams do
+    //    not count toward document frequency either
+    val contaminated = NearDup.decontaminateSplit(spark,
+        docs.filter(col("doc_id").isNotNull).select("doc_id", "text"),
+        Sampling.hexNibble(col("doc_id")) >= "e")
+      .select(col("doc_id"), lit(true).as("contaminated"))
+    // The verdict: one (doc_id, stage) row per document, `stage` = the
+    // number of stages it passed (0 = dropped by exact dedup … 4 =
+    // passed the quality gate). The run both counts every stage and
+    // packs the survivors from this one PERSISTED relation — ~12
+    // bytes per doc (the id and an int; the text never caches) — so
+    // the decontamination, the quality rules and the joins run once,
+    // not once per stage count. Unpersisted on exit.
+    val verdict = docs
+      // 4. quality gate: heuristic thresholds + Gopher repetition rules
+      //    (looping/boilerplate text) + an information-density floor
+      //    (near-zero token entropy = degenerate text both rule sets
+      //    miss), one per-row predicate in the scan that carries the id
+      .select(col("doc_id"),
+        TextSim.qualityGate(spark).as("quality_ok"))
+      .join(exactKeep, Seq("doc_id"), "left")
+      .join(nearDrop.select(col("doc_id"), lit(true).as("near_drop")),
+        Seq("doc_id"), "left")
+      .join(contaminated, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("exact_keep").isNull, 0)
+          .when(col("near_drop").isNotNull, 1)
+          .when(col("contaminated").isNotNull, 2)
+          .when(!col("quality_ok"), 3)
+          .otherwise(4).as("stage"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val d3 = d2.join(contaminated, Seq("doc_id"), "left_anti")
-    // 4. quality gate: heuristic thresholds + Gopher repetition rules
-    //    (looping/boilerplate text) + an information-density floor
-    //    (near-zero token entropy = degenerate text both rule sets miss)
-    val qualityOk = TextSim.textQuality(docs)
-      .filter(col("quality_ok")).select("doc_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val notRepetitive = TextSim.textRepetition(docs)
-      .filter(!col("repetitive")).select("doc_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val denseEnough = TextSim.textEntropy(docs)
-      .filter(col("entropy") > 1.0).select("doc_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val d4 = d3.join(qualityOk, "doc_id").join(notRepetitive, "doc_id")
-      .join(denseEnough, "doc_id")
-    // 4b. optional semantic balance: cap each embedding cluster
-    val d4b = clusterCap match {
-      case None => d4
-      case Some(cap) =>
-        val emb = embeddings.getOrElse(throw new IllegalArgumentException(
-          "clusterCap requires an embeddings relation"))
-        val assign = Cluster.kmeansAssign(spark, emb, k = 8, iters = 3)
-          .select(col("vec_id").as("doc_id"), col("cluster_id"))
-        val byCluster = org.apache.spark.sql.expressions.Window
-          .partitionBy("cluster_id").orderBy("doc_id")
-        val overCap = d4.select("doc_id").join(assign, "doc_id")
-          .withColumn("rn", row_number().over(byCluster))
-          .filter(col("rn") > cap).select("doc_id")
-        d4.join(overCap, Seq("doc_id"), "left_anti")
-    }
-    // 5. train split (eval nibbles are >= 'c'; see Sampling.sampleSplit)
-    val train0 = d4b.filter(Sampling.hexNibble(col("doc_id")) < "c")
-    // 5b. optional exact-substring scrub WITHIN the train split:
-    //     duplicated spanScrub-token windows keep their first train
-    //     occurrence only (NearDup.scrubSpansText). Text comes back
-    //     whitespace/case-normalized; a doc whose every token sat
-    //     under duplicate spans scrubs to empty and drops here
-    val train = spanScrub match {
-      case None => train0
-      case Some(nSpan) =>
-        train0.drop("text")
-          .join(NearDup.scrubSpansText(spark,
-              train0.select("doc_id", "text"), nSpan)
-            .select(col("doc_id"), col("scrubbed_text").as("text")),
-            "doc_id")
-          .filter(length(trim(col("text"))) > 0)
-    }
-    // 6. PII scrub + 7. sequence packing within each source shard
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("source").orderBy("doc_id")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val packed = train
-      .withColumn("text", regexp_replace(col("text"), "[0-9]{4,}", "<ID>"))
-      .withColumn("n_tokens",
-        size(split(trim(col("text")), "\\s+")).cast("long"))
-      .withColumn("bin_id", floor(
-        (sum(col("n_tokens")).over(w) - col("n_tokens")) / budget.toDouble))
     try {
-      Sinks.parquet(packed).save(outDir)
-      val out = spark.read.parquet(outDir)
-      CurationRun(docs.count(), d1.count(), d2.count(), d3.count(),
-        d4.count(), out.count(),
-        out.select("source", "bin_id").distinct().count())
-    } finally
-      (Seq(exactKeep, nearDrop, contaminated, qualityOk, notRepetitive,
-        denseEnough) ++ branchPersists)
-        .foreach(_.unpersist(blocking = false))
+      val c = verdict.agg(count(lit(1)),
+          (1 to 4).map(k => count_if(col("stage") >= k)): _*)
+        .head()
+      val d4 = docs.join(verdict.filter(col("stage") === 4).select("doc_id"),
+        "doc_id")
+      // 4b. optional semantic balance: cap each embedding cluster
+      val d4b = clusterCap match {
+        case None => d4
+        case Some(cap) =>
+          val emb = embeddings.getOrElse(throw new IllegalArgumentException(
+            "clusterCap requires an embeddings relation"))
+          val assign = Cluster.kmeansAssign(spark, emb, k = 8, iters = 3)
+            .select(col("vec_id").as("doc_id"), col("cluster_id"))
+          val overCap = d4.select("doc_id").join(assign, "doc_id")
+            .withColumn("rn", row_number().over(
+              Window.partitionBy("cluster_id").orderBy("doc_id")))
+            .filter(col("rn") > cap).select("doc_id")
+          d4.join(overCap, Seq("doc_id"), "left_anti")
+      }
+      // 5. train split (eval nibbles are >= 'c'; see Sampling.sampleSplit)
+      val train0 = d4b.filter(Sampling.hexNibble(col("doc_id")) < "c")
+      // 5b. optional exact-substring scrub WITHIN the train split:
+      //     duplicated spanScrub-token windows keep their first train
+      //     occurrence only (NearDup.scrubSpansText). Text comes back
+      //     whitespace/case-normalized; a doc whose every token sat
+      //     under duplicate spans scrubs to empty and drops here
+      val train = spanScrub match {
+        case None => train0
+        case Some(nSpan) =>
+          train0.drop("text")
+            .join(NearDup.scrubSpansText(spark,
+                train0.select("doc_id", "text"), nSpan)
+              .select(col("doc_id"), col("scrubbed_text").as("text")),
+              "doc_id")
+            .filter(length(trim(col("text"))) > 0)
+      }
+      // 6. PII scrub + 7. sequence packing within each source shard
+      val w = Window.partitionBy("source").orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val packed = train
+        .withColumn("text", regexp_replace(col("text"), "[0-9]{4,}", "<ID>"))
+        .withColumn("n_tokens",
+          size(split(trim(col("text")), "\\s+")).cast("long"))
+        .withColumn("bin_id", floor(
+          (sum(col("n_tokens")).over(w) - col("n_tokens")) / budget.toDouble))
+      val trainDocs = Sinks.parquetCounted(packed, outDir)
+      CurationRun(c.getLong(0), c.getLong(1), c.getLong(2), c.getLong(3),
+        c.getLong(4), trainDocs, spark.read.parquet(outDir)
+          .select("source", "bin_id").distinct().count())
+    } finally verdict.unpersist(blocking = false)
   }
 }

@@ -42,10 +42,11 @@ object Quality {
 
   /** Null count per column + total rows + valid rows, ONE scan. */
   private def baseAgg(df: DataFrame, valid: Column): Row = {
+    // count_if, not a sum of 0/1: it is 0, never null, over no rows
     val nulls = df.columns.toSeq
-      .map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
+      .map(c => count_if(col(c).isNull).as(s"nulls_$c"))
     val aggs = Seq(count(lit(1)).as("total"),
-      sum(when(valid, 1L).otherwise(0L)).as("valid")) ++ nulls
+      count_if(valid).as("valid")) ++ nulls
     df.agg(aggs.head, aggs.tail: _*).collect()(0)
   }
 

@@ -39,6 +39,12 @@ object NearDup {
     try plan.localCheckpoint()
     finally cached.foreach(_.unpersist(blocking = false))
 
+  /** Run `build` (jobs that run while a plan is built) and release
+    * `cached` only if it throws; on success the caller still owns them. */
+  private def releasingOnFailure[T](cached: DataFrame*)(build: => T): T =
+    try build
+    catch { case e: Throwable => cached.foreach(_.unpersist(false)); throw e }
+
   /** 64-bit hashes of the n-token shingles per document (NOT
     * deduplicated — both consumers are duplicate-idempotent: MinHash
     * takes a min, dedupNgram collects a set, so a distinct here would
@@ -952,19 +958,13 @@ object NearDup {
     * ONE groupBy on the shingle (the r6 form aggregated, joined back,
     * and persisted the stream to feed both passes). Two shuffles
     * total, no joins, no persisted intermediate — see
-    * [[decontaminateLabeled]] for the scale bounds.
+    * [[decontaminateSplit]] for the scale bounds.
     */
   def decontaminate(s: SparkSession, dir: String,
                     maxDf: Int = DefaultMaxDf,
-                    dfPrePass: Boolean = false): DataFrame = {
-    // spread the per-token work (see [[shingleHashesOf]]; split-gated)
-    val gl = Sources.spreadIfNarrow(Sources.table(s, dir, "documents"))
-      .select(col("doc_id"),
-        (Sampling.hexNibble(col("doc_id")) >= "e").as("is_test"),
-        explode(array_distinct(graft.functions.VectorFunctions
-          .shingle(s, split(lower(col("text")), "\\s+"), 3))).as("th"))
-    decontaminateLabeled(gl, maxDf, dfPrePass)
-  }
+                    dfPrePass: Boolean = false): DataFrame =
+    decontaminateSplit(s, Sources.table(s, dir, "documents"),
+      Sampling.hexNibble(col("doc_id")) >= "e", maxDf, 3, dfPrePass)
 
   /** Decontamination against a caller-provided eval set: flag every
     * `train` document sharing a distinctive `n`-token shingle with any
@@ -977,27 +977,24 @@ object NearDup {
   def decontaminateAgainst(s: SparkSession, train: DataFrame,
                            evalSet: DataFrame, maxDf: Int = DefaultMaxDf,
                            n: Int = 3,
-                           dfPrePass: Boolean = false): DataFrame = {
-    val both = train.select(col("doc_id"), col("text"),
-        lit(false).as("is_test"))
-      .unionByName(evalSet.select(col("doc_id"), col("text"),
-        lit(true).as("is_test")))
-    val gl = Sources.spreadIfNarrow(both)
-      .select(col("doc_id"), col("is_test"),
-        explode(array_distinct(graft.functions.VectorFunctions
-          .shingle(s, split(lower(col("text")), "\\s+"), n))).as("th"))
-    decontaminateLabeled(gl, maxDf, dfPrePass)
-  }
+                           dfPrePass: Boolean = false): DataFrame =
+    decontaminateSplit(s,
+      train.select(col("doc_id"), col("text"), lit(false).as("is_test"))
+        .unionByName(evalSet.select(col("doc_id"), col("text"),
+          lit(true).as("is_test"))),
+      col("is_test"), maxDf, n, dfPrePass)
 
-  /** Shared decontamination core over a labeled, per-doc-distinct
-    * shingle stream `(doc_id, is_test, th)`. One groupBy on the
+  /** Decontamination over ONE labeled `(doc_id, text)` relation, the
+    * held-out side marked by the per-row Column `isTest`: one scan,
+    * and one per-doc-distinct shingle stream `(doc_id, is_test, th)`.
+    * A row whose `isTest` is null still counts toward shingle
+    * document frequency but is never flagged. One groupBy on the
     * shingle computes the document frequency, the any-eval flag, AND
     * the train-doc posting list together; exploding the lists of the
     * surviving (distinctive ∧ contaminated) shingles and counting per
     * doc is the whole remaining plan. Two shuffles, zero joins, one
-    * pass over the input. Per-group aggregation state: the input
-    * stream is per-doc-DISTINCT (both callers `array_distinct` before
-    * exploding), so each doc contributes at most one element per
+    * pass over the input. Per-group aggregation state: the stream is
+    * per-doc-DISTINCT, so each doc contributes at most one element per
     * shingle and a group's list length equals the shingle's df —
     * exactly the state [[dedupNgramPlan]]'s `collect_set` posting
     * build holds for the same shingle before ITS df cutoff. The df
@@ -1021,8 +1018,14 @@ object NearDup {
     * stop-shingle-heavy SyntheticDocs corpus and the fixture tables.
     * Default off: at bench scale the one-shuffle form wins.
     */
-  private def decontaminateLabeled(gl: DataFrame, maxDf: Int,
-                                   dfPrePass: Boolean = false): DataFrame = {
+  def decontaminateSplit(s: SparkSession, docs: DataFrame, isTest: Column,
+                         maxDf: Int = DefaultMaxDf, n: Int = 3,
+                         dfPrePass: Boolean = false): DataFrame = {
+    // spread the per-token work (see [[shingleHashesOf]]; split-gated)
+    val gl = Sources.spreadIfNarrow(docs)
+      .select(col("doc_id"), isTest.as("is_test"),
+        explode(array_distinct(graft.functions.VectorFunctions
+          .shingle(s, split(lower(col("text")), "\\s+"), n))).as("th"))
     val stream =
       if (!dfPrePass) gl
       else {
@@ -1112,24 +1115,6 @@ object NearDup {
     materialize(plan, cached: _*)
   }
 
-  /** The plan behind [[dedupBloom]], plus the persisted frames the
-    * caller must release after materializing (split out so plan shape
-    * stays testable — the [[dedupNgramPlan]] precedent). NOT fully
-    * lazy (r17 ADVICE): constructing it runs TWO Spark actions — the
-    * distinct-corpus `count()` that sizes the bloom filter and the
-    * `stat.bloomFilter` aggregation itself — because the broadcast
-    * bitset must exist before the summary plan can reference it. Only
-    * the 1-row summary query is deferred; a caller that wants pure
-    * plan inspection still pays the filter build.
-    *
-    * persist: the hashed split feeds FOUR consumers (distinct count,
-    * bloom build, exact join side, probe side) — without it each
-    * re-ran sha2 over the full text column (r17 review). The bloom
-    * filter also sizes from the DISTINCT corpus hash count: a dedup
-    * corpus is full of exact duplicates by definition, and sizing
-    * from raw rows over-allocated the broadcast bitset for keys the
-    * filter stores once.
-    */
   /** The hashed corpus/new split both bloom surfaces share: `(doc_id,
     * h = sha2-256 of the trimmed lowercased text, is_new = md5-nibble
     * ≥ '8')`. ONE definition so [[dedupBloomPlan]] and the oracle twin
@@ -1176,7 +1161,13 @@ object NearDup {
     * must exist before the summary plan can reference it. Callers
     * wanting plan-shape inspection only still pay those two jobs
     * (bounded: one long and one `-log2(fpp)·n`-bit filter on the
-    * driver); the returned DataFrame is lazy from there.
+    * driver); the returned DataFrame is lazy from there. If either
+    * job throws, the caches are released before the exception leaves.
+    *
+    * persist: the hashed split feeds FOUR consumers (distinct count,
+    * bloom build, exact join side, probe side). The filter sizes from
+    * the DISTINCT corpus hash count: a dedup corpus is full of exact
+    * duplicates, which the filter stores once.
     */
   private[graft] def dedupBloomPlan(s: SparkSession, docs: DataFrame,
                                     fpp: Double,
@@ -1187,8 +1178,10 @@ object NearDup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val exact = d.filter(!col("is_new")).select("h").distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bf = exact.stat.bloomFilter("h",
-      math.max(expectedItems.getOrElse(exact.count()), 1L), fpp)
+    val bf = releasingOnFailure(exact, d) {
+      exact.stat.bloomFilter("h",
+        math.max(expectedItems.getOrElse(exact.count()), 1L), fpp)
+    }
     val bfB = s.sparkContext.broadcast(bf)
     val probe = graft.functions.VectorFunctions.mightContain(
       s, col("h"), bfB)
@@ -1253,11 +1246,17 @@ object NearDup {
     * re-reading them to checkpoint edges. One fewer job and one fewer
     * copy of the pair set, at every scale.
     */
-  def dedupCluster(s: SparkSession, dir: String, maxIters: Int = 20): DataFrame = {
-    val (pairs, posts) = dedupNgramPlan(s, Sources.table(s, dir, "documents"),
-      3, DefaultMaxDf, DefaultMinJaccard)
-    val (edges, edgeCount) = symmetrizeCheckpoint(pairs.select("doc_a", "doc_b"))
-    posts.unpersist(blocking = false)
+  def dedupCluster(s: SparkSession, dir: String, maxIters: Int = 20): DataFrame =
+    dedupCluster(s, Sources.table(s, dir, "documents"), maxIters)
+
+  /** [[dedupCluster]] over any `(doc_id, text)` relation. */
+  def dedupCluster(s: SparkSession, docs: DataFrame,
+                   maxIters: Int): DataFrame = {
+    val (pairs, posts) = dedupNgramPlan(s, docs, 3, DefaultMaxDf,
+      DefaultMinJaccard)
+    val (edges, edgeCount) =
+      try symmetrizeCheckpoint(pairs.select("doc_a", "doc_b"))
+      finally posts.unpersist(blocking = false)
     ccOnEdges(edges, edgeCount, maxIters)
   }
 
@@ -1881,7 +1880,9 @@ object NearDup {
     // rest of the entry point's caches.
     val vecs = Cluster.vectors(s, emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centroids = Cluster.kmeansCentroidsOn(vecs, k, iters, warmStart)
+    val centroids = releasingOnFailure(vecs) {
+      Cluster.kmeansCentroidsOn(vecs, k, iters, warmStart)
+    }
     val assigned = Cluster.assignOn(vecs, centroids)
       .withColumn("nrm", sqrt(nd(col("v"), col("v"))))
     // EXACT-VECTOR PRE-COLLAPSE: a real dedup corpus has massive

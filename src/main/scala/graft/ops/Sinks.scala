@@ -95,6 +95,15 @@ object Sinks {
       .option("batchsize", batchSize)
       .option("isolationLevel", "READ_COMMITTED")
 
+  /** [[parquet]] overwrite of `dir` returning the rows written, counted
+    * by `observe()` in the write job itself (no read-back). */
+  def parquetCounted(df: DataFrame, dir: String): Long = {
+    import org.apache.spark.sql.functions._
+    val obs = org.apache.spark.sql.Observation()
+    parquet(df.observe(obs, count(lit(1)).as("n"))).save(dir)
+    obs.get("n").asInstanceOf[Long]
+  }
+
   private val manifestName = "_graft_manifest.json"
 
   /** Committed parquet write — the engine analog of the reference's
@@ -108,11 +117,7 @@ object Sinks {
     * state. Returns the committed row count.
     */
   def parquetCommitted(df: DataFrame, dir: String): Long = {
-    import org.apache.spark.sql.functions._
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(dir)
-    val n = obs.get("n").asInstanceOf[Long]
+    val n = parquetCounted(df, dir)
     // temp-write + ATOMIC_MOVE: manifest existence must be the commit
     // point, so it can never be observed half-written (a torn
     // Files.writeString would read as "unparseable manifest" instead

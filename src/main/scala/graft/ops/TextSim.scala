@@ -404,25 +404,72 @@ object TextSim {
     * exact 1e-8 long units; EntropyKernelSpec asserts equality with
     * the old spelling row-for-row). Marginal 0.18 → ~0.03 s at sf0.1.
     */
-  def textEntropy(docs: DataFrame): DataFrame = {
-    def lnd(c: Column): Column = round(log(c), 8)
-    val s = docs.sparkSession
+  def textEntropy(docs: DataFrame): DataFrame =
     docs
       // explode(array(kernel)): the Generate evaluates the opaque
       // kernel ONCE per row and exposes `st` as a real attribute —
       // a plain projection would let CollapseProject substitute the
       // kernel into every field reference plus the null filter
       // (4 evaluations of split+sort+scan; measured 0.27 vs 0.19 s)
-      .select(col("doc_id"), explode(array(
-        graft.functions.VectorFunctions
-          .tokenEntropy(s, tokens(col("text"))))).as("st"))
+      .select(col("doc_id"),
+        explode(array(entropyStats(docs.sparkSession))).as("st"))
       .filter(col("st").isNotNull)
       .select(col("doc_id"),
         col("st.n_tokens").as("n_tokens"),
         col("st.n_distinct").as("n_distinct"),
-        round(lnd(col("st.n_tokens")) -
-          col("st.term_sum") /
-            col("st.n_tokens").cast(DoubleType), 4).as("entropy"))
+        entropyOf(col("st")).as("entropy"))
+
+  // ---- quality rules: each statistic and threshold of text_quality,
+  // text_repetition and text_entropy, defined once over the `text`
+  // column. The queries project them; [[qualityGate]] folds them.
+
+  private def entropyStats(s: SparkSession): Column =
+    graft.functions.VectorFunctions.tokenEntropy(s, tokens(col("text")))
+  private def entropyOf(st: Column): Column = round(
+    round(log(st.getField("n_tokens")), 8) - st.getField("term_sum") /
+      st.getField("n_tokens").cast(DoubleType), 4)
+
+  /** (token count, mean token length, punctuation ratio) */
+  private def qualityStats: (Column, Column, Column) = {
+    val nTokens = size(split(trim(col("text")), "\\s+")).cast(LongType)
+    val charLen = length(regexp_replace(col("text"), "\\s", ""))
+      .cast(DoubleType)
+    val punct = expr("regexp_count(text, '[.,!?;:]')").cast(DoubleType)
+    (nTokens, charLen / nTokens.cast(DoubleType), round(punct /
+      greatest(length(col("text")).cast(DoubleType), lit(1.0)), 4))
+  }
+  private def qualityOk(nTokens: Column, avgLen: Column, punct: Column) =
+    nTokens.between(10L, 500L) && avgLen < 8.0 && punct < 0.2
+
+  private def words: Column = split(trim(col("text")), "\\s+")
+  private def topBigramFrac(topN: Column, nBigrams: Column) =
+    round(topN / nBigrams, 4)
+  private def dupWordFrac(distinct: Column, nWords: Column) =
+    round(lit(1.0) - distinct / nWords, 4)
+  private def repetitive(topFrac: Column, dupFrac: Column) =
+    topFrac > 0.18 || dupFrac > 0.9
+
+  /** The three quality operators' keep rules as ONE per-row predicate
+    * over the `text` column, for a pipeline's quality gate: true
+    * exactly when [[textQuality]] says `quality_ok`, [[textRepetition]]
+    * emits a row (≥ 2 words) that is not `repetitive`, and
+    * [[textEntropy]] emits a row whose entropy exceeds 1 nat (near-zero
+    * entropy = degenerate text both rule sets miss). Never null. Each
+    * ratio sits behind the condition its query filters on, so no row
+    * divides by zero.
+    */
+  def qualityGate(s: SparkSession): Column = {
+    val (nTokens, avgLen, punct) = qualityStats
+    val nWords = size(words)
+    val notRepetitive = when(nWords >= 2, !repetitive(
+      topBigramFrac(graft.functions.VectorFunctions.bigramTop(s, words),
+        (nWords - 1).cast(LongType)),
+      dupWordFrac(size(array_distinct(words)).cast(LongType),
+        nWords.cast(LongType))))
+    val st = entropyStats(s)
+    val dense = when(st.isNotNull, entropyOf(st) > 1.0)
+    Seq(qualityOk(nTokens, avgLen, punct), notRepetitive, dense)
+      .map(coalesce(_, lit(false))).reduce(_ && _)
   }
 
   /** `multimodal_join` — L6, text ⋈ vectors in one relation: join
@@ -493,18 +540,12 @@ object TextSim {
 
   /** [[textQuality]] over any `(doc_id, text)` relation. */
   def textQuality(docs: DataFrame): DataFrame = {
-    val nTokens = size(split(trim(col("text")), "\\s+")).cast(LongType)
-    val charLen = length(regexp_replace(col("text"), "\\s", ""))
-      .cast(DoubleType)
-    val punct = expr("regexp_count(text, '[.,!?;:]')").cast(DoubleType)
+    val (nTokens, avgLen, punct) = qualityStats
     docs
       .select(col("doc_id"), nTokens.as("n_tokens"),
-        (charLen / nTokens.cast(DoubleType)).as("avg_token_len"),
-        round(punct / greatest(length(col("text")).cast(DoubleType),
-          lit(1.0)), 4).as("punct_ratio"))
-      .withColumn("quality_ok",
-        col("n_tokens").between(10L, 500L) && col("avg_token_len") < 8.0 &&
-          col("punct_ratio") < 0.2)
+        avgLen.as("avg_token_len"), punct.as("punct_ratio"))
+      .withColumn("quality_ok", qualityOk(col("n_tokens"),
+        col("avg_token_len"), col("punct_ratio")))
   }
 
   /** `tok_count` — token counting two ways: whitespace words and a
@@ -995,7 +1036,7 @@ object TextSim {
   /** [[textRepetition]] over any `(doc_id, text)` relation. */
   def textRepetition(docs: DataFrame): DataFrame = {
     docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), words.as("words"))
       .filter(size(col("words")) >= 2)
       .select(col("doc_id"), size(col("words")).cast(LongType).as("n_words"),
         size(array_distinct(col("words"))).cast(LongType).as("distinct_words"),
@@ -1003,12 +1044,13 @@ object TextSim {
         graft.functions.VectorFunctions.bigramTop(docs.sparkSession,
           col("words")).as("top_bigram_n"))
       .select(col("doc_id"), col("n_words"), col("top_bigram_n"),
-        round(col("top_bigram_n") / col("n_bigrams"), 4).as("top_bigram_frac"),
+        topBigramFrac(col("top_bigram_n"), col("n_bigrams"))
+          .as("top_bigram_frac"),
         col("distinct_words"),
-        round(lit(1.0) - col("distinct_words") / col("n_words"), 4)
+        dupWordFrac(col("distinct_words"), col("n_words"))
           .as("dup_word_frac"))
       .withColumn("repetitive",
-        col("top_bigram_frac") > 0.18 || col("dup_word_frac") > 0.9)
+        repetitive(col("top_bigram_frac"), col("dup_word_frac")))
   }
 
   /** `text_normalize` — canonical text normalization, the step every

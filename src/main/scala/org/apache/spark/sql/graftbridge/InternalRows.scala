@@ -1,12 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.types.StructType
 
 /** One of the library's two `private[sql]` access points (the other is
   * [[Columns]], expression <-> Column), both kept in this
@@ -30,7 +27,7 @@ import org.apache.spark.sql.types.StructType
   *
   * UPGRADE CONTRACT (r19 VERDICT ask #4): the `private[sql]` surfaces
   * this file touches — the `LogicalRDD` constructor shape,
-  * `internalCreateDataFrame`, `Dataset.ofRows`, the classic
+  * `Dataset.ofRows`, the classic
   * `SparkSession` cast — are pinned by GraftBridgeContractSpec, which
   * exercises [[rebind]] against a CHECKPOINTED frame and asserts every
   * promise individually (row parity, stats carried, attribute ids and
@@ -41,17 +38,6 @@ import org.apache.spark.sql.types.StructType
   * public-API only, compiled here so it can never rot.
   */
 object InternalRows {
-  /** `df`'s compiled internal-row RDD (forces planning, runs no job). */
-  def toInternalRdd(df: DataFrame): RDD[InternalRow] =
-    df.queryExecution.toRdd
-
-  /** Wrap an internal-row RDD as a DataFrame on `target` (no stats —
-    * prefer [[rebind]] when the frame will be joined downstream). */
-  def dataFrame(target: SparkSession, rdd: RDD[InternalRow],
-                schema: StructType): DataFrame =
-    target.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
-
   /** Re-bind `df` to `target`: compiled internal-row RDD (no row
     * conversion, no recompute for a checkpointed frame) wrapped in a
     * `LogicalRDD` carrying the source plan's size/row-count stats so

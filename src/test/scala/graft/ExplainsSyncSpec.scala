@@ -65,4 +65,18 @@ class ExplainsSyncSpec extends AnyFunSuite {
     assert(a == b)
     assert(a == plan("1", "2", 1), s"unexpected masking:\n$a")
   }
+
+  test("normalize masks RDD ids and call-site lines of checkpointed scans") {
+    // a checkpointed scan as two runs render it: the RDD id is a
+    // SparkContext counter and the line moves with edits to the file
+    def plan(rdd: Int, line: Int, id: Int): String =
+      "(1) Scan ExistingRDD\nOutput [2]: [doc_a#" + id + "L, doc_b#" +
+        (id + 1) + "L]\nArguments: [doc_a#" + id + "L, doc_b#" + (id + 1) +
+        "L], MapPartitionsRDD[" + rdd + "] at localCheckpoint at " +
+        "NearDup.scala:" + line + ", ExistingRDD, UnknownPartitioning(0)\n"
+    val a = ExplainDump.normalize(plan(302, 182, 41))
+    assert(a == ExplainDump.normalize(plan(17, 1219, 7)))
+    assert(a == plan(1, 0, 1).replace("NearDup.scala:0", "NearDup.scala:_"),
+      s"unexpected masking:\n$a")
+  }
 }

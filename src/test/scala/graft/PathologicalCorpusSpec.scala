@@ -98,24 +98,47 @@ class PathologicalCorpusSpec extends SparkSpec {
     assert(rep.getAs[Boolean]("repetitive"), "a 2000x-repeated doc must flag")
   }
 
-  test("a failing checkpoint job releases the entry point's cache") {
-    // the eager entry points persist an intermediate and release it
-    // after the checkpoint job; when that job throws, the release must
-    // still happen, or the intermediate stays cached for the session.
-    // `text` raises only when a task evaluates it, so building the plan
-    // succeeds and the failure comes from the checkpoint job.
+  /** Eight docs whose `text` raises only when a task evaluates it, so
+    * building a plan over them succeeds and the failure comes from
+    * the first job that reads the text. */
+  private def poisonedText: DataFrame = spark.range(8).select(
+    col("id").as("doc_id"),
+    expr("CASE WHEN id >= 0 THEN raise_error('poisoned text') " +
+      "ELSE 'unused' END").cast("string").as("text"))
+
+  /** Asserts `build` fails on the poisoned input and leaves the
+    * session's cached plan count where it was. */
+  private def releasesOnFailure(build: => Any): Unit = {
     def cachedPlans: Int = org.apache.spark.sql.grafttest.CachedPlans.count(spark)
-    val poisoned = spark.range(8).select(col("id").as("doc_id"),
-      expr("CASE WHEN id >= 0 THEN raise_error('poisoned text') " +
-        "ELSE 'unused' END").cast("string").as("text"))
     val before = cachedPlans
-    val e = intercept[Exception] {
-      NearDup.dedupMinhash(spark, poisoned, 64, 16, 0.4)
-    }
+    val e = intercept[Exception](build)
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(t => Option(t.getMessage).exists(_.contains("poisoned text"))),
+      .exists(t => Option(t.getMessage).exists(_.contains("poisoned"))),
       s"unexpected failure: $e")
     assert(cachedPlans == before,
       s"cached plans went from $before to $cachedPlans")
+  }
+
+  test("a failing checkpoint job releases the entry point's cache") {
+    // the eager entry points persist an intermediate and release it
+    // after the checkpoint job; when that job throws, the release must
+    // still happen, or the intermediate stays cached for the session
+    releasesOnFailure(NearDup.dedupMinhash(spark, poisonedText, 64, 16, 0.4))
+  }
+
+  test("a failing bloom sizing job releases dedupBloom's caches") {
+    // the distinct-hash count that sizes the filter runs while the
+    // plan is built, after the hashed split and the corpus side are
+    // persisted
+    releasesOnFailure(NearDup.dedupBloom(spark, poisonedText, 0.01))
+  }
+
+  test("a failing k-means training job releases dedupSemantic's cache") {
+    // Lloyd training runs while the plan is built, over the persisted
+    // vector relation
+    val poisoned = spark.range(8).select(col("id").as("vec_id"),
+      expr("CASE WHEN id >= 0 THEN raise_error('poisoned vector') " +
+        "ELSE array(1.0f, 2.0f) END").as("embedding"))
+    releasesOnFailure(NearDup.dedupSemantic(spark, poisoned, 2, 2, 0.9))
   }
 }
