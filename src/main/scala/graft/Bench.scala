@@ -49,8 +49,9 @@ object Bench {
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.session.timeZone" -> "UTC")
 
-  /** The bench session — confs, fixture schema check, table warm-up —
-    * shared with [[ProfileFixed]] so a probe measures what Bench times. */
+  /** The bench session — confs, fixture schema check, table warm-up.
+    * [[run]] installs the engine's one [[MetricsListener]] on it and
+    * records every query's [[Layers]] from that listener's counters. */
   def session(sfDir: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Overrides of [[defaultConfs]] for A/B runs: SPARK_GRAFT_AQE=true,
@@ -83,6 +84,63 @@ object Bench {
     spark
   }
 
+  /** One timed sample of one query, split at the end of the build:
+    *  - `build`: the query builder, including any eager helper jobs it
+    *    runs (checkpoints, collected brackets and order statistics);
+    *  - `exec`: the noop write — optimization, planning, codegen,
+    *    scheduling and the tasks.
+    * Jobs and ms are per window; Catalyst ms, stages, tasks and the
+    * tasks' summed run, deserialize, scheduler-delay and GC ms cover
+    * both. Counts come from the listener's counter deltas
+    * ([[Metrics.measure]]); its drains sit outside the timed spans.
+    */
+  final case class Layers(buildMs: Double, execMs: Double,
+                          buildJobs: Long, execJobs: Long, catalystMs: Long,
+                          stages: Long, tasks: Long, taskRunMs: Long,
+                          taskDeserializeMs: Long, schedulerDelayMs: Long,
+                          gcMs: Long) {
+    def seconds: Double = (buildMs + execMs) / 1e3
+    def json: String = {
+      def ms(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+      s"""{"buildMs":${ms(buildMs)},"execMs":${ms(execMs)},""" +
+        s""""buildJobs":$buildJobs,"execJobs":$execJobs,"catalystMs":$catalystMs,""" +
+        s""""stages":$stages,"tasks":$tasks,"taskRunMs":$taskRunMs,""" +
+        s""""taskDeserializeMs":$taskDeserializeMs,""" +
+        s""""schedulerDelayMs":$schedulerDelayMs,"gcMs":$gcMs}"""
+    }
+  }
+
+  /** Build and run one query once, on a session carrying `listener`.
+    * Forced through the noop SINK, never count(): count() lets the
+    * optimizer prune every column the count doesn't need, so a query
+    * ending in an aggregation or projection was timed WITHOUT its
+    * computed columns — measured at sf0.1 warm: agg_group 0.29 s
+    * counted vs 1.07 s materialized (the decimal sums were never
+    * computed), dedup_simhash 0.40 vs 1.32 (the signature aggregate
+    * was dropped). The DuckDB baseline fetches full results, so
+    * count() timing was systematically charitable to Spark (r12
+    * fix — totals before/after are NOT comparable; BASELINE.md
+    * re-paired both engines in one window on the new rule). noop
+    * materializes every column executor-side with no sink cost.
+    */
+  def sample(spark: SparkSession, sfDir: String,
+             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+             listener: MetricsListener): Layers = {
+    val (df, buildMs, b) = Metrics.measure(spark, listener)(fn(spark, sfDir))
+    // the built frame never runs an action of its own, so its analysis
+    // never reaches the listener: read its tracker directly
+    val buildCatalyst = Metrics.catalystMs(df.queryExecution)
+    val (_, execMs, e) = Metrics.measure(spark, listener)(
+      df.write.format("noop").mode("overwrite").save())
+    def both(k: String): Long = (b.getOrElse(k, 0.0) + e.getOrElse(k, 0.0)).round
+    Layers(buildMs, execMs, b.getOrElse("jobs_total", 0.0).round,
+      e.getOrElse("jobs_total", 0.0).round,
+      buildCatalyst + both("catalyst_ms_sum"), both("stages_total"),
+      both("tasks_total"), both("task_run_ms_sum"),
+      both("task_deserialize_ms_sum"), both("task_scheduler_delay_ms_sum"),
+      both("task_gc_ms_sum"))
+  }
+
   private def run(spark: SparkSession, sfDir: String): Unit = {
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
     // optional comma-separated subset for focused profiling runs
@@ -108,27 +166,14 @@ object Bench {
     // successful min into the totals while also appearing in
     // "failed" — now membership in `failed` removes the query from
     // `results` outright, so the exclusion invariant is exact.
-    // Force through the noop SINK, never count(): count() lets the
-    // optimizer prune every column the count doesn't need, so a query
-    // ending in an aggregation or projection was timed WITHOUT its
-    // computed columns — measured at sf0.1 warm: agg_group 0.29 s
-    // counted vs 1.07 s materialized (the decimal sums were never
-    // computed), dedup_simhash 0.40 vs 1.32 (the signature aggregate
-    // was dropped). The DuckDB baseline fetches full results, so
-    // count() timing was systematically charitable to Spark (r12
-    // fix — totals before/after are NOT comparable; BASELINE.md
-    // re-paired both engines in one window on the new rule). noop
-    // materializes every column executor-side with no sink cost.
+    val listener = Metrics.install(spark)
     def once(name: String,
-             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        true
-      } catch { case _: Throwable => failed += name; false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (ok) { samples(name) = samples(name) :+ sec; Some(sec) } else None
-    }
+             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Layers] =
+      try {
+        val l = sample(spark, sfDir, fn, listener)
+        samples(name) = samples(name) :+ l.seconds
+        Some(l)
+      } catch { case _: Throwable => failed += name; None }
     // Per-query seconds: min over a BACK-TO-BACK pair of executions
     // (default runs=2), then a SECOND back-to-back pair, minutes
     // later, for any query whose first pair still reads > 0.35 s.
@@ -160,13 +205,14 @@ object Bench {
     // Steady-state latency is the scale-relevant quantity.
     val qlist = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    // the kept sample's layers ride along with its seconds
+    val best = scala.collection.mutable.Map.empty[String, Layers]
     def pairMin(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val ts = (1 to math.max(1, runs)).flatMap(_ => once(name, fn))
-      if (ts.isEmpty) None else Some(ts.min)
-    }
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    for ((name, fn) <- qlist) pairMin(name, fn).foreach(best(name) = _)
+                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+      (1 to math.max(1, runs)).flatMap(_ => once(name, fn)).minByOption(_.seconds)
+        .foreach { l =>
+          if (best.get(name).forall(_.seconds > l.seconds)) best(name) = l }
+    for ((name, fn) <- qlist) pairMin(name, fn)
     // Seed is logged (stdout + artifact) so a run's re-pair execution
     // order — exactly what the per-sample forensics attribute spikes
     // to — is reproducible post hoc (r8 ADVICE).
@@ -175,18 +221,14 @@ object Bench {
     val reorder = new scala.util.Random(reorderSeed)
     if (runs >= 2) {
       for ((name, fn) <- reorder.shuffle(qlist)
-           if best.get(name).exists(_ > 0.35)) {
-        pairMin(name, fn).foreach(t => best(name) = math.min(best(name), t))
-      }
+           if best.get(name).exists(_.seconds > 0.35)) pairMin(name, fn)
       // third window for anything still slow: cheap (few queries),
       // and it is exactly the evidence the r7 outliers lacked
       for ((name, fn) <- reorder.shuffle(qlist)
-           if best.get(name).exists(_ > 0.6)) {
-        pairMin(name, fn).foreach(t => best(name) = math.min(best(name), t))
-      }
+           if best.get(name).exists(_.seconds > 0.6)) pairMin(name, fn)
     }
     val results = qlist.flatMap { case (name, _) =>
-      if (failed(name)) None else best.get(name).map(name -> _) }
+      if (failed(name)) None else best.get(name).map(name -> _.seconds) }
     // The driver parses the JSON line out of a bounded tail of this
     // process's stdout (last ~2000 chars): r03/r04 went ungraded
     // because full-precision doubles for 85 queries pushed the line
@@ -239,7 +281,9 @@ object Bench {
           .mkString("\"queries\":{", ",", "},") +
         qlist.map { case (k, _) =>
             "\"" + k + "\":" + samples(k).map(s => num("%.4f", s)).mkString("[", ",", "]") }
-          .mkString("\"samples\":{", ",", "}}\n"))
+          .mkString("\"samples\":{", ",", "},") +
+        results.map { case (k, _) => "\"" + k + "\":" + best(k).json }
+          .mkString("\"layers\":{", ",", "}}\n"))
     catch { case _: Throwable => () } // read-only cwd: stdout still carries the line
     val budget = 1600
     val bySlowest = results.sortBy { case (k, v) => (-v, k) }

@@ -207,7 +207,7 @@ object ExplainDump {
         pairs
       }),
       "dedup_containment_pipeline" -> (() =>
-        graft.ops.NearDup.containmentPairsPlan(spark, docs, 3,
+        graft.ops.NearDup.containmentPairsPlan(docs, 3,
           graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinContain)))
   }
 

@@ -3,25 +3,32 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.DoubleAdder
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.ListenerDrain
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Operational metrics — the engine analog of the reference's
-  * Prometheus counters/histograms (`/root/reference/src/etl_2025.py:
-  * 27-29,169,181`: processed-records counter, processing-seconds
-  * histogram, errors counter) and ETLMetrics (`src/etl_2020.py:20-34`).
+  * Prometheus counters/histograms (`etl_2025.py:27-29,169,181`:
+  * processed-records counter, processing-seconds histogram, errors
+  * counter) and ETLMetrics (`etl_2020.py:20-34`).
   *
-  * A QueryExecutionListener rides every action on the session: query
-  * count, cumulative duration, failure count, plus every named
-  * `observe()` metric (see [[Quality.observed]]) keyed by observation
-  * name. Zero extra scans — observed metrics are executor-side
-  * accumulators the job already carries. Export by scraping
-  * [[MetricsListener.snapshot]] from any reporter (the Prometheus
-  * HTTP server of the reference maps to Spark's metrics servlet on a
-  * real cluster).
+  * The engine's one listener, on both buses:
+  *  - as a QueryExecutionListener it rides every action on the
+  *    session: query count, cumulative duration, failure count,
+  *    Catalyst phase ms (the action's `qe.tracker`), plus every named
+  *    `observe()` metric (see [[Quality.observed]]) keyed by
+  *    observation name — executor-side accumulators the job already
+  *    carries, zero extra scans;
+  *  - as a SparkListener it counts the scheduler's work: jobs, stages,
+  *    tasks, and the tasks' summed run, deserialize, scheduler-delay
+  *    and GC ms.
+  * The same counters serve `/metrics` ([[Metrics.serveMetrics]]) and
+  * Bench's per-query layers ([[Metrics.measure]] deltas).
   */
-final class MetricsListener extends QueryExecutionListener {
+final class MetricsListener extends SparkListener with QueryExecutionListener {
 
   // DoubleAdder, not LongAdder: observed metrics can be fractional
   // (e.g. avg_quality in [0, 1] — longValue() would truncate them to
@@ -35,6 +42,7 @@ final class MetricsListener extends QueryExecutionListener {
                          durationNs: Long): Unit = {
     add("queries_total", 1.0)
     add("query_duration_ms_sum", durationNs / 1e6)
+    add("catalyst_ms_sum", Metrics.catalystMs(qe).toDouble)
     qe.observedMetrics.foreach { case (obsName, row) =>
       row.schema.fieldNames.zipWithIndex.foreach { case (f, i) =>
         row.get(i) match {
@@ -49,6 +57,28 @@ final class MetricsListener extends QueryExecutionListener {
                          exception: Exception): Unit =
     add("errors_total", 1.0)
 
+  override def onJobStart(j: SparkListenerJobStart): Unit =
+    add("jobs_total", 1.0)
+
+  override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+    add("stages_total", 1.0)
+
+  override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+    val m = t.taskMetrics
+    if (m != null) {
+      add("tasks_total", 1.0)
+      add("task_run_ms_sum", m.executorRunTime.toDouble)
+      add("task_deserialize_ms_sum", m.executorDeserializeTime.toDouble)
+      add("task_gc_ms_sum", m.jvmGCTime.toDouble)
+      // launch-to-finish wall not spent deserializing, running or
+      // serializing the result: waiting on the scheduler
+      val wall = t.taskInfo.finishTime - t.taskInfo.launchTime
+      add("task_scheduler_delay_ms_sum", math.max(0L, wall -
+        m.executorRunTime - m.executorDeserializeTime -
+        m.resultSerializationTime).toDouble)
+    }
+  }
+
   /** Point-in-time view of all counters. */
   def snapshot: Map[String, Double] = {
     val b = Map.newBuilder[String, Double]
@@ -58,18 +88,49 @@ final class MetricsListener extends QueryExecutionListener {
 }
 
 object Metrics {
-  /** Install a listener on the session; returns it for scraping. */
+  /** Install a listener on both of the session's buses; returns it for
+    * scraping. */
   def install(spark: SparkSession): MetricsListener = {
     val l = new MetricsListener
+    spark.sparkContext.addSparkListener(l)
     spark.listenerManager.register(l)
     l
+  }
+
+  /** Remove an [[install]]ed listener from both buses. */
+  def uninstall(spark: SparkSession, l: MetricsListener): Unit = {
+    spark.listenerManager.unregister(l)
+    spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Wall ms of an action's Catalyst phases (analysis, optimization,
+    * planning), as its tracker recorded them. Reading the tracker
+    * forces nothing. */
+  def catalystMs(qe: QueryExecution): Long =
+    qe.tracker.phases.values.map(p => p.endTimeMs - p.startTimeMs).sum
+
+  /** Run `body`; return its result, its wall ms and the listener's
+    * counter deltas over it. The listener bus is drained before and
+    * after `body`, outside the timed span, so every event `body`
+    * caused — and none from before it — is in the delta.
+    */
+  def measure[A](spark: SparkSession, l: MetricsListener)(body: => A)
+      : (A, Double, Map[String, Double]) = {
+    ListenerDrain.drain(spark.sparkContext)
+    val before = l.snapshot
+    val t0 = System.nanoTime()
+    val r = body
+    val ms = (System.nanoTime() - t0) / 1e6
+    ListenerDrain.drain(spark.sparkContext)
+    val delta = l.snapshot.map { case (k, v) => k -> (v - before.getOrElse(k, 0.0)) }
+    (r, ms, delta)
   }
 
   /** Serve a listener's [[MetricsListener.snapshot]] in Prometheus
     * text exposition format (text/plain; version=0.0.4) on
     * `http://<host>:<port>/metrics` — the engine analog of the
     * reference's `start_http_server(9090)`
-    * (`/root/reference/src/etl_2025.py:268`). Pure-JDK
+    * (`etl_2025.py:268`). Pure-JDK
     * `com.sun.net.httpserver`, no new dependencies; port 0 binds an
     * ephemeral port (tests). Metric names are sanitized to the
     * Prometheus charset ([a-zA-Z0-9_:]) and prefixed `graft_`.

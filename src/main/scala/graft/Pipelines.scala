@@ -117,11 +117,12 @@ object Pipelines {
     // report over the PARSED age (percentile would ANSI-throw on a
     // malformed string); try_cast is idempotent on the int column
     val typed = raw.withColumn("age", ageInt)
-    val report = Quality.report(typed, validUser,
-      dupKeys = Seq("name", "email"), outlierCol = "age")
+    // the mean age over valid rows (the impute value) rides the
+    // report's first job
+    val (report, meanAge) = Quality.reportWith(typed, validUser,
+      dupKeys = Seq("name", "email"), outlierCol = "age",
+      extra = Seq(avg(when(validUser, col("age")))))
     val alerts = Quality.alerts(report)
-    val meanAge = raw.filter(validUser)
-      .agg(avg(expr("try_cast(age AS INT)"))).collect()(0)
     val fillAge = if (meanAge.isNullAt(0)) 0 else meanAge.getDouble(0).toInt
     val cleaned = transformUsers(
       raw.filter(validUser)
@@ -269,7 +270,7 @@ object Pipelines {
       //    (near-zero token entropy = degenerate text both rule sets
       //    miss), one per-row predicate in the scan that carries the id
       .select(col("doc_id"),
-        TextSim.qualityGate(spark).as("quality_ok"))
+        TextSim.qualityGate.as("quality_ok"))
       .join(exactKeep, Seq("doc_id"), "left")
       .join(nearDrop.select(col("doc_id"), lit(true).as("near_drop")),
         Seq("doc_id"), "left")

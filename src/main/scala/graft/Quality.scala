@@ -15,10 +15,10 @@ import org.apache.spark.sql.types.DoubleType
   *    counts cost ZERO extra scans (the reference's ETLMetrics class,
   *    etl_2020.py:20-34, re-reads nothing either — it counts in the
   *    row loop);
-  *  - the quality report is one single-scan multi-aggregate per
-  *    concern (the reference's "single-pass combined checks",
-  *    etl_2022.py:74-79): null counts + totals in one agg, dup count
-  *    as one groupBy, outliers as one percentile agg + pushed filter.
+  *  - the quality report is two jobs whatever the column count (the
+  *    reference's "single-pass combined checks", etl_2022.py:74-79):
+  *    null counts, totals and the outlier quartiles in one aggregate,
+  *    then duplicates and outliers in one grouped pass.
   */
 object Quality {
 
@@ -40,52 +40,50 @@ object Quality {
   case class Thresholds(minValidRate: Double = 0.9, maxNulls: Long = 100,
                         maxDups: Long = 50, maxOutliers: Long = 10)
 
-  /** Null count per column + total rows + valid rows, ONE scan. */
-  private def baseAgg(df: DataFrame, valid: Column): Row = {
-    // count_if, not a sum of 0/1: it is 0, never null, over no rows
-    val nulls = df.columns.toSeq
-      .map(c => count_if(col(c).isNull).as(s"nulls_$c"))
-    val aggs = Seq(count(lit(1)).as("total"),
-      count_if(valid).as("valid")) ++ nulls
-    df.agg(aggs.head, aggs.tail: _*).collect()(0)
-  }
-
-  /** Rows that are duplicates of an earlier row on `keys`
-    * (etl_2022.py:56-58) — Σ(group size − 1), shuffle on the key
-    * hash, 1-row result.
-    */
-  private def dupRowCount(df: DataFrame, keys: Seq[String]): Long =
-    df.groupBy(keys.map(col): _*).count()
-      .filter(col("count") > 1)
-      .agg(coalesce(sum(col("count") - 1), lit(0L)))
-      .collect()(0).getLong(0)
-
-  /** IQR outlier count on `c` (etl_2022.py:60-72): one exact
-    * percentile agg broadcast into one counting pass.
-    */
-  private def outlierCount(df: DataFrame, c: String): Long = {
-    val bounds = df.agg(
-      expr(s"percentile($c, 0.25)").as("q1"),
-      expr(s"percentile($c, 0.75)").as("q3"))
-    df.crossJoin(broadcast(bounds))
-      .filter(col(c) < col("q1") - (col("q3") - col("q1")) * 1.5 ||
-        col(c) > col("q3") + (col("q3") - col("q1")) * 1.5)
-      .agg(count(lit(1))).collect()(0).getLong(0)
-  }
-
-  /** Full quality report: 3 scans total (base+valid, dups, outliers)
-    * regardless of column count.
+  /** Full quality report (etl_2022.py:46-79) in two jobs, regardless
+    * of column count:
+    *  1. one aggregate: total and valid rows, nulls per column, and the
+    *     exact quartiles of `outlierCol`;
+    *  2. one pass grouped on `dupKeys`: each group's size and its IQR
+    *     outliers (`< q1 - 1.5·iqr` or `> q3 + 1.5·iqr`, etl_2022.py:
+    *     60-72), summed into duplicates — Σ(group size − 1), rows
+    *     repeating an earlier row on the keys (:56-58) — and outliers.
+    * No quartiles (an all-null or empty column) means no outliers.
     */
   def report(df: DataFrame, valid: Column, dupKeys: Seq[String],
-             outlierCol: String): QualityReport = {
-    val base = baseAgg(df, valid)
-    QualityReport(
+             outlierCol: String): QualityReport =
+    reportWith(df, valid, dupKeys, outlierCol, Nil)._1
+
+  /** [[report]] plus the `extra` aggregates, evaluated over `df` in
+    * the report's first job and returned in order as one Row. */
+  private[graft] def reportWith(df: DataFrame, valid: Column,
+                                dupKeys: Seq[String], outlierCol: String,
+                                extra: Seq[Column]): (QualityReport, Row) = {
+    val c = col(outlierCol)
+    // count_if, not a sum of 0/1: it is 0, never null, over no rows
+    val nulls = df.columns.toSeq.map(n => count_if(col(n).isNull))
+    val aggs = Seq(count(lit(1)), count_if(valid),
+      percentile(c, lit(0.25)), percentile(c, lit(0.75))) ++ nulls ++ extra
+    val base = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val outlier =
+      if (base.isNullAt(2)) lit(false)
+      else {
+        val (q1, q3) = (base.getDouble(2), base.getDouble(3))
+        c < lit(q1 - (q3 - q1) * 1.5) || c > lit(q3 + (q3 - q1) * 1.5)
+      }
+    val counts = df.groupBy(dupKeys.map(col): _*)
+      .agg(count(lit(1)).as("group_rows"), count_if(outlier).as("outliers"))
+      .agg(coalesce(sum(col("group_rows") - 1), lit(0L)),
+        coalesce(sum(col("outliers")), lit(0L)))
+      .collect()(0)
+    val report = QualityReport(
       totalRows = base.getLong(0),
       nullCounts = df.columns.toSeq.zipWithIndex
-        .map { case (c, i) => c -> base.getLong(i + 2) }.toMap,
-      dupRows = dupRowCount(df, dupKeys),
-      outlierRows = outlierCount(df, outlierCol),
+        .map { case (n, i) => n -> base.getLong(i + 4) }.toMap,
+      dupRows = counts.getLong(0),
+      outlierRows = counts.getLong(1),
       validRows = base.getLong(1))
+    (report, Row.fromSeq(base.toSeq.drop(4 + nulls.size)))
   }
 
   /** Threshold alerting (etl_2022.py:111-121) — pure function of the

@@ -1297,28 +1297,27 @@ object VectorFunctions {
     }
 
   /** Shingle hashes as a Column (n-token windows over a token array). */
-  def shingle(spark: SparkSession, toks: Column, n: Int = 3): Column =
+  def shingle(toks: Column, n: Int = 3): Column =
     column(ShingleHash(expression(toks), n))
 
   /** Shingle STRINGS as a Column (n-token windows joined with " "). */
-  def shingleStrings(spark: SparkSession, toks: Column,
-                     n: Int = 3): Column =
+  def shingleStrings(toks: Column, n: Int = 3): Column =
     column(ShingleStrings(expression(toks), n))
 
   /** Top-bigram multiplicity as a Column ([[BigramTopCount]]). */
-  def bigramTop(spark: SparkSession, toks: Column): Column =
+  def bigramTop(toks: Column): Column =
     column(BigramTopCount(expression(toks)))
 
   /** Per-doc entropy statistics as a Column
     * (`struct<n_tokens, n_distinct, term_sum>`, null when tokenless).
     */
-  def tokenEntropy(spark: SparkSession, toks: Column): Column =
+  def tokenEntropy(toks: Column): Column =
     column(TokenEntropyStats(expression(toks)))
 
   /** Per-doc token frequencies as a Column
     * (`array<struct<token, tf>>`, null when tokenless).
     */
-  def tokenCounts(spark: SparkSession, toks: Column): Column =
+  def tokenCounts(toks: Column): Column =
     column(TokenCounts(expression(toks)))
 
   /** Fused per-doc token frequencies straight off the text column
@@ -1326,21 +1325,20 @@ object VectorFunctions {
     * [[TokenCountsText]] for the equivalence contract with
     * `tokenCounts(split(lower(text), "\\s+"))`.
     */
-  def tokenCountsText(spark: SparkSession, text: Column): Column =
+  def tokenCountsText(text: Column): Column =
     column(TokenCountsText(expression(text)))
 
   /** 128-bit shingle fingerprints as a Column
     * (`array<struct<h1,h2>>`, one per n-token window).
     */
-  def shingle2(spark: SparkSession, toks: Column, n: Int): Column =
+  def shingle2(toks: Column, n: Int): Column =
     column(ShingleHash2(expression(toks), n))
 
   /** Argmin centroid assignment as a Column: `struct(d2, cid)` of the
     * nearest centroid per vector. The matrix rides in the expression
     * as ONE flat `double[]`, so plan size is independent of k.
     */
-  def centroidArgmin(spark: SparkSession, vec: Column,
-                     centroids: Array[Array[Double]]): Column = {
+  def centroidArgmin(vec: Column, centroids: Array[Array[Double]]): Column = {
     require(centroids.nonEmpty, "centroidArgmin: need at least 1 centroid")
     val d = centroids.head.length
     require(centroids.forall(_.length == d),
@@ -1360,7 +1358,7 @@ object VectorFunctions {
     * matrix column is constant within every partition; it enables the
     * per-task flat-array reuse. Leave it false for arbitrary inputs.
     */
-  def centroidArgminCol(spark: SparkSession, vec: Column, mat: Column,
+  def centroidArgminCol(vec: Column, mat: Column,
                         norms: Column, cached: Boolean = false): Column =
     column(CentroidArgminCol(expression(vec), expression(mat),
       expression(norms), cached))
@@ -1368,38 +1366,37 @@ object VectorFunctions {
   /** One Lloyd round's per-slot decimal sums + counts as a single
     * global aggregate Column — `struct(old, kk, d, sums, cnts)`.
     */
-  def centroidSums(spark: SparkSession, cid: Column, v: Column,
+  def centroidSums(cid: Column, v: Column,
                    mat: Column, kk: Column, d: Column): Column =
     column(CentroidSumAgg(expression(cid), expression(v), expression(mat),
       expression(kk), expression(d)))
 
   /** Order-preserving long image of a double as a Column. */
-  def dbits(spark: SparkSession, d: Column): Column =
+  def dbits(d: Column): Column =
     column(DoubleOrderBits(expression(d)))
 
   /** Portable winnow summary as a Column — see [[WinnowMd5Summary]]. */
-  def winnowMd5(spark: SparkSession, c: Column, k: Int, w: Int): Column =
+  def winnowMd5(c: Column, k: Int, w: Int): Column =
     column(WinnowMd5Summary(expression(c), k, w))
 
   /** Winnowing fingerprints as a Column (k-byte shingles, w-window). */
-  def winnow(spark: SparkSession, c: Column, k: Int = 12,
-             w: Int = 4): Column =
+  def winnow(c: Column, k: Int = 12, w: Int = 4): Column =
     column(Winnow(expression(c), k, w))
 
   /** Codegen'd dot product as a Column. */
-  def dot(spark: SparkSession, a: Column, b: Column): Column =
+  def dot(a: Column, b: Column): Column =
     column(DotProduct(expression(a), expression(b)))
 
   /** Codegen'd cosine similarity from one dot + two norms. */
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
+  def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.functions.sqrt
-    dot(spark, a, b) / (sqrt(dot(spark, a, a)) * sqrt(dot(spark, b, b)))
+    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
   /** Codegen'd Bloom membership probe over THIS broadcast filter as a
     * Column ([[BloomProbe]]).
     */
-  def mightContain(spark: SparkSession, h: Column,
+  def mightContain(h: Column,
       bf: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.sketch.BloomFilter]): Column =
     column(BloomProbe(expression(h), bf))

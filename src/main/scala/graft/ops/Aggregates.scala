@@ -731,7 +731,7 @@ object Aggregates {
     */
   def aggMinmaxBy(s: SparkSession, events: DataFrame): DataFrame = {
     val twoTo63 = "CAST('9223372036854775808' AS DECIMAL(19,0))"
-    val ub = graft.functions.VectorFunctions.dbits(s, col("value"))
+    val ub = graft.functions.VectorFunctions.dbits(col("value"))
       .cast(DecimalType(20, 0)) + expr(twoTo63)
     events
       .filter(col("value").isNotNull && col("event_type").isNotNull &&

@@ -41,12 +41,11 @@ object Ann {
     * bit p = sign of ⟨v, plane_p⟩ — one codegen'd dot per plane
     * against the literal plane matrix, no UDF.
     */
-  def bucketCode(s: SparkSession, vec: Column, dims: Int,
-                 nBits: Int): Column = {
+  def bucketCode(vec: Column, dims: Int, nBits: Int): Column = {
     val signBits = zip_with(
       planesLit(nBits, dims),
       sequence(lit(0), lit(nBits - 1)),
-      (plane, p) => when(graft.functions.VectorFunctions.dot(s, vec, plane) >= 0d,
+      (plane, p) => when(graft.functions.VectorFunctions.dot(vec, plane) >= 0d,
         call_function("shiftleft", lit(1L), p)).otherwise(0L))
     aggregate(signBits, lit(0L), (acc, b) => acc + b)
   }
@@ -57,8 +56,8 @@ object Ann {
     * rule `TextSim.simSearch`/`simKnn`/`dedupEmbed` and their oracle
     * CTEs apply).
     */
-  private def nonZero(s: SparkSession, emb: DataFrame): DataFrame =
-    emb.filter(TextSim.nonZeroNorm(s, col("embedding")))
+  private def nonZero(emb: DataFrame): DataFrame =
+    emb.filter(TextSim.nonZeroNorm(col("embedding")))
       // native array CAST, not a transform(x -> cast(x)) lambda — the
       // lambda is CodegenFallback and split the scan's codegen span
       // (bit-identical value, see TextSim.nonZeroNorm). Deliberately
@@ -93,13 +92,13 @@ object Ann {
   /** [[simAnnIvf]] over any `(vec_id, embedding)` relation. */
   def simAnnIvf(s: SparkSession, emb: DataFrame, queryId: Long,
                 k: Int, nLists: Int, nProbe: Int): DataFrame = {
-    val e = nonZero(s, emb)
+    val e = nonZero(emb)
     // deterministic coarse centroids: the nLists lowest-id vectors;
     // assignment divides each dot by the centroid's norm (|v| is
     // constant across candidates, so this argmax IS argmax of cosine)
     val centroids = e.orderBy("vec_id").limit(nLists)
       .select(collect_list(col("v")).as("cs"))
-    ivfSearch(s, e, centroids, queryId, k, nProbe)
+    ivfSearch(e, centroids, queryId, k, nProbe)
   }
 
   /** IVF with a TRAINED coarse quantizer: centroids come from
@@ -112,12 +111,12 @@ object Ann {
   def simAnnIvfTrained(s: SparkSession, emb: DataFrame, queryId: Long = 0L,
                        k: Int = 10, nLists: Int = 16, nProbe: Int = 4,
                        iters: Int = 3): DataFrame = {
-    val e = nonZero(s, emb)
+    val e = nonZero(emb)
     val trained = Cluster.kmeansCentroids(s, emb, nLists, iters)
     val centroids = s.range(1).select(
       array(trained.toIndexedSeq.map(c =>
         array(c.toIndexedSeq.map(lit): _*)): _*).as("cs"))
-    ivfSearch(s, e, centroids, queryId, k, nProbe)
+    ivfSearch(e, centroids, queryId, k, nProbe)
   }
 
   /** Shared centroid-assignment projection over a 1-row `cs`
@@ -147,9 +146,9 @@ object Ann {
   }
 
   /** Shared IVF search body over a 1-row `cs` centroid-list relation. */
-  private def ivfSearch(s: SparkSession, e: DataFrame, centroids: DataFrame,
+  private def ivfSearch(e: DataFrame, centroids: DataFrame,
                         queryId: Long, k: Int, nProbe: Int): DataFrame = {
-    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(s, a, b)
+    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
     val assigned = assignLists(e, centroids, None)
     val q = assignLists(e.filter(col("vec_id") === queryId), centroids,
         Some(nProbe))
@@ -180,9 +179,9 @@ object Ann {
   /** [[simAnnLsh]] over any `(vec_id, embedding)` relation. */
   def simAnnLsh(s: SparkSession, emb: DataFrame, queryId: Long,
                 k: Int, nBits: Int, dims: Int): DataFrame = {
-    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(s, a, b)
-    val e = nonZero(s, emb)
-      .withColumn("bucket", bucketCode(s, col("v"), dims, nBits))
+    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
+    val e = nonZero(emb)
+      .withColumn("bucket", bucketCode(col("v"), dims, nBits))
     val q = e.filter(col("vec_id") === queryId)
       .select(col("v").as("qv"), col("bucket").as("qbucket"))
     e.filter(col("vec_id") =!= queryId)
@@ -233,8 +232,8 @@ object Ann {
                      nLists: Int, nProbe: Int): DataFrame = {
     require(nProbe >= 1 && nProbe <= nLists,
       s"nProbe must be in [1, $nLists], got $nProbe")
-    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(s, a, b)
-    val e = nonZero(s, emb)
+    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
+    val e = nonZero(emb)
       .withColumn("nrm", sqrt(nd(col("v"), col("v"))))
     val centroids = e.orderBy("vec_id").limit(nLists)
       .select(collect_list(col("v")).as("cs"))
@@ -285,7 +284,7 @@ object Ann {
       // a stored zero-norm vector would make every later probe throw
       // on its 0/0 cosine — exclude at build time (same nonZero rule)
       .filter(graft.functions.VectorFunctions
-        .dot(s, col("v"), col("v")) > 0.0)
+        .dot(col("v"), col("v")) > 0.0)
       .withColumnRenamed("cluster_id", "list_id")
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$indexDir/lists")
@@ -309,7 +308,7 @@ object Ann {
   def ivfIndexProbe(s: SparkSession, indexDir: String,
                     queryVec: Seq[Double], k: Int = 10,
                     nProbe: Int = 4): DataFrame = {
-    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(s, a, b)
+    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
     val qNorm = math.sqrt(queryVec.map(x => x * x).sum)
     // a zero-norm query has no direction to rank by: every cosine is
     // 0/0, the centroid sort order would be NaN-unspecified and every

@@ -49,13 +49,13 @@ object Cluster {
     // paid for). Eager like the NearDup entry points: the result is
     // materialized through localCheckpoint so the cache is released
     // before returning — the file's standard entry-point discipline.
-    val e = vectors(s, emb)
+    val e = vectors(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val centroids = kmeansCentroidsOn(e, k, iters, loop = loop)
       e.select(col("vec_id"), col("v"),
-          assignExpr(s, centroids).getField("cid").as("cluster_id"),
-          assignExpr(s, centroids).getField("d2").as("vd2"))
+          assignExpr(centroids).getField("cid").as("cluster_id"),
+          assignExpr(centroids).getField("d2").as("vd2"))
         // d2 above omits |v|^2 (constant per vector, irrelevant to the
         // argmin); add it back so the reported distance is the true one
         .select(col("vec_id"), col("cluster_id"),
@@ -66,7 +66,7 @@ object Cluster {
     } finally e.unpersist(blocking = false)
   }
 
-  private[ops] def vectors(s: SparkSession, emb: DataFrame): DataFrame =
+  private[ops] def vectors(emb: DataFrame): DataFrame =
     // spread off the single fixture split; split-gated (r22) so a
     // many-split embeddings scan feeds the train with no exchange
     Sources.spreadIfNarrow(
@@ -79,7 +79,7 @@ object Cluster {
     */
   def assignWith(s: SparkSession, emb: DataFrame,
                  centroids: Array[Array[Double]]): DataFrame =
-    assignOn(vectors(s, emb), centroids)
+    assignOn(vectors(emb), centroids)
 
   /** [[assignWith]] over an already-derived `(vec_id, v)` relation —
     * the cache-sharing entry [[graft.ops.NearDup.dedupSemantic]] uses
@@ -88,7 +88,7 @@ object Cluster {
   private[ops] def assignOn(e: DataFrame,
                             centroids: Array[Array[Double]]): DataFrame =
     e.select(col("vec_id"), col("v"),
-      assignExpr(e.sparkSession, centroids).getField("cid").as("cluster_id"))
+      assignExpr(centroids).getField("cid").as("cluster_id"))
 
   // argmin_c ||v - c||^2 = argmin_c (|c|^2 - 2 v·c): ONE codegen'd
   // loop over the packed centroid matrix, ties to the lower id.
@@ -99,9 +99,8 @@ object Cluster {
   // counts grow with the corpus. Bit-exact parity with the old form
   // (same fold order, ties, NaN ordering) is pinned by
   // CentroidParitySpec.
-  private def assignExpr(s: SparkSession,
-                         centroids: Array[Array[Double]]): org.apache.spark.sql.Column =
-    graft.functions.VectorFunctions.centroidArgmin(s, col("v"), centroids)
+  private def assignExpr(centroids: Array[Array[Double]]): org.apache.spark.sql.Column =
+    graft.functions.VectorFunctions.centroidArgmin(col("v"), centroids)
 
   /** The Lloyd iteration alone: returns the trained centroids (k × d
     * doubles on the driver) — the coarse-quantizer training step
@@ -132,7 +131,7 @@ object Cluster {
     // persist across the Lloyd loop: every iteration re-reads the
     // vector relation otherwise (scan + cast per round). Standard
     // practice for iterative algorithms; released before returning.
-    val e = vectors(s, emb).persist()
+    val e = vectors(emb).persist()
     // finally, not straight-line: a mid-loop failure (executor loss,
     // bad cast) must not leave the vector blocks pinned on the session
     try kmeansCentroidsOn(e, k, iters, init, loop)
@@ -178,7 +177,7 @@ object Cluster {
     // input row (bad vectors get a null/edge cell from the argmin,
     // never a crash); both filters are inert on the committed
     // fixtures, which carry no such vectors.
-    val healthy = e.filter(TextSim.nonZeroNorm(s, col("v")) &&
+    val healthy = e.filter(TextSim.nonZeroNorm(col("v")) &&
       expr("forall(v, x -> abs(x) < 1e15)"))
     // COLD start trains CHAINED (r19 VERDICT ask #3): the whole Lloyd
     // iteration — in-plan seed, `iters` rounds of column-matrix argmin
@@ -204,7 +203,7 @@ object Cluster {
     var firstRound = true
     for (_ <- 1 to iters if !converged) {
       val assigned = healthy.select(col("vec_id"), col("v"),
-        assignExpr(s, centroids).getField("cid").as("cid"))
+        assignExpr(centroids).getField("cid").as("cid"))
       // per-dimension decimal-exact means: ONE k·d-row shuffle, the
       // (cid, dim, m) triples collected directly — the former second
       // groupBy (map_from_arrays re-assembly) was a whole extra
@@ -353,13 +352,13 @@ object Cluster {
     def round(matDf: DataFrame): DataFrame = {
       val assigned = healthy.crossJoin(nl(matDf))
         .select(graft.functions.VectorFunctions
-            .centroidArgminCol(s, col("v"), col("mat"), col("norms"),
+            .centroidArgminCol(col("v"), col("mat"), col("norms"),
               cached = true)
             .getField("cid").as("cid"),
           col("v"), col("mat"), col("kk"), col("d"))
       withNorms(assigned
-        .agg(graft.functions.VectorFunctions.centroidSums(s,
-          col("cid"), col("v"), col("mat"), col("kk"), col("d")).as("st"))
+        .agg(graft.functions.VectorFunctions.centroidSums(col("cid"), col("v"),
+          col("mat"), col("kk"), col("d")).as("st"))
         .select(expr("transform(sequence(0, greatest(size(st.old), 1) - 1), " +
             "i -> coalesce(" +
             "cast(try_element_at(st.sums, i + 1) / " +
@@ -451,7 +450,7 @@ object Cluster {
                             minSim: Double = 0.4): DataFrame = {
     require(minSim <= 1.0, s"minSim must be <= 1, got $minSim")
     val nd = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      graft.functions.VectorFunctions.dot(s, a, b)
+      graft.functions.VectorFunctions.dot(a, b)
     val assigned = clusterAssignPortable(s, dir, k)
       .select(col("vec_id"), col("cluster_id"))
     val m = Sources.table(s, dir, "embeddings")

@@ -26,8 +26,9 @@ object NearDup {
     * from dedupNgram, dedupContainment, dedupMinhash,
     * dedupMinhashPortable, dedupMinhashIncr and
     * dedupSimhashPairsPortable left all 172 sf0.01 result digests
-    * identical but was SLOWER — `graft.ProfileFixed` at sf0.1 (bench
-    * session, 4 cores, two runs per side) measured the 7 affected
+    * identical but was SLOWER — a build/exec probe at sf0.1 (bench
+    * session, 4 cores, two runs per side; Bench's `layers` now record
+    * the same split) measured the 7 affected
     * queries at 13.3 / 12.6 s of build plus execute eager vs
     * 15.8 / 17.5 s lazy (`dedup_minhash` 1.27 / 1.31 → 1.85 / 1.95 s,
     * `dedup_minhash_incr` 1.39 / 1.34 → 2.04 / 1.89 s): without the
@@ -63,8 +64,7 @@ object NearDup {
     * ever needs shingle IDENTITY (group/join keys, min), which the
     * hash preserves (64-bit collisions: negligible, deterministic).
     */
-  private def shingleHashesOf(s: SparkSession, docs: DataFrame,
-                              n: Int): DataFrame =
+  private def shingleHashesOf(docs: DataFrame, n: Int): DataFrame =
     // spread the per-token work: a small single-file corpus is one
     // input split, which would pin the whole shingle+hash stage to a
     // single task on local[32]. Gated on split count (r22): at real
@@ -72,7 +72,7 @@ object NearDup {
     // passes through with NO exchange.
     Sources.spreadIfNarrow(docs)
       .select(col("doc_id"), explode(graft.functions.VectorFunctions
-        .shingle(s, split(lower(col("text")), "\\s+"), n)).as("th"))
+        .shingle(split(lower(col("text")), "\\s+"), n)).as("th"))
 
   /** Per-document MinHash signature: `numHashes` independent
     * `min(xxhash64(th, i))` aggregates over the 64-bit shingle hashes,
@@ -98,7 +98,7 @@ object NearDup {
                         numHashes: Int): DataFrame = {
     val mins = (0 until numHashes).map(i =>
       min(xxhash64(col("th"), lit(i.toLong))).as(s"mh$i"))
-    shingleHashesOf(s, docs, 3)
+    shingleHashesOf(docs, 3)
       .groupBy("doc_id")
       .agg(mins.head, mins.tail: _*)
       .select(col("doc_id"),
@@ -335,8 +335,7 @@ object NearDup {
     * (the transform/concat_ws lambda spelling evaluates interpreted
     * per window: 0.82 s vs 0.46 s warm on this stage at sf0.1).
     */
-  private def portableShingleHashes(s: SparkSession,
-                                    docs: DataFrame): DataFrame = {
+  private def portableShingleHashes(docs: DataFrame): DataFrame = {
     // spread the per-token work exactly like [[shingleHashesOf]]: a
     // small single-file corpus is ONE input split, which pinned the
     // whole tokenize + md5-per-shingle stage to a single task on
@@ -350,7 +349,7 @@ object NearDup {
     toks
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(array_distinct(
-        graft.functions.VectorFunctions.shingleStrings(s, col("toks"), 3)))
+        graft.functions.VectorFunctions.shingleStrings(col("toks"), 3)))
         .as("sh"))
       .select(col("doc_id"),
         expr("CAST(conv(substring(md5(sh), 1, 15), 16, 10) AS BIGINT)")
@@ -377,7 +376,7 @@ object NearDup {
     val mins = portableAffineTh.take(numHashes).zipWithIndex.map {
       case (h, i) => min(h).as(s"mh$i")
     }
-    portableShingleHashes(s, docs).groupBy("doc_id")
+    portableShingleHashes(docs).groupBy("doc_id")
       .agg(mins.head, mins.tail: _*)
   }
 
@@ -469,7 +468,7 @@ object NearDup {
     * crawling").
     */
   def simhashShinglePortable(s: SparkSession, docs: DataFrame): DataFrame =
-    withSimhashBands(simhashDecomposed(portableShingleHashes(s, docs), 60), 60)
+    withSimhashBands(simhashDecomposed(portableShingleHashes(docs), 60), 60)
 
   /** The 4-way band split of a `(doc_id, simhash)` frame, defined once
     * (r17 review: three hand-copied shift/mask blocks — 16-bit and two
@@ -520,7 +519,7 @@ object NearDup {
     * shingle-hash set).
     */
   def docFingerprintPortable(s: SparkSession, dir: String): DataFrame =
-    portableShingleHashes(s, Sources.table(s, dir, "documents"))
+    portableShingleHashes(Sources.table(s, dir, "documents"))
       .groupBy("doc_id")
       .agg(min(portableAffineTh.head).as("fingerprint"),
         count(lit(1)).cast(LongType).as("n_shingles"))
@@ -822,7 +821,7 @@ object NearDup {
     // gram identity = its 64-bit shingle hash (sufficient for df
     // cutoff, posting lists and Jaccard counts; the gram string is
     // never needed downstream)
-    val grams = shingleHashesOf(s, docs, n).withColumnRenamed("th", "gram")
+    val grams = shingleHashesOf(docs, n).withColumnRenamed("th", "gram")
     // posting lists, reused by two branches (pair gen + doc sizes):
     // persist so the explode+distinct+groupBy pipeline runs once. The
     // cache is released before returning — the result is materialized
@@ -899,7 +898,7 @@ object NearDup {
     */
   def dedupContainment(s: SparkSession, docs: DataFrame, n: Int,
                        maxDf: Int, minContain: Double): DataFrame =
-    materialize(containmentPairsPlan(s, docs, n, maxDf, minContain))
+    materialize(containmentPairsPlan(docs, n, maxDf, minContain))
 
   /** The un-materialized candidate-pair plan behind
     * [[dedupContainment]] — exposed (like [[dedupNgramPlan]]) so the
@@ -908,13 +907,12 @@ object NearDup {
     * `localCheckpoint`, which truncates the returned lineage to a
     * checkpoint scan.
     */
-  private[graft] def containmentPairsPlan(s: SparkSession, docs: DataFrame,
-                                          n: Int, maxDf: Int,
+  private[graft] def containmentPairsPlan(docs: DataFrame, n: Int, maxDf: Int,
                                           minContain: Double): DataFrame = {
     // spread the per-token work (see [[shingleHashesOf]]; split-gated)
     val perDoc = Sources.spreadIfNarrow(docs)
       .select(col("doc_id"), array_distinct(graft.functions.VectorFunctions
-        .shingle(s, split(lower(col("text")), "\\s+"), n)).as("grams"))
+        .shingle(split(lower(col("text")), "\\s+"), n)).as("grams"))
     val posts = perDoc
       .select(struct(col("doc_id"), size(col("grams")).as("ng")).as("d"),
         explode(col("grams")).as("gram"))
@@ -1025,7 +1023,7 @@ object NearDup {
     val gl = Sources.spreadIfNarrow(docs)
       .select(col("doc_id"), isTest.as("is_test"),
         explode(array_distinct(graft.functions.VectorFunctions
-          .shingle(s, split(lower(col("text")), "\\s+"), n))).as("th"))
+          .shingle(split(lower(col("text")), "\\s+"), n))).as("th"))
     val stream =
       if (!dfPrePass) gl
       else {
@@ -1183,8 +1181,7 @@ object NearDup {
         math.max(expectedItems.getOrElse(exact.count()), 1L), fpp)
     }
     val bfB = s.sparkContext.broadcast(bf)
-    val probe = graft.functions.VectorFunctions.mightContain(
-      s, col("h"), bfB)
+    val probe = graft.functions.VectorFunctions.mightContain(col("h"), bfB)
     val plan = d.filter(col("is_new"))
       .join(exact.withColumn("in_corpus", lit(true)), Seq("h"), "left")
       .agg(count(lit(1)).as("n_new"),
@@ -1760,7 +1757,7 @@ object NearDup {
     // one tight primitive loop (a short doc yields an empty array —
     // no occurrences, no sequence(0, negative) pitfall).
     val occ = words.select(col("doc_id"), posexplode(
-        graft.functions.VectorFunctions.shingle2(s, col("w"), n))
+        graft.functions.VectorFunctions.shingle2(col("w"), n))
         .as(Seq("p", "hh")))
       .select(col("doc_id"), col("p"),
         col("hh.h1").as("h1"), col("hh.h2").as("h2"),
@@ -1870,7 +1867,7 @@ object NearDup {
     // would silently break that assumption
     require(minSim <= 1.0, s"dedupSemantic: minSim must be <= 1, got $minSim")
     val nd = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      graft.functions.VectorFunctions.dot(s, a, b)
+      graft.functions.VectorFunctions.dot(a, b)
     // train once on the driver (k×d doubles), assign via ONE broadcast
     // argmin projection — vectors never pair during clustering. The
     // Lloyd train and the assignment share ONE persisted vector
@@ -1878,7 +1875,7 @@ object NearDup {
     // re-derived the scan + cast + repartition the train had already
     // paid for); released after the localCheckpoint below, with the
     // rest of the entry point's caches.
-    val vecs = Cluster.vectors(s, emb)
+    val vecs = Cluster.vectors(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centroids = releasingOnFailure(vecs) {
       Cluster.kmeansCentroidsOn(vecs, k, iters, warmStart)

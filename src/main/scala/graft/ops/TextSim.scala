@@ -119,7 +119,7 @@ object TextSim {
       // UTF8Strings with identical output (whitespace-split tokens
       // contain no nulls, so concat_ws == concat-with-space)
       .select(explode(graft.functions.VectorFunctions
-        .shingleStrings(s, col("words"), 2)).as("bigram"))
+        .shingleStrings(col("words"), 2)).as("bigram"))
       .groupBy("bigram")
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("bigram"))
@@ -227,9 +227,9 @@ object TextSim {
     * `dot(vecAsDouble(c), vecAsDouble(c))` and to the oracles'
     * `list_dot_product(CAST(embedding AS DOUBLE[]), …)`.
     */
-  private[ops] def nonZeroNorm(s: SparkSession, c: Column): Column = {
+  private[ops] def nonZeroNorm(c: Column): Column = {
     val d = c.cast(ArrayType(DoubleType))
-    val n = graft.functions.VectorFunctions.dot(s, d, d)
+    val n = graft.functions.VectorFunctions.dot(d, d)
     // `n > 0` alone is NOT a health check: Spark orders NaN GREATER
     // than every double, so a NaN norm (any NaN element) and a +Inf
     // norm (an infinite element, or finite elements whose squares
@@ -256,7 +256,7 @@ object TextSim {
   /** [[simSearch]] over any `(vec_id, embedding)` relation. */
   def simSearch(s: SparkSession, emb: DataFrame, queryId: Long,
                 k: Int): DataFrame = {
-    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(s, a, b)
+    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
     val e = emb
       // zero-norm vectors have no cosine: under ANSI arithmetic the
       // 0/0 would THROW (not NaN), so the whole similarity surface
@@ -264,7 +264,7 @@ object TextSim {
       // every oracle's CTE (`list_dot_product(v, v) > 0`). Filtered
       // on the RAW column (see nonZeroNorm) so the scan filter stays
       // codegen'd
-      .filter(nonZeroNorm(s, col("embedding")))
+      .filter(nonZeroNorm(col("embedding")))
       .select(col("vec_id"), vecAsDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") === queryId).select(col("v").as("qv"))
     e.filter(col("vec_id") =!= queryId)
@@ -296,12 +296,12 @@ object TextSim {
   def dedupEmbed(s: SparkSession, emb: DataFrame,
                  minSim: Double): DataFrame = {
     // norm once per vector (N dots), not once per pair (3·N² dots)
-    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(s, a, b)
+    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
     val e = emb
       // no cosine for zero-norm vectors (ANSI 0/0 throws) — excluded
       // here and in the oracle CTE alike, on the raw column so the
       // scan filter stays codegen'd (see nonZeroNorm)
-      .filter(nonZeroNorm(s, col("embedding")))
+      .filter(nonZeroNorm(col("embedding")))
       .select(col("vec_id"), vecAsDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(nd(col("v"), col("v"))))
     // spread the probe side: a small embeddings file is one input
@@ -337,12 +337,12 @@ object TextSim {
 
   /** [[simKnn]] over any `(vec_id, embedding)` relation. */
   def simKnn(s: SparkSession, emb: DataFrame, k: Int): DataFrame = {
-    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(s, a, b)
+    val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
     val e = emb
       // no cosine for zero-norm vectors (ANSI 0/0 throws) — excluded
       // here and in the oracle CTE alike, on the raw column so the
       // scan filter stays codegen'd (see nonZeroNorm)
-      .filter(nonZeroNorm(s, col("embedding")))
+      .filter(nonZeroNorm(col("embedding")))
       .select(col("vec_id"), vecAsDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(nd(col("v"), col("v"))))
     val probe = Sources.spreadIfNarrow(e)
@@ -412,7 +412,7 @@ object TextSim {
       // kernel into every field reference plus the null filter
       // (4 evaluations of split+sort+scan; measured 0.27 vs 0.19 s)
       .select(col("doc_id"),
-        explode(array(entropyStats(docs.sparkSession))).as("st"))
+        explode(array(entropyStats)).as("st"))
       .filter(col("st").isNotNull)
       .select(col("doc_id"),
         col("st.n_tokens").as("n_tokens"),
@@ -423,8 +423,8 @@ object TextSim {
   // text_repetition and text_entropy, defined once over the `text`
   // column. The queries project them; [[qualityGate]] folds them.
 
-  private def entropyStats(s: SparkSession): Column =
-    graft.functions.VectorFunctions.tokenEntropy(s, tokens(col("text")))
+  private def entropyStats: Column =
+    graft.functions.VectorFunctions.tokenEntropy(tokens(col("text")))
   private def entropyOf(st: Column): Column = round(
     round(log(st.getField("n_tokens")), 8) - st.getField("term_sum") /
       st.getField("n_tokens").cast(DoubleType), 4)
@@ -458,15 +458,15 @@ object TextSim {
     * ratio sits behind the condition its query filters on, so no row
     * divides by zero.
     */
-  def qualityGate(s: SparkSession): Column = {
+  def qualityGate: Column = {
     val (nTokens, avgLen, punct) = qualityStats
     val nWords = size(words)
     val notRepetitive = when(nWords >= 2, !repetitive(
-      topBigramFrac(graft.functions.VectorFunctions.bigramTop(s, words),
+      topBigramFrac(graft.functions.VectorFunctions.bigramTop(words),
         (nWords - 1).cast(LongType)),
       dupWordFrac(size(array_distinct(words)).cast(LongType),
         nWords.cast(LongType))))
-    val st = entropyStats(s)
+    val st = entropyStats
     val dense = when(st.isNotNull, entropyOf(st) > 1.0)
     Seq(qualityOk(nTokens, avgLen, punct), notRepetitive, dense)
       .map(coalesce(_, lit(false))).reduce(_ && _)
@@ -637,7 +637,7 @@ object TextSim {
     // same integer counts; everything downstream is unchanged.
     val tf = d.select(col("doc_id"), explode(
         graft.functions.VectorFunctions
-          .tokenCounts(d.sparkSession, tokens(col("text")))).as("p"))
+          .tokenCounts(tokens(col("text")))).as("p"))
       .select(col("doc_id"), col("p.token").as("token"),
         col("p.tf").as("tf"))
       // one explicit exchange on the SKEW-FREE doc key: ReuseExchange
@@ -831,7 +831,7 @@ object TextSim {
     docs(s, dir)
       .select(col("doc_id"),
         graft.functions.VectorFunctions
-          .winnow(s, col("text"), WinnowK, WinnowW).as("fps"))
+          .winnow(col("text"), WinnowK, WinnowW).as("fps"))
       .select(col("doc_id"),
         size(col("fps")).cast(LongType).as("n_fingerprints"),
         xxhash64(col("fps")).as("fingerprint_digest"))
@@ -899,7 +899,7 @@ object TextSim {
     d.filter(length(col("text")) >= WinnowK)
       .select(col("doc_id"),
         graft.functions.VectorFunctions
-          .winnowMd5(d.sparkSession, col("text"), WinnowK, WinnowW).as("f"))
+          .winnowMd5(col("text"), WinnowK, WinnowW).as("f"))
       .select(col("doc_id"),
         col("f.n_fingerprints").as("n_fingerprints"),
         col("f.fp_digest").as("fp_digest"))
@@ -979,7 +979,7 @@ object TextSim {
     docs(s, dir)
       .select(col("doc_id"),
         array_min(graft.functions.VectorFunctions
-          .shingle(s, tokens(col("text")), 3)).as("fingerprint"))
+          .shingle(tokens(col("text")), 3)).as("fingerprint"))
 
   /** `text_repetition` — Gopher-rule repetition signals (Rae et al.
     * 2021 §A1.1): the fraction of all word-bigrams taken by the single
@@ -1041,8 +1041,7 @@ object TextSim {
       .select(col("doc_id"), size(col("words")).cast(LongType).as("n_words"),
         size(array_distinct(col("words"))).cast(LongType).as("distinct_words"),
         (size(col("words")) - 1).cast(LongType).as("n_bigrams"),
-        graft.functions.VectorFunctions.bigramTop(docs.sparkSession,
-          col("words")).as("top_bigram_n"))
+        graft.functions.VectorFunctions.bigramTop(col("words")).as("top_bigram_n"))
       .select(col("doc_id"), col("n_words"), col("top_bigram_n"),
         topBigramFrac(col("top_bigram_n"), col("n_bigrams"))
           .as("top_bigram_frac"),

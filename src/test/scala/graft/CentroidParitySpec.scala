@@ -17,7 +17,7 @@ class CentroidParitySpec extends SparkSpec {
     val scored = centroids.zipWithIndex.map { case (c, i) =>
       val cLit = array(c.toIndexedSeq.map(lit): _*)
       val d2 = lit(c.map(x => x * x).sum) -
-        lit(2.0) * VectorFunctions.dot(spark, col("v"), cLit)
+        lit(2.0) * VectorFunctions.dot(col("v"), cLit)
       struct(d2.as("d2"), lit(i).as("cid"))
     }
     least(scored.toIndexedSeq: _*)
@@ -35,11 +35,11 @@ class CentroidParitySpec extends SparkSpec {
       ops.Sources.table(spark, sf, "embeddings"), 8, 3)
     val both = vecs.select(col("vec_id"),
         oldAssign(cents).as("o"),
-        VectorFunctions.centroidArgmin(spark, col("v"), cents).as("n"))
+        VectorFunctions.centroidArgmin(col("v"), cents).as("n"))
       .select(col("vec_id"),
         col("o.cid").as("ocid"), col("n.cid").as("ncid"),
-        graft.functions.VectorFunctions.dbits(spark, col("o.d2")).as("od2"),
-        graft.functions.VectorFunctions.dbits(spark, col("n.d2")).as("nd2"))
+        graft.functions.VectorFunctions.dbits(col("o.d2")).as("od2"),
+        graft.functions.VectorFunctions.dbits(col("n.d2")).as("nd2"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -54,7 +54,7 @@ class CentroidParitySpec extends SparkSpec {
     val df = spark.range(1).select(
       expr("array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE))").as("v"))
     val got = df.select(
-      VectorFunctions.centroidArgmin(spark, col("v"), cents)
+      VectorFunctions.centroidArgmin(col("v"), cents)
         .getField("cid")).head().getInt(0)
     assert(got == 0, s"tie should keep the lower cid, got $got")
   }
@@ -65,7 +65,7 @@ class CentroidParitySpec extends SparkSpec {
       expr("array(CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE))").as("v"))
     val both = df.select(
       oldAssign(cents).getField("cid").as("o"),
-      VectorFunctions.centroidArgmin(spark, col("v"), cents)
+      VectorFunctions.centroidArgmin(col("v"), cents)
         .getField("cid").as("n")).head()
     assert(both.getInt(0) == both.getInt(1),
       s"NaN handling drift: old=${both.getInt(0)} new=${both.getInt(1)}")
@@ -76,7 +76,7 @@ class CentroidParitySpec extends SparkSpec {
     val df = spark.range(1)
       .select(lit(null).cast("array<double>").as("v"))
     val r = df.select(VectorFunctions
-      .centroidArgmin(spark, col("v"), Array(Array(1.0)))).head()
+      .centroidArgmin(col("v"), Array(Array(1.0)))).head()
     assert(r.isNullAt(0))
   }
 
@@ -89,9 +89,9 @@ class CentroidParitySpec extends SparkSpec {
     val df = spark.range(1)
       .select(expr("array(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE))").as("v"))
       .select(
-        VectorFunctions.centroidArgmin(spark, col("v"), m.map(_.clone()))
+        VectorFunctions.centroidArgmin(col("v"), m.map(_.clone()))
           .getField("cid").as("a"),
-        VectorFunctions.centroidArgmin(spark, col("v"), m.map(_.clone()))
+        VectorFunctions.centroidArgmin(col("v"), m.map(_.clone()))
           .getField("d2").as("b"))
     val nodes = df.queryExecution.analyzed.expressions.flatMap(_.collect {
       case c: graft.functions.CentroidArgmin => c })
@@ -107,7 +107,7 @@ class CentroidParitySpec extends SparkSpec {
       "transform(sequence(1, 16), i -> CAST(id * i AS DOUBLE) / 16.0)")
       .as("v"))
     val out = df.select(col("id"), VectorFunctions
-        .centroidArgmin(spark, col("v"), cents).getField("cid").as("cid"))
+        .centroidArgmin(col("v"), cents).getField("cid").as("cid"))
       .collect()
     assert(out.length == 64)
     assert(out.forall(r => r.getInt(1) >= 0 && r.getInt(1) < 256))
@@ -135,7 +135,7 @@ class CentroidParitySpec extends SparkSpec {
       expr("array(CAST(2000000.0 AS DOUBLE), " +
         "CAST(2.0 * id * id AS DOUBLE))").as("norms"))
     val out = df.select(col("id"),
-      VectorFunctions.centroidArgminCol(spark, col("v"), col("mat"),
+      VectorFunctions.centroidArgminCol(col("v"), col("mat"),
         col("norms")).getField("cid").as("cid")).collect()
     assert(out.length == 64)
     out.foreach { r =>
@@ -159,14 +159,14 @@ class CentroidParitySpec extends SparkSpec {
         expr("array(CAST(7.5 AS DOUBLE), CAST(120.0 AS DOUBLE))")
           .as("norms"))
     val both = df.select(col("id"),
-      VectorFunctions.centroidArgminCol(spark, col("v"), col("mat"),
+      VectorFunctions.centroidArgminCol(col("v"), col("mat"),
         col("norms")).as("pub"),
-      VectorFunctions.centroidArgminCol(spark, col("v"), col("mat"),
+      VectorFunctions.centroidArgminCol(col("v"), col("mat"),
         col("norms"), cached = true).as("tr"))
       .select(col("id"),
         col("pub.cid").as("pc"), col("tr.cid").as("tc"),
-        graft.functions.VectorFunctions.dbits(spark, col("pub.d2")).as("pd"),
-        graft.functions.VectorFunctions.dbits(spark, col("tr.d2")).as("td"))
+        graft.functions.VectorFunctions.dbits(col("pub.d2")).as("pd"),
+        graft.functions.VectorFunctions.dbits(col("tr.d2")).as("td"))
       .collect()
     assert(both.length == 128)
     both.foreach { r =>

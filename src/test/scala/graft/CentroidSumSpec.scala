@@ -40,9 +40,9 @@ class CentroidSumSpec extends SparkSpec {
   private def newRound(assigned: DataFrame, matDf: DataFrame): DataFrame = {
     assigned.crossJoin(matDf)
       // the non-finite test runs on ANSI-toggled child sessions: the
-      // aggregate must follow the INPUT's session, not the caller's
-      .agg(VectorFunctions.centroidSums(assigned.sparkSession,
-        col("cid"), col("v"), col("mat"), col("kk"), col("d")).as("st"))
+      // kernel takes no session, so it evaluates under the INPUT's
+      .agg(VectorFunctions.centroidSums(col("cid"), col("v"), col("mat"),
+        col("kk"), col("d")).as("st"))
       .select(expr("transform(sequence(0, greatest(size(st.old), 1) - 1), " +
           "i -> coalesce(" +
           "cast(try_element_at(st.sums, i + 1) / " +

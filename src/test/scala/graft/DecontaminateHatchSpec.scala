@@ -30,7 +30,7 @@ class DecontaminateHatchSpec extends SparkSpec {
   test("synthetic corpus genuinely contains stop-shingles above the cutoff") {
     val overCutoff = corpus
       .select(explode(array_distinct(graft.functions.VectorFunctions
-        .shingle(spark, split(lower(col("text")), "\\s+"), 3))).as("th"))
+        .shingle(split(lower(col("text")), "\\s+"), 3))).as("th"))
       .groupBy("th").count().filter(col("count") > maxDf).count()
     assert(overCutoff > 0,
       s"no shingle has df > $maxDf — the hatch equivalence test would be vacuous")

@@ -63,7 +63,7 @@ class EntropyKernelSpec extends SparkSpec {
       (5L, null.asInstanceOf[String])).toDF("doc_id", "text")
     val viaKernel = docs.select(col("doc_id"),
         explode(graft.functions.VectorFunctions
-          .tokenCounts(spark, TextSim.tokens(col("text")))).as("p"))
+          .tokenCounts(TextSim.tokens(col("text")))).as("p"))
       .select(col("doc_id"), col("p.token"), col("p.tf"))
       .collect().map(_.toString).sorted.toSeq
     val viaGroup = docs.select(col("doc_id"),

@@ -49,7 +49,7 @@ class ExtensibilitySpec extends SparkSpec {
     import spark.implicits._
     val dense = Seq((Seq[java.lang.Double](1.0, 2.0, 3.0),
       Seq[java.lang.Double](4.0, 5.0, 6.0))).toDF("a", "b")
-    val nd = graft.functions.VectorFunctions.dot(spark, col("a"), col("b"))
+    val nd = graft.functions.VectorFunctions.dot(col("a"), col("b"))
     val hof = graft.ops.TextSim.dot(col("a"), col("b"))
     val r = dense.select(nd.as("native"), hof.as("hof")).collect()(0)
     assert(r.getDouble(0) == 32.0 && r.getDouble(1) == 32.0)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -90,29 +89,15 @@ class KmeansChainSpec extends SparkSpec {
       "per-exchange jobs for chained and legacy alike)") {
     // warm the relation cache first so table-listing jobs don't count
     embeddings.count()
-    // drain the async bus BEFORE registering, so a late event from the
-    // warm-up count() cannot land inside the counting window
-    org.apache.spark.grafttest.ListenerDrain.drain(spark.sparkContext)
-    @volatile var jobs = 0
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-    }
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.addSparkListener(l)
     try {
-      ops.Cluster.kmeansCentroids(spark, embeddings, 8, 3)
-      // listener bus is async; drain it deterministically (a fixed
-      // sleep flaked under load — r20 ADVICE)
-      org.apache.spark.grafttest.ListenerDrain.drain(spark.sparkContext)
+      val jobs = jobsOf(ops.Cluster.kmeansCentroids(spark, embeddings, 8, 3))
       assert(jobs == 1,
         s"chained train fired $jobs jobs, expected 1 — a broadcast " +
           "or subquery crept into the chain (the shuffle_replicate_nl" +
           " cartesian must keep the matrix side in-job)")
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("empty healthy corpus fails loudly on the chained path") {

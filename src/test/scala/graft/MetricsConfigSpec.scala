@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{Sources, Transforms}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerDrain
 
 /** M5 ops parity: the listener-based metrics pipeline (Prometheus
   * analog) and config loading (S6).
@@ -27,7 +28,7 @@ class MetricsConfigSpec extends SparkSpec {
       assert(validKey.isDefined, s"no observed valid counter in $snap")
       val invalidKey = snap.keys.find(_.matches("observed\\..*\\.n_invalid"))
       assert(snap(validKey.get) + snap(invalidKey.get) == total)
-    } finally spark.listenerManager.unregister(listener)
+    } finally Metrics.uninstall(spark, listener)
   }
 
   test("metrics HTTP endpoint serves Prometheus exposition after a query") {
@@ -39,6 +40,7 @@ class MetricsConfigSpec extends SparkSpec {
       val deadline = System.nanoTime() + 10000000000L
       while (listener.snapshot.getOrElse("queries_total", 0.0) < 1.0 &&
         System.nanoTime() < deadline) Thread.sleep(50)
+      ListenerDrain.drain(spark.sparkContext) // and every task-end event
       val port = server.getAddress.getPort
       val body = new String(
         new java.net.URI(s"http://127.0.0.1:$port/metrics").toURL
@@ -48,9 +50,15 @@ class MetricsConfigSpec extends SparkSpec {
       assert(m.isDefined, s"no graft_queries_total sample in:\n$body")
       assert(m.get.group(1).toDouble >= 1.0)
       assert(body.contains("graft_query_duration_ms_sum"))
+      // the scheduler's counters ride the same listener and endpoint
+      Seq("graft_jobs_total", "graft_tasks_total").foreach { k =>
+        val s = s"""(?m)^$k (\\S+)""".r.findFirstMatchIn(body)
+        assert(s.exists(_.group(1).toDouble >= 1.0), s"no $k >= 1 in:\n$body")
+        assert(body.contains(s"# TYPE $k counter"))
+      }
     } finally {
       Metrics.stopMetricsServer(server)
-      spark.listenerManager.unregister(listener)
+      Metrics.uninstall(spark, listener)
     }
   }
 

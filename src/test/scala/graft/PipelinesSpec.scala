@@ -108,37 +108,22 @@ class PipelinesSpec extends SparkSpec {
     assert(within(Pipelines.quality2022(spark, in, tmp("p0c"))).loaded == 0L)
   }
 
-  /** Jobs `body` runs, at the bench's settings (AQE off), counted by a
-    * SparkListener. */
-  private def jobsOf(body: => Any): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.grafttest.ListenerDrain
+  /** [[jobsOf]] at the bench's settings (AQE off). */
+  private def benchJobsOf(body: => Any): Int = {
     val saved = Bench.defaultConfs.map { case (k, _) => k -> spark.conf.get(k) }
     Bench.defaultConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    ListenerDrain.drain(spark.sparkContext)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      ListenerDrain.drain(spark.sparkContext)
-      jobs.get
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
-    }
+    try jobsOf(body)
+    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("each era and curationOver count what they write: job budget") {
     val in = writeCsv(tmp("pj"), "users.csv", goodRows ++ badRows)
-    assert(jobsOf(Pipelines.basic2016(spark, in, tmp("pja"))) == 1)
-    assert(jobsOf(Pipelines.validated2018(spark, in, tmp("pjb"),
+    assert(benchJobsOf(Pipelines.basic2016(spark, in, tmp("pja"))) == 1)
+    assert(benchJobsOf(Pipelines.validated2018(spark, in, tmp("pjb"),
       tmp("pjr"))) == 2)
+    assert(benchJobsOf(Pipelines.quality2022(spark, in, tmp("pjq"))) == 3)
     val docs = graft.ops.Sources.table(spark, sf, "documents")
-    val n = jobsOf(Pipelines.curationOver(spark, docs, None, tmp("pjc")))
+    val n = benchJobsOf(Pipelines.curationOver(spark, docs, None, tmp("pjc")))
     assert(n <= 13, s"curationOver ran $n jobs")
   }
 

@@ -173,7 +173,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("dedup_containment: one shingle pass, two keyed exchanges, zero joins") {
     val docs = graft.ops.Sources.table(spark, sf, "documents")
-    val p = plan(graft.ops.NearDup.containmentPairsPlan(spark, docs, 3,
+    val p = plan(graft.ops.NearDup.containmentPairsPlan(docs, 3,
       graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinContain))
     assert(!p.contains("Join"),
       s"denominators must ride the posting shuffle, not join back:\n${p.take(2000)}")

@@ -159,7 +159,7 @@ class PortableHashSpec extends SparkSpec {
         .toDF("doc_id", "toks"))      // null token: concat_ws skips
     val gen = df.select(col("doc_id"),
       graft.functions.VectorFunctions
-        .shingleStrings(spark, col("toks"), 3).as("sh"))
+        .shingleStrings(col("toks"), 3).as("sh"))
     val lam = df.select(col("doc_id"),
       transform(
         when(size(col("toks")) >= 3,

@@ -216,7 +216,7 @@ class ReplanEquivalenceSpec extends SparkSpec {
     // separately, join them back onto the candidate pairs twice
     val perDoc = docs.select(col("doc_id"),
       array_distinct(graft.functions.VectorFunctions
-        .shingle(spark, split(lower(col("text")), "\\s+"), 3)).as("grams"))
+        .shingle(split(lower(col("text")), "\\s+"), 3)).as("grams"))
     val sizes = perDoc.select(col("doc_id"), size(col("grams")).as("ng"))
     val posts = perDoc
       .select(col("doc_id"), explode(col("grams")).as("gram"))

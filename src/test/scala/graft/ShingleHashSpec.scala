@@ -13,7 +13,7 @@ class ShingleHashSpec extends SparkSpec with TableDrivenPropertyChecks {
 
   private def hashes(toks: Seq[String], n: Int = 3): Seq[Long] =
     Seq(Tuple1(toks)).toDF("toks")
-      .select(VectorFunctions.shingle(spark, col("toks"), n).as("h"))
+      .select(VectorFunctions.shingle(col("toks"), n).as("h"))
       .as[Seq[Long]].collect()(0)
 
   test("shingle count is max(0, m - n + 1)") {
@@ -62,7 +62,7 @@ class ShingleHashSpec extends SparkSpec with TableDrivenPropertyChecks {
     "h2 is an independent second chain") {
     val toks = Seq("alpha", "beta", "gamma", "delta", "beta", "gamma")
     val df = Seq(Tuple1(toks)).toDF("toks")
-    val pairs = df.select(VectorFunctions.shingle2(spark, col("toks"), 3)
+    val pairs = df.select(VectorFunctions.shingle2(col("toks"), 3)
       .as("hh")).as[Seq[(Long, Long)]].collect()(0)
     assert(pairs.length == toks.length - 2)
     assert(pairs.map(_._1) == hashes(toks), "h1 must equal ShingleHash")
@@ -71,13 +71,12 @@ class ShingleHashSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(pairs.map(_._1) != pairs.map(_._2),
       "the two chains must not collapse to the same values")
     // equal windows agree on BOTH lanes: repeat the text, compare
-    val rep = df.select(VectorFunctions.shingle2(spark,
-      concat(col("toks"), col("toks")), 3).as("hh"))
+    val rep = df.select(VectorFunctions.shingle2(concat(col("toks"), col("toks")), 3).as("hh"))
       .as[Seq[(Long, Long)]].collect()(0)
     assert(rep(0) == rep(toks.length), "same window, same fingerprint")
     // short input: no windows, not a wrap-around
     val short = Seq(Tuple1(Seq("a", "b"))).toDF("toks")
-      .select(VectorFunctions.shingle2(spark, col("toks"), 3).as("hh"))
+      .select(VectorFunctions.shingle2(col("toks"), 3).as("hh"))
       .as[Seq[(Long, Long)]].collect()(0)
     assert(short.isEmpty)
   }

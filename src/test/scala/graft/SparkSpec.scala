@@ -20,6 +20,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Smallest scale factor — fast enough for unit tests. */
   val sf = "/root/testdata/sf0.001"
 
+  /** Jobs `body` runs, read from the engine's listener
+    * ([[MetricsListener]], `jobs_total`) over a drained window. */
+  def jobsOf(body: => Any): Int = {
+    val l = Metrics.install(spark)
+    try Metrics.measure(spark, l)(body)._3.getOrElse("jobs_total", 0.0).toInt
+    finally Metrics.uninstall(spark, l)
+  }
+
   override def afterAll(): Unit = {
     // deliberately do NOT stop the shared session (other suites use it)
     super.afterAll()

@@ -44,28 +44,17 @@ class SpreadGateSpec extends SparkSpec {
 
   test("non-scan input passes through with no job at build time " +
       "(decontaminateAgainst over a groupBy'd train, AQE on)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.grafttest.ListenerDrain
     val docs = Sources.table(spark, sf, "documents")
     val train = docs.groupBy("doc_id").agg(
       org.apache.spark.sql.functions.first("text").as("text"))
     val evalSet = docs.filter(col("doc_id") % 5 === 0)
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    ListenerDrain.drain(spark.sparkContext)
-    @volatile var jobs = 0
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(l)
     try {
-      graft.ops.NearDup.decontaminateAgainst(spark, train, evalSet)
-      ListenerDrain.drain(spark.sparkContext)
+      val jobs = jobsOf(
+        graft.ops.NearDup.decontaminateAgainst(spark, train, evalSet))
       assert(jobs == 0, s"building the plan ran $jobs jobs")
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("split count is memoized per (session, plan)") {

@@ -17,9 +17,8 @@ class TokenCountsTextSpec extends SparkSpec {
 
   private def bothForms(df: org.apache.spark.sql.DataFrame)
       : (Array[String], Array[String]) = {
-    val split3 = VectorFunctions.tokenCounts(spark,
-      split(lower(col("text")), "\\s+"))
-    val fused = VectorFunctions.tokenCountsText(spark, col("text"))
+    val split3 = VectorFunctions.tokenCounts(split(lower(col("text")), "\\s+"))
+    val fused = VectorFunctions.tokenCountsText(col("text"))
     val canon = (c: org.apache.spark.sql.Column) =>
       concat_ws("|", transform(c,
         p => concat(p.getField("token"), lit(":"), p.getField("tf"))))
@@ -57,7 +56,7 @@ class TokenCountsTextSpec extends SparkSpec {
     // null contract: tokenless docs are null under BOTH forms
     val fusedNulls = docs
       .select(col("doc_id"),
-        VectorFunctions.tokenCountsText(spark, col("text")).as("tc"))
+        VectorFunctions.tokenCountsText(col("text")).as("tc"))
       .filter(col("tc").isNull).collect().map(_.getLong(0)).toSet
     assert(fusedNulls == Set(8L, 9L))
   }

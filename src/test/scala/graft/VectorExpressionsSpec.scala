@@ -18,7 +18,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val both = e.crossJoin(broadcast(q))
       .select(col("vec_id"),
         TextSim.dot(col("v"), col("qv")).as("hof"),
-        VectorFunctions.dot(spark, col("v"), col("qv")).as("native"))
+        VectorFunctions.dot(col("v"), col("qv")).as("native"))
     val diff = both.filter(abs(col("hof") - col("native")) > 1e-12).count()
     assert(diff == 0)
   }
@@ -43,7 +43,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val e = Sources.table(spark, sf, "embeddings")
       .select(transform(col("embedding"), x => x.cast("double")).as("v"))
     val bad = e.select(
-      VectorFunctions.cosine(spark, col("v"), col("v")).as("c"))
+      VectorFunctions.cosine(col("v"), col("v")).as("c"))
       .filter(abs(col("c") - 1.0) > 1e-9).count()
     assert(bad == 0)
   }

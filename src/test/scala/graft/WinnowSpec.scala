@@ -12,7 +12,7 @@ class WinnowSpec extends SparkSpec {
   private def fps(texts: Seq[String], k: Int = 12, w: Int = 4): Seq[Set[Long]] = {
     import spark.implicits._
     texts.toDF("text")
-      .select(VectorFunctions.winnow(spark, col("text"), k, w).as("f"))
+      .select(VectorFunctions.winnow(col("text"), k, w).as("f"))
       .collect().toSeq.map(_.getSeq[Long](0).toSet)
   }
 
@@ -38,7 +38,7 @@ class WinnowSpec extends SparkSpec {
     assert(short.isEmpty)
     import spark.implicits._
     val r = Seq[Option[String]](None).toDF("text")
-      .select(VectorFunctions.winnow(spark, col("text")).as("f")).collect()(0)
+      .select(VectorFunctions.winnow(col("text")).as("f")).collect()(0)
     assert(r.isNullAt(0))
   }
 

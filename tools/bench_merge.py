@@ -9,7 +9,9 @@ an ad-hoc merge). Each input is a single `graft.Bench` pass written via
 SPARK_GRAFT_BENCH_OUT (compact JSON with total/oracle_subset/sf/seed/
 failed/queries/samples). The merge:
 
-- takes the per-query MIN across passes (the steady-state rule);
+- takes the per-query MIN across passes (the steady-state rule), and
+  keeps that query's "layers" (build/exec split, jobs, stages, tasks)
+  from the pass the minimum came from, when that pass recorded them;
 - concatenates every pass's raw samples per query, so any outlier
   stays attributable after the fact;
 - preserves each pass's shuffle seed in "seeds" (ordered as given);
@@ -47,7 +49,9 @@ for r in runs[1:]:
 failed = sorted(set().union(*(set(r.get("failed", [])) for r in runs))
                 | (set().union(*(set(r["queries"]) for r in runs)) - common))
 
-queries = {q: min(r["queries"][q] for r in runs) for q in sorted(common)}
+best = {q: min(runs, key=lambda r: r["queries"][q]) for q in sorted(common)}
+queries = {q: r["queries"][q] for q, r in best.items()}
+layers = {q: r["layers"][q] for q, r in best.items() if q in r.get("layers", {})}
 samples = {q: [s for r in runs for s in r.get("samples", {}).get(q, [])]
            for q in sorted(common)}
 
@@ -68,6 +72,8 @@ result = {
     "queries": queries,
     "samples": samples,
 }
+if layers:
+    result["layers"] = layers
 if oracle_keys is not None:
     result["oracle_subset"] = round(
         sum(v for q, v in queries.items() if q in oracle_keys), 6)
