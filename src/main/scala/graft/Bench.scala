@@ -54,12 +54,10 @@ object Bench {
     * records every query's [[Layers]] from that listener's counters. */
   def session(sfDir: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Overrides of [[defaultConfs]] for A/B runs: SPARK_GRAFT_AQE=true,
-    //   SPARK_GRAFT_PARTS=32, and extra SQL confs, semicolon-separated:
-    //   SPARK_GRAFT_CONF="spark.sql.join.preferSortMergeJoin=false"
+    // Overrides of [[defaultConfs]] (or extra SQL confs) for A/B runs,
+    // semicolon-separated: SPARK_GRAFT_CONF=
+    //   "spark.sql.shuffle.partitions=32;spark.sql.adaptive.enabled=true"
     val overrides =
-      sys.env.get("SPARK_GRAFT_PARTS").map("spark.sql.shuffle.partitions" -> _) ++
-      sys.env.get("SPARK_GRAFT_AQE").map("spark.sql.adaptive.enabled" -> _) ++
       sys.env.get("SPARK_GRAFT_CONF").toSeq
         .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
         .map { kv => val i = kv.indexOf('=')

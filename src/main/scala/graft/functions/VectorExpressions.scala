@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Columns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -133,8 +133,24 @@ case class Winnow(child: Expression, k: Int, w: Int)
       hashes(i) = h
       i += 1
     }
-    // winnow: minimum of each w-window, dedup consecutive picks
-    val out = new scala.collection.mutable.ArrayBuffer[Long]()
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Winnow.select(hashes, w))
+  }
+
+  override protected def withNewChildInternal(c: Expression): Winnow =
+    copy(child = c)
+}
+
+object Winnow {
+  /** The winnowing selection over a document's window hashes, shared
+    * by [[Winnow]] and [[WinnowMd5Summary]]: the rightmost minimum of
+    * each `w`-window (the standard tie-break), consecutive picks of
+    * the same position kept once. Fewer than `w` hashes form one
+    * window; `hashes` must be non-empty.
+    */
+  def select(hashes: Array[Long], w: Int): Array[Long] = {
+    val m = hashes.length
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
     var lastPick = -1
     var start = 0
     val windows = math.max(m - w + 1, 1)
@@ -143,18 +159,14 @@ case class Winnow(child: Expression, k: Int, w: Int)
       var j = start + 1
       val end = math.min(start + w, m)
       while (j < end) {
-        // rightmost minimum, the standard winnowing tie-break
         if (hashes(j) <= hashes(minIdx)) minIdx = j
         j += 1
       }
       if (minIdx != lastPick) { out += hashes(minIdx); lastPick = minIdx }
       start += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+    out.result()
   }
-
-  override protected def withNewChildInternal(c: Expression): Winnow =
-    copy(child = c)
 }
 
 /** The `doc_winnow_portable` summary as ONE per-row kernel: md5-60
@@ -174,8 +186,9 @@ case class Winnow(child: Expression, k: Int, w: Int)
   * is per-document, so none of those rows ever needed to leave their
   * row — the [[Winnow]]/[[TokenCounts]] trade-off again. Here each
   * document costs one pass: char offsets once (O(bytes)), one
-  * MessageDigest reused across its windows, the same selection loop
-  * as [[Winnow]], zero exchanges before the per-doc projection.
+  * MessageDigest reused across its windows, [[Winnow.select]] (the
+  * selection [[Winnow]] runs), zero exchanges before the per-doc
+  * projection.
   *
   * Hash value: the top 60 bits of the md5 (first 15 hex nibbles read
   * big-endian) — exactly `conv(substring(md5(sub), 1, 15), 16, 10)`.
@@ -252,29 +265,14 @@ case class WinnowMd5Summary(child: Expression, k: Int, w: Int)
       hashes(i) = v >>> 4 // first 15 hex nibbles as a 60-bit value
       i += 1
     }
-    // the same selection loop as Winnow: rightmost min per w-window,
-    // consecutive-pick dedup
-    var count = 0L
+    val picks = Winnow.select(hashes, w)
     var digest = 0L
-    var lastPick = -1
-    var start = 0
-    val windows = math.max(m - w + 1, 1)
-    while (start < windows) {
-      var minIdx = start
-      var j = start + 1
-      val end = math.min(start + w, m)
-      while (j < end) {
-        if (hashes(j) <= hashes(minIdx)) minIdx = j
-        j += 1
-      }
-      if (minIdx != lastPick) {
-        count += 1
-        digest = (digest + hashes(minIdx)) % MersenneP
-        lastPick = minIdx
-      }
-      start += 1
+    i = 0
+    while (i < picks.length) {
+      digest = (digest + picks(i)) % MersenneP
+      i += 1
     }
-    org.apache.spark.sql.catalyst.InternalRow(count, digest)
+    org.apache.spark.sql.catalyst.InternalRow(picks.length.toLong, digest)
   }
 
   override protected def withNewChildInternal(c: Expression): WinnowMd5Summary =
@@ -904,10 +902,10 @@ case class DoubleOrderBits(child: Expression)
   * and Janino falls off whole-stage codegen in the low hundreds —
   * measured 4× SLOWER at k=64 than k=32 on the same data. Real
   * quantizers need k in the thousands (SemDeDup: 110k cells). This
-  * expression is ONE loop over a packed `double[]` matrix carried as
-  * a codegen reference object, so generated-code size is O(1) in k
-  * and the matrix lives flat in memory (sequential access, no
-  * per-centroid object graph).
+  * expression is ONE loop ([[CentroidArgmin.nearest]]) over a packed
+  * `double[]` matrix carried as a codegen reference object, so
+  * generated-code size is O(1) in k and the matrix lives flat in
+  * memory (sequential access, no per-centroid object graph).
   *
   * The matrix travels plan-side as this node's own flat `double[]`
   * field — one expression regardless of k, where the
@@ -942,67 +940,15 @@ case class CentroidArgmin(child: Expression, cents: Array[Double],
         org.apache.spark.sql.types.IntegerType)))
   override def prettyName: String = "graft_argmin_centroid"
 
-  // `least(struct…)` ordering in one comparison: strictly-smaller d2
-  // wins (ties keep the earlier cid), and a NaN incumbent loses to
-  // any real challenger (struct ordering puts NaN above every real)
-  private def better(d2: Double, best: Double): Boolean =
-    d2 < best || (java.lang.Double.isNaN(best) &&
-      !java.lang.Double.isNaN(d2))
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(v.numElements(), d)
-    var bestD2 = 0.0
-    var bestC = 0
-    var c = 0
-    while (c < k) {
-      var dot = 0.0
-      val off = c * d
-      var i = 0
-      while (i < n) { dot += v.getDouble(i) * cents(off + i); i += 1 }
-      val d2 = norms(c) - 2.0 * dot
-      if (c == 0 || better(d2, bestD2)) { bestD2 = d2; bestC = c }
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestD2, bestC))
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    CentroidArgmin.nearest(input.asInstanceOf[ArrayData], cents, norms)
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
     val centsRef = ctx.addReferenceObj("argminCents", cents, "double[]")
     val normsRef = ctx.addReferenceObj("argminNorms", norms, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val off = ctx.freshName("off")
-      val dot = ctx.freshName("dot")
-      val d2 = ctx.freshName("d2")
-      val bestD2 = ctx.freshName("bestD2")
-      val bestC = ctx.freshName("bestC")
-      s"""
-         |int $n = java.lang.Math.min($v.numElements(), $d);
-         |double $bestD2 = 0.0;
-         |int $bestC = 0;
-         |for (int $c = 0; $c < $k; $c++) {
-         |  double $dot = 0.0;
-         |  int $off = $c * $d;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $dot += $v.getDouble($i) * $centsRef[$off + $i];
-         |  }
-         |  double $d2 = $normsRef[$c] - 2.0 * $dot;
-         |  if ($c == 0 || $d2 < $bestD2 ||
-         |      (java.lang.Double.isNaN($bestD2) &&
-         |       !java.lang.Double.isNaN($d2))) {
-         |    $bestD2 = $d2; $bestC = $c;
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[]{ $bestD2, $bestC });
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = ${CentroidArgmin.Nearest}($v, $centsRef, $normsRef);")
   }
 
   // case-class equality over Array fields is REFERENCE equality, so
@@ -1025,15 +971,55 @@ case class CentroidArgmin(child: Expression, cents: Array[Double],
     copy(child = c)
 }
 
+object CentroidArgmin {
+  /** The argmin loop of [[CentroidArgmin]] and [[CentroidArgminCol]],
+    * interpreted and generated alike (generated code calls it through
+    * [[Nearest]]): `struct(d2, cid)` of the nearest of the k =
+    * `norms.length` centroids packed row-major in `cents`
+    * (d = `cents.length / k`), `d2 = |c|² − 2·(v·c)` with norms and
+    * dots summed left-to-right. Ordered as `least(struct…)` orders:
+    * a strictly smaller d2 wins, so ties keep the lower cid, and a NaN
+    * incumbent loses to any real challenger (struct ordering puts NaN
+    * above every real). Vectors shorter than d dot only their first
+    * components; k = 0 gives `(0.0, 0)`.
+    */
+  def nearest(v: ArrayData, cents: Array[Double],
+              norms: Array[Double]): InternalRow = {
+    val k = norms.length
+    val d = if (k == 0) 0 else cents.length / k
+    val n = math.min(v.numElements(), d)
+    var bestD2 = 0.0
+    var bestC = 0
+    var c = 0
+    while (c < k) {
+      var dot = 0.0
+      val off = c * d
+      var i = 0
+      while (i < n) { dot += v.getDouble(i) * cents(off + i); i += 1 }
+      val d2 = norms(c) - 2.0 * dot
+      if (c == 0 || d2 < bestD2 ||
+          (java.lang.Double.isNaN(bestD2) && !java.lang.Double.isNaN(d2))) {
+        bestD2 = d2; bestC = c
+      }
+      c += 1
+    }
+    new GenericInternalRow(Array[Any](bestD2, bestC))
+  }
+
+  /** [[nearest]] as generated code spells the static call. */
+  private[functions] val Nearest: String =
+    classOf[CentroidArgmin].getName + ".nearest"
+}
+
 /** [[CentroidArgmin]] with the packed centroid matrix and norms read
   * from COLUMNS instead of plan-time literals — the device that lets a
   * whole Lloyd iteration chain inside ONE Spark plan
   * ([[graft.ops.Cluster]] r20 job-count pass): round r+1's assignment
   * references round r's means as a 1-row cartesian side, so no
   * per-round driver collect (and no per-round broadcast-exchange job)
-  * ever fires. Semantics are bit-identical to [[CentroidArgmin]] —
-  * same |c|²−2·v·c form, same left-to-right dot fold, same tie/NaN
-  * rule — pinned by CentroidParitySpec/KmeansChainSpec.
+  * ever fires. It runs [[CentroidArgmin]]'s loop
+  * ([[CentroidArgmin.nearest]]), so the two are bit-identical — pinned
+  * by CentroidParitySpec/KmeansChainSpec.
   *
   * k = `norms.numElements()`; d = `mat.numElements() / k`. A matrix
   * whose length is not k·d (a ragged seed) yields truncated offsets —
@@ -1075,32 +1061,12 @@ case class CentroidArgminCol(vec: Expression, mat: Expression,
         org.apache.spark.sql.types.IntegerType)))
   override def prettyName: String = "graft_argmin_centroid_col"
 
-  override protected def nullSafeEval(vv: Any, mm: Any, nn: Any): Any = {
-    val v = vv.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(vv: Any, mm: Any, nn: Any): Any =
     // interpreted path (off the hot path — codegen carries the cached
-    // variant): flat copies per call, same arithmetic
-    val cents = mm.asInstanceOf[ArrayData].toDoubleArray()
-    val nrm = nn.asInstanceOf[ArrayData].toDoubleArray()
-    val k = nrm.length
-    val d = if (k == 0) 0 else cents.length / k
-    val n = math.min(v.numElements(), d)
-    var bestD2 = 0.0
-    var bestC = 0
-    var c = 0
-    while (c < k) {
-      var dot = 0.0
-      val off = c * d
-      var i = 0
-      while (i < n) { dot += v.getDouble(i) * cents(off + i); i += 1 }
-      val d2 = nrm(c) - 2.0 * dot
-      if (c == 0 || d2 < bestD2 ||
-          (java.lang.Double.isNaN(bestD2) &&
-            !java.lang.Double.isNaN(d2))) { bestD2 = d2; bestC = c }
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestD2, bestC))
-  }
+    // variant): flat copies per call
+    CentroidArgmin.nearest(vv.asInstanceOf[ArrayData],
+      mm.asInstanceOf[ArrayData].toDoubleArray(),
+      nn.asInstanceOf[ArrayData].toDoubleArray())
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
@@ -1118,45 +1084,9 @@ case class CentroidArgminCol(vec: Expression, mat: Expression,
       } else {
         (m => s"$m.toDoubleArray()", nm => s"$nm.toDoubleArray()")
       }
-    nullSafeCodeGen(ctx, ev, (v, m, nm) => {
-      val cents = ctx.freshName("cents")
-      val nrm = ctx.freshName("nrm")
-      val k = ctx.freshName("k")
-      val d = ctx.freshName("d")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val off = ctx.freshName("off")
-      val dot = ctx.freshName("dot")
-      val d2 = ctx.freshName("d2")
-      val bestD2 = ctx.freshName("bestD2")
-      val bestC = ctx.freshName("bestC")
-      s"""
-         |double[] $cents = ${matImg(m)};
-         |double[] $nrm = ${nrmImg(nm)};
-         |int $k = $nrm.length;
-         |int $d = ($k == 0) ? 0 : $cents.length / $k;
-         |int $n = java.lang.Math.min($v.numElements(), $d);
-         |double $bestD2 = 0.0;
-         |int $bestC = 0;
-         |for (int $c = 0; $c < $k; $c++) {
-         |  double $dot = 0.0;
-         |  int $off = $c * $d;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $dot += $v.getDouble($i) * $cents[$off + $i];
-         |  }
-         |  double $d2 = $nrm[$c] - 2.0 * $dot;
-         |  if ($c == 0 || $d2 < $bestD2 ||
-         |      (java.lang.Double.isNaN($bestD2) &&
-         |       !java.lang.Double.isNaN($d2))) {
-         |    $bestD2 = $d2; $bestC = $c;
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[]{ $bestD2, $bestC });
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (v, m, nm) =>
+      s"${ev.value} = ${CentroidArgmin.Nearest}($v, ${matImg(m)}, " +
+        s"${nrmImg(nm)});")
   }
 
   override protected def withNewChildrenInternal(
@@ -1243,8 +1173,14 @@ object VectorFunctions {
   /** One table entry: `name` accepts any of `arities` arguments. */
   private def fn[T <: Expression: ClassTag](name: String, arities: Int*)(
       build: Seq[Expression] => T): SparkSessionExtensions#FunctionDescription =
-    (FunctionIdentifier(name),
-      new ExpressionInfo(classTag[T].runtimeClass.getCanonicalName, name),
+    fnOf(name, classTag[T].runtimeClass.getCanonicalName, arities: _*)(build)
+
+  /** [[fn]] naming the defining class explicitly — for builders that
+    * expand to builtin expressions ([[Signatures]]). */
+  private def fnOf(name: String, className: String, arities: Int*)(
+      build: Seq[Expression] => Expression)
+      : SparkSessionExtensions#FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(className, name),
       { (exprs: Seq[Expression]) =>
         require(arities.contains(exprs.length),
           s"$name expects ${arities.mkString(" or ")} arguments, got " +
@@ -1282,9 +1218,12 @@ object VectorFunctions {
     fn("graft_centroid_sums", 5)(a =>
       CentroidSumAgg(a(0), a(1), a(2), a(3), a(4))),
     fn("graft_dbits", 1)(a => DoubleOrderBits(a(0))),
-    fn("graft_minhash", 1, 2)(a => MinHashSigAgg(a(0),
-      a.lift(1).fold(64)(literalInt("graft_minhash", "numHashes", _)))),
-    fn("graft_simhash", 1)(a => SimHashSigAgg(a(0))))
+    fnOf("graft_minhash", signaturesClass, 1, 2)(a => Signatures.minhash(
+      a(0), a.lift(1).fold(64)(literalInt("graft_minhash", "numHashes", _)))),
+    fnOf("graft_simhash", signaturesClass, 1)(a => Signatures.simhash(a(0))))
+
+  private def signaturesClass: String =
+    Signatures.getClass.getName.stripSuffix("$")
 
   /** Register [[functions]] into `spark`'s registry (session-scoped,
     * no catalog writes; idempotent) — the local-session counterpart of

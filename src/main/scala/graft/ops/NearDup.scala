@@ -1,7 +1,10 @@
 package graft.ops
 
+import graft.functions.Signatures
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Columns.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Near-duplicate detection at corpus scale — MinHash+LSH, SimHash,
@@ -75,19 +78,13 @@ object NearDup {
         .shingle(split(lower(col("text")), "\\s+"), n)).as("th"))
 
   /** Per-document MinHash signature: `numHashes` independent
-    * `min(xxhash64(th, i))` aggregates over the 64-bit shingle hashes,
-    * re-assembled into the signature array. One explode + one
-    * map-side-combined groupBy — shuffle volume is one
-    * `numHashes`-slot row per document per map partition, independent
-    * of doc length.
-    *
-    * Separate built-in min aggregates on purpose: each generates a
-    * small, independently JIT-compiled update method. The fused
-    * single-aggregate alternative ([[graft.functions.MinHashSigAgg]],
-    * kept as the SQL-surface `graft_minhash`) puts all 64 slot
-    * updates in one generated method and measured 3.6x slower on the
-    * same corpus — past the JIT's huge-method threshold, codegen size
-    * stops being the win the fusion promises.
+    * `min(xxhash64(th, i))` aggregates over the 64-bit shingle hashes
+    * ([[graft.functions.Signatures.minhashSlot]], the same slots the
+    * SQL `graft_minhash` assembles), re-assembled into the signature
+    * array. One explode + one map-side-combined groupBy — shuffle
+    * volume is one `numHashes`-slot row per document per map
+    * partition, independent of doc length. The shingle hashes are
+    * non-null, so the slots' null guard folds away.
     */
   def minhashSignatures(s: SparkSession, dir: String,
                         numHashes: Int = 64): DataFrame =
@@ -96,8 +93,9 @@ object NearDup {
   /** [[minhashSignatures]] over any `(doc_id, text)` relation. */
   def minhashSignatures(s: SparkSession, docs: DataFrame,
                         numHashes: Int): DataFrame = {
+    val th = expression(col("th"))
     val mins = (0 until numHashes).map(i =>
-      min(xxhash64(col("th"), lit(i.toLong))).as(s"mh$i"))
+      column(Signatures.minhashSlot(th, i)).as(s"mh$i"))
     shingleHashesOf(docs, 3)
       .groupBy("doc_id")
       .agg(mins.head, mins.tail: _*)
@@ -589,12 +587,14 @@ object NearDup {
                         numHashes: Int = 64, bands: Int = 16): Unit = {
     val sigs = minhashSignatures(s, docs, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.select(col("doc_id"), posexplode(bandExplodeExpr(numHashes, bands))
-        .as(Seq("band_idx", "band_hash")))
-      .write.mode("overwrite").partitionBy("band_idx")
-      .parquet(s"$path/bands")
-    sigs.write.mode("overwrite").parquet(s"$path/sigs")
-    sigs.unpersist(blocking = false)
+    // released after both writes, or when one fails
+    try {
+      sigs.select(col("doc_id"), posexplode(bandExplodeExpr(numHashes, bands))
+          .as(Seq("band_idx", "band_hash")))
+        .write.mode("overwrite").partitionBy("band_idx")
+        .parquet(s"$path/bands")
+      sigs.write.mode("overwrite").parquet(s"$path/sigs")
+    } finally sigs.unpersist(blocking = false)
     import s.implicits._
     Seq((numHashes, bands)).toDF("num_hashes", "bands")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
@@ -649,37 +649,28 @@ object NearDup {
     materialize(est, newSigs)
   }
 
-  /** Per-document SimHash from a precomputed non-null hash column
-    * `th`: `bits` separate builtin ±1-vote sums, positive votes packed
-    * into one long in a post-aggregation projection. SEPARATE sums on
-    * purpose — the same JIT reality [[minhashSignatures]] documents
-    * for its 64 min aggregates: the fused
-    * [[graft.functions.SimHashSigAgg]] (kept as the SQL-surface
-    * `graft_simhash` and the X7 declarative-aggregate showcase) puts
-    * all 64 slot updates in one generated method, and measured
-    * 2.55 s vs 0.94 s for this spelling on the sf0.1 shingle corpus
-    * (260k rows, warm, bit-identical outputs — equality
-    * double-checked at build time and pinned by PortableHashSpec).
+  /** Per-document SimHash from a precomputed hash column `th`: `bits`
+    * separate builtin sums of [[graft.functions.Signatures.simhashSign]]
+    * votes, positive votes packed into one long in a post-aggregation
+    * projection by [[graft.functions.Signatures.simhashPack]] — the
+    * vote and packing the SQL `graft_simhash` assembles. Null hashes
+    * are filtered out before the vote (a document without one is
+    * absent), so the sums carry no null guard: on the nullable
+    * portable hashes the SQL surface's guard would not fold away and
+    * would change the plan.
     * For `bits = 64`, slot 63's pack term is `1L << 63` =
-    * Long.MinValue — the same disjoint-bit sum the fused aggregate
-    * evaluates, so negative xxhash64 values round-trip identically.
+    * Long.MinValue, so negative xxhash64 values round-trip.
     */
   private def simhashDecomposed(thDf: DataFrame, bits: Int): DataFrame = {
-    // pure Column DSL (r18 fixed-cost pass): the expr() spelling
-    // invoked the SQL parser once per bit — `bits` parses per plan
-    // build for byte-identical ShiftRight/BitwiseAnd trees
+    val th = expression(col("th"))
     val votes = (0 until bits).map(p =>
-      sum(when(shiftright(col("th"), p).bitwiseAND(lit(1L)) === lit(1L),
-        1L).otherwise(-1L)).as(s"v$p"))
+      column(Sum(Signatures.simhashSign(th, p)).toAggregateExpression())
+        .as(s"v$p"))
     thDf
-      // the fused aggregate SKIPS null hashes (If(IsNull, slot, …));
-      // no caller produces one, but mirror the contract defensively —
-      // a null th here would otherwise vote −1 on every bit
       .filter(col("th").isNotNull)
       .groupBy("doc_id").agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"), (0 until bits).map(p =>
-        when(col(s"v$p") > 0, lit(1L << p)).otherwise(lit(0L)))
-        .reduce(_ + _).as("simhash"))
+      .select(col("doc_id"), column(Signatures.simhashPack(
+        (0 until bits).map(p => expression(col(s"v$p"))))).as("simhash"))
   }
 
   /** Per-document 64-bit SimHash over token hashes: bit b of the
@@ -699,8 +690,7 @@ object NearDup {
       .select(col("doc_id"),
         explode(array_distinct(split(lower(col("text")), "\\s+"))).as("token"))
       .filter(col("token") =!= "")
-      // same hash as SimHashSigAgg's internal XxHash64(_, 42L): the
-      // xxhash64() function's fixed seed is 42
+      // the hash graft_simhash applies to a string token (seed 42)
       .select(col("doc_id"), xxhash64(col("token")).as("th"))
     withSimhashBands(simhashDecomposed(th, 64), 64)
   }
@@ -712,9 +702,8 @@ object NearDup {
   /** `dedup_simhash_portable` — the ORACLE-CHECKABLE SimHash variant.
     *
     * Identical vote/packing/band logic to [[simhash]] (both run
-    * through [[simhashDecomposed]]; the fused
-    * [[graft.functions.SimHashSigAgg]] is the SQL surface, pinned
-    * bit-equal by PortableHashSpec), but the per-token hash is the
+    * through [[simhashDecomposed]], whose vote and packing the SQL
+    * `graft_simhash` shares), but the per-token hash is the
     * first 15 hex nibbles of `md5(token)` read as a 60-bit integer —
     * a value DuckDB reconstructs exactly (nibble-weighted sum over
     * the same md5 hex string), so the full signature AND the 15-bit
@@ -727,7 +716,7 @@ object NearDup {
     * 60 bits (not 64) keeps the conv-parsed value inside a signed
     * long without overflow on either engine; bands are therefore
     * 4 × 15 bits. Bits 60–63 of the aggregate always vote −1 and pack
-    * to 0 (see [[graft.functions.SimHashSigAgg]]).
+    * to 0 (see [[graft.functions.Signatures.simhash]]).
     */
   def dedupSimhashPortable(s: SparkSession, dir: String): DataFrame =
     simhashPortable(s, Sources.table(s, dir, "documents"))

@@ -3,9 +3,9 @@ package graft
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
-/** The declarative MinHash aggregate must match the 64-separate-min
-  * formulation element for element, merge correctly across partitions,
-  * and ignore nulls.
+/** The SQL `graft_minhash` must match the 64-separate-min formulation
+  * element for element, merge correctly across partitions, ignore
+  * nulls, and reject a non-string argument with its own message.
   */
 class MinHashAggSpec extends SparkSpec {
 
@@ -45,5 +45,16 @@ class MinHashAggSpec extends SparkSpec {
       "doc 1 has a real token, so every slot must be hashed")
     assert(sigs(2L).forall(_ == Long.MaxValue),
       "all-null group keeps the sentinel")
+  }
+
+  test("an int argument fails with the function's message") {
+    import spark.implicits._
+    VectorFunctions.registerAll(spark)
+    val e = intercept[Exception] {
+      Seq((1L, 7)).toDF("doc_id", "n").groupBy("doc_id")
+        .agg(call_function("graft_minhash", col("n"))).collect()
+    }
+    assert(e.getMessage.contains("graft_minhash requires a string column"),
+      s"unexpected: ${e.getMessage}")
   }
 }

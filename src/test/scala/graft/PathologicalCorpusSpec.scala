@@ -126,6 +126,13 @@ class PathologicalCorpusSpec extends SparkSpec {
     releasesOnFailure(NearDup.dedupMinhash(spark, poisonedText, 64, 16, 0.4))
   }
 
+  test("a failing index write releases minhashIndexWrite's cache") {
+    // the signatures are persisted for the bands and sigs writes; a
+    // failed write must not leave them cached for the session
+    val dir = java.nio.file.Files.createTempDirectory("mhidx").toString
+    releasesOnFailure(NearDup.minhashIndexWrite(spark, poisonedText, dir))
+  }
+
   test("a failing bloom sizing job releases dedupBloom's caches") {
     // the distinct-hash count that sizes the filter runs while the
     // plan is built, after the hashed split and the corpus side are

@@ -108,6 +108,29 @@ class PipelinesSpec extends SparkSpec {
     assert(within(Pipelines.quality2022(spark, in, tmp("p0c"))).loaded == 0L)
   }
 
+  /** Asserts `run` fails writing under `blocked` (a regular file, so
+    * no directory can be created beneath it) and leaves the session's
+    * cached plan count where it was. */
+  private def releasesOnFailedWrite(run: String => Any): Unit = {
+    def cachedPlans: Int = org.apache.spark.sql.grafttest.CachedPlans.count(spark)
+    val blocked = java.io.File.createTempFile("blocked", ".file")
+    val before = cachedPlans
+    intercept[Exception](run(new java.io.File(blocked, "out").getPath))
+    assert(cachedPlans == before,
+      s"cached plans went from $before to $cachedPlans")
+  }
+
+  test("2018: a failed load releases the input cache") {
+    val in = writeCsv(tmp("pf18"), "users.csv", goodRows ++ badRows)
+    releasesOnFailedWrite(out =>
+      Pipelines.validated2018(spark, in, out, tmp("pf18r")))
+  }
+
+  test("2022: a failed load releases the input cache") {
+    val in = writeCsv(tmp("pf22"), "users.csv", goodRows ++ badRows)
+    releasesOnFailedWrite(out => Pipelines.quality2022(spark, in, out))
+  }
+
   /** [[jobsOf]] at the bench's settings (AQE off). */
   private def benchJobsOf(body: => Any): Int = {
     val saved = Bench.defaultConfs.map { case (k, _) => k -> spark.conf.get(k) }

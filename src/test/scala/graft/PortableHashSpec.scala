@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * xxhash64 SimHash / MinHash production paths. The DuckDB oracle
   * proves cross-engine value parity at every SF; these specs pin the
   * algorithmic invariants the per-doc / 1-row outputs can't express:
-  * the long-child aggregate contract, band recomposition, exact-dup
+  * the long-child `graft_simhash` contract, band recomposition, exact-dup
   * collision, and the no-false-candidate floor. Everything here is
   * md5-deterministic — no tolerance, no flake.
   */
@@ -38,8 +38,8 @@ class PortableHashSpec extends SparkSpec {
     assert(agg == expected, s"\nagg:      $agg\nexpected: $expected")
   }
 
-  test("decomposed simhash query path equals the fused graft_simhash " +
-    "aggregate (production xxhash64 tokens, incl. negative hashes)") {
+  test("decomposed simhash query path equals the SQL graft_simhash " +
+    "(production xxhash64 tokens, incl. negative hashes)") {
     import spark.implicits._
     VectorFunctions.registerAll(spark)
     val docs = Seq(
@@ -49,14 +49,14 @@ class PortableHashSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val q = NearDup.simhash(spark, docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fused = docs
+    val sql = docs
       .select(col("doc_id"), explode(array_distinct(
         split(lower(col("text")), "\\s+"))).as("token"))
       .filter(col("token") =!= "")
       .groupBy("doc_id")
       .agg(call_function("graft_simhash", col("token")).as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(q == fused, s"\ndecomposed: $q\nfused:      $fused")
+    assert(q == sql, s"\ndecomposed: $q\nsql:        $sql")
   }
 
   test("portable simhash: bands recompose, 60-bit range, exact dups " +
