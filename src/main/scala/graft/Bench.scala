@@ -34,9 +34,11 @@ object Bench {
     *    are small and 32-wide shuffles are pure overhead), AQE+32
     *    154.2 (re-planning latency on every exchange). No
     *    session-wide constant wins both regimes, so the width fix
-    *    lives in the OPERATOR that needs it (fewKeySaltedJoin sizes
-    *    its salted exchange to max(conf, cores)) and the session
-    *    default stays 8 — best observed on everything else at BOTH
+    *    lives in the OPERATOR that needs it, every rule in
+    *    [[graft.ops.ShuffleWidth]] (fewKeySaltedJoin widens its
+    *    salted exchange to max(conf, cores); the CC loop, the k-means
+    *    train and the eager pipelines narrow under the conf) and the
+    *    session default stays 8 — best observed on everything else at BOTH
     *    rungs, and the committed numbers stay methodology-identical
     *    across rounds.
     *  - UTC, like Verify: events.ts loads as TIMESTAMP_NTZ on the µs

@@ -88,20 +88,55 @@ final class MetricsListener extends SparkListener with QueryExecutionListener {
 }
 
 object Metrics {
+  /** The listeners registered on each session's query bus: [[install]]ed
+    * ones, and on a [[graft.ops.SessionIso]] child those it
+    * [[inherit]]ed. Weak on the session. */
+  private val registered =
+    new java.util.WeakHashMap[SparkSession, Set[MetricsListener]]()
+
+  private def registeredOn(spark: SparkSession): Set[MetricsListener] =
+    Option(registered.get(spark)).getOrElse(Set.empty)
+
   /** Install a listener on both of the session's buses; returns it for
-    * scraping. */
+    * scraping. The scheduler bus is the SparkContext's, so it sees
+    * every session's jobs; the query bus is per session, and the
+    * session's [[graft.ops.SessionIso]] children (the CC loop, the
+    * k-means train, the eager pipelines) [[inherit]] the listener on
+    * their next use. */
   def install(spark: SparkSession): MetricsListener = {
     val l = new MetricsListener
     spark.sparkContext.addSparkListener(l)
-    spark.listenerManager.register(l)
+    registered.synchronized {
+      spark.listenerManager.register(l)
+      registered.put(spark, registeredOn(spark) + l): Unit
+    }
     l
   }
 
-  /** Remove an [[install]]ed listener from both buses. */
+  /** Remove an [[install]]ed listener from both buses. Children drop
+    * it on their next use. */
   def uninstall(spark: SparkSession, l: MetricsListener): Unit = {
-    spark.listenerManager.unregister(l)
+    registered.synchronized {
+      spark.listenerManager.unregister(l)
+      registered.put(spark, registeredOn(spark) - l): Unit
+    }
     spark.sparkContext.removeSparkListener(l)
   }
+
+  /** Make `child`'s query bus carry exactly the listeners on
+    * `parent`'s: register the missing ones, unregister the ones
+    * `parent` no longer has. [[graft.ops.SessionIso.withChild]] calls
+    * it on every use, as it copies the parent's conf, so a child's
+    * actions reach the parent's `queries_total` and observed metrics,
+    * and a grandchild's reach them through its parent. */
+  private[graft] def inherit(parent: SparkSession, child: SparkSession): Unit =
+    registered.synchronized {
+      val want = registeredOn(parent)
+      val have = registeredOn(child)
+      (have -- want).foreach(l => child.listenerManager.unregister(l))
+      (want -- have).foreach(l => child.listenerManager.register(l))
+      registered.put(child, want): Unit
+    }
 
   /** Wall ms of an action's Catalyst phases (analysis, optimization,
     * planning), as its tracker recorded them. Reading the tracker

@@ -1,7 +1,8 @@
 package graft
 
-import graft.ops.{Sinks, Sources, TimeOps}
+import graft.ops.{ShuffleWidth, Sinks, Sources, TimeOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Replan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -110,10 +111,21 @@ object Pipelines {
   /** 2022: dedup → impute → quality report → alerts → load with a
     * data-derived batch id (deterministic analog of
     * `strftime('%Y%m%d_%H%M%S')`, etl_2022.py:217).
+    *
+    * Runs at the drop's width ([[graft.ops.ShuffleWidth.atInputWidth]]):
+    * on the caller's isolated child session, its shuffles sized to the
+    * CSV bytes. Concurrent calls on one session serialize there, with
+    * [[curationOver]] and the CC loop.
     */
   def quality2022(spark: SparkSession, inCsv: String,
                   outDir: String): QualityRun = {
-    val raw = Sources.csv(spark, inCsv, usersSchema).cache()
+    val drop = Sources.csv(spark, inCsv, usersSchema)
+    ShuffleWidth.atInputWidth(spark, drop)(s =>
+      qualityRun(Replan.onto(s, drop), outDir))
+  }
+
+  private def qualityRun(drop: DataFrame, outDir: String): QualityRun = {
+    val raw = drop.cache()
     // the report, alerts and load all read the cache; it is released
     // once they are materialized, or when one of them fails
     try {
@@ -223,6 +235,14 @@ object Pipelines {
     * packed rows are `docs` joined to the surviving ids. Duplicate ids
     * are outside the contract: each copy joins every verdict row of
     * its id, so the stage counts and the packed rows fan out.
+    *
+    * The whole run is sized to `docs`
+    * ([[graft.ops.ShuffleWidth.atInputWidth]]): it plans on the
+    * caller's isolated child session, every exchange at
+    * ⌈docs bytes / 1 MiB⌉ partitions capped at the caller's width, and
+    * returns only counts. Concurrent calls on one session serialize
+    * on that child, as the CC loop inside always did; the loop itself
+    * runs on the child's own child.
     */
   def curationOver(spark: SparkSession, docs: DataFrame,
                    embeddings: Option[DataFrame], outDir: String,
@@ -230,11 +250,21 @@ object Pipelines {
                    clusterCap: Option[Int] = None,
                    survivorPolicy: String = "min-id",
                    spanScrub: Option[Int] = None): CurationRun = {
+    require(survivorPolicy == "min-id" || survivorPolicy == "quality",
+      s"survivorPolicy must be 'min-id' or 'quality', got '$survivorPolicy'")
+    ShuffleWidth.atInputWidth(spark, docs)(s =>
+      curationRun(s, Replan.onto(s, docs), embeddings.map(Replan.onto(s, _)),
+        outDir, budget, clusterCap, survivorPolicy, spanScrub))
+  }
+
+  private def curationRun(spark: SparkSession, docs: DataFrame,
+                          embeddings: Option[DataFrame], outDir: String,
+                          budget: Long, clusterCap: Option[Int],
+                          survivorPolicy: String,
+                          spanScrub: Option[Int]): CurationRun = {
     import graft.ops.{Cluster, NearDup, Sampling, TextSim}
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.storage.StorageLevel
-    require(survivorPolicy == "min-id" || survivorPolicy == "quality",
-      s"survivorPolicy must be 'min-id' or 'quality', got '$survivorPolicy'")
     // 1. exact dedup: canonical = min doc id per normalized content hash
     val exactKeep = docs
       .select(col("doc_id"), sha2(trim(lower(col("text"))), 256).as("h"))
@@ -330,18 +360,28 @@ object Pipelines {
             .filter(length(trim(col("text"))) > 0)
       }
       // 6. PII scrub + 7. sequence packing within each source shard
-      val w = Window.partitionBy("source").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val shard = Window.partitionBy("source").orderBy("doc_id")
       val packed = train
         .withColumn("text", regexp_replace(col("text"), "[0-9]{4,}", "<ID>"))
         .withColumn("n_tokens",
           size(split(trim(col("text")), "\\s+")).cast("long"))
         .withColumn("bin_id", floor(
-          (sum(col("n_tokens")).over(w) - col("n_tokens")) / budget.toDouble))
-      val trainDocs = Sinks.parquetCounted(packed, outDir)
+          (sum(col("n_tokens")).over(shard.rowsBetween(
+            Window.unboundedPreceding, Window.currentRow)) -
+            col("n_tokens")) / budget.toDouble))
+        // a shard's bin ids rise with doc_id and are never null (the
+        // quality gate drops null text), so a row opens a bin exactly
+        // where its bin_id differs from the previous row's — the
+        // shard's first row included, whose lag is null
+        .withColumn("new_bin", !(col("bin_id") <=> lag("bin_id", 1).over(shard)))
+      // rows and bins are counted in the write's own result stage: no
+      // read-back of the output
+      val written = org.apache.spark.sql.Observation()
+      Sinks.parquet(packed.observe(written, count(lit(1)).as("n"),
+        count_if(col("new_bin")).as("bins")).drop("new_bin")).save(outDir)
+      val m = written.get
       CurationRun(c.getLong(0), c.getLong(1), c.getLong(2), c.getLong(3),
-        c.getLong(4), trainDocs, spark.read.parquet(outDir)
-          .select("source", "bin_id").distinct().count())
+        c.getLong(4), m("n").asInstanceOf[Long], m("bins").asInstanceOf[Long])
     } finally verdict.unpersist(blocking = false)
   }
 }

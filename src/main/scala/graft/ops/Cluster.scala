@@ -282,10 +282,11 @@ object Cluster {
     // The train runs on an ISOLATED child session (the CC loop's r19
     // machinery, shared via SessionIso) with two overrides, both
     // stack-sample-measured at sf0.1:
-    //  - TRAIN-SIZED shuffle partitions (k/64+1 ≈ k·d/65536 at
-    //    d≈1024, the CC loop's 64k-rows-per-partition rule, clamped
-    //    to the caller's sizing): every train exchange carries at
-    //    most maps × k·d tiny rows, and caller-sized exchanges paid
+    //  - TRAIN-SIZED shuffle partitions (ShuffleWidth.forCentroids:
+    //    k/64+1 ≈ k·d/65536 at d≈1024, the CC loop's
+    //    64k-rows-per-partition rule, clamped to the caller's
+    //    sizing): every train exchange carries at most maps × k·d
+    //    tiny rows, and caller-sized exchanges paid
     //    more in shuffle-file create/commit than they won (sampled:
     //    DiskBlockObjectWriter/writeMetadataFile dominated).
     //  - useIdInClassName=false: the per-round stages are identical
@@ -293,8 +294,7 @@ object Cluster {
     //    generated class NAME, so with ids on, every round recompiled
     //    and re-JIT-warmed its decimal-sum aggregate (sampled:
     //    BigDecimal.valueOf dominated).
-    val parentParts = caller.sessionState.conf.numShufflePartitions
-    val parts = math.max(1, math.min(k / 64 + 1, parentParts))
+    val parts = ShuffleWidth.forCentroids(k, ShuffleWidth.cap(caller))
     SessionIso.withChild(caller, Map(
       "spark.sql.shuffle.partitions" -> parts.toString,
       "spark.sql.codegen.useIdInClassName" -> "false")) { s =>

@@ -416,21 +416,13 @@ object Relational {
     if (fan == 1) left.join(right, keys)
     else {
       // Width the salted exchange to the cores the salt exists to
-      // fill (r22): a keyed join's stage width is the session's
-      // shuffle-partition conf, and a production conf is sized >= the
-      // cluster's cores, so max(conf, defaultParallelism) IS the conf
-      // at scale — no behavior change there. A local session whose
-      // conf is tuned for small shuffles (the bench's 8) otherwise
-      // caps the pair-scoring stage at conf tasks no matter the fan:
-      // the sf1 probe measured sim_knn_bucketed's scoring stage at
-      // 8 tasks x 14 s while 24 cores idled; the un-capped width
-      // benched 109 -> 62 s (sim_knn_bucketed_full) / 30 -> 17 s
-      // (sim_knn_bucketed). Both sides repartition to the SAME
-      // (keys, __salt, width) hash partitioning, which the join
-      // reuses — the exchanges REPLACE the join's own, they don't
-      // add any.
-      val width = math.max(s.sessionState.conf.numShufflePartitions,
-        s.sparkContext.defaultParallelism)
+      // fill (ShuffleWidth.forSaltedJoin, measured there): a session
+      // conf tuned for small shuffles would otherwise cap the
+      // pair-scoring stage at conf tasks no matter the fan. Both
+      // sides repartition to the SAME (keys, __salt, width) hash
+      // partitioning, which the join reuses — the exchanges REPLACE
+      // the join's own, they don't add any.
+      val width = ShuffleWidth.forSaltedJoin(s)
       val keyCols = (keys :+ "__salt").map(col)
       left.withColumn("__salt", pmod(hash(saltOn), lit(fan)))
         .repartition(width, keyCols: _*)

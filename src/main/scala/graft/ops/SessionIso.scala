@@ -20,6 +20,12 @@ import org.apache.spark.sql.SparkSession
   * plans. Immutable/static keys throw on set/unset and are skipped.
   * Round20Spec pins both directions through [[childConf]].
   *
+  * The caller's engine listeners ride along the same way: each use
+  * makes the child's query bus carry exactly the caller's
+  * [[graft.Metrics.install]]ed listeners, so `/metrics` counts the
+  * child's actions (`newSession()` starts with an empty listener
+  * manager).
+  *
   * The child's monitor is held for the whole `f`, so concurrent users
   * of one parent session serialize their loop phases — a far narrower
   * window than conf-mutating the shared session, and the cost is
@@ -65,6 +71,7 @@ private[graft] object SessionIso {
       touched.synchronized {
         touched.put(child, snapshot.keySet ++ overrides.keySet): Unit
       }
+      graft.Metrics.inherit(sess, child)
       f(child)
     }
   }

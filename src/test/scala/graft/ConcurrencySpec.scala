@@ -28,4 +28,29 @@ class ConcurrencySpec extends SparkSpec {
       assert(racing(n) == serial(n), s"$n diverged under concurrency")
     }
   }
+
+  test("two curationOver calls and a quality2022 racing on one session " +
+    "return their serial results") {
+    // all three run on the session's one SessionIso child (and the CC
+    // loop inside curationOver on the child's own child), so they
+    // serialize on its monitor: this pins that they neither deadlock
+    // nor leak one call's conf or caches into another's result
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val csv = new java.io.File(tmp("cq"), "users.csv")
+    java.nio.file.Files.writeString(csv.toPath, "name,age,email\n" +
+      "alice,30,a@x.com\nbob,41,b@x.com\nbob,41,b@x.com\n,19,c@x.com\n")
+    val docs = graft.ops.Sources.table(spark, sf, "documents")
+    val calls: Seq[() => Any] = Seq(
+      () => Pipelines.curationOver(spark, docs, None, tmp("cc1")),
+      () => Pipelines.curationOver(spark, docs, None, tmp("cc2"),
+        survivorPolicy = "quality"),
+      () => {
+        val q = Pipelines.quality2022(spark, csv.getPath, tmp("cq1"))
+        (q.loaded, q.report, q.alerts)
+      })
+    val serial = calls.map(_())
+    val racing = Await.result(
+      Future.sequence(calls.map(c => Future(c()))), 5.minutes)
+    assert(racing == serial)
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{Columns, InternalRows}
+import org.apache.spark.sql.graftbridge.{Columns, InternalRows, Replan}
 
 /** The upgrade contract for the `private[sql]` bridges the library
   * ships (r19 VERDICT ask #4): every behavioral promise
@@ -14,7 +14,9 @@ import org.apache.spark.sql.graftbridge.{Columns, InternalRows}
   * regression three layers up. (A SIGNATURE change fails the bridge's
   * compile, which is the loudest possible message.) The last case
   * pins `Columns`, the expression <-> Column bridge every graft Column
-  * helper builds its kernel through.
+  * helper builds its kernel through; the `Replan` cases pin the
+  * analyzed-plan handoff the eager pipelines run their child session
+  * on.
   */
 class GraftBridgeContractSpec extends SparkSpec {
 
@@ -127,5 +129,52 @@ class GraftBridgeContractSpec extends SparkSpec {
       .toDF("a", "b")
     val got = df.select(Columns.column(e).as("d")).collect().map(_.getDouble(0))
     assert(got.toSeq == Seq(11.0, 2.0), s"$drift (rows: ${got.toSeq})")
+  }
+
+  /** A parquet read on the shared session. */
+  private def parquetFrame = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("replan").toString
+    Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "a", 3.0), (4L, "c", 4.0))
+      .toDF("id", "k", "v").write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def replanDrift(what: String): String =
+    s"graftbridge upgrade contract violated: $what — the " +
+      "Dataset.ofRows/analyzed-plan surface drifted under this Spark " +
+      "version; see Replan.scala"
+
+  test("Replan.onto: the child's rows equal the parent's") {
+    val src = parquetFrame.filter(col("v") > 1.5).select("id", "k")
+    val re = Replan.onto(spark.newSession(), src)
+    assert(re.collect().map(r => (r.getLong(0), r.getString(1))).sorted
+      === src.collect().map(r => (r.getLong(0), r.getString(1))).sorted,
+      replanDrift("replanned rows differ from the source frame"))
+  }
+
+  test("Replan.onto runs no job: handoff and planning on the child") {
+    val src = parquetFrame
+    val child = spark.newSession()
+    val n = jobsOf {
+      Replan.onto(child, src).groupBy("k").count().queryExecution
+        .executedPlan
+    }
+    assert(n == 0, replanDrift(s"handoff and planning ran $n jobs " +
+      "(re-analysis re-inferred the relation's schema?)"))
+  }
+
+  test("Replan.onto: the child plans at its own width") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val src = parquetFrame
+    val child = spark.newSession()
+    child.conf.set("spark.sql.adaptive.enabled", "false")
+    child.conf.set("spark.sql.shuffle.partitions", "3")
+    val widths = Replan.onto(child, src).groupBy("k").count()
+      .queryExecution.executedPlan.collect {
+        case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions
+      }
+    assert(widths == Seq(3), replanDrift(
+      s"child exchanges planned at $widths, not the child's 3"))
   }
 }

@@ -62,6 +62,29 @@ class MetricsConfigSpec extends SparkSpec {
     }
   }
 
+  test("the listener counts the actions a pipeline runs on its child " +
+    "session") {
+    // quality2022 runs every action on the caller's SessionIso child,
+    // whose query bus starts empty: the installed listener must reach
+    // it, its query counter and the write's observed row count alike
+    val dir = java.nio.file.Files.createTempDirectory("mchild").toString
+    val in = new java.io.File(dir, "users.csv")
+    java.nio.file.Files.writeString(in.toPath,
+      "name,age,email\nalice,30,a@x.com\nbob,41,b@x.com\nbob,41,b@x.com\n")
+    val listener = Metrics.install(spark)
+    try {
+      val (run, _, delta) = Metrics.measure(spark, listener)(
+        Pipelines.quality2022(spark, in.getPath, s"$dir/out"))
+      assert(delta.getOrElse("queries_total", 0.0) == 3.0,
+        s"queries_total delta in $delta")
+      val written = listener.snapshot.collect {
+        case (k, v) if k.matches("observed\\..*\\.n") => v
+      }
+      assert(written.toSeq.contains(run.loaded.toDouble) && run.loaded == 2,
+        s"write's observed row count missing: ${listener.snapshot}")
+    } finally Metrics.uninstall(spark, listener)
+  }
+
   test("EngineConfig loads reference-shaped keys with defaults") {
     val props =
       """aws.s3_bucket=my-bucket

@@ -131,13 +131,26 @@ class PipelinesSpec extends SparkSpec {
     releasesOnFailedWrite(out => Pipelines.quality2022(spark, in, out))
   }
 
-  /** [[jobsOf]] at the bench's settings (AQE off). */
-  private def benchJobsOf(body: => Any): Int = {
-    val saved = Bench.defaultConfs.map { case (k, _) => k -> spark.conf.get(k) }
-    Bench.defaultConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try jobsOf(body)
-    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  /** `body` with `confs` set on the shared session, each key restored
+    * (or unset) afterwards. */
+  private def withConfs[A](confs: (String, String)*)(body: => A): A = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
+
+  /** [[jobsOf]] at the bench's settings (AQE off). */
+  private def benchJobsOf(body: => Any): Int =
+    withConfs(Bench.defaultConfs: _*)(jobsOf(body))
+
+  /** The packed rows `curationOver` wrote to `dir`, sorted. */
+  private def packed(dir: String): Seq[(Long, String, Long)] =
+    spark.read.parquet(dir).select("doc_id", "text", "bin_id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
 
   test("each era and curationOver count what they write: job budget") {
     val in = writeCsv(tmp("pj"), "users.csv", goodRows ++ badRows)
@@ -147,7 +160,7 @@ class PipelinesSpec extends SparkSpec {
     assert(benchJobsOf(Pipelines.quality2022(spark, in, tmp("pjq"))) == 3)
     val docs = graft.ops.Sources.table(spark, sf, "documents")
     val n = benchJobsOf(Pipelines.curationOver(spark, docs, None, tmp("pjc")))
-    assert(n <= 13, s"curationOver ran $n jobs")
+    assert(n <= 11, s"curationOver ran $n jobs")
   }
 
   /** curationOver as a chain of per-stage joins: `docs ⋈ exactKeep`,
@@ -235,9 +248,6 @@ class PipelinesSpec extends SparkSpec {
   test("2026: the one-verdict run equals the per-stage join chain") {
     val docs = graft.ops.Sources.table(spark, sf, "documents")
     val emb = graft.ops.Sources.table(spark, sf, "embeddings")
-    def packed(dir: String): Seq[(Long, String, Long)] =
-      spark.read.parquet(dir).select("doc_id", "text", "bin_id").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
     val runs = Seq[(String, Option[Int], String, Option[Int])](
       ("min-id", None, "min-id", None),
       ("quality", None, "quality", None),
@@ -259,6 +269,36 @@ class PipelinesSpec extends SparkSpec {
     Seq("quality", "clusterCap").foreach { label =>
       assert(runs(label) != runs("min-id"), s"$label changed nothing")
     }
+  }
+
+  test("2022/2026: results do not depend on the caller's width or AQE") {
+    // the pipelines size their own shuffles from their input; the
+    // caller's width is only the cap, so 1, 8 and 200 and AQE on must
+    // give the same runs, counts and packed rows
+    val docs = graft.ops.Sources.table(spark, sf, "documents")
+    val emb = graft.ops.Sources.table(spark, sf, "embeddings")
+    val in = writeCsv(tmp("pw"), "users.csv", goodRows ++ goodRows ++ badRows)
+    val options = Seq[(Option[Int], String, Option[Int])](
+      (None, "min-id", None), (None, "quality", None),
+      (None, "min-id", Some(8)), (Some(3), "min-id", None))
+    def runsAt(confs: (String, String)*) = withConfs(confs: _*) {
+      val q = Pipelines.quality2022(spark, in, tmp("pwq"))
+      (q.loaded, q.report.totalRows, q.report.validRows,
+        q.report.dupRows) +: options.map { case (cap, policy, scrub) =>
+        val out = tmp("pwc")
+        (Pipelines.curationOver(spark, docs, cap.map(_ => emb), out,
+          clusterCap = cap, survivorPolicy = policy, spanScrub = scrub),
+          packed(out))
+      }
+    }
+    def width(n: Int) = Seq("spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.adaptive.enabled" -> "false")
+    val base = runsAt(width(8): _*)
+    Seq("width 1" -> width(1), "width 200" -> width(200),
+      "AQE on" -> Seq("spark.sql.adaptive.enabled" -> "true"))
+      .foreach { case (label, confs) =>
+        assert(runsAt(confs: _*) == base, label)
+      }
   }
 
   test("2026: curation pipeline filters monotonically and packs the train set") {
