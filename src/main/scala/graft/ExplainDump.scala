@@ -192,23 +192,33 @@ object ExplainDump {
   /** The un-materialized pipelines behind entry points that materialize
     * through an eager localCheckpoint (whose returned plan is just a
     * checkpoint scan), keyed by their [[PlanSnap]] name and built via
-    * the same package-private accessors the plan-shape specs audit.
-    * Building one runs nothing: the posting-list cache
-    * `dedupNgramPlan` marks is released unused.
+    * the same package-private `*Plan` builders the entry points run,
+    * with the declared queries' arguments. Building one runs nothing:
+    * the cache each builder marks is released unused.
     */
   def pipelines(spark: SparkSession,
                 sf: String): Seq[(String, () => DataFrame)] = {
+    import graft.ops.NearDup._
     def docs = graft.ops.Sources.table(spark, sf, "documents")
+    def released(planned: (DataFrame, DataFrame)): DataFrame = {
+      planned._2.unpersist(blocking = false)
+      planned._1
+    }
     Seq(
-      "dedup_ngram_pipeline" -> (() => {
-        val (pairs, posts) = graft.ops.NearDup.dedupNgramPlan(spark, docs, 3,
-          graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinJaccard)
-        posts.unpersist(blocking = false)
-        pairs
-      }),
+      "dedup_ngram_pipeline" -> (() => released(
+        dedupNgramPlan(spark, docs, 3, DefaultMaxDf, DefaultMinJaccard))),
       "dedup_containment_pipeline" -> (() =>
-        graft.ops.NearDup.containmentPairsPlan(docs, 3,
-          graft.ops.NearDup.DefaultMaxDf, graft.ops.NearDup.DefaultMinContain)))
+        containmentPairsPlan(docs, 3, DefaultMaxDf, DefaultMinContain)),
+      "dedup_minhash_pipeline" -> (() => released(
+        dedupMinhashPlan(docs, 64, 16, 0.4))),
+      "dedup_minhash_portable_pipeline" -> (() => released(
+        dedupMinhashPortablePlan(docs, PortableNumHashes, PortableBands,
+          PortableMinSim))),
+      "dedup_minhash_incr_pipeline" -> (() => released(
+        dedupMinhashIncrPlan(docs, PortableNumHashes, PortableBands,
+          PortableMinSim))),
+      "dedup_simhash_pairs_pipeline" -> (() => released(
+        dedupSimhashPairsPlan(docs, PortableMaxHamming))))
   }
 
   def main(args: Array[String]): Unit = {

@@ -374,7 +374,7 @@ object SparkEntry {
   /** Band rows over a `hvw`-shaped relation `$src` —
     * `PortableBands` bands of `PortableNumHashes / PortableBands`
     * consecutive slots (the shared constants, so the split can never
-    * drift from the Spark side's `portableBandRows`).
+    * drift from the Spark side's `NearDup.bandRows`).
     */
   private def portableBandSql(src: String): String = {
     val r = NearDup.PortableNumHashes / NearDup.PortableBands

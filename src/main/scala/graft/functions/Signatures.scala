@@ -6,8 +6,8 @@ import org.apache.spark.sql.types.{LongType, StringType}
 
 /** MinHash and SimHash signatures, each defined once as builtin
   * Catalyst aggregates — one per slot or bit — and shared by both
-  * surfaces: the query paths ([[graft.ops.NearDup.minhashSignatures]],
-  * `NearDup.simhashDecomposed`) aggregate the slots/votes as named
+  * surfaces: the query paths (`NearDup.signatures`,
+  * `NearDup.simhashOf`) aggregate the slots/votes as named
   * columns, and the SQL names `graft_minhash`/`graft_simhash`
   * ([[VectorFunctions.functions]]) expand to [[minhash]]/[[simhash]],
   * which assemble the same aggregates into one value.

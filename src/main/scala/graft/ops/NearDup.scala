@@ -6,12 +6,39 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Columns.{column, expression}
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Near-duplicate detection at corpus scale — MinHash+LSH, SimHash,
   * and n-gram Jaccard. All three follow the same 100 TB rule: generate
   * candidates via a bucketed shuffle (band hash / simhash band /
   * shared rare shingle), never an all-pairs crossJoin. Pair work is
   * bounded by bucket sizes, not N².
+  *
+  * MinHash and SimHash are ONE pipeline over two hash schemes
+  * ([[HashScheme]]). The production scheme [[Xxhash64]] hashes
+  * shingles and tokens with xxhash64 and keys bands by
+  * `xxhash64(slice(sig))`: no crypto hash at all, but not computable
+  * in DuckDB SQL. The portable scheme [[Md5Affine]], which every
+  * oracle-checked twin runs on, is DuckDB-reproducible: the base hash
+  * is the first 15 hex nibbles of `md5` read as a 60-bit integer
+  * (~20× dearer per token than xxhash64; DuckDB rebuilds it as a
+  * nibble-weighted sum over the same hex), MinHash slots are the
+  * [[PortableSeeds]] affine permutations `(a_i·x + b_i) mod (2⁶¹−1)`
+  * whose overflow-safe arithmetic [[affineHashSql]] pastes into both
+  * engines, band keys are the comma-joined decimal slot minima, and
+  * SimHash is 60 bits wide (the value stays inside a signed long on
+  * both engines). Those deltas — md5 base hash, affine permutations,
+  * string band keys, 16 hashes instead of 64 — are exactly the
+  * portability surface, nothing algorithmic: the signature build,
+  * band rows, candidate join, agreement count and SimHash vote are
+  * each written once, so the portable twins' oracles cover everything
+  * but the hash choice, and MinhashFamilyCrossSpec shows the xxhash64
+  * signatures estimate Jaccard as well.
+  *
+  * The exact-membership twin follows the same rule: [[dedupIncremental]]
+  * and [[dedupBloomPortable]] are the left join against the distinct
+  * corpus hashes that [[dedupBloom]]'s broadcast filter approximates;
+  * the bloom probe itself is the only delta.
   *
   * Reference analog: the corpus-level generalization of
   * drop_duplicates (/root/reference/src/etl_2022.py:178) — the
@@ -42,6 +69,10 @@ object NearDup {
                                cached: DataFrame*): DataFrame =
     try plan.localCheckpoint()
     finally cached.foreach(_.unpersist(blocking = false))
+
+  /** [[materialize]] of a `(plan, cached)` pair from a `*Plan` builder. */
+  private def materialize(planned: (DataFrame, DataFrame)): DataFrame =
+    materialize(planned._1, planned._2)
 
   /** Run `build` (jobs that run while a plan is built) and release
     * `cached` only if it throws; on success the caller still owns them. */
@@ -77,31 +108,215 @@ object NearDup {
       .select(col("doc_id"), explode(graft.functions.VectorFunctions
         .shingle(split(lower(col("text")), "\\s+"), n)).as("th"))
 
-  /** Per-document MinHash signature: `numHashes` independent
-    * `min(xxhash64(th, i))` aggregates over the 64-bit shingle hashes
-    * ([[graft.functions.Signatures.minhashSlot]], the same slots the
-    * SQL `graft_minhash` assembles), re-assembled into the signature
-    * array. One explode + one map-side-combined groupBy — shuffle
-    * volume is one `numHashes`-slot row per document per map
-    * partition, independent of doc length. The shingle hashes are
-    * non-null, so the slots' null guard folds away.
+  /** `(doc_id, th)` — one md5-60 hash per distinct 3-token shingle:
+    * the Spark-side mirror of the oracle family's shared
+    * `portableShingleCtes` (SparkEntry). Unfiltered split (the
+    * tokenization clusterReachSql already proves); shingle strings via
+    * the ShingleStrings primitive loop (the transform/concat_ws lambda
+    * spelling evaluates interpreted per window: 0.82 s vs 0.46 s warm
+    * on this stage at sf0.1).
     */
-  def minhashSignatures(s: SparkSession, dir: String,
-                        numHashes: Int = 64): DataFrame =
-    minhashSignatures(s, Sources.table(s, dir, "documents"), numHashes)
+  private def portableShingleHashes(docs: DataFrame): DataFrame = {
+    // spread the per-token work exactly like [[shingleHashesOf]]: a
+    // small single-file corpus is ONE input split, which pinned the
+    // whole tokenize + md5-per-shingle stage to a single task on
+    // local[32] — measured 0.79 s serial of dedup_simhash_pairs'
+    // 0.86 s total at sf0.1 (r21 stage probe) while 31 cores idled.
+    // Gated on split count (r22): a many-split input passes through
+    // with no exchange.
+    val toks = Sources.spreadIfNarrow(docs)
+      .select(col("doc_id"),
+        split(lower(col("text")), "\\s+").as("toks"))
+    toks
+      .filter(size(col("toks")) >= 3)
+      .select(col("doc_id"), explode(array_distinct(
+        graft.functions.VectorFunctions.shingleStrings(col("toks"), 3)))
+        .as("sh"))
+      .select(col("doc_id"), md5Hex60(col("sh")).as("th"))
+  }
 
-  /** [[minhashSignatures]] over any `(doc_id, text)` relation. */
-  def minhashSignatures(s: SparkSession, docs: DataFrame,
-                        numHashes: Int): DataFrame = {
-    val th = expression(col("th"))
-    val mins = (0 until numHashes).map(i =>
-      column(Signatures.minhashSlot(th, i)).as(s"mh$i"))
-    shingleHashesOf(docs, 3)
+  /** The portable base hash: the first 15 hex nibbles of `md5(c)` read
+    * as a 60-bit integer, which DuckDB rebuilds from the same hex. */
+  private def md5Hex60(c: Column): Column =
+    conv(substring(md5(c), 1, 15), 16, 10).cast(LongType)
+
+  /** The portability surface of the MinHash/SimHash family, and the
+    * only place its two schemes differ (see the object header):
+    *  - `shingleHashes`: `(doc_id, th)`, a bigint per 3-token shingle;
+    *  - `tokenHash`: a string token's bigint hash (SimHash features);
+    *  - `slot(i)`: MinHash slot `i`, an aggregate over `th`;
+    *  - `bandKey`: SQL for the key of an `r`-slot signature slice;
+    *  - `simhashBits`: the SimHash width;
+    *  - `maxHashes`: how many MinHash slots the scheme defines.
+    */
+  private[ops] final case class HashScheme(
+      shingleHashes: DataFrame => DataFrame,
+      tokenHash: Column => Column,
+      slot: Int => Column,
+      bandKey: String => String,
+      simhashBits: Int,
+      maxHashes: Int) {
+
+    /** Rejects a signature width or band count the pipeline cannot
+      * honour. Every builder calls it through [[signatures]] before it
+      * persists anything, so a bad argument leaves no cached plan.
+      */
+    def validate(numHashes: Int, bands: Int = 1): Unit = {
+      require(numHashes >= 1 && numHashes <= maxHashes,
+        s"numHashes must be in [1, $maxHashes], got $numHashes")
+      require(bands >= 1 && numHashes % bands == 0,
+        s"bands ($bands) must be positive and divide numHashes " +
+          s"($numHashes) — trailing signature slots would be silently " +
+          "excluded from banding")
+    }
+  }
+
+  /** The production scheme: xxhash64 everywhere. The slots are
+    * [[graft.functions.Signatures.minhashSlot]], the same aggregates
+    * the SQL `graft_minhash` assembles; the shingle hashes are
+    * non-null, so the slots' null guard folds away. The token hash is
+    * the one `graft_simhash` applies to a string token (seed 42).
+    */
+  private[ops] val Xxhash64 = HashScheme(
+    shingleHashes = shingleHashesOf(_, 3),
+    tokenHash = xxhash64(_),
+    slot = i => column(Signatures.minhashSlot(expression(col("th")), i)),
+    bandKey = slice => s"xxhash64($slice)",
+    simhashBits = 64,
+    maxHashes = Int.MaxValue)
+
+  /** The DuckDB-portable scheme (see the object header). One md5 per
+    * shingle, not one per (shingle, seed): the per-seed-md5 first cut
+    * benched 4.4 s at sf0.1 with the 16×-md5 signature build
+    * dominating (easy to misattribute — a bare `sigs.count()` profile
+    * prunes the min columns and never runs the md5s); this formulation
+    * benches 1.2 s, in line with the rest of the dedup family, and the
+    * affine family is ~20 int ops per seed AND the theoretically
+    * standard min-wise construction (Broder 1997). The slot columns
+    * are built once per JVM (r18 fixed-cost pass) from the exact
+    * string the oracle interpolates.
+    */
+  private[ops] lazy val Md5Affine = HashScheme(
+    shingleHashes = portableShingleHashes,
+    tokenHash = md5Hex60,
+    slot = PortableSeeds.map { case (a, b) =>
+      min(expr(affineHashSql("th", a, b, "div")))
+    },
+    bandKey = slice => s"concat_ws(',', CAST($slice AS ARRAY<STRING>))",
+    simhashBits = 60,
+    maxHashes = PortableSeeds.length)
+
+  /** Per-document MinHash signature `(doc_id, sig: array<bigint>)`
+    * under `scheme`: `numHashes` slot aggregates over the scheme's
+    * shingle hashes, re-assembled into the signature array. One
+    * explode + one map-side-combined groupBy — shuffle volume is one
+    * `numHashes`-slot row per document per map partition, independent
+    * of doc length. Validates `(numHashes, bands)` for the banding the
+    * caller will run.
+    */
+  private def signatures(scheme: HashScheme, docs: DataFrame,
+                         numHashes: Int, bands: Int = 1): DataFrame = {
+    scheme.validate(numHashes, bands)
+    val mins = (0 until numHashes).map(i => scheme.slot(i).as(s"mh$i"))
+    scheme.shingleHashes(docs)
       .groupBy("doc_id")
       .agg(mins.head, mins.tail: _*)
       .select(col("doc_id"),
         array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
   }
+
+  /** Production ([[Xxhash64]]) MinHash signatures of the documents table. */
+  def minhashSignatures(s: SparkSession, dir: String,
+                        numHashes: Int = 64): DataFrame =
+    minhashSignatures(Sources.table(s, dir, "documents"), numHashes)
+
+  /** [[minhashSignatures]] over any `(doc_id, text)` relation. */
+  def minhashSignatures(docs: DataFrame, numHashes: Int): DataFrame =
+    signatures(Xxhash64, docs, numHashes)
+
+  /** Portable ([[Md5Affine]]) MinHash signatures — the signature every
+    * `dedup_minhash_portable`-family query and oracle shares. */
+  def portableSigs(docs: DataFrame, numHashes: Int): DataFrame =
+    signatures(Md5Affine, docs, numHashes)
+
+  /** `(doc_id, band_idx, band_hash)` band rows of a [[signatures]]-
+    * shaped frame: band `b` is keyed by `scheme.bandKey` over slots
+    * `[b·r, (b+1)·r)` (a string for [[Md5Affine]]). The banding
+    * shuffle carries ONLY these three columns. Carrying the signature
+    * through instead (the earlier formulation, and what MinHashLSH-
+    * style joins ship) puts numHashes longs on every band row: ~8 KB
+    * per doc at 64 hashes × 16 bands, 20× this shuffle's bytes, and it
+    * dominated a 200k-doc run. Signatures re-enter in [[agreement]],
+    * after candidate dedup, when the pair set is collision-sized.
+    */
+  private def bandRows(scheme: HashScheme, sigs: DataFrame,
+                       numHashes: Int, bands: Int): DataFrame = {
+    scheme.validate(numHashes, bands)
+    val r = numHashes / bands
+    sigs.select(col("doc_id"), posexplode(expr(
+      s"transform(sequence(0, ${bands - 1})," +
+        s" b -> ${scheme.bandKey(s"slice(sig, b * $r + 1, $r)")})"))
+      .as(Seq("band_idx", "band_hash")))
+  }
+
+  /** The band-bucket candidate join: `(ka, kb)` id pairs whose band
+    * rows share a `(band_idx, band_hash)` bucket — bucketed shuffle,
+    * pair work bounded by bucket sizes, never N² — with multi-band
+    * collisions deduplicated BEFORE scoring (the estimate is per pair,
+    * so scoring each collision would be wasted work). `ordered` keeps
+    * `ka < kb`, for a self-join.
+    */
+  private def bandCandidates(bandsA: DataFrame, bandsB: DataFrame,
+                             ka: String, kb: String,
+                             ordered: Boolean): DataFrame = {
+    val joined = bandsA
+      .select(col("doc_id").as(ka), col("band_idx"), col("band_hash"))
+      .join(bandsB.select(col("doc_id").as(kb), col("band_idx"),
+        col("band_hash")), Seq("band_idx", "band_hash"))
+    (if (ordered) joined.filter(col(ka) < col(kb)) else joined)
+      .select(ka, kb).distinct()
+  }
+
+  /** The agreement count: `cand(ka, kb)` joined to each side's
+    * signature (callers persist them), `matches` = the number of equal
+    * slots, pairs kept at `matches / numHashes >= minSim` —
+    * `(ka, kb, matches: int)`.
+    */
+  private def agreement(cand: DataFrame, sigsA: DataFrame,
+                        sigsB: DataFrame, ka: String, kb: String,
+                        numHashes: Int, minSim: Double): DataFrame =
+    cand
+      .join(sigsA.select(col("doc_id").as(ka), col("sig").as("sig_a")), ka)
+      .join(sigsB.select(col("doc_id").as(kb), col("sig").as("sig_b")), kb)
+      .select(col(ka), col(kb), expr("aggregate(zip_with(sig_a, sig_b," +
+        " (x, y) -> IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)").as("matches"))
+      .filter(col("matches").cast(DoubleType) / numHashes.toDouble >= minSim)
+
+  /** Banded self-join pairs `(doc_a, doc_b, matches)` of a signature
+    * frame under `scheme`, cut at `minSim`. */
+  private def selfPairs(scheme: HashScheme, sigs: DataFrame, numHashes: Int,
+                        bands: Int, minSim: Double): DataFrame = {
+    val banded = bandRows(scheme, sigs, numHashes, bands)
+    agreement(bandCandidates(banded, banded, "doc_a", "doc_b", ordered = true),
+      sigs, sigs, "doc_a", "doc_b", numHashes, minSim)
+  }
+
+  /** [[selfPairs]] over the persisted signatures of `docs`, plus that
+    * cache: both candidate sides and both scoring joins read it. */
+  private def selfPairsPlan(scheme: HashScheme, docs: DataFrame,
+                            numHashes: Int, bands: Int,
+                            minSim: Double): (DataFrame, DataFrame) = {
+    val sigs = signatures(scheme, docs, numHashes, bands)
+      .persist(MEMORY_AND_DISK)
+    (selfPairs(scheme, sigs, numHashes, bands, minSim), sigs)
+  }
+
+  /** Production scoring: the first two columns of `pairs` with
+    * `est_jaccard = matches / numHashes`. */
+  private def estJaccard(pairs: DataFrame, numHashes: Int): DataFrame =
+    pairs.select(pairs.columns.take(2).map(col).toIndexedSeq :+
+      (col("matches").cast(DoubleType) / numHashes.toDouble)
+        .as("est_jaccard"): _*)
 
   /** Shared defaults — referenced by BOTH the Scala entry points and
     * the oracle SQL in [[graft.SparkEntry]] (via interpolation), so a
@@ -174,7 +389,7 @@ object NearDup {
     * sharp cutoff). Candidates come from a self-join on
     * (band_idx, band_hash) — bucketed shuffle, pair work bounded by
     * bucket sizes, never N². Jaccard is then estimated as the
-    * fraction of agreeing minhashes (zip_with, stays in codegen).
+    * fraction of agreeing minhashes.
     * Output is a 1-row summary (pair count + mean similarity) so the
     * result is non-empty and deterministic even with no near-dups.
     *
@@ -188,121 +403,55 @@ object NearDup {
     * released by running the job through `localCheckpoint` before
     * returning, trading build-without-execute laziness for not pinning
     * cache blocks on the session. Callers that only want the plan
-    * (explain tooling) pay the computation; checkpointed blocks do not
-    * survive executor loss (acceptable: the checkpoint holds the small
-    * RESULT, recomputable by re-calling the function).
+    * (explain tooling) use [[dedupMinhashPlan]]; checkpointed blocks
+    * do not survive executor loss (acceptable: the checkpoint holds
+    * the small RESULT, recomputable by re-calling the function).
     */
   def dedupMinhash(s: SparkSession, dir: String, numHashes: Int = 64,
                    bands: Int = 16, minSim: Double = 0.4): DataFrame =
-    dedupMinhash(s, Sources.table(s, dir, "documents"), numHashes, bands,
+    dedupMinhash(Sources.table(s, dir, "documents"), numHashes, bands,
       minSim)
 
   /** [[dedupMinhash]] over any `(doc_id, text)` relation. */
-  def dedupMinhash(s: SparkSession, docs: DataFrame, numHashes: Int,
-                   bands: Int, minSim: Double): DataFrame = {
-    val sigs = minhashSignatures(s, docs, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialize(minhashScoredPairs(sigs, numHashes, bands, minSim).agg(
-        count(lit(1)).as("n_candidate_pairs"),
-        coalesce(round(avg(col("est_jaccard")), 4), lit(0.0))
-          .as("avg_jaccard_sim")),
-      sigs)
+  def dedupMinhash(docs: DataFrame, numHashes: Int, bands: Int,
+                   minSim: Double): DataFrame =
+    materialize(dedupMinhashPlan(docs, numHashes, bands, minSim))
+
+  /** The plan [[dedupMinhash]] materializes, and its signature cache. */
+  private[graft] def dedupMinhashPlan(docs: DataFrame, numHashes: Int,
+                                      bands: Int, minSim: Double)
+      : (DataFrame, DataFrame) = {
+    val (pairs, sigs) = selfPairsPlan(Xxhash64, docs, numHashes, bands,
+      minSim)
+    (estJaccard(pairs, numHashes).agg(
+      count(lit(1)).as("n_candidate_pairs"),
+      coalesce(round(avg(col("est_jaccard")), 4), lit(0.0))
+        .as("avg_jaccard_sim")), sigs)
   }
 
   /** Pair-level core of [[dedupMinhash]]: banded candidates from a
-    * (persisted) [[minhashSignatures]]-shaped frame, scored by
-    * signature agreement, cut at `minSim` — `(doc_a, doc_b,
-    * est_jaccard)`. Public so the xxhash64 production family can be
-    * cross-checked pair-for-pair against the oracle-verified
-    * [[portableScoredPairs]] (MinhashFamilyCrossSpec) — the 1-row
-    * [[dedupMinhash]] summary cannot expose which pairs matched.
-    *
-    * The banding shuffle carries ONLY (doc_id, band_idx, band_hash) —
-    * 3 longs per band row. Carrying the signature through instead
-    * (the earlier formulation, and what MinHashLSH-style joins ship)
-    * puts numHashes longs on every band row: ~8 KB/doc at 64 hashes ×
-    * 16 bands, 20× this shuffle's bytes, and it dominated a 200k-doc
-    * run. Signatures re-enter AFTER candidate dedup, when the pair
-    * set is collision-sized, via two joins against the passed-in
-    * signature table (callers persist it and release it once their
-    * output is materialized).
+    * (persisted) [[minhashSignatures]] frame, scored by signature
+    * agreement, cut at `minSim` — `(doc_a, doc_b, est_jaccard)`.
+    * Public, with [[portableScoredPairs]], so MinhashFamilyCrossSpec
+    * can compare the two schemes pair for pair, which the 1-row
+    * summaries cannot expose.
     */
-  /** The production banding expression — xxhash64 of each r-slot
-    * signature slice — and the signature-agreement count, each defined
-    * ONCE (r17 review: three hand-pasted copies of the banding string
-    * and two of the scoring string could drift between the inline
-    * query, the index writer, and the index prober, whose consistency
-    * MinhashIndexSpec specifies; the portable family already follows
-    * this rule via [[agreementScore]]).
-    */
-  private def bandExplodeExpr(numHashes: Int, bands: Int): Column = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) — trailing " +
-        "signature slots would be silently excluded from banding")
-    val r = numHashes / bands
-    expr(s"transform(sequence(0, ${bands - 1})," +
-      s" b -> xxhash64(slice(sig, b * $r + 1, $r)))")
-  }
-
-  /** Agreement fraction of two signature arrays `sig_a`/`sig_b`. */
-  private def sigAgreement(numHashes: Int): Column =
-    expr("aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0))," +
-      " 0, (acc, v) -> acc + v)").cast(DoubleType) / numHashes.toDouble
-
   def minhashScoredPairs(sigs: DataFrame, numHashes: Int, bands: Int,
-                         minSim: Double): DataFrame = {
-    val banded = sigs
-      .select(col("doc_id"), posexplode(bandExplodeExpr(numHashes, bands))
-        .as(Seq("band_idx", "band_hash")))
-    val cand = banded.select(col("doc_id").as("doc_a"),
-        col("band_idx"), col("band_hash"))
-      .join(banded.select(col("doc_id").as("doc_b"),
-        col("band_idx"), col("band_hash")),
-        Seq("band_idx", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      // dedup multi-band collisions BEFORE scoring: est_jaccard is
-      // per-pair, so scoring each collision would be wasted work
-      .select("doc_a", "doc_b").distinct()
-    cand
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
-        "doc_a")
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")),
-        "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        sigAgreement(numHashes).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minSim)
-  }
+                         minSim: Double): DataFrame =
+    estJaccard(selfPairs(Xxhash64, sigs, numHashes, bands, minSim),
+      numHashes)
+
+  /** [[minhashScoredPairs]] under [[Md5Affine]], over a [[portableSigs]]
+    * frame — `(doc_a, doc_b, matches)`. */
+  def portableScoredPairs(sigs: DataFrame, numHashes: Int, bands: Int,
+                          minSim: Double): DataFrame =
+    selfPairs(Md5Affine, sigs, numHashes, bands, minSim)
+      .withColumn("matches", col("matches").cast(LongType))
 
   /** `dedup_minhash_portable` — the ORACLE-CHECKABLE MinHash+LSH
-    * variant.
-    *
-    * Same banding pipeline as [[dedupMinhash]] (signature → bands →
-    * bucketed candidate join → signature-agreement Jaccard estimate →
-    * 1-row summary), but every hash is DuckDB-reproducible: 3-token
-    * shingles stay as STRINGS (`tok tok tok`), hashed ONCE to a
-    * 60-bit integer (first 15 hex nibbles of `md5(shingle)`, which
-    * the oracle rebuilds as a nibble-weighted sum over the same hex),
-    * then permuted by 16 affine maps `(a_i·x + b_i) mod (2⁶¹−1)` —
-    * [[affineHashSql]] pastes the IDENTICAL overflow-safe integer
-    * arithmetic into both engines, and [[PortableSeeds]] fixes the
-    * constants. One md5 per shingle, not one per (shingle, seed): the
-    * per-seed-md5 first cut benched 4.4 s at sf0.1 with the 16×-md5
-    * signature build dominating (easy to misattribute — a bare
-    * `sigs.count()` profile prunes the min columns and never runs
-    * the md5s); this formulation benches 1.2 s, in line with the
-    * rest of the dedup family, and the affine family is ~20 int ops
-    * per seed AND the theoretically standard min-wise construction
-    * (Broder 1997).
-    * Band keys are the comma-joined decimal minima of `r` consecutive
-    * slots, so candidate generation, the agreement count, and the
-    * ≥ `minSim` cutoff are all hash-compared against the oracle.
-    *
-    * The production path [[dedupMinhash]] stays on xxhash64 shingle
-    * IDs + `xxhash64(slice(sig))` band hashes (no crypto hash at all,
-    * but not computable in DuckDB SQL); the deltas here — md5 base
-    * hash, affine permutations, string band keys, 16 hashes instead
-    * of 64 — are exactly the portability surface, nothing
-    * algorithmic.
+    * variant: [[dedupMinhash]]'s pipeline under [[Md5Affine]], so
+    * candidate generation, the agreement count, and the ≥ `minSim`
+    * cutoff are all hash-compared against the oracle.
     *
     * The summary emits exact integers (`n_pairs`, `sum_matches`) plus
     * one division for `avg_jaccard` — a single IEEE op on exact
@@ -313,197 +462,29 @@ object NearDup {
                            numHashes: Int = PortableNumHashes,
                            bands: Int = PortableBands,
                            minSim: Double = PortableMinSim): DataFrame =
-    dedupMinhashPortable(s, Sources.table(s, dir, "documents"),
+    dedupMinhashPortable(Sources.table(s, dir, "documents"),
       numHashes, bands, minSim)
 
-  /** Per-document portable MinHash signature (wide: `doc_id,
-    * mh0..mh{n-1}`): one md5-60 base hash per distinct shingle
-    * ([[graft.functions.ShingleStrings]] windows), then the
-    * [[PortableSeeds]] affine permutations, minimized per doc. The
-    * signature every `dedup_minhash_portable`-family query and oracle
-    * shares.
-    */
-  /** `(doc_id, th)` — one md5-60 hash per distinct 3-token shingle:
-    * the Spark-side mirror of the oracle family's shared
-    * `portableShingleCtes` (SparkEntry), factored for the same
-    * reason — BOTH portable families (minhash sigs, shingle simhash)
-    * consume this relation, and a single definition cannot drift.
-    * Unfiltered split (the tokenization clusterReachSql already
-    * proves); shingle strings via the ShingleStrings primitive loop
-    * (the transform/concat_ws lambda spelling evaluates interpreted
-    * per window: 0.82 s vs 0.46 s warm on this stage at sf0.1).
-    */
-  private def portableShingleHashes(docs: DataFrame): DataFrame = {
-    // spread the per-token work exactly like [[shingleHashesOf]]: a
-    // small single-file corpus is ONE input split, which pinned the
-    // whole tokenize + md5-per-shingle stage to a single task on
-    // local[32] — measured 0.79 s serial of dedup_simhash_pairs'
-    // 0.86 s total at sf0.1 (r21 stage probe) while 31 cores idled.
-    // Gated on split count (r22): a many-split input passes through
-    // with no exchange.
-    val toks = Sources.spreadIfNarrow(docs)
-      .select(col("doc_id"),
-        split(lower(col("text")), "\\s+").as("toks"))
-    toks
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(
-        graft.functions.VectorFunctions.shingleStrings(col("toks"), 3)))
-        .as("sh"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(sh), 1, 15), 16, 10) AS BIGINT)")
-          .as("th"))
-  }
-
-  /** The [[PortableSeeds]] affine permutations of the `th` column,
-    * parsed ONCE per JVM (r18 fixed-cost pass): Column trees are
-    * immutable and session-independent, and every portable-family
-    * plan build was re-running the SQL parser over all 16 ~300-char
-    * [[affineHashSql]] strings. Still built FROM the exact string the
-    * oracle interpolates, so the bit-identical-by-construction
-    * property is untouched.
-    */
-  private lazy val portableAffineTh: IndexedSeq[Column] =
-    PortableSeeds.map { case (a, b) =>
-      expr(affineHashSql("th", a, b, "div"))
-    }
-
-  def portableSigs(s: SparkSession, docs: DataFrame,
-                   numHashes: Int): DataFrame = {
-    require(numHashes <= PortableSeeds.length,
-      s"only ${PortableSeeds.length} portable seeds defined")
-    val mins = portableAffineTh.take(numHashes).zipWithIndex.map {
-      case (h, i) => min(h).as(s"mh$i")
-    }
-    portableShingleHashes(docs).groupBy("doc_id")
-      .agg(mins.head, mins.tail: _*)
-  }
-
-  /** Per-pair signature-agreement scoring shared by the summary and
-    * incremental portable queries: join `cand(leftKey, rightKey)` to
-    * the two [[portableSigs]]-shaped frames, count agreeing slots,
-    * keep pairs at `matches/numHashes >= minSim`. One definition so a
-    * scoring fix can never reach one query and miss the other.
-    */
-  private def agreementScore(cand: DataFrame, sigsL: DataFrame,
-                             sigsR: DataFrame, leftKey: String,
-                             rightKey: String, numHashes: Int,
-                             minSim: Double): DataFrame = {
-    val sigA = sigsL.select(col("doc_id").as(leftKey) +:
-      (0 until numHashes).map(i => col(s"mh$i").as(s"a$i")): _*)
-    val sigB = sigsR.select(col("doc_id").as(rightKey) +:
-      (0 until numHashes).map(i => col(s"mh$i").as(s"b$i")): _*)
-    val matches = (0 until numHashes).map(i =>
-      when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
-      .reduce(_ + _)
-    cand.join(sigA, leftKey).join(sigB, rightKey)
-      .select(col(leftKey), col(rightKey), matches.as("matches"))
-      .filter(col("matches").cast(DoubleType) / numHashes >= minSim)
-  }
-
-  /** `(doc_id, band_idx, band_key)` rows from a [[portableSigs]]-shaped
-    * frame: band `b`'s key is the comma-joined decimal minima of its
-    * `r` consecutive slots.
-    */
-  private def portableBandRows(sigs: DataFrame, numHashes: Int,
-                               bands: Int): DataFrame = {
-    val r = numHashes / bands
-    sigs.select(col("doc_id"),
-      posexplode(array((0 until bands).map(b =>
-        concat_ws(",", (b * r until (b + 1) * r)
-          .map(j => col(s"mh$j")): _*)): _*))
-        .as(Seq("band_idx", "band_key")))
-  }
-
-  /** Pair-level core of [[dedupMinhashPortable]]: band-bucketed
-    * candidates from a (persisted) [[portableSigs]]-shaped frame,
-    * scored via [[agreementScore]], cut at `minSim` — `(doc_a, doc_b,
-    * matches)`. Public for the same reason as [[minhashScoredPairs]]:
-    * MinhashFamilyCrossSpec compares the two hash families pair for
-    * pair, which the 1-row summaries cannot expose.
-    */
-  def portableScoredPairs(sigs: DataFrame, numHashes: Int, bands: Int,
-                          minSim: Double): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val unp = portableBandRows(sigs, numHashes, bands)
-    val cand = unp
-      .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_key"))
-      .join(unp.select(col("doc_id").as("doc_b"), col("band_idx"),
-        col("band_key")), Seq("band_idx", "band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    agreementScore(cand, sigs, sigs, "doc_a", "doc_b", numHashes, minSim)
-  }
-
   /** [[dedupMinhashPortable]] over any `(doc_id, text)` relation. */
-  def dedupMinhashPortable(s: SparkSession, docs: DataFrame,
-                           numHashes: Int, bands: Int,
-                           minSim: Double): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val sigs = portableSigs(s, docs, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialize(portableScoredPairs(sigs, numHashes, bands, minSim).agg(
-        count(lit(1)).cast(LongType).as("n_pairs"),
-        coalesce(sum(col("matches")), lit(0L)).cast(LongType)
-          .as("sum_matches"),
-        when(count(lit(1)) === 0, lit(0.0))
-          .otherwise(sum(col("matches")).cast(DoubleType) /
-            (count(lit(1)).cast(DoubleType) * numHashes))
-          .as("avg_jaccard")),
-      sigs)
-  }
+  def dedupMinhashPortable(docs: DataFrame, numHashes: Int, bands: Int,
+                           minSim: Double): DataFrame =
+    materialize(dedupMinhashPortablePlan(docs, numHashes, bands, minSim))
 
-  /** Per-document portable SimHash over 3-token SHINGLE hashes —
-    * [[simhashPortable]]'s machinery with the feature space swapped.
-    * Unigram-SET simhash is degenerate on a bounded-vocabulary corpus
-    * (measured: 38k hamming-0 pairs among the 5000 sf0.1 fixture docs,
-    * because every doc's distinct-token set covers most of the vocab);
-    * shingle features separate real near-dups from noise (16
-    * hamming-0 pairs on the same corpus), and hashing features rather
-    * than words is the practical SimHash construction (Manku,
-    * Jain & Das Sarma 2007, "Detecting near-duplicates for web
-    * crawling").
-    */
-  def simhashShinglePortable(s: SparkSession, docs: DataFrame): DataFrame =
-    withSimhashBands(simhashDecomposed(portableShingleHashes(docs), 60), 60)
-
-  /** The 4-way band split of a `(doc_id, simhash)` frame, defined once
-    * (r17 review: three hand-copied shift/mask blocks — 16-bit and two
-    * 15-bit — had to stay mutually consistent with the band join; a
-    * width change edited in one copy would silently desynchronize the
-    * portable simhash surfaces from each other and the oracle).
-    * Band b holds bits [(3−b)·w, (4−b)·w) of the `bits`-wide signature
-    * (w = bits/4), matching the oracle's `(simhash // 2^((3-b)·w)) %
-    * 2^w` arithmetic.
-    */
-  private def withSimhashBands(df: DataFrame, bits: Int): DataFrame = {
-    require(bits % 4 == 0, s"bits must split into 4 bands, got $bits")
-    val w = bits / 4
-    val m = (1L << w) - 1
-    df.select(col("doc_id") +: col("simhash") +:
-      (0 to 3).map(b =>
-        shiftright(col("simhash"), (3 - b) * w).bitwiseAND(lit(m))
-          .as(s"band$b")): _*)
-  }
-
-  /** `dedup_simhash_pairs` — ORACLE-CHECKABLE SimHash pair detection:
-    * [[simhashShinglePortable]] signatures, candidates from 15-bit
-    * band collisions (bucketed, never all-pairs — the [[simhashPairs]]
-    * blocking), exact Hamming distance by `bit_count(xor)` with the
-    * standard ≤ `maxHamming` cutoff — all re-derived bit for bit by
-    * the DuckDB oracle.
-    */
-  def dedupSimhashPairsPortable(s: SparkSession, dir: String,
-                                maxHamming: Int = PortableMaxHamming)
-      : DataFrame = {
-    // persist: the signature aggregation feeds BOTH sides of the band
-    // self-join — same discipline as dedupMinhashPortable's sigs (the
-    // r17 posexplode fold in [[simhashBandPairs]] already cut the
-    // per-side subplans 4× → 1×; the persist removes the remaining 2×)
-    val sh = simhashShinglePortable(s, Sources.table(s, dir, "documents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialize(simhashBandPairs(sh, maxHamming), sh)
+  /** The plan [[dedupMinhashPortable]] materializes, and its cache. */
+  private[graft] def dedupMinhashPortablePlan(docs: DataFrame,
+                                              numHashes: Int, bands: Int,
+                                              minSim: Double)
+      : (DataFrame, DataFrame) = {
+    val (pairs, sigs) = selfPairsPlan(Md5Affine, docs, numHashes, bands,
+      minSim)
+    val n = count(lit(1))
+    (pairs.agg(n.cast(LongType).as("n_pairs"),
+      coalesce(sum(col("matches")), lit(0L)).cast(LongType)
+        .as("sum_matches"),
+      when(n === 0, lit(0.0))
+        .otherwise(sum(col("matches")).cast(DoubleType) /
+          (n.cast(DoubleType) * numHashes))
+        .as("avg_jaccard")), sigs)
   }
 
   /** `doc_fingerprint_portable` — ORACLE-CHECKABLE min-shingle doc
@@ -517,9 +498,9 @@ object NearDup {
     * shingle-hash set).
     */
   def docFingerprintPortable(s: SparkSession, dir: String): DataFrame =
-    portableShingleHashes(Sources.table(s, dir, "documents"))
+    Md5Affine.shingleHashes(Sources.table(s, dir, "documents"))
       .groupBy("doc_id")
-      .agg(min(portableAffineTh.head).as("fingerprint"),
+      .agg(Md5Affine.slot(0).as("fingerprint"),
         count(lit(1)).cast(LongType).as("n_shingles"))
 
   /** `dedup_minhash_incr` — ORACLE-CHECKABLE incremental near-dup:
@@ -529,18 +510,21 @@ object NearDup {
     * corpus side's signatures are computed independently of the probe
     * batch, which is exactly what [[minhashIndexWrite]] /
     * [[minhashIndexProbe]] materialize — this query is the same
-    * dataflow with both sides inline (and on the [[PortableSeeds]]
-    * family) so DuckDB can verify the probe-vs-corpus join, the
-    * agreement arithmetic, and the cutoff end to end, per pair.
+    * dataflow with both sides inline (and under [[Md5Affine]]) so
+    * DuckDB can verify the probe-vs-corpus join, the agreement
+    * arithmetic, and the cutoff end to end, per pair.
     */
   def dedupMinhashIncr(s: SparkSession, dir: String,
                        numHashes: Int = PortableNumHashes,
                        bands: Int = PortableBands,
-                       minSim: Double = PortableMinSim): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val docs = Sources.table(s, dir, "documents")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+                       minSim: Double = PortableMinSim): DataFrame =
+    materialize(dedupMinhashIncrPlan(Sources.table(s, dir, "documents"),
+      numHashes, bands, minSim))
+
+  /** The plan [[dedupMinhashIncr]] materializes, and its cache. */
+  private[graft] def dedupMinhashIncrPlan(docs: DataFrame, numHashes: Int,
+                                          bands: Int, minSim: Double)
+      : (DataFrame, DataFrame) = {
     // ONE signature pass over the whole table, split probe/corpus by a
     // cache filter (r18 fixed-cost pass): a doc's signature is a pure
     // per-doc function, so hashing the two halves separately ran the
@@ -548,20 +532,16 @@ object NearDup {
     // whole expression tree through Catalyst — twice for identical
     // per-doc results. The incremental SEMANTICS are unchanged: the
     // probe side still bands against corpus-side signatures only.
-    val sigs = portableSigs(s, docs, numHashes)
+    val sigs = signatures(Md5Affine, docs, numHashes, bands)
       .withColumn("is_probe", col("doc_id") % PortableProbeMod === 0)
-      .persist(lvl)
+      .persist(MEMORY_AND_DISK)
     val sigsP = sigs.filter(col("is_probe"))
     val sigsC = sigs.filter(!col("is_probe"))
-    val cand = portableBandRows(sigsP, numHashes, bands)
-      .select(col("doc_id").as("probe_doc"), col("band_idx"),
-        col("band_key"))
-      .join(portableBandRows(sigsC, numHashes, bands)
-        .select(col("doc_id").as("corpus_doc"), col("band_idx"),
-          col("band_key")), Seq("band_idx", "band_key"))
-      .select("probe_doc", "corpus_doc").distinct()
-    materialize(agreementScore(cand, sigsP, sigsC, "probe_doc",
-      "corpus_doc", numHashes, minSim), sigs)
+    val cand = bandCandidates(bandRows(Md5Affine, sigsP, numHashes, bands),
+      bandRows(Md5Affine, sigsC, numHashes, bands), "probe_doc",
+      "corpus_doc", ordered = false)
+    (agreement(cand, sigsP, sigsC, "probe_doc", "corpus_doc", numHashes,
+      minSim).withColumn("matches", col("matches").cast(LongType)), sigs)
   }
 
   /** One-time banded MinHash index over a corpus — the materialized
@@ -579,18 +559,17 @@ object NearDup {
     *  - `sigs/` — `(doc_id, sig: array<bigint>)` for the
     *    agreement-count verification join.
     *
-    * Production (xxhash64) signature family, like [[dedupMinhash]] —
-    * the index is a scale artifact, not an oracle query; MinhashIndexSpec
+    * Production ([[Xxhash64]]) scheme, like [[dedupMinhash]] — the
+    * index is a scale artifact, not an oracle query; MinhashIndexSpec
     * pins probe results against the inline formulation instead.
     */
   def minhashIndexWrite(s: SparkSession, docs: DataFrame, path: String,
                         numHashes: Int = 64, bands: Int = 16): Unit = {
-    val sigs = minhashSignatures(s, docs, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = signatures(Xxhash64, docs, numHashes, bands)
+      .persist(MEMORY_AND_DISK)
     // released after both writes, or when one fails
     try {
-      sigs.select(col("doc_id"), posexplode(bandExplodeExpr(numHashes, bands))
-          .as(Seq("band_idx", "band_hash")))
+      bandRows(Xxhash64, sigs, numHashes, bands)
         .write.mode("overwrite").partitionBy("band_idx")
         .parquet(s"$path/bands")
       sigs.write.mode("overwrite").parquet(s"$path/sigs")
@@ -620,117 +599,132 @@ object NearDup {
     require(meta.getInt(0) == numHashes && meta.getInt(1) == bands,
       s"index at $path was written with numHashes=${meta.getInt(0)}, " +
         s"bands=${meta.getInt(1)}; probe asked for $numHashes/$bands")
-    val idxBands = s.read.parquet(s"$path/bands")
-    val idxSigs = s.read.parquet(s"$path/sigs")
-    val newSigs = minhashSignatures(s, newDocs, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newBands = newSigs.select(col("doc_id").as("probe_doc"),
-      posexplode(bandExplodeExpr(numHashes, bands))
-        .as(Seq("band_idx", "band_hash")))
+    val newSigs = signatures(Xxhash64, newDocs, numHashes, bands)
+      .persist(MEMORY_AND_DISK)
     // explicit broadcast: the batch band rows are small by contract
     // (a probe batch), but their sizeInBytes ESTIMATE flows from the
     // batch's upstream source through Generate — a filter over a big
     // scan would estimate large, and the planner would silently pick
     // a sort-merge join that shuffles the whole corpus bands table,
     // the exact per-batch cost this index exists to amortize away
-    val cand = broadcast(newBands)
-      .join(idxBands.select(col("doc_id").as("corpus_doc"),
-        col("band_idx"), col("band_hash")),
-        Seq("band_idx", "band_hash"))
-      .select("probe_doc", "corpus_doc").distinct()
-    val est = cand
-      .join(newSigs.select(col("doc_id").as("probe_doc"),
-        col("sig").as("sig_a")), "probe_doc")
-      .join(idxSigs.select(col("doc_id").as("corpus_doc"),
-        col("sig").as("sig_b")), "corpus_doc")
-      .select(col("probe_doc"), col("corpus_doc"),
-        sigAgreement(numHashes).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minSim)
-    materialize(est, newSigs)
+    val cand = bandCandidates(
+      broadcast(bandRows(Xxhash64, newSigs, numHashes, bands)),
+      s.read.parquet(s"$path/bands"), "probe_doc", "corpus_doc",
+      ordered = false)
+    materialize(estJaccard(agreement(cand, newSigs,
+      s.read.parquet(s"$path/sigs"), "probe_doc", "corpus_doc", numHashes,
+      minSim), numHashes), newSigs)
   }
 
-  /** Per-document SimHash from a precomputed hash column `th`: `bits`
-    * separate builtin sums of [[graft.functions.Signatures.simhashSign]]
-    * votes, positive votes packed into one long in a post-aggregation
-    * projection by [[graft.functions.Signatures.simhashPack]] — the
-    * vote and packing the SQL `graft_simhash` assembles. Null hashes
-    * are filtered out before the vote (a document without one is
-    * absent), so the sums carry no null guard: on the nullable
-    * portable hashes the SQL surface's guard would not fold away and
-    * would change the plan.
+  /** Per-document SimHash `(doc_id, simhash, band0..band3)` from a
+    * precomputed hash column `th`: `bits` separate builtin sums of
+    * [[graft.functions.Signatures.simhashSign]] votes, positive votes
+    * packed into one long in a post-aggregation projection by
+    * [[graft.functions.Signatures.simhashPack]] — the vote and packing
+    * the SQL `graft_simhash` assembles. Null hashes are filtered out
+    * before the vote (a document without one is absent), so the sums
+    * carry no null guard: on the nullable portable hashes the SQL
+    * surface's guard would not fold away and would change the plan.
     * For `bits = 64`, slot 63's pack term is `1L << 63` =
     * Long.MinValue, so negative xxhash64 values round-trip.
+    *
+    * The 4-way band split is defined here once (r17 review: three
+    * hand-copied shift/mask blocks had to stay consistent with the
+    * band join and the oracle): band b holds bits [(3−b)·w, (4−b)·w)
+    * (w = bits/4), matching the oracle's `(simhash // 2^((3-b)·w)) %
+    * 2^w` arithmetic.
     */
-  private def simhashDecomposed(thDf: DataFrame, bits: Int): DataFrame = {
+  private def simhashOf(thDf: DataFrame, bits: Int): DataFrame = {
     val th = expression(col("th"))
     val votes = (0 until bits).map(p =>
       column(Sum(Signatures.simhashSign(th, p)).toAggregateExpression())
         .as(s"v$p"))
+    val w = bits / 4
     thDf
       .filter(col("th").isNotNull)
       .groupBy("doc_id").agg(votes.head, votes.tail: _*)
       .select(col("doc_id"), column(Signatures.simhashPack(
         (0 until bits).map(p => expression(col(s"v$p"))))).as("simhash"))
+      .select(col("doc_id") +: col("simhash") +: (0 to 3).map(b =>
+        shiftright(col("simhash"), (3 - b) * w).bitwiseAND(lit((1L << w) - 1))
+          .as(s"band$b")): _*)
   }
 
-  /** Per-document 64-bit SimHash over token hashes: bit b of the
-    * signature is the sign of Σ_tokens (±1 by bit b of xxhash64(tok)).
-    * One row per distinct token map-side, one 64-slot vote row per
-    * (doc, map task) on the shuffle — see [[simhashDecomposed]] for
-    * why the votes are separate builtin sums. Near-dup candidates
-    * share a 16-bit band (`band0..band3`), the standard Hamming-space
-    * blocking.
+  /** Per-document SimHash over the distinct tokens' `scheme` hashes:
+    * bit b of the signature is the sign of Σ_tokens (±1 by bit b of
+    * the token hash). One row per distinct token map-side, one vote
+    * row per (doc, map task) on the shuffle — see [[simhashOf]].
+    * Near-dup candidates share a band (`band0..band3`), the standard
+    * Hamming-space blocking.
     */
-  def simhash(s: SparkSession, dir: String): DataFrame =
-    simhash(s, Sources.table(s, dir, "documents"))
-
-  /** [[simhash]] over any `(doc_id, text)` relation. */
-  def simhash(s: SparkSession, docs: DataFrame): DataFrame = {
-    val th = docs
+  private def tokenSimhash(scheme: HashScheme, docs: DataFrame): DataFrame =
+    simhashOf(docs
       .select(col("doc_id"),
         explode(array_distinct(split(lower(col("text")), "\\s+"))).as("token"))
       .filter(col("token") =!= "")
-      // the hash graft_simhash applies to a string token (seed 42)
-      .select(col("doc_id"), xxhash64(col("token")).as("th"))
-    withSimhashBands(simhashDecomposed(th, 64), 64)
-  }
+      .select(col("doc_id"), scheme.tokenHash(col("token")).as("th")),
+      scheme.simhashBits)
+
+  /** Per-document 64-bit SimHash ([[Xxhash64]] token hashes). */
+  def simhash(s: SparkSession, dir: String): DataFrame =
+    simhash(Sources.table(s, dir, "documents"))
+
+  /** [[simhash]] over any `(doc_id, text)` relation. */
+  def simhash(docs: DataFrame): DataFrame = tokenSimhash(Xxhash64, docs)
 
   /** `dedup_simhash` — the declared-query wrapper around [[simhash]]. */
   def dedupSimhash(s: SparkSession, dir: String): DataFrame =
     simhash(s, dir)
 
-  /** `dedup_simhash_portable` — the ORACLE-CHECKABLE SimHash variant.
-    *
-    * Identical vote/packing/band logic to [[simhash]] (both run
-    * through [[simhashDecomposed]], whose vote and packing the SQL
-    * `graft_simhash` shares), but the per-token hash is the
-    * first 15 hex nibbles of `md5(token)` read as a 60-bit integer —
-    * a value DuckDB reconstructs exactly (nibble-weighted sum over
-    * the same md5 hex string), so the full signature AND the 15-bit
-    * band split get a hash-compare oracle.
-    * The production query [[dedupSimhash]] stays on `xxhash64`
-    * (non-cryptographic, ~20× cheaper per token, but not computable
-    * in DuckDB SQL) — the ONLY delta between the two paths is that
-    * hash choice, so this oracle covers everything else.
-    *
-    * 60 bits (not 64) keeps the conv-parsed value inside a signed
-    * long without overflow on either engine; bands are therefore
-    * 4 × 15 bits. Bits 60–63 of the aggregate always vote −1 and pack
-    * to 0 (see [[graft.functions.Signatures.simhash]]).
+  /** `dedup_simhash_portable` — the ORACLE-CHECKABLE SimHash variant:
+    * [[simhash]] under [[Md5Affine]], so the full 60-bit signature AND
+    * the 15-bit band split get a hash-compare oracle. Bits 60–63 of
+    * the aggregate always vote −1 and pack to 0 (see
+    * [[graft.functions.Signatures.simhash]]).
     */
   def dedupSimhashPortable(s: SparkSession, dir: String): DataFrame =
-    simhashPortable(s, Sources.table(s, dir, "documents"))
+    simhashPortable(Sources.table(s, dir, "documents"))
 
   /** [[dedupSimhashPortable]] over any `(doc_id, text)` relation. */
-  def simhashPortable(s: SparkSession, docs: DataFrame): DataFrame = {
-    val th = docs
-      .select(col("doc_id"),
-        explode(array_distinct(split(lower(col("text")), "\\s+"))).as("token"))
-      .filter(col("token") =!= "")
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(token), 1, 15), 16, 10) AS BIGINT)")
-          .as("th"))
-    withSimhashBands(simhashDecomposed(th, 60), 60)
+  def simhashPortable(docs: DataFrame): DataFrame =
+    tokenSimhash(Md5Affine, docs)
+
+  /** Per-document portable SimHash over 3-token SHINGLE hashes —
+    * [[simhashPortable]]'s machinery with the feature space swapped.
+    * Unigram-SET simhash is degenerate on a bounded-vocabulary corpus
+    * (measured: 38k hamming-0 pairs among the 5000 sf0.1 fixture docs,
+    * because every doc's distinct-token set covers most of the vocab);
+    * shingle features separate real near-dups from noise (16
+    * hamming-0 pairs on the same corpus), and hashing features rather
+    * than words is the practical SimHash construction (Manku,
+    * Jain & Das Sarma 2007, "Detecting near-duplicates for web
+    * crawling").
+    */
+  def simhashShinglePortable(docs: DataFrame): DataFrame =
+    simhashOf(Md5Affine.shingleHashes(docs), Md5Affine.simhashBits)
+
+  /** `dedup_simhash_pairs` — ORACLE-CHECKABLE SimHash pair detection:
+    * [[simhashShinglePortable]] signatures, candidates from 15-bit
+    * band collisions (bucketed, never all-pairs — the [[simhashPairs]]
+    * blocking), exact Hamming distance by `bit_count(xor)` with the
+    * standard ≤ `maxHamming` cutoff — all re-derived bit for bit by
+    * the DuckDB oracle.
+    */
+  def dedupSimhashPairsPortable(s: SparkSession, dir: String,
+                                maxHamming: Int = PortableMaxHamming)
+      : DataFrame =
+    materialize(dedupSimhashPairsPlan(Sources.table(s, dir, "documents"),
+      maxHamming))
+
+  /** The plan [[dedupSimhashPairsPortable]] materializes, and its cache. */
+  private[graft] def dedupSimhashPairsPlan(docs: DataFrame, maxHamming: Int)
+      : (DataFrame, DataFrame) = {
+    // persist: the signature aggregation feeds BOTH sides of the band
+    // self-join — same discipline as dedupMinhashPortable's sigs (the
+    // r17 posexplode fold in [[simhashBandPairs]] already cut the
+    // per-side subplans 4× → 1×; the persist removes the remaining 2×)
+    val sh = simhashShinglePortable(docs).persist(MEMORY_AND_DISK)
+    (simhashBandPairs(sh, maxHamming), sh)
   }
 
   /** Band-blocked SimHash pair core shared by the production
@@ -766,8 +760,7 @@ object NearDup {
     */
   def simhashPairs(s: SparkSession, dir: String,
                    maxHamming: Int = 8): DataFrame =
-    simhashBandPairs(simhash(s, dir).select("doc_id", "simhash",
-      "band0", "band1", "band2", "band3"), maxHamming)
+    simhashBandPairs(simhash(s, dir), maxHamming)
 
   /** `dedup_ngram` — exact Jaccard over *distinctive* 3-token shingles
     * (document frequency ≤ `maxDf`). Candidates come from an inverted
@@ -1037,22 +1030,16 @@ object NearDup {
     * only docs unseen in the accumulated corpus should survive).
     * Membership in the "new" batch is the deterministic md5-nibble
     * rule (≥ '8' ⇒ new, ~50%), so the query is self-contained and
-    * reproducible. The check is a left join on the 32-byte content
-    * hash — shuffle keyed on the hash, identical to [[TextSim.dedupText]]'s
-    * scale shape; the corpus side ships only (hash) after a distinct,
-    * never the text. Output: every new doc with its duplicate verdict.
+    * reproducible. The check is [[newVsCorpus]], a left join on the
+    * 32-byte content hash — shuffle keyed on the hash, identical to
+    * [[TextSim.dedupText]]'s scale shape; the corpus side ships only
+    * (hash) after a distinct, never the text. Output: every new doc
+    * with its duplicate verdict.
     */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val d = Sources.table(s, dir, "documents")
-      .select(col("doc_id"),
-        sha2(trim(lower(col("text"))), 256).as("h"),
-        (Sampling.hexNibble(col("doc_id")) >= "8").as("is_new"))
-    val corpus = d.filter(!col("is_new")).select("h").distinct()
-      .withColumn("in_corpus", lit(true))
-    d.filter(col("is_new"))
-      .join(corpus, Seq("h"), "left")
-      .select(col("doc_id"),
-        coalesce(col("in_corpus"), lit(false)).as("dup_of_corpus"))
+    val d = hashedSplit(Sources.table(s, dir, "documents"))
+    newVsCorpus(d, corpusHashes(d)).select(col("doc_id"),
+      coalesce(col("in_corpus"), lit(false)).as("dup_of_corpus"))
   }
 
   /** `dedup_bloom` — the sketch-side scale path for [[dedupIncremental]]:
@@ -1102,43 +1089,45 @@ object NearDup {
     materialize(plan, cached: _*)
   }
 
-  /** The hashed corpus/new split both bloom surfaces share: `(doc_id,
-    * h = sha2-256 of the trimmed lowercased text, is_new = md5-nibble
-    * ≥ '8')`. ONE definition so [[dedupBloomPlan]] and the oracle twin
-    * [[dedupBloomPortable]] can never drift on the hash or the split
-    * rule (the minhash-family discipline).
+  /** The hashed corpus/new split every exact-membership surface
+    * shares: `(doc_id, h = sha2-256 of the trimmed lowercased text,
+    * is_new = md5-nibble ≥ '8')`. ONE definition so the production
+    * plans and the oracle twin can never drift on the hash or the
+    * split rule.
     */
-  private def bloomHashedSplit(docs: DataFrame): DataFrame =
+  private def hashedSplit(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       sha2(trim(lower(col("text"))), 256).as("h"),
       (Sampling.hexNibble(col("doc_id")) >= "8").as("is_new"))
+
+  /** The distinct corpus-side content hashes of a [[hashedSplit]]. */
+  private def corpusHashes(d: DataFrame): DataFrame =
+    d.filter(!col("is_new")).select("h").distinct()
+
+  /** The exact membership join: every new-batch row of a
+    * [[hashedSplit]] left-joined to the distinct `corpus` hashes, with
+    * `in_corpus` true on a hit and null otherwise. */
+  private def newVsCorpus(d: DataFrame, corpus: DataFrame): DataFrame =
+    d.filter(col("is_new"))
+      .join(corpus.withColumn("in_corpus", lit(true)), Seq("h"), "left")
 
   /** `dedup_bloom_portable` — the ORACLE TWIN for [[dedupBloom]]'s
     * semantics (r17 VERDICT #6): per new-arrival document, the EXACT
     * corpus-membership verdict `(doc_id, in_corpus)` — the predicate
     * the broadcast bloom filter approximates (no false negatives;
-    * false positives at rate fpp). Same sha2-256 text hash, same
-    * md5-nibble split, same left join against the distinct corpus
-    * hash set as the production plan ([[bloomHashedSplit]] is shared
-    * code), minus the bloom probe itself — the bloom's VALUE is the
-    * no-shuffle plan, which a DuckDB oracle cannot time, but its
-    * keep/drop semantics at fpp→0 are exactly this relation, and
-    * DuckDB re-derives every row (`sha256`/`md5` are identical hex
-    * in both engines). BloomTwinSpec pins the production summary's
-    * `n_exact_dup` to this twin's flagged count, closing the loop:
-    * oracle → twin → production.
+    * false positives at rate fpp), and DuckDB re-derives every row
+    * (`sha256`/`md5` are identical hex in both engines). BloomTwinSpec
+    * pins the production summary's `n_exact_dup` to this twin's
+    * flagged count, closing the loop: oracle → twin → production.
     */
   def dedupBloomPortable(s: SparkSession, dir: String): DataFrame =
-    dedupBloomPortableOn(s, Sources.table(s, dir, "documents"))
+    dedupBloomPortableOn(Sources.table(s, dir, "documents"))
 
   /** [[dedupBloomPortable]] over any `(doc_id, text)` relation. */
-  def dedupBloomPortableOn(s: SparkSession, docs: DataFrame): DataFrame = {
-    val d = bloomHashedSplit(docs)
-    val corpus = d.filter(!col("is_new")).select(col("h")).distinct()
-      .withColumn("hit", lit(true))
-    d.filter(col("is_new"))
-      .join(corpus, Seq("h"), "left")
-      .select(col("doc_id"), coalesce(col("hit"), lit(false)).as("in_corpus"))
+  def dedupBloomPortableOn(docs: DataFrame): DataFrame = {
+    val d = hashedSplit(docs)
+    newVsCorpus(d, corpusHashes(d)).select(col("doc_id"),
+      coalesce(col("in_corpus"), lit(false)).as("in_corpus"))
   }
 
   /** The plan behind [[dedupBloom]] plus the caches to release. NOT
@@ -1161,18 +1150,15 @@ object NearDup {
                                     expectedItems: Option[Long] = None)
       : (DataFrame, Seq[DataFrame]) = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
-    val d = bloomHashedSplit(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exact = d.filter(!col("is_new")).select("h").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val d = hashedSplit(docs).persist(MEMORY_AND_DISK)
+    val exact = corpusHashes(d).persist(MEMORY_AND_DISK)
     val bf = releasingOnFailure(exact, d) {
       exact.stat.bloomFilter("h",
         math.max(expectedItems.getOrElse(exact.count()), 1L), fpp)
     }
     val bfB = s.sparkContext.broadcast(bf)
     val probe = graft.functions.VectorFunctions.mightContain(col("h"), bfB)
-    val plan = d.filter(col("is_new"))
-      .join(exact.withColumn("in_corpus", lit(true)), Seq("h"), "left")
+    val plan = newVsCorpus(d, exact)
       .agg(count(lit(1)).as("n_new"),
         sum(when(probe, 1L).otherwise(0L))
           .as("n_bloom_flagged"),
@@ -1865,7 +1851,7 @@ object NearDup {
     // paid for); released after the localCheckpoint below, with the
     // rest of the entry point's caches.
     val vecs = Cluster.vectors(emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val centroids = releasingOnFailure(vecs) {
       Cluster.kmeansCentroidsOn(vecs, k, iters, warmStart)
     }
@@ -1906,7 +1892,7 @@ object NearDup {
       col("nrm") < lit(Double.PositiveInfinity)
     val marked = assigned.withColumn("rep_id",
         when(pairable, grpMin).otherwise(col("vec_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // zero-norm (and NaN/Inf-norm) vectors never enter the pair stage
     // at all: their cosine is undefined (0/0 — under ANSI arithmetic
     // the division THROWS, it does not NaN) or meaningless, so they

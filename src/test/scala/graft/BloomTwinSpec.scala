@@ -49,7 +49,7 @@ class BloomTwinSpec extends SparkSpec {
     val corpusTexts = (0L until 200L).filter(!isNew(_))
       .map(i => if (i % 2 == 0) s"shared text ${i / 2 % 20}" else s"unique $i")
       .map(_.toLowerCase.trim).toSet
-    val twin = NearDup.dedupBloomPortableOn(spark, docs)
+    val twin = NearDup.dedupBloomPortableOn(docs)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(twin.keySet == isNew.filter(_._2).keySet)
     twin.foreach { case (id, verdict) =>

@@ -60,12 +60,12 @@ class MinhashFamilyCrossSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
     // minSim=0 exposes every banded candidate of each family
-    val prodSigs = NearDup.minhashSignatures(spark, docs, K)
+    val prodSigs = NearDup.minhashSignatures(docs, K)
     val prod = NearDup.minhashScoredPairs(prodSigs, K, B, 0.0)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val port = NearDup
-      .portableScoredPairs(NearDup.portableSigs(spark, docs, K), K, B, 0.0)
+      .portableScoredPairs(NearDup.portableSigs(docs, K), K, B, 0.0)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2).toDouble / K))
       .toMap
@@ -127,10 +127,10 @@ class MinhashFamilyCrossSpec extends SparkSpec {
   test("production minhashScoredPairs summary equals dedupMinhash " +
     "(refactor guard: the 1-row query is the aggregate of the pairs)") {
     val docs = Sources.table(spark, sf, "documents")
-    val summary = NearDup.dedupMinhash(spark, docs, K, B,
+    val summary = NearDup.dedupMinhash(docs, K, B,
       NearDup.PortableMinSim).collect()(0)
     val pairs = NearDup.minhashScoredPairs(
-      NearDup.minhashSignatures(spark, docs, K), K, B,
+      NearDup.minhashSignatures(docs, K), K, B,
       NearDup.PortableMinSim)
       .collect().map(_.getDouble(2))
     assert(summary.getLong(0) == pairs.length.toLong)
@@ -140,5 +140,14 @@ class MinhashFamilyCrossSpec extends SparkSpec {
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(math.abs(summary.getDouble(1) - expectAvg) < 1e-9,
       s"summary avg ${summary.getDouble(1)} vs pairs avg $expectAvg")
+    // the portable scheme through the same pipeline: its exact-integer
+    // summary is the aggregate of its scored pairs
+    val portSummary = NearDup.dedupMinhashPortable(docs, K, B,
+      NearDup.PortableMinSim).collect()(0)
+    val portMatches = NearDup.portableScoredPairs(
+      NearDup.portableSigs(docs, K), K, B, NearDup.PortableMinSim)
+      .collect().map(_.getLong(2))
+    assert(portSummary.getLong(0) == portMatches.length.toLong)
+    assert(portSummary.getLong(1) == portMatches.sum)
   }
 }

@@ -46,7 +46,7 @@ class MinhashIndexSpec extends SparkSpec {
     assert(!got.keys.exists(_._1 == 103L),
       s"unrelated probe doc produced pairs: $got")
     // the probe's estimate must EQUAL the inline signature agreement
-    val sigs = NearDup.minhashSignatures(spark,
+    val sigs = NearDup.minhashSignatures(
         docs.unionByName(batch), 64)
       .filter(col("doc_id").isin(3L, 102L))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -73,6 +73,30 @@ class MinhashIndexSpec extends SparkSpec {
       .select("num_hashes", "bands").collect()(0)
     assert(meta.getInt(0) == 32 && meta.getInt(1) == 8)
     assert(spark.read.parquet(s"$path/sigs").count() == 5)
+  }
+
+  test("on-disk layout is pinned: bands/ (band_hash, doc_id) by " +
+    "band_idx, sigs/ (doc_id, sig array<bigint>), meta/") {
+    // an index written by an earlier build must stay probe-compatible
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val docs = (1L to 4L).map(i =>
+      (i, (1 to 20).map(j => s"t${i}_$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    val path = tmpDir()
+    NearDup.minhashIndexWrite(spark, docs, path)
+    def fields(dir: String) = spark.read.parquet(s"$path/$dir").schema
+      .map(f => f.name -> f.dataType).toMap
+    assert(fields("bands") == Map("band_hash" -> LongType,
+      "doc_id" -> LongType, "band_idx" -> IntegerType))
+    val bandDirs = new java.io.File(s"$path/bands").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    assert(bandDirs == (0 until 16).map(b => s"band_idx=$b").toSet)
+    val sigs = fields("sigs")
+    assert(sigs.keySet == Set("doc_id", "sig") && sigs("doc_id") == LongType)
+    assert(sigs("sig").asInstanceOf[ArrayType].elementType == LongType)
+    assert(fields("meta") == Map("num_hashes" -> IntegerType,
+      "bands" -> IntegerType))
   }
 
   test("meta guard refuses a probe with a mismatched hash family") {

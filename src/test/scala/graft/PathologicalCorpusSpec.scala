@@ -73,9 +73,9 @@ class PathologicalCorpusSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("n_docs"), r.getAs[Long]("first_doc")))
     assert(groups.contains((2L, 9L)),
       s"duplicate pair not collapsed: ${groups.toSeq.sorted}")
-    sweep("simhash", nDocs)(d => NearDup.simhash(spark, d))
-    sweep("simhash_portable", nDocs)(d => NearDup.simhashPortable(spark, d))
-    sweep("minhash_summary", 1)(d => NearDup.dedupMinhash(spark, d,
+    sweep("simhash", nDocs)(d => NearDup.simhash(d))
+    sweep("simhash_portable", nDocs)(d => NearDup.simhashPortable(d))
+    sweep("minhash_summary", 1)(d => NearDup.dedupMinhash(d,
       numHashes = 16, bands = 4, minSim = 0.4))
     sweep("winnow_portable", nDocs)(TextSim.docWinnowPortable)
     // the portable winnow drops sub-k docs (1..6 are all shorter than
@@ -123,7 +123,29 @@ class PathologicalCorpusSpec extends SparkSpec {
     // the eager entry points persist an intermediate and release it
     // after the checkpoint job; when that job throws, the release must
     // still happen, or the intermediate stays cached for the session
-    releasesOnFailure(NearDup.dedupMinhash(spark, poisonedText, 64, 16, 0.4))
+    releasesOnFailure(NearDup.dedupMinhash(poisonedText, 64, 16, 0.4))
+  }
+
+  test("a rejected signature width or band count persists nothing") {
+    // (numHashes, bands) is validated before the signatures are
+    // persisted: a band count that does not divide the width, a zero
+    // band count or width, or more portable slots than seeds must be
+    // an IllegalArgumentException that leaves no cached plan behind
+    def cachedPlans: Int = org.apache.spark.sql.grafttest.CachedPlans.count(spark)
+    val dir = java.nio.file.Files.createTempDirectory("mhidx").toString
+    Seq[(String, () => Any)](
+      "64/10" -> (() => NearDup.dedupMinhash(corpus, 64, 10, 0.4)),
+      "64/0" -> (() => NearDup.dedupMinhash(corpus, 64, 0, 0.4)),
+      "0/4" -> (() => NearDup.dedupMinhash(corpus, 0, 4, 0.4)),
+      "portable 16/3" -> (() => NearDup.dedupMinhashPortable(corpus, 16, 3, 0.4)),
+      "portable 32/4" -> (() => NearDup.dedupMinhashPortable(corpus, 32, 4, 0.4)),
+      "index 64/10" -> (() => NearDup.minhashIndexWrite(spark, corpus, dir, 64, 10))
+    ).foreach { case (name, call) =>
+      val before = cachedPlans
+      intercept[IllegalArgumentException](call())
+      assert(cachedPlans == before,
+        s"$name: cached plans went from $before to $cachedPlans")
+    }
   }
 
   test("a failing index write releases minhashIndexWrite's cache") {

@@ -13,6 +13,18 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  test("building every ExplainDump pipeline runs no job and leaves no " +
+    "cached plan") {
+    def cachedPlans: Int = org.apache.spark.sql.grafttest.CachedPlans.count(spark)
+    // the table's one-time schema read stays outside the windows
+    graft.ops.Sources.table(spark, sf, "documents")
+    ExplainDump.pipelines(spark, sf).foreach { case (name, mk) =>
+      val before = cachedPlans
+      assert(jobsOf(mk()) == 0, s"$name ran jobs while building its plan")
+      assert(cachedPlans == before, s"$name left a cached plan")
+    }
+  }
+
   test("sort_topk plans as TakeOrderedAndProject (no global sort)") {
     val p = plan(Relational.sortTopk(spark, sf))
     assert(p.contains("TakeOrderedAndProject"))

@@ -47,7 +47,7 @@ class PortableHashSpec extends SparkSpec {
       (2L, "pack my box with five dozen liquor jugs"),
       (3L, "sphinx of black quartz judge my vow"))
       .toDF("doc_id", "text")
-    val q = NearDup.simhash(spark, docs)
+    val q = NearDup.simhash(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val sql = docs
       .select(col("doc_id"), explode(array_distinct(
@@ -67,7 +67,7 @@ class PortableHashSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog"),
       (3L, "entirely different content about spark engines"),
       (4L, "")).toDF("doc_id", "text")
-    val out = NearDup.simhashPortable(spark, docs).collect()
+    val out = NearDup.simhashPortable(docs).collect()
     assert(out.map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
     out.foreach { r =>
       val sh = r.getLong(1)
@@ -90,7 +90,7 @@ class PortableHashSpec extends SparkSpec {
     val docs = Seq((1L, a), (2L, a),
       (3L, (1 to 20).map(i => s"zz$i").mkString(" ")),
       (4L, "too short")).toDF("doc_id", "text")
-    val out = NearDup.simhashShinglePortable(spark, docs).collect()
+    val out = NearDup.simhashShinglePortable(docs).collect()
     // doc 4 has < 3 tokens -> no shingles -> absent
     assert(out.map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
     val m = out.map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -113,14 +113,14 @@ class PortableHashSpec extends SparkSpec {
     val dup = Seq((1L, a), (2L, a),
       (3L, "one two three four five six seven eight nine"))
       .toDF("doc_id", "text")
-    val r1 = NearDup.dedupMinhashPortable(spark, dup, 16, 4, 0.4)
+    val r1 = NearDup.dedupMinhashPortable(dup, 16, 4, 0.4)
       .collect()(0)
     assert(r1.getLong(0) == 1L, s"expected exactly the (1,2) pair: $r1")
     assert(r1.getLong(1) == 16L, "an exact dup must agree in all 16 slots")
     assert(r1.getDouble(2) == 1.0)
     val disj = Seq((1L, "aa bb cc dd ee ff"), (2L, "gg hh ii jj kk ll"))
       .toDF("doc_id", "text")
-    val r0 = NearDup.dedupMinhashPortable(spark, disj, 16, 4, 0.4)
+    val r0 = NearDup.dedupMinhashPortable(disj, 16, 4, 0.4)
       .collect()(0)
     assert(r0.getLong(0) == 0L && r0.getLong(1) == 0L
       && r0.getDouble(2) == 0.0, s"disjoint docs produced pairs: $r0")
@@ -179,7 +179,7 @@ class PortableHashSpec extends SparkSpec {
     val base = (1 to 30).map(i => s"tok$i").mkString(" ")
     val edited = (1 to 29).map(i => s"tok$i").mkString(" ") + " CHANGED"
     val docs = Seq((1L, base), (2L, edited)).toDF("doc_id", "text")
-    val r = NearDup.dedupMinhashPortable(spark, docs, 16, 4, 0.4)
+    val r = NearDup.dedupMinhashPortable(docs, 16, 4, 0.4)
       .collect()(0)
     // 27 of 29 union shingles shared (true jaccard 0.931): with 16
     // fixed md5 permutations the outcome is deterministic — the pair

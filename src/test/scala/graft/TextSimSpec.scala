@@ -152,10 +152,10 @@ class TextSimSpec extends SparkSpec {
     val pairs = NearDup.dedupNgram(spark, docs, 3, 20, 0.2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((1L, 2L)))
-    val sigs = NearDup.minhashSignatures(spark, docs, 16).collect()
+    val sigs = NearDup.minhashSignatures(docs, 16).collect()
     assert(sigs.length == 3 &&
       sigs.forall(_.getSeq[Long](1).length == 16))
-    val summary = NearDup.dedupMinhash(spark, docs, 64, 16, 0.4).collect()
+    val summary = NearDup.dedupMinhash(docs, 64, 16, 0.4).collect()
     assert(summary.length == 1 &&
       summary(0).getLong(0) >= 1L, "near-dup pair (1,2) must be a candidate")
   }

@@ -67,7 +67,7 @@ class CorpusEndToEndSpec extends graft.SparkSpec {
   test("banded MinHash surfaces every planted identical pair") {
     val expectedPairs = expectedGroups.values
       .map(g => g.size.toLong * (g.size - 1) / 2).sum
-    val row = graft.ops.NearDup.dedupMinhash(spark, corpus, 64, 16, 0.4)
+    val row = graft.ops.NearDup.dedupMinhash(corpus, 64, 16, 0.4)
       .head()
     assert(row.getLong(0) >= expectedPairs,
       s"${row.getLong(0)} candidate pairs < $expectedPairs planted identical pairs")
