@@ -89,13 +89,15 @@ object Bench {
     *    runs (checkpoints, collected brackets and order statistics);
     *  - `exec`: the noop write — optimization, planning, codegen,
     *    scheduling and the tasks.
-    * Jobs and ms are per window; Catalyst ms, stages, tasks and the
-    * tasks' summed run, deserialize, scheduler-delay and GC ms cover
-    * both. Counts come from the listener's counter deltas
-    * ([[Metrics.measure]]); its drains sit outside the timed spans.
+    * Jobs and ms are per window; Catalyst ms, codegen compiles and
+    * compile ms, stages, tasks and the tasks' summed run, deserialize,
+    * scheduler-delay and GC ms cover both. Counts come from the
+    * listener's counter deltas ([[Metrics.measure]]); its drains sit
+    * outside the timed spans.
     */
   final case class Layers(buildMs: Double, execMs: Double,
                           buildJobs: Long, execJobs: Long, catalystMs: Long,
+                          codegenCompiles: Long, codegenMs: Long,
                           stages: Long, tasks: Long, taskRunMs: Long,
                           taskDeserializeMs: Long, schedulerDelayMs: Long,
                           gcMs: Long) {
@@ -104,6 +106,7 @@ object Bench {
       def ms(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
       s"""{"buildMs":${ms(buildMs)},"execMs":${ms(execMs)},""" +
         s""""buildJobs":$buildJobs,"execJobs":$execJobs,"catalystMs":$catalystMs,""" +
+        s""""codegenCompiles":$codegenCompiles,"codegenMs":$codegenMs,""" +
         s""""stages":$stages,"tasks":$tasks,"taskRunMs":$taskRunMs,""" +
         s""""taskDeserializeMs":$taskDeserializeMs,""" +
         s""""schedulerDelayMs":$schedulerDelayMs,"gcMs":$gcMs}"""
@@ -135,7 +138,8 @@ object Bench {
     def both(k: String): Long = (b.getOrElse(k, 0.0) + e.getOrElse(k, 0.0)).round
     Layers(buildMs, execMs, b.getOrElse("jobs_total", 0.0).round,
       e.getOrElse("jobs_total", 0.0).round,
-      buildCatalyst + both("catalyst_ms_sum"), both("stages_total"),
+      buildCatalyst + both("catalyst_ms_sum"), both("codegen_compiles_total"),
+      both("codegen_ms_sum"), both("stages_total"),
       both("tasks_total"), both("task_run_ms_sum"),
       both("task_deserialize_ms_sum"), both("task_scheduler_delay_ms_sum"),
       both("task_gc_ms_sum"))

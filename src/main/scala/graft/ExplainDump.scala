@@ -206,7 +206,7 @@ object ExplainDump {
     }
     Seq(
       "dedup_ngram_pipeline" -> (() => released(
-        dedupNgramPlan(spark, docs, 3, DefaultMaxDf, DefaultMinJaccard))),
+        dedupNgramPlan(docs, 3, DefaultMaxDf, DefaultMinJaccard))),
       "dedup_containment_pipeline" -> (() =>
         containmentPairsPlan(docs, 3, DefaultMaxDf, DefaultMinContain)),
       "dedup_minhash_pipeline" -> (() => released(

@@ -3,9 +3,11 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.DoubleAdder
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftbridge.ListenerDrain
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -24,7 +26,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    carries, zero extra scans;
   *  - as a SparkListener it counts the scheduler's work: jobs, stages,
   *    tasks, and the tasks' summed run, deserialize, scheduler-delay
-  *    and GC ms.
+  *    and GC ms;
+  *  - Janino compiles and their ms, which no bus carries: read off
+  *    Spark's process-wide codegen counters ([[Metrics.codegen]]),
+  *    counted from the listener's construction.
   * The same counters serve `/metrics` ([[Metrics.serveMetrics]]) and
   * Bench's per-query layers ([[Metrics.measure]] deltas).
   */
@@ -34,6 +39,8 @@ final class MetricsListener extends SparkListener with QueryExecutionListener {
   // (e.g. avg_quality in [0, 1] — longValue() would truncate them to
   // 0); counts stay exact as doubles up to 2^53.
   private val counters = new ConcurrentHashMap[String, DoubleAdder]()
+
+  private val (compiles0, compileNs0) = Metrics.codegen
 
   private def add(key: String, v: Double): Unit =
     counters.computeIfAbsent(key, _ => new DoubleAdder()).add(v)
@@ -83,6 +90,9 @@ final class MetricsListener extends SparkListener with QueryExecutionListener {
   def snapshot: Map[String, Double] = {
     val b = Map.newBuilder[String, Double]
     counters.forEach((k, v) => b += k -> v.sum())
+    val (compiles, compileNs) = Metrics.codegen
+    b += "codegen_compiles_total" -> (compiles - compiles0).toDouble
+    b += "codegen_ms_sum" -> (compileNs - compileNs0) / 1e6
     b.result()
   }
 }
@@ -137,6 +147,11 @@ object Metrics {
       (want -- have).foreach(l => child.listenerManager.register(l))
       registered.put(child, want): Unit
     }
+
+  /** Spark's codegen counters: classes compiled and compile ns, over
+    * the whole JVM (driver and local executors alike). */
+  def codegen: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   /** Wall ms of an action's Catalyst phases (analysis, optimization,
     * planning), as its tracker recorded them. Reading the tracker

@@ -114,8 +114,10 @@ object Pipelines {
     *
     * Runs at the drop's width ([[graft.ops.ShuffleWidth.atInputWidth]]):
     * on the caller's isolated child session, its shuffles sized to the
-    * CSV bytes. Concurrent calls on one session serialize there, with
-    * [[curationOver]] and the CC loop.
+    * CSV bytes, and interpreted, not compiled, under
+    * [[graft.ops.ShuffleWidth.InterpretBelowBytes]]. Concurrent calls
+    * on one session serialize there, with [[curationOver]] and the CC
+    * loop.
     */
   def quality2022(spark: SparkSession, inCsv: String,
                   outDir: String): QualityRun = {
@@ -240,9 +242,13 @@ object Pipelines {
     * ([[graft.ops.ShuffleWidth.atInputWidth]]): it plans on the
     * caller's isolated child session, every exchange at
     * ⌈docs bytes / 1 MiB⌉ partitions capped at the caller's width, and
-    * returns only counts. Concurrent calls on one session serialize
-    * on that child, as the CC loop inside always did; the loop itself
-    * runs on the child's own child.
+    * returns only counts. A corpus under
+    * [[graft.ops.ShuffleWidth.InterpretBelowBytes]] runs interpreted:
+    * its ~120 generated classes cost more to compile than they save,
+    * and at Spark's default codegen cache they are compiled again on
+    * every call. Concurrent calls on one session serialize on that
+    * child, as the CC loop inside always did; the loop itself runs on
+    * the child's own child, under the same conf.
     */
   def curationOver(spark: SparkSession, docs: DataFrame,
                    embeddings: Option[DataFrame], outDir: String,
@@ -253,11 +259,11 @@ object Pipelines {
     require(survivorPolicy == "min-id" || survivorPolicy == "quality",
       s"survivorPolicy must be 'min-id' or 'quality', got '$survivorPolicy'")
     ShuffleWidth.atInputWidth(spark, docs)(s =>
-      curationRun(s, Replan.onto(s, docs), embeddings.map(Replan.onto(s, _)),
+      curationRun(Replan.onto(s, docs), embeddings.map(Replan.onto(s, _)),
         outDir, budget, clusterCap, survivorPolicy, spanScrub))
   }
 
-  private def curationRun(spark: SparkSession, docs: DataFrame,
+  private def curationRun(docs: DataFrame,
                           embeddings: Option[DataFrame], outDir: String,
                           budget: Long, clusterCap: Option[Int],
                           survivorPolicy: String,
@@ -277,7 +283,7 @@ object Pipelines {
     //    tie-break) — the NearDup.dedupSurvivor policy, running on any
     //    corpus (no n_chars column needed). The clusters come back
     //    checkpointed, so ranking them re-reads no pair build.
-    val cc = NearDup.dedupCluster(spark, docs.select("doc_id", "text"),
+    val cc = NearDup.dedupCluster(docs.select("doc_id", "text"),
       maxIters = 20)
     val nearDrop = survivorPolicy match {
       case "min-id" =>
@@ -293,7 +299,7 @@ object Pipelines {
     //    held-out split (same md5 rule as the declared query), in one
     //    labeled scan. A null id is on neither side, so its grams do
     //    not count toward document frequency either
-    val contaminated = NearDup.decontaminateSplit(spark,
+    val contaminated = NearDup.decontaminateSplit(
         docs.filter(col("doc_id").isNotNull).select("doc_id", "text"),
         Sampling.hexNibble(col("doc_id")) >= "e")
       .select(col("doc_id"), lit(true).as("contaminated"))
@@ -334,7 +340,7 @@ object Pipelines {
         case Some(cap) =>
           val emb = embeddings.getOrElse(throw new IllegalArgumentException(
             "clusterCap requires an embeddings relation"))
-          val assign = Cluster.kmeansAssign(spark, emb, k = 8, iters = 3)
+          val assign = Cluster.kmeansAssign(emb, k = 8, iters = 3)
             .select(col("vec_id").as("doc_id"), col("cluster_id"))
           val overCap = d4.select("doc_id").join(assign, "doc_id")
             .withColumn("rn", row_number().over(
@@ -353,7 +359,7 @@ object Pipelines {
         case None => train0
         case Some(nSpan) =>
           train0.drop("text")
-            .join(NearDup.scrubSpansText(spark,
+            .join(NearDup.scrubSpansText(
                 train0.select("doc_id", "text"), nSpan)
               .select(col("doc_id"), col("scrubbed_text").as("text")),
               "doc_id")

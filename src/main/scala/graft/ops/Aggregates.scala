@@ -724,12 +724,12 @@ object Aggregates {
     * argmax carries exactly that value).
     */
   def aggMinmaxBy(s: SparkSession, dir: String): DataFrame =
-    aggMinmaxBy(s, Sources.table(s, dir, "events"))
+    aggMinmaxBy(Sources.table(s, dir, "events"))
 
   /** [[aggMinmaxBy]] over any
     * `(event_id, event_type, value)` relation.
     */
-  def aggMinmaxBy(s: SparkSession, events: DataFrame): DataFrame = {
+  def aggMinmaxBy(events: DataFrame): DataFrame = {
     val twoTo63 = "CAST('9223372036854775808' AS DECIMAL(19,0))"
     val ub = graft.functions.VectorFunctions.dbits(col("value"))
       .cast(DecimalType(20, 0)) + expr(twoTo63)

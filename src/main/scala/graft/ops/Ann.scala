@@ -86,12 +86,12 @@ object Ann {
     */
   def simAnnIvf(s: SparkSession, dir: String, queryId: Long = 0L,
                 k: Int = 10, nLists: Int = 16, nProbe: Int = 4): DataFrame =
-    simAnnIvf(s, Sources.table(s, dir, "embeddings"), queryId, k, nLists,
+    simAnnIvf(Sources.table(s, dir, "embeddings"), queryId, k, nLists,
       nProbe)
 
   /** [[simAnnIvf]] over any `(vec_id, embedding)` relation. */
-  def simAnnIvf(s: SparkSession, emb: DataFrame, queryId: Long,
-                k: Int, nLists: Int, nProbe: Int): DataFrame = {
+  def simAnnIvf(emb: DataFrame, queryId: Long, k: Int, nLists: Int,
+                nProbe: Int): DataFrame = {
     val e = nonZero(emb)
     // deterministic coarse centroids: the nLists lowest-id vectors;
     // assignment divides each dot by the centroid's norm (|v| is
@@ -112,7 +112,7 @@ object Ann {
                        k: Int = 10, nLists: Int = 16, nProbe: Int = 4,
                        iters: Int = 3): DataFrame = {
     val e = nonZero(emb)
-    val trained = Cluster.kmeansCentroids(s, emb, nLists, iters)
+    val trained = Cluster.kmeansCentroids(emb, nLists, iters)
     val centroids = s.range(1).select(
       array(trained.toIndexedSeq.map(c =>
         array(c.toIndexedSeq.map(lit): _*)): _*).as("cs"))
@@ -174,11 +174,11 @@ object Ann {
     */
   def simAnnLsh(s: SparkSession, dir: String, queryId: Long = 0L,
                 k: Int = 10, nBits: Int = 8, dims: Int = 64): DataFrame =
-    simAnnLsh(s, Sources.table(s, dir, "embeddings"), queryId, k, nBits, dims)
+    simAnnLsh(Sources.table(s, dir, "embeddings"), queryId, k, nBits, dims)
 
   /** [[simAnnLsh]] over any `(vec_id, embedding)` relation. */
-  def simAnnLsh(s: SparkSession, emb: DataFrame, queryId: Long,
-                k: Int, nBits: Int, dims: Int): DataFrame = {
+  def simAnnLsh(emb: DataFrame, queryId: Long, k: Int, nBits: Int,
+                dims: Int): DataFrame = {
     val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
     val e = nonZero(emb)
       .withColumn("bucket", bucketCode(col("v"), dims, nBits))
@@ -279,8 +279,8 @@ object Ann {
     */
   def ivfIndexWrite(s: SparkSession, emb: DataFrame, indexDir: String,
                     nLists: Int = 16, iters: Int = 3): Unit = {
-    val trained = Cluster.kmeansCentroids(s, emb, nLists, iters)
-    Cluster.assignWith(s, emb, trained)
+    val trained = Cluster.kmeansCentroids(emb, nLists, iters)
+    Cluster.assignWith(emb, trained)
       // a stored zero-norm vector would make every later probe throw
       // on its 0/0 cosine — exclude at build time (same nonZero rule)
       .filter(graft.functions.VectorFunctions

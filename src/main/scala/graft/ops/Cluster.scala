@@ -37,12 +37,11 @@ object Cluster {
     * final centroids, with the squared euclidean distance as the
     * quality signal (sum over clusters = the k-means inertia).
     */
-  def kmeansAssign(s: SparkSession, emb: DataFrame, k: Int,
-                   iters: Int = 5): DataFrame =
-    kmeansAssign(s, emb, k, iters, loop = false)
+  def kmeansAssign(emb: DataFrame, k: Int, iters: Int = 5): DataFrame =
+    kmeansAssign(emb, k, iters, loop = false)
 
-  private[graft] def kmeansAssign(s: SparkSession, emb: DataFrame, k: Int,
-                                  iters: Int, loop: Boolean): DataFrame = {
+  private[graft] def kmeansAssign(emb: DataFrame, k: Int, iters: Int,
+                                  loop: Boolean): DataFrame = {
     // ONE persisted vector relation feeds both the Lloyd train and the
     // final assignment (r18 fixed-cost pass: the assignment previously
     // re-derived scan + cast + repartition that the train had already
@@ -77,7 +76,7 @@ object Cluster {
     * so a caller that already trained (e.g. [[graft.ops.Ann]]'s
     * materialized index) does not pay a second Lloyd run.
     */
-  def assignWith(s: SparkSession, emb: DataFrame,
+  def assignWith(emb: DataFrame,
                  centroids: Array[Array[Double]]): DataFrame =
     assignOn(vectors(emb), centroids)
 
@@ -106,9 +105,9 @@ object Cluster {
     * doubles on the driver) — the coarse-quantizer training step
     * [[Ann.simAnnIvfTrained]] plugs into its search plan.
     */
-  def kmeansCentroids(s: SparkSession, emb: DataFrame, k: Int,
+  def kmeansCentroids(emb: DataFrame, k: Int,
                       iters: Int): Array[Array[Double]] =
-    kmeansCentroids(s, emb, k, iters, None)
+    kmeansCentroids(emb, k, iters, None)
 
   /** [[kmeansCentroids]] with a WARM START (r19 job-count pass): a
     * production pipeline re-training periodically — the SemDedup /
@@ -119,13 +118,12 @@ object Cluster {
     * embedding dimensionality; it only seeds the iteration, so a poor
     * warm start costs convergence speed, never correctness.
     */
-  def kmeansCentroids(s: SparkSession, emb: DataFrame, k: Int, iters: Int,
+  def kmeansCentroids(emb: DataFrame, k: Int, iters: Int,
                       init: Option[Array[Array[Double]]])
       : Array[Array[Double]] =
-    kmeansCentroids(s, emb, k, iters, init, loop = false)
+    kmeansCentroids(emb, k, iters, init, loop = false)
 
-  private[graft] def kmeansCentroids(s: SparkSession, emb: DataFrame, k: Int,
-                                     iters: Int,
+  private[graft] def kmeansCentroids(emb: DataFrame, k: Int, iters: Int,
                                      init: Option[Array[Array[Double]]],
                                      loop: Boolean): Array[Array[Double]] = {
     // persist across the Lloyd loop: every iteration re-reads the
@@ -426,7 +424,7 @@ object Cluster {
     */
   def clusterKmeans(s: SparkSession, dir: String, k: Int = 8,
                     iters: Int = 3): DataFrame =
-    kmeansAssign(s, Sources.table(s, dir, "embeddings"), k, iters)
+    kmeansAssign(Sources.table(s, dir, "embeddings"), k, iters)
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("n"),
         round(sum(col("dist2")), 2).as("inertia"))

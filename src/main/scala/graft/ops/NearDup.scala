@@ -774,12 +774,12 @@ object NearDup {
   def dedupNgram(s: SparkSession, dir: String, n: Int = 3,
                  maxDf: Int = DefaultMaxDf,
                  minJaccard: Double = DefaultMinJaccard): DataFrame =
-    dedupNgram(s, Sources.table(s, dir, "documents"), n, maxDf, minJaccard)
+    dedupNgram(Sources.table(s, dir, "documents"), n, maxDf, minJaccard)
 
   /** [[dedupNgram]] over any `(doc_id, text)` relation. */
-  def dedupNgram(s: SparkSession, docs: DataFrame, n: Int,
-                 maxDf: Int, minJaccard: Double): DataFrame = {
-    val (pairs, posts) = dedupNgramPlan(s, docs, n, maxDf, minJaccard)
+  def dedupNgram(docs: DataFrame, n: Int, maxDf: Int,
+                 minJaccard: Double): DataFrame = {
+    val (pairs, posts) = dedupNgramPlan(docs, n, maxDf, minJaccard)
     // runs the pipeline once (through the posting-list cache); the
     // checkpointed blocks are bounded by the surviving pair count and
     // are released by the ContextCleaner when the returned DataFrame
@@ -797,7 +797,7 @@ object NearDup {
     * build instead of paying two back-to-back jobs over the same
     * data ([[dedupCluster]] fuses edge symmetrization this way).
     */
-  private[graft] def dedupNgramPlan(s: SparkSession, docs: DataFrame, n: Int,
+  private[graft] def dedupNgramPlan(docs: DataFrame, n: Int,
                                     maxDf: Int, minJaccard: Double)
       : (DataFrame, DataFrame) = {
     // gram identity = its 64-bit shingle hash (sufficient for df
@@ -857,7 +857,7 @@ object NearDup {
   def dedupContainment(s: SparkSession, dir: String, n: Int = 3,
                        maxDf: Int = DefaultMaxDf,
                        minContain: Double = DefaultMinContain): DataFrame =
-    dedupContainment(s, Sources.table(s, dir, "documents"), n, maxDf,
+    dedupContainment(Sources.table(s, dir, "documents"), n, maxDf,
       minContain)
 
   /** [[dedupContainment]] over any `(doc_id, text)` relation.
@@ -878,8 +878,8 @@ object NearDup {
     * posting row is noise next to the eliminated exchanges).
     * Verified hash-identical at sf0.01 and sf0.1.
     */
-  def dedupContainment(s: SparkSession, docs: DataFrame, n: Int,
-                       maxDf: Int, minContain: Double): DataFrame =
+  def dedupContainment(docs: DataFrame, n: Int, maxDf: Int,
+                       minContain: Double): DataFrame =
     materialize(containmentPairsPlan(docs, n, maxDf, minContain))
 
   /** The un-materialized candidate-pair plan behind
@@ -943,7 +943,7 @@ object NearDup {
   def decontaminate(s: SparkSession, dir: String,
                     maxDf: Int = DefaultMaxDf,
                     dfPrePass: Boolean = false): DataFrame =
-    decontaminateSplit(s, Sources.table(s, dir, "documents"),
+    decontaminateSplit(Sources.table(s, dir, "documents"),
       Sampling.hexNibble(col("doc_id")) >= "e", maxDf, 3, dfPrePass)
 
   /** Decontamination against a caller-provided eval set: flag every
@@ -954,11 +954,10 @@ object NearDup {
     * [[decontaminate]] derives its eval split from the md5 rule so it
     * stays self-contained for the oracle.
     */
-  def decontaminateAgainst(s: SparkSession, train: DataFrame,
-                           evalSet: DataFrame, maxDf: Int = DefaultMaxDf,
-                           n: Int = 3,
+  def decontaminateAgainst(train: DataFrame, evalSet: DataFrame,
+                           maxDf: Int = DefaultMaxDf, n: Int = 3,
                            dfPrePass: Boolean = false): DataFrame =
-    decontaminateSplit(s,
+    decontaminateSplit(
       train.select(col("doc_id"), col("text"), lit(false).as("is_test"))
         .unionByName(evalSet.select(col("doc_id"), col("text"),
           lit(true).as("is_test"))),
@@ -998,7 +997,7 @@ object NearDup {
     * stop-shingle-heavy SyntheticDocs corpus and the fixture tables.
     * Default off: at bench scale the one-shuffle form wins.
     */
-  def decontaminateSplit(s: SparkSession, docs: DataFrame, isTest: Column,
+  def decontaminateSplit(docs: DataFrame, isTest: Column,
                          maxDf: Int = DefaultMaxDf, n: Int = 3,
                          dfPrePass: Boolean = false): DataFrame = {
     // spread the per-token work (see [[shingleHashesOf]]; split-gated)
@@ -1219,12 +1218,11 @@ object NearDup {
     * copy of the pair set, at every scale.
     */
   def dedupCluster(s: SparkSession, dir: String, maxIters: Int = 20): DataFrame =
-    dedupCluster(s, Sources.table(s, dir, "documents"), maxIters)
+    dedupCluster(Sources.table(s, dir, "documents"), maxIters)
 
   /** [[dedupCluster]] over any `(doc_id, text)` relation. */
-  def dedupCluster(s: SparkSession, docs: DataFrame,
-                   maxIters: Int): DataFrame = {
-    val (pairs, posts) = dedupNgramPlan(s, docs, 3, DefaultMaxDf,
+  def dedupCluster(docs: DataFrame, maxIters: Int): DataFrame = {
+    val (pairs, posts) = dedupNgramPlan(docs, 3, DefaultMaxDf,
       DefaultMinJaccard)
     val (edges, edgeCount) =
       try symmetrizeCheckpoint(pairs.select("doc_a", "doc_b"))
@@ -1562,7 +1560,7 @@ object NearDup {
     * instead.
     */
   def dedupFuzzy(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame =
-    dedupFuzzy(s,
+    dedupFuzzy(
       Sources.table(s, dir, "part").select(col("p_name").as("name")),
       maxDist)
 
@@ -1595,8 +1593,7 @@ object NearDup {
   }
 
   /** [[dedupFuzzy]] over any single-string-column relation `(name)`. */
-  def dedupFuzzy(s: SparkSession, names: DataFrame,
-                 maxDist: Int): DataFrame =
+  def dedupFuzzy(names: DataFrame, maxDist: Int): DataFrame =
     fuzzyCandidates(names, maxDist)
       // threshold form: the DP matrix only evaluates the |maxDist|
       // diagonal band and bails out early (returns -1 past the
@@ -1695,7 +1692,7 @@ object NearDup {
     *    and the collect_list re-sort all disappear.
     */
   def scrubSpans(s: SparkSession, dir: String, n: Int = 8): DataFrame =
-    scrubSpans(s, Sources.table(s, dir, "documents"), n)
+    scrubSpans(Sources.table(s, dir, "documents"), n)
 
   /** Max tokens per document under [[scrubSpans]]'s packed
     * first-occurrence key (2²¹; positions at or past it raise, as do
@@ -1705,8 +1702,8 @@ object NearDup {
   final val ScrubMaxDocTokens: Int = 1 << 21
 
   /** [[scrubSpans]] over any `(doc_id, text)` relation. */
-  def scrubSpans(s: SparkSession, docs: DataFrame, n: Int): DataFrame =
-    scrubSpansText(s, docs, n)
+  def scrubSpans(docs: DataFrame, n: Int): DataFrame =
+    scrubSpansText(docs, n)
       .select(col("doc_id"), col("n_tokens"), col("n_removed"),
         sha2(col("scrubbed_text"), 256).as("scrubbed_hash"))
 
@@ -1718,7 +1715,7 @@ object NearDup {
     * pipeline consuming the scrub in place wants the text, not the
     * digest. Unordered (the caller re-keys or sorts).
     */
-  def scrubSpansText(s: SparkSession, docs: DataFrame, n: Int): DataFrame = {
+  def scrubSpansText(docs: DataFrame, n: Int): DataFrame = {
     require(n >= 2, s"span width must be >= 2 tokens, got $n")
     // spread the per-token stages across tasks (single-file corpus =
     // one input split otherwise; split-gated since r22 — a many-split

@@ -76,12 +76,13 @@ private[graft] object SessionIso {
     }
   }
 
-  /** TEST PROBE: the cached child's view of `key` (None if no child
-    * yet or the key is unset) — lets specs assert the copy-and-undo
+  /** TEST PROBE: the value the cached child carries SET for `key`
+    * (None if no child yet or the key is unset; a registered key's
+    * default does not count) — lets specs assert the copy-and-undo
     * contract without exposing the child. */
   private[graft] def childConf(sess: SparkSession,
                                key: String): Option[String] =
     children.synchronized {
-      Option(children.get(sess)).flatMap(_.conf.getOption(key))
+      Option(children.get(sess)).flatMap(_.conf.getAll.get(key))
     }
 }

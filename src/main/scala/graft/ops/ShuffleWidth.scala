@@ -22,6 +22,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * One rule widens instead: [[forSaltedJoin]], the salted exchange
   * of `Relational.fewKeySaltedJoin`, never narrower than the cores
   * its salt exists to fill.
+  *
+  * The eager pipelines' child carries a second measured rule,
+  * [[InterpretBelowBytes]]: below it, and only while the JVM's codegen
+  * cache is Spark's default size, they run [[Interpreted]] — on inputs
+  * that small, compiling their ~120 generated classes per call costs
+  * more than the compiled code saves.
   */
 private[graft] object ShuffleWidth {
 
@@ -66,6 +72,77 @@ private[graft] object ShuffleWidth {
     * ("Shuffle width: one helper"). */
   val BytesPerPartition: Long = 1L << 20
 
+  /** Input bytes below which the eager pipelines run [[Interpreted]]
+    * (see [[atInputWidth]]), against the same size estimate as
+    * [[BytesPerPartition]], while the JVM's codegen cache holds at
+    * most [[InterpretMaxCacheEntries]] entries.
+    *
+    * Measured with the verdict forced each way ([[forcingInterpret]])
+    * over the same inputs, `local[4]`, width cap 8, AQE off, one JVM
+    * per cache size (`spark.sql.codegen.cache.maxEntries`):
+    * `curationOver` over `graft-docs` corpora (seed 7, 4 parquet
+    * files) and `quality2022` over one-file users drops (perfbench's
+    * row mix). One warm-up call each way, then alternating pairs (3;
+    * 5 for `quality2022` and the second `curationOver` JVM at 100).
+    * Application-thread CPU seconds per call (the bench's metric),
+    * median, interpreted / codegen:
+    *
+    * {{{
+    *  curationOver
+    *    MB    cache 100               cache 250     cache 1000
+    *   0.11   1.70 /  2.94            1.66 / 1.60   2.10 /  2.04
+    *   0.25   2.24 /  3.13            2.32 / 1.93   2.39 /  2.05
+    *   0.50   3.39 /  3.86            4.04 / 2.90   3.65 /  3.28
+    *   0.61   3.88 /  4.40
+    *   0.72   4.63 /  4.88
+    *   0.83   4.80 /  4.77   5.64 / 5.24
+    *   0.90   5.10 /  5.25   5.40 / 5.60
+    *   0.99   5.48 /  4.77   5.11 / 5.07   6.58 / 5.15   6.51 /  4.55
+    *   1.10                  6.65 / 6.27
+    *   1.96  10.48 /  9.20                          10.41 /  8.05
+    *   3.89  20.30 / 17.93                          18.45 / 14.00
+    *   7.76  41.82 / 33.56                          35.56 / 26.84
+    *
+    *  quality2022
+    *    MB    cache 100, alone   cache 100, evicted   cache 1000
+    *   0.09   0.33 / 0.37        0.36 / 0.69          0.34 / 0.42
+    *   0.24   0.33 / 0.32        0.43 / 0.66          0.37 / 0.34
+    *   0.48   0.39 / 0.34        0.54 / 0.79          0.44 / 0.39
+    *   0.97   0.65 / 0.50        0.70 / 0.84          0.60 / 0.51
+    *   1.96   0.97 / 0.74        1.15 / 1.31          1.08 / 0.80
+    *   3.95   1.77 / 1.26        2.35 / 2.20          1.89 / 1.38
+    *   8.00   3.23 / 2.09        4.86 / 4.60          3.68 / 2.69
+    * }}}
+    *
+    * At cache 100 a warm codegen `curationOver` compiled 96–128
+    * classes, an interpreted one 0–7; at 250 and 1000 both compiled
+    * none. The second cache-100 column is a second JVM (±15 % call
+    * spread). `quality2022` "evicted" runs a codegen `curationOver`
+    * (450 docs) before each call, as in any JVM that also runs it:
+    * codegen then compiles 38–40 classes a call, interpreted 4;
+    * "alone" keeps its ~40 classes cached (1 compile a call).
+    *
+    * Interpreting wins while compiles outweigh data work.
+    * `curationOver`, whose classes overflow the default cache on their
+    * own, is no worse interpreted beyond the calls' spread through
+    * 0.90 MB in both JVMs, and 15 % worse at 0.99 MB in one of them;
+    * T = 900 KiB (0.92 MB) sits between. Wall time agrees: interpreted
+    * was at or below codegen through 1.96 MB. `quality2022` evicted
+    * wins interpreted to ~2 MB; alone, codegen wins from 0.48 MB, so
+    * there the rule costs up to ~0.05 s a call between 0.48 MB and T.
+    * At caches of 250 and 1000 codegen is no worse at any size and
+    * 10–30 % cheaper from 0.25 MB, hence [[InterpretMaxCacheEntries]].
+    */
+  val InterpretBelowBytes: Long = 900L << 10
+
+  /** The largest codegen cache (`spark.sql.codegen.cache.maxEntries`,
+    * a static conf fixed per JVM) under which [[InterpretBelowBytes]]
+    * applies: measured at Spark's default 100, where one
+    * `curationOver` call's ~108 entries evict each other; at 250 and
+    * 1000 (the sweep above) cached codegen is no worse at any size.
+    * Sizes between 100 and 250 are unmeasured and keep codegen. */
+  val InterpretMaxCacheEntries: Int = 100
+
   private def clamp(w: BigInt, cap: Int): Int =
     w.max(BigInt(1)).min(BigInt(math.max(1, cap))).toInt
 
@@ -92,19 +169,44 @@ private[graft] object ShuffleWidth {
   /** The session's width — the cap the narrowing rules clamp to. */
   def cap(sess: SparkSession): Int = sess.sessionState.conf.numShufflePartitions
 
+  /** The confs that run a child interpreted: no whole-stage codegen,
+    * and the expression factories (projections, predicates,
+    * orderings) on their interpreted implementations. Whole-stage off
+    * alone still compiled 109 classes per `curationOver` call. */
+  private[graft] val Interpreted: Map[String, String] = Map(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** Forces [[interprets]]'s verdict for the calls `f` makes — the
+    * seam the parity specs run both evaluations through. */
+  private[graft] def forcingInterpret[A](on: Boolean)(f: => A): A =
+    forced.withValue(Some(on))(f)
+  private val forced = new scala.util.DynamicVariable[Option[Boolean]](None)
+
+  /** Whether an eager pipeline over `bytes` of input on `sess` runs
+    * [[Interpreted]]: below [[InterpretBelowBytes]], in a JVM whose
+    * codegen cache holds at most [[InterpretMaxCacheEntries]]. */
+  def interprets(sess: SparkSession, bytes: BigInt): Boolean =
+    forced.value.getOrElse(bytes < InterpretBelowBytes &&
+      sess.conf.get("spark.sql.codegen.cache.maxEntries").toInt <=
+        InterpretMaxCacheEntries)
+
   /** Run `f` on `caller`'s [[SessionIso]] child at [[forInputBytes]]
-    * of `input`'s size estimate. Reading the estimate plans `input`
-    * and runs no job. For EAGER calls only — `f` must plan, run and
-    * return results, never a frame planned at the narrowed width. The
-    * caller's frames reach the child through
-    * `graftbridge.Replan.onto`. Holds the child's monitor (see
-    * [[SessionIso.withChild]]), so concurrent calls on one session
-    * serialize. */
+    * of `input`'s size estimate, [[Interpreted]] when [[interprets]]
+    * holds for it. Reading the estimate plans `input` and runs no job.
+    * For EAGER calls only — `f` must plan, run and return results,
+    * never a frame planned under the child's conf. The caller's
+    * frames reach the child through `graftbridge.Replan.onto`; loops
+    * that take their own child of it (the CC loop, the k-means train)
+    * copy its conf, so they run at the same evaluation. Holds the
+    * child's monitor (see [[SessionIso.withChild]]), so concurrent
+    * calls on one session serialize. */
   def atInputWidth[A](caller: SparkSession, input: DataFrame)
                      (f: SparkSession => A): A = {
-    val width = forInputBytes(
-      input.queryExecution.optimizedPlan.stats.sizeInBytes, cap(caller))
+    val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
+    val width = forInputBytes(bytes, cap(caller))
     SessionIso.withChild(caller,
-      Map("spark.sql.shuffle.partitions" -> width.toString))(f)
+      Map("spark.sql.shuffle.partitions" -> width.toString) ++
+        (if (interprets(caller, bytes)) Interpreted else Map.empty))(f)
   }
 }

@@ -251,11 +251,10 @@ object TextSim {
     */
   def simSearch(s: SparkSession, dir: String, queryId: Long = 0L,
                 k: Int = 10): DataFrame =
-    simSearch(s, Sources.table(s, dir, "embeddings"), queryId, k)
+    simSearch(Sources.table(s, dir, "embeddings"), queryId, k)
 
   /** [[simSearch]] over any `(vec_id, embedding)` relation. */
-  def simSearch(s: SparkSession, emb: DataFrame, queryId: Long,
-                k: Int): DataFrame = {
+  def simSearch(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
     val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
     val e = emb
       // zero-norm vectors have no cosine: under ANSI arithmetic the
@@ -290,11 +289,10 @@ object TextSim {
     */
   def dedupEmbed(s: SparkSession, dir: String,
                  minSim: Double = 0.4): DataFrame =
-    dedupEmbed(s, Sources.table(s, dir, "embeddings"), minSim)
+    dedupEmbed(Sources.table(s, dir, "embeddings"), minSim)
 
   /** [[dedupEmbed]] over any `(vec_id, embedding)` relation. */
-  def dedupEmbed(s: SparkSession, emb: DataFrame,
-                 minSim: Double): DataFrame = {
+  def dedupEmbed(emb: DataFrame, minSim: Double): DataFrame = {
     // norm once per vector (N dots), not once per pair (3·N² dots)
     val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
     val e = emb
@@ -333,10 +331,10 @@ object TextSim {
     * set (Ann.scala) and this exact join runs per-bucket.
     */
   def simKnn(s: SparkSession, dir: String, k: Int = 5): DataFrame =
-    simKnn(s, Sources.table(s, dir, "embeddings"), k)
+    simKnn(Sources.table(s, dir, "embeddings"), k)
 
   /** [[simKnn]] over any `(vec_id, embedding)` relation. */
-  def simKnn(s: SparkSession, emb: DataFrame, k: Int): DataFrame = {
+  def simKnn(emb: DataFrame, k: Int): DataFrame = {
     val nd = (a: Column, b: Column) => graft.functions.VectorFunctions.dot(a, b)
     val e = emb
       // no cosine for zero-norm vectors (ANSI 0/0 throws) — excluded
@@ -1273,10 +1271,10 @@ object TextSim {
     * `max_abs_err ≤ max_dim_span / 510`.
     */
   def embedQuantize(s: SparkSession, dir: String): DataFrame =
-    embedQuantize(s, Sources.table(s, dir, "embeddings"))
+    embedQuantize(Sources.table(s, dir, "embeddings"))
 
   /** [[embedQuantize]] over any `(vec_id, embedding)` relation. */
-  def embedQuantize(s: SparkSession, emb: DataFrame): DataFrame = {
+  def embedQuantize(emb: DataFrame): DataFrame = {
     val e = emb.select(col("vec_id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
       // quantization needs actual numbers: drop null/empty vectors

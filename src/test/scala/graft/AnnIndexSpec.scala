@@ -55,7 +55,7 @@ class AnnIndexSpec extends SparkSpec {
       .toString
     Ann.ivfIndexWrite(spark, vecs, dir, nLists = 16, iters = 2)
     val truth = queries.map { q =>
-      q -> TextSim.simSearch(spark, vecs, q, k)
+      q -> TextSim.simSearch(vecs, q, k)
         .collect().map(_.getLong(0)).toSet
     }.toMap
     val qVecs = queries.map { q =>

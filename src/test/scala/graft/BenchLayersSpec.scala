@@ -28,9 +28,26 @@ class BenchLayersSpec extends SparkSpec {
   test("the layers JSON carries every per-query profile field") {
     val j = sampleOf("proj_upper").json
     Seq("buildMs", "execMs", "buildJobs", "execJobs", "catalystMs",
-      "stages", "tasks", "taskRunMs", "taskDeserializeMs",
+      "codegenCompiles", "codegenMs", "stages", "tasks", "taskRunMs", "taskDeserializeMs",
       "schedulerDelayMs", "gcMs").foreach { k =>
       assert(j.contains("\"" + k + "\":"), s"$k missing from $j")
     }
+  }
+
+  test("the record counts a query's codegen compiles; a re-run hits the cache") {
+    // a literal no other plan carries makes the query's generated
+    // source new to this JVM
+    val unique = System.nanoTime()
+    val fn: (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame =
+      (s, _) => s.range(4).selectExpr(s"id * $unique AS x")
+    val l = Metrics.install(spark)
+    try {
+      val first = Bench.sample(spark, sf, fn, l)
+      assert(first.codegenCompiles >= 1 && first.codegenMs >= 0,
+        s"a new plan compiled nothing: $first")
+      val again = Bench.sample(spark, sf, fn, l)
+      assert(again.codegenCompiles == 0, s"the re-run recompiled: $again")
+    } finally Metrics.uninstall(spark, l)
   }
 }

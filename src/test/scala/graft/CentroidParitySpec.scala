@@ -31,7 +31,7 @@ class CentroidParitySpec extends SparkSpec {
   }
 
   test("bit-identical to the least(struct) form on the fixture, k=8") {
-    val cents = ops.Cluster.kmeansCentroids(spark,
+    val cents = ops.Cluster.kmeansCentroids(
       ops.Sources.table(spark, sf, "embeddings"), 8, 3)
     val both = vecs.select(col("vec_id"),
         oldAssign(cents).as("o"),
@@ -179,12 +179,12 @@ class CentroidParitySpec extends SparkSpec {
     val emb = ops.Sources.table(spark, sf, "embeddings")
     // generous cap so the fixed-point early exit, not the cap, ends
     // the train — the assertion below needs a genuinely converged fit
-    val trained = ops.Cluster.kmeansCentroids(spark, emb, 8, 50)
+    val trained = ops.Cluster.kmeansCentroids(emb, 8, 50)
     // re-training FROM the trained centroids must reproduce them
     // bit-for-bit in one round (the decimal-exact means make the
     // fixed point well-defined), regardless of how many extra rounds
     // the caller allows
-    val warm = ops.Cluster.kmeansCentroids(spark, emb, 8, 50, Some(trained))
+    val warm = ops.Cluster.kmeansCentroids(emb, 8, 50, Some(trained))
     assert(warm.length == trained.length)
     warm.indices.foreach { i =>
       assert(java.util.Arrays.equals(warm(i), trained(i)),
@@ -192,7 +192,7 @@ class CentroidParitySpec extends SparkSpec {
     }
     // a wrong-sized warm start fails loudly, not with a shape error
     intercept[IllegalArgumentException] {
-      ops.Cluster.kmeansCentroids(spark, emb, 8, 2,
+      ops.Cluster.kmeansCentroids(emb, 8, 2,
         Some(trained.take(3)))
     }
   }

@@ -40,7 +40,7 @@ class DecontaminateHatchSpec extends SparkSpec {
     val train = corpus.filter(col("doc_id") % 8 =!= 0).select("doc_id", "text")
     val evalSet = corpus.filter(col("doc_id") % 8 === 0).select("doc_id", "text")
     def run(hatch: Boolean) = graft.ops.NearDup
-      .decontaminateAgainst(spark, train, evalSet, maxDf = maxDf,
+      .decontaminateAgainst(train, evalSet, maxDf = maxDf,
         dfPrePass = hatch)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val off = run(hatch = false)
@@ -54,7 +54,7 @@ class DecontaminateHatchSpec extends SparkSpec {
     val train = corpus.filter(col("doc_id") % 8 =!= 0).select("doc_id", "text")
     val evalSet = corpus.filter(col("doc_id") % 8 === 0).select("doc_id", "text")
     def plan(hatch: Boolean) = graft.ops.NearDup
-      .decontaminateAgainst(spark, train, evalSet, maxDf = maxDf,
+      .decontaminateAgainst(train, evalSet, maxDf = maxDf,
         dfPrePass = hatch)
       .queryExecution.executedPlan.toString
     assert(plan(hatch = true).contains("LeftSemi"))

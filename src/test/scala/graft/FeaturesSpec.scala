@@ -58,7 +58,7 @@ class FeaturesSpec extends SparkSpec {
     val names = Seq("red widget", "red widgit", "blue widget",
       "crimson widget", "red bolt", "red bolts", "lone gear")
       .toDF("name")
-    val pairs = NearDup.dedupFuzzy(spark, names, 3).collect()
+    val pairs = NearDup.dedupFuzzy(names, 3).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     // only the 1-edit typo pairs survive: blue/red widget is 4 edits,
     // crimson is further, and cross-block names are never compared
@@ -84,7 +84,7 @@ class FeaturesSpec extends SparkSpec {
     // 1-edit pairs of the crafted vocabulary all survive
     val v = Seq("red widget", "red widgit", "red bolt", "red bolts")
       .toDF("name")
-    val found = NearDup.dedupFuzzy(spark, v, 3).collect()
+    val found = NearDup.dedupFuzzy(v, 3).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(found == Set(("red widget", "red widgit"),
       ("red bolt", "red bolts")), s"got $found")

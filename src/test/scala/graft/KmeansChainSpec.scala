@@ -18,7 +18,7 @@ class KmeansChainSpec extends SparkSpec {
 
   private def legacy(df: org.apache.spark.sql.DataFrame, k: Int,
                      iters: Int): Array[Array[Double]] =
-    ops.Cluster.kmeansCentroids(spark, df, k, iters, None, loop = true)
+    ops.Cluster.kmeansCentroids(df, k, iters, None, loop = true)
 
   private def assertSameCentroids(a: Array[Array[Double]],
                                   b: Array[Array[Double]]): Unit = {
@@ -32,7 +32,7 @@ class KmeansChainSpec extends SparkSpec {
 
   test("chained centroids are bit-identical to the legacy driver loop" +
       " on the fixture (k=8, iters=3)") {
-    val chained = ops.Cluster.kmeansCentroids(spark, embeddings, 8, 3)
+    val chained = ops.Cluster.kmeansCentroids(embeddings, 8, 3)
     val loop = legacy(embeddings, 8, 3)
     assertSameCentroids(chained, loop)
   }
@@ -48,14 +48,14 @@ class KmeansChainSpec extends SparkSpec {
       (11L, Array(5.1, 5.0)), (12L, Array(5.0, 5.1)),
       (20L, Array(9.9, 9.9)))
     val df = rows.toDF("vec_id", "embedding")
-    val chained = ops.Cluster.kmeansCentroids(spark, df, 3, 4)
+    val chained = ops.Cluster.kmeansCentroids(df, 3, 4)
     val loop = legacy(df, 3, 4)
     assertSameCentroids(chained, loop)
   }
 
   test("bit-parity across a SEGMENT boundary (iters=7 > chainSegment=5" +
       " — the plan-tree-doubling guard re-seeds from literals)") {
-    val chained = ops.Cluster.kmeansCentroids(spark, embeddings, 6, 7)
+    val chained = ops.Cluster.kmeansCentroids(embeddings, 6, 7)
     val loop = legacy(embeddings, 6, 7)
     assertSameCentroids(chained, loop)
   }
@@ -68,7 +68,7 @@ class KmeansChainSpec extends SparkSpec {
       (5L, null.asInstanceOf[Array[Double]]),
       (6L, Array(Double.NaN, 1.0)), (7L, Array(0.0, 0.0)))
     val df = rows.toDF("vec_id", "embedding")
-    val chained = ops.Cluster.kmeansCentroids(spark, df, 2, 3)
+    val chained = ops.Cluster.kmeansCentroids(df, 2, 3)
     val loop = legacy(df, 2, 3)
     assertSameCentroids(chained, loop)
   }
@@ -78,7 +78,7 @@ class KmeansChainSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, Array(1.0, 2.0)), (2L, Array(3.0, 4.0)))
       .toDF("vec_id", "embedding")
-    val chained = ops.Cluster.kmeansCentroids(spark, df, 5, 2)
+    val chained = ops.Cluster.kmeansCentroids(df, 5, 2)
     val loop = legacy(df, 5, 2)
     assert(chained.length == 2)
     assertSameCentroids(chained, loop)
@@ -92,7 +92,7 @@ class KmeansChainSpec extends SparkSpec {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val jobs = jobsOf(ops.Cluster.kmeansCentroids(spark, embeddings, 8, 3))
+      val jobs = jobsOf(ops.Cluster.kmeansCentroids(embeddings, 8, 3))
       assert(jobs == 1,
         s"chained train fired $jobs jobs, expected 1 — a broadcast " +
           "or subquery crept into the chain (the shuffle_replicate_nl" +
@@ -105,7 +105,7 @@ class KmeansChainSpec extends SparkSpec {
     val df = Seq((1L, Array(0.0, 0.0)),
       (2L, null.asInstanceOf[Array[Double]])).toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      ops.Cluster.kmeansCentroids(spark, df, 2, 2)
+      ops.Cluster.kmeansCentroids(df, 2, 2)
     }
     assert(e.getMessage.contains("no healthy vectors"))
   }
@@ -116,7 +116,7 @@ class KmeansChainSpec extends SparkSpec {
     val df = Seq((1L, Array(1.0, 2.0, 3.0)), (2L, Array(4.0, 5.0)))
       .toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      ops.Cluster.kmeansCentroids(spark, df, 2, 2)
+      ops.Cluster.kmeansCentroids(df, 2, 2)
     }
     assert(e.getMessage.contains("ragged embedding dimensionality"))
   }
@@ -128,7 +128,7 @@ class KmeansChainSpec extends SparkSpec {
       (3L, Array(5.0, 6.0))).toDF("vec_id", "embedding")
     val wrongDim = Some(Array(Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)))
     val e = intercept[IllegalArgumentException] {
-      ops.Cluster.kmeansCentroids(spark, df, 2, 2, wrongDim)
+      ops.Cluster.kmeansCentroids(df, 2, 2, wrongDim)
     }
     assert(e.getMessage.contains("dimensionality"))
   }
@@ -138,7 +138,7 @@ class KmeansChainSpec extends SparkSpec {
     val df = Seq((1L, Array(1.0, 2.0))).toDF("vec_id", "embedding")
     val ragged = Some(Array(Array(1.0, 2.0), Array(3.0)))
     val e = intercept[IllegalArgumentException] {
-      ops.Cluster.kmeansCentroids(spark, df, 2, 2, ragged)
+      ops.Cluster.kmeansCentroids(df, 2, 2, ragged)
     }
     assert(e.getMessage.contains("ragged"))
   }
@@ -150,18 +150,18 @@ class KmeansChainSpec extends SparkSpec {
       (1L, Array(0.0, 0.0)), (2L, Array(0.2, 0.0)),
       (3L, Array(10.0, 10.0)), (4L, Array(10.2, 10.0)))
     val df = rows.toDF("vec_id", "embedding")
-    val cold = ops.Cluster.kmeansCentroids(spark, df, 2, 5)
+    val cold = ops.Cluster.kmeansCentroids(df, 2, 5)
     // seeding with the converged centroids must be a fixed point
-    val warm = ops.Cluster.kmeansCentroids(spark, df, 2, 5, Some(cold))
+    val warm = ops.Cluster.kmeansCentroids(df, 2, 5, Some(cold))
     assertSameCentroids(cold, warm)
   }
 
   test("kmeansAssign (the query shape) is unchanged by chaining: " +
       "assignment matches the legacy loop's end to end") {
-    val chained = ops.Cluster.kmeansAssign(spark, embeddings, 8, 3)
+    val chained = ops.Cluster.kmeansAssign(embeddings, 8, 3)
       .select("vec_id", "cluster_id", "dist2").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
-    val loop = ops.Cluster.kmeansAssign(spark, embeddings, 8, 3, loop = true)
+    val loop = ops.Cluster.kmeansAssign(embeddings, 8, 3, loop = true)
       .select("vec_id", "cluster_id", "dist2").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
     assert(chained === loop)

@@ -36,6 +36,9 @@ class MetricsConfigSpec extends SparkSpec {
     val server = Metrics.serveMetrics(listener, port = 0) // ephemeral port
     try {
       Sources.table(spark, sf, "region").count()
+      // a literal no other plan carries: its generated source is new,
+      // so at least one class compiles
+      spark.range(4).selectExpr(s"id * ${System.nanoTime()} AS x").collect()
       // listener callbacks fire asynchronously — poll for the counter
       val deadline = System.nanoTime() + 10000000000L
       while (listener.snapshot.getOrElse("queries_total", 0.0) < 1.0 &&
@@ -50,12 +53,15 @@ class MetricsConfigSpec extends SparkSpec {
       assert(m.isDefined, s"no graft_queries_total sample in:\n$body")
       assert(m.get.group(1).toDouble >= 1.0)
       assert(body.contains("graft_query_duration_ms_sum"))
-      // the scheduler's counters ride the same listener and endpoint
-      Seq("graft_jobs_total", "graft_tasks_total").foreach { k =>
+      // the scheduler's and codegen's counters ride the same listener
+      // and endpoint
+      Seq("graft_jobs_total", "graft_tasks_total",
+        "graft_codegen_compiles_total").foreach { k =>
         val s = s"""(?m)^$k (\\S+)""".r.findFirstMatchIn(body)
         assert(s.exists(_.group(1).toDouble >= 1.0), s"no $k >= 1 in:\n$body")
         assert(body.contains(s"# TYPE $k counter"))
       }
+      assert(body.contains("# TYPE graft_codegen_ms_sum counter"))
     } finally {
       Metrics.stopMetricsServer(server)
       Metrics.uninstall(spark, listener)

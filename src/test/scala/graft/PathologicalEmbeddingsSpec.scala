@@ -62,7 +62,7 @@ class PathologicalEmbeddingsSpec extends SparkSpec {
   }
 
   test("sim_search admits only finite-positive-norm vectors, no NaN ranks") {
-    val out = TextSim.simSearch(spark, vecs, 0L, 5).collect()
+    val out = TextSim.simSearch(vecs, 0L, 5).collect()
     assert(out.nonEmpty && out.length <= 5)
     out.foreach { r =>
       val id = r.getLong(0); val cos = r.getDouble(1)
@@ -75,22 +75,22 @@ class PathologicalEmbeddingsSpec extends SparkSpec {
   }
 
   test("exact and bucketed k-NN agree row-for-row and stay finite") {
-    val knn = deterministic("sim_knn", TextSim.simKnn(spark, vecs, 3))
+    val knn = deterministic("sim_knn", TextSim.simKnn(vecs, 3))
     val bucketed = deterministic("sim_knn_bucketed_full",
       Ann.simKnnBucketed(spark, vecs, 3, 4, 4))
     assert(knn == bucketed,
       "full-probe bucketed k-NN diverged from brute force on pathological input")
-    val ids = TextSim.simKnn(spark, vecs, 3).collect()
+    val ids = TextSim.simKnn(vecs, 3).collect()
       .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     assert(ids.subsetOf(healthyIds), s"unhealthy ids in k-NN pairs: $ids")
-    assert(TextSim.simKnn(spark, vecs, 3).collect()
+    assert(TextSim.simKnn(vecs, 3).collect()
       .forall(r => !r.getDouble(2).isNaN), "NaN cos_sim in k-NN output")
   }
 
   test("ANN searches survive and return only healthy finite-scored rows") {
     Seq(
-      "sim_ann_lsh" -> Ann.simAnnLsh(spark, vecs, 0L, 5, 8, 4),
-      "sim_ann_ivf" -> Ann.simAnnIvf(spark, vecs, 0L, 5, 2, 2),
+      "sim_ann_lsh" -> Ann.simAnnLsh(vecs, 0L, 5, 8, 4),
+      "sim_ann_ivf" -> Ann.simAnnIvf(vecs, 0L, 5, 2, 2),
       "sim_ann_ivf_trained" -> Ann.simAnnIvfTrained(spark, vecs, 0L, 5, 2, 2, 2)
     ).foreach { case (name, df) =>
       val out = deterministic(name, df)
@@ -104,8 +104,8 @@ class PathologicalEmbeddingsSpec extends SparkSpec {
 
   test("dedup_embed pairs only healthy vectors") {
     val pairs = deterministic("dedup_embed",
-      TextSim.dedupEmbed(spark, vecs, 0.4))
-    val ids = TextSim.dedupEmbed(spark, vecs, 0.4).collect()
+      TextSim.dedupEmbed(vecs, 0.4))
+    val ids = TextSim.dedupEmbed(vecs, 0.4).collect()
       .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     assert(ids.subsetOf(healthyIds), s"unhealthy ids in pairs: $ids")
     assert(pairs.nonEmpty, "the exact-dup pair (9, 10) must be found")
@@ -130,8 +130,8 @@ class PathologicalEmbeddingsSpec extends SparkSpec {
   }
 
   test("kmeans trains on healthy vectors only and assigns every row") {
-    val out = Cluster.kmeansAssign(spark, vecs, 2, 2)
-    deterministic("cluster_kmeans", Cluster.kmeansAssign(spark, vecs, 2, 2))
+    val out = Cluster.kmeansAssign(vecs, 2, 2)
+    deterministic("cluster_kmeans", Cluster.kmeansAssign(vecs, 2, 2))
     assert(out.count() == 13, "assignment must cover every input row")
     // healthy rows land in a real cell
     val healthyCells = out.filter(col("vec_id").isin(healthyIds.toSeq: _*))
@@ -140,8 +140,8 @@ class PathologicalEmbeddingsSpec extends SparkSpec {
   }
 
   test("quantization skips malformed vectors instead of throwing") {
-    val out = deterministic("embed_quantize", TextSim.embedQuantize(spark, vecs))
-    val ids = TextSim.embedQuantize(spark, vecs).collect()
+    val out = deterministic("embed_quantize", TextSim.embedQuantize(vecs))
+    val ids = TextSim.embedQuantize(vecs).collect()
       .map(_.getLong(0)).toSet
     // null, empty and NaN/Inf-element vectors are excluded; the zero
     // vector and extremes quantize fine

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.ShuffleWidth
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -178,7 +179,7 @@ class PipelinesSpec extends SparkSpec {
       .groupBy("h").agg(min("doc_id").as("doc_id")).select("doc_id")
     val d1 = docs.join(exactKeep, "doc_id")
     val cc = NearDup.connectedComponents(
-      NearDup.dedupNgram(spark, docs, 3, 20, 0.2).select("doc_a", "doc_b"))
+      NearDup.dedupNgram(docs, 3, 20, 0.2).select("doc_a", "doc_b"))
     val nearDrop = survivorPolicy match {
       case "min-id" =>
         cc.filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
@@ -195,7 +196,7 @@ class PipelinesSpec extends SparkSpec {
     }
     val d2 = d1.join(nearDrop, Seq("doc_id"), "left_anti")
     val isEval = Sampling.hexNibble(col("doc_id")) >= "e"
-    val contaminated = NearDup.decontaminateAgainst(spark,
+    val contaminated = NearDup.decontaminateAgainst(
         docs.filter(!isEval).select("doc_id", "text"),
         docs.filter(isEval).select("doc_id", "text"))
       .select("doc_id")
@@ -210,7 +211,7 @@ class PipelinesSpec extends SparkSpec {
     val d4b = clusterCap match {
       case None => d4
       case Some(cap) =>
-        val assign = Cluster.kmeansAssign(spark, embeddings.get, k = 8,
+        val assign = Cluster.kmeansAssign(embeddings.get, k = 8,
             iters = 3)
           .select(col("vec_id").as("doc_id"), col("cluster_id"))
         val overCap = d4.select("doc_id").join(assign, "doc_id")
@@ -224,7 +225,7 @@ class PipelinesSpec extends SparkSpec {
       case None => train0
       case Some(nSpan) =>
         train0.drop("text")
-          .join(NearDup.scrubSpansText(spark,
+          .join(NearDup.scrubSpansText(
               train0.select("doc_id", "text"), nSpan)
             .select(col("doc_id"), col("scrubbed_text").as("text")),
             "doc_id")
@@ -248,6 +249,10 @@ class PipelinesSpec extends SparkSpec {
   test("2026: the one-verdict run equals the per-stage join chain") {
     val docs = graft.ops.Sources.table(spark, sf, "documents")
     val emb = graft.ops.Sources.table(spark, sf, "embeddings")
+    // the fixture sits under the interpret rule, so this compares an
+    // interpreted run with a codegen join chain
+    assert(ShuffleWidth.interprets(spark,
+      docs.queryExecution.optimizedPlan.stats.sizeInBytes))
     val runs = Seq[(String, Option[Int], String, Option[Int])](
       ("min-id", None, "min-id", None),
       ("quality", None, "quality", None),
@@ -301,6 +306,36 @@ class PipelinesSpec extends SparkSpec {
       }
   }
 
+  test("2022/2026: interpreted and codegen evaluation give the same runs") {
+    // the rule's verdict forced each way over the same inputs: every
+    // run, count and written row must match
+    val docs = graft.ops.Sources.table(spark, sf, "documents")
+    val emb = graft.ops.Sources.table(spark, sf, "embeddings")
+    val in = writeCsv(tmp("pi"), "users.csv", goodRows ++ goodRows ++ badRows)
+    // processed_at and batch_id are wall-clock stamps
+    def loaded(dir: String): Seq[String] =
+      spark.read.parquet(dir).drop("processed_at", "batch_id").collect()
+        .map(_.toString).toSeq.sorted
+    def runs(interpret: Boolean) = ShuffleWidth.forcingInterpret(interpret) {
+      val qOut = tmp("piq")
+      val q = Pipelines.quality2022(spark, in, qOut)
+      (q, loaded(qOut)) -> Seq[(Option[Int], String, Option[Int])](
+        (None, "min-id", None), (None, "quality", None),
+        (None, "min-id", Some(8)), (Some(3), "min-id", None)).map {
+        case (cap, policy, scrub) =>
+          val out = tmp("pic")
+          (Pipelines.curationOver(spark, docs, cap.map(_ => emb), out,
+            clusterCap = cap, survivorPolicy = policy, spanScrub = scrub),
+            packed(out))
+      }
+    }
+    val (interpreted, codegen) = (runs(true), runs(false))
+    assert(interpreted._1 == codegen._1, "quality2022")
+    interpreted._2.zip(codegen._2).zipWithIndex.foreach { case ((i, c), n) =>
+      assert(i == c, s"curationOver option set $n")
+    }
+  }
+
   test("2026: curation pipeline filters monotonically and packs the train set") {
     val out = java.nio.file.Files.createTempDirectory("graft-cur").toString
     val run = Pipelines.curation2026(spark, sf, out)
@@ -330,7 +365,7 @@ class PipelinesSpec extends SparkSpec {
       survivorPolicy = "quality")
     // recompute the expected survivor set independently
     val cc = NearDup.connectedComponents(
-      NearDup.dedupNgram(spark, docs, 3, 20, 0.2).select("doc_a", "doc_b"))
+      NearDup.dedupNgram(docs, 3, 20, 0.2).select("doc_a", "doc_b"))
       .join(docs.select(col("doc_id"), length(col("text")).as("len")),
         "doc_id")
       .collect().groupBy(_.getLong(1))
@@ -390,7 +425,7 @@ class PipelinesSpec extends SparkSpec {
     // Round13Spec. Empty-scrub drops would surface as a missing id.)
     val trainIds = spark.read.parquet(baseline).select("doc_id")
       .collect().map(_.getLong(0)).toSet
-    val expected = NearDup.scrubSpansText(spark,
+    val expected = NearDup.scrubSpansText(
         docs.filter(col("doc_id").isInCollection(trainIds))
           .select("doc_id", "text"), 8)
       .select(col("doc_id"),

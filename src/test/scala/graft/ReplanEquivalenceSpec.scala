@@ -109,8 +109,8 @@ class ReplanEquivalenceSpec extends SparkSpec {
         (c * 100.0 + (i / 3) * 0.01 + d * 0.001).toFloat))
     }
     val emb = pts.toDF("vec_id", "embedding")
-    val short = graft.ops.Cluster.kmeansCentroids(spark, emb, 3, 5)
-    val long = graft.ops.Cluster.kmeansCentroids(spark, emb, 3, 50)
+    val short = graft.ops.Cluster.kmeansCentroids(emb, 3, 5)
+    val long = graft.ops.Cluster.kmeansCentroids(emb, 3, 50)
     assert(short.length == long.length)
     short.indices.foreach { i =>
       assert(java.util.Arrays.equals(short(i), long(i)),
@@ -238,7 +238,7 @@ class ReplanEquivalenceSpec extends SparkSpec {
         >= minContain)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap
-    val shipped = NearDup.dedupContainment(spark, docs, 3, maxDf, minContain)
+    val shipped = NearDup.dedupContainment(docs, 3, maxDf, minContain)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap
     assert(shipped == naive && shipped.nonEmpty)

@@ -21,7 +21,7 @@ class Round13Spec extends SparkSpec {
 
   test("scrub_spans removes only the non-first occurrence of a shared span") {
     val span = "a b c d e f g h"
-    val out = NearDup.scrubSpans(spark, docsOf(
+    val out = NearDup.scrubSpans(docsOf(
       1L -> s"$span x1 x2",
       2L -> s"y1 y2 $span",
       3L -> "u1 u2 u3 u4 u5 u6 u7 u8 u9"), 8)
@@ -37,7 +37,7 @@ class Round13Spec extends SparkSpec {
 
   test("scrub_spans scrubs a WITHIN-doc repeat, keeping the first copy") {
     val span = "p q r s t u v w"
-    val out = NearDup.scrubSpans(spark,
+    val out = NearDup.scrubSpans(
       docsOf(7L -> s"$span z $span"), 8).collect()(0)
     assert(out.getLong(1) == 17L)
     assert(out.getLong(2) == 8L,
@@ -48,7 +48,7 @@ class Round13Spec extends SparkSpec {
   test("scrub_spans leaves a doc shorter than the span width untouched") {
     // guards the sequence(0, negative) descend pitfall: a short doc
     // must contribute NO occurrences, not wrap-around ones
-    val out = NearDup.scrubSpans(spark, docsOf(
+    val out = NearDup.scrubSpans(docsOf(
       1L -> "a b c",
       2L -> "a b c"), 8)
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
@@ -58,7 +58,7 @@ class Round13Spec extends SparkSpec {
 
   test("scrub_spans fully covers an exact duplicate doc") {
     val t = "m1 m2 m3 m4 m5 m6 m7 m8 m9 m10"
-    val out = NearDup.scrubSpans(spark, docsOf(1L -> t, 2L -> t), 8)
+    val out = NearDup.scrubSpans(docsOf(1L -> t, 2L -> t), 8)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(2), r.getString(3))).toMap
     assert(out(1L) == ((0L, sha(t))))
@@ -192,7 +192,7 @@ class Round13Spec extends SparkSpec {
       (7L, "a", -1.0), (9L, "a", 100.0),
       (1L, "b", -5.5), (2L, "b", -2.25), (3L, "b", -2.25))
       .toDF("event_id", "event_type", "value")
-    val r = graft.ops.Aggregates.aggMinmaxBy(spark, ev)
+    val r = graft.ops.Aggregates.aggMinmaxBy(ev)
       .collect().map(x => x.getString(0) ->
         (x.getLong(1), x.getDouble(2), x.getLong(3), x.getDouble(4)))
       .toMap

@@ -293,7 +293,7 @@ class Round5Spec extends SparkSpec {
         (b + (i / 3) * 0.01 + d * 0.001).toFloat })
     }
     val emb = pts.toDF("vec_id", "embedding")
-    val out = Cluster.kmeansAssign(spark, emb, 3, 5).collect()
+    val out = Cluster.kmeansAssign(emb, 3, 5).collect()
     val groups = out.groupBy(_.getLong(0) % 3).values.toSeq
     assert(groups.forall(g =>
       g.map(_.getInt(1)).distinct.length == 1),
@@ -305,7 +305,7 @@ class Round5Spec extends SparkSpec {
   test("kmeans inertia never increases with more Lloyd iterations") {
     val emb = Sources.table(spark, sf, "embeddings")
     def inertia(iters: Int): Double =
-      Cluster.kmeansAssign(spark, emb, 4, iters)
+      Cluster.kmeansAssign(emb, 4, iters)
         .agg(sum(col("dist2"))).collect().head.getDouble(0)
     val i1 = inertia(1)
     val i4 = inertia(4)
@@ -358,8 +358,7 @@ class Round5Spec extends SparkSpec {
     val plain = Pipelines.curation2026(spark, sf, s"$base/plain")
     assert(capped.trainDocs <= plain.trainDocs)
     val outIds = spark.read.parquet(s"$base/capped").select("doc_id")
-    val assign = Cluster.kmeansAssign(spark,
-        Sources.table(spark, sf, "embeddings"), 8, 3)
+    val assign = Cluster.kmeansAssign(Sources.table(spark, sf, "embeddings"), 8, 3)
       .select(col("vec_id").as("doc_id"), col("cluster_id"))
     val maxPerCluster = outIds.join(assign, "doc_id")
       .groupBy("cluster_id").count().agg(max("count")).collect()
@@ -530,7 +529,7 @@ class Round5Spec extends SparkSpec {
     import spark.implicits._
     val tiny = Seq((0L, Array(0f, 0f)), (1L, Array(10f, 10f)),
       (2L, Array(20f, 20f))).toDF("vec_id", "embedding")
-    val out = Cluster.kmeansAssign(spark, tiny, k = 5, iters = 2).collect()
+    val out = Cluster.kmeansAssign(tiny, k = 5, iters = 2).collect()
     assert(out.length == 3)
     assert(out.map(_.getInt(1)).forall(c => c >= 0 && c < 3),
       "assignments use only the centroids that exist")

@@ -126,7 +126,7 @@ class SamplingSpec extends SparkSpec {
       (100L, "zzz beta gamma delta qqq"),
       (101L, "ppp orange yellow green www")
     ).toDF("doc_id", "text")
-    val flagged = graft.ops.NearDup.decontaminateAgainst(spark, train, eval)
+    val flagged = graft.ops.NearDup.decontaminateAgainst(train, eval)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(flagged.keySet == Set(1L, 3L),
       s"expected docs 1 and 3 contaminated, got $flagged")

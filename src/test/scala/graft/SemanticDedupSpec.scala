@@ -129,8 +129,8 @@ class SemanticDedupSpec extends SparkSpec {
 
   test("cells agree with the trained assignment (blocking is honest)") {
     val emb = ops.Sources.table(spark, sf, "embeddings")
-    val cents = Cluster.kmeansCentroids(spark, emb, 8, 3)
-    val direct = Cluster.assignWith(spark, emb, cents)
+    val cents = Cluster.kmeansCentroids(emb, 8, 3)
+    val direct = Cluster.assignWith(emb, cents)
       .select("vec_id", "cluster_id").collect()
       .map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
     assert(cellOf == direct)

@@ -52,7 +52,7 @@ class SpreadGateSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try {
       val jobs = jobsOf(
-        graft.ops.NearDup.decontaminateAgainst(spark, train, evalSet))
+        graft.ops.NearDup.decontaminateAgainst(train, evalSet))
       assert(jobs == 0, s"building the plan ran $jobs jobs")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }

@@ -62,7 +62,7 @@ class SyntheticDocsSpec extends SparkSpec {
     val stats = graft.ops.TextSim.corpusStats(df).head()
     assert(stats.getLong(0) == 300)
     assert(stats.getLong(1) > 0)
-    val pairs = graft.ops.NearDup.dedupNgram(spark, df, 3, 40, 0.5)
+    val pairs = graft.ops.NearDup.dedupNgram(df, 3, 40, 0.5)
     // planted dups share full content => jaccard 1.0 pairs must surface
     assert(pairs.filter(col("jaccard") === 1.0).count() > 0,
       "near-dup pass missed the planted duplicates")

@@ -149,7 +149,7 @@ class TextSimSpec extends SparkSpec {
     val docs = Seq((1L, base), (2L, base + " tail"), (3L, "p q r s t u v w"))
       .toDF("doc_id", "text")
     // same corpus, no parquet round-trip: the library path a user takes
-    val pairs = NearDup.dedupNgram(spark, docs, 3, 20, 0.2)
+    val pairs = NearDup.dedupNgram(docs, 3, 20, 0.2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((1L, 2L)))
     val sigs = NearDup.minhashSignatures(docs, 16).collect()

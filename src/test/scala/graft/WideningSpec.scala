@@ -221,7 +221,7 @@ class WideningSpec extends SparkSpec {
     val other = (1 to 60).map(i => s"alt$i").mkString(" ")
     val docs = Seq((1L, shortDoc), (2L, longDoc), (3L, other))
       .toDF("doc_id", "text")
-    val rows = graft.ops.NearDup.dedupContainment(spark, docs, 3, 20, 0.5)
+    val rows = graft.ops.NearDup.dedupContainment(docs, 3, 20, 0.5)
       .collect()
     assert(rows.length == 1, s"expected exactly the (1,2) pair, got ${rows.length}")
     val r = rows.head
