@@ -7,8 +7,9 @@ object Bench {
   }
 
   /** The bench session's SQL confs — also the canonical session
-    * ExplainDump and PlanSnap record plans under (both dump through
-    * the one path, `ExplainDump.formatted`). Two deliberate
+    * ExplainDump records every plan under (EXPLAINS.md and the
+    * `plans/current/` corpus, through `ExplainDump.formatted`, which
+    * ExplainsSyncSpec regenerates in the test suite). Two deliberate
     * deviations from the engine defaults (Verify runs the stock
     * config), both measured at sf0.1 (see README "bench recipe" +
     * SCALE.md):

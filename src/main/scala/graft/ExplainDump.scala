@@ -1,26 +1,29 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
-/** Regenerates EXPLAINS.md: the raw `explain("formatted")` plans for
-  * the headline queries SCALE.md's audit table summarizes.
+/** The one plan-dump main. `sbt "runMain graft.ExplainDump"` builds
+  * every plan once and writes two records of them:
+  *   - the corpus, `plans/current/<name>.txt`: one normalized
+  *     `explain("formatted")` file per declared query and per
+  *     [[pipelines]] entry, rewritten as a whole so a renamed or
+  *     removed query leaves no file behind;
+  *   - EXPLAINS.md, the headline plans SCALE.md's audit table
+  *     summarizes, each block the same text as its corpus file.
   *
-  * r9: the file is GENERATED, not hand-maintained — stale plans
-  * shipped two rounds running (r7 `join_fact`, r8 `text_repetition`
-  * plus three missing re-plan entries), so `ExplainsSyncSpec` now
-  * regenerates the document under the same canonical session config
-  * and fails on any diff: a plan-affecting change cannot land without
-  * `sbt "runMain graft.ExplainDump"` refreshing the committed file.
-  * To make that diff meaningful across JVMs, every plan is
-  * ID-normalized (expression ids and plan_ids are global counters
-  * that depend on what ran earlier in the JVM; they are remapped to
-  * per-plan sequential values in order of first appearance, which
-  * keeps same-name columns distinguishable while making the text a
-  * pure function of the plan shape).
-  *
-  * [[formatted]] and [[pipelines]] are the one plan-dump path:
-  * [[PlanSnap]] writes the same formatted text per query file, and
-  * dumps the same un-materialized pipelines.
+  * Both are GENERATED, not hand-maintained — stale plans shipped two
+  * rounds running when EXPLAINS.md was refreshed by hand — and
+  * `ExplainsSyncSpec` regenerates both by running this main in a
+  * fresh JVM and fails on any difference: a plan change cannot
+  * land without its regenerated dump, and the diff under
+  * `plans/current/` shows the change. To make that comparison hold
+  * across JVMs, every plan is ID-normalized (expression ids and
+  * plan_ids are global counters that depend on what ran earlier in
+  * the JVM; they are remapped to per-plan sequential values in order
+  * of first appearance, which keeps same-name columns distinguishable
+  * while making the text a pure function of the plan shape).
   */
 object ExplainDump {
   val DefaultSf = "/root/testdata/sf0.01"
@@ -107,7 +110,9 @@ object ExplainDump {
     })
   }
 
-  def render(spark: SparkSession, sf: String): String = {
+  /** EXPLAINS.md's text: the headline plans, each drawn from `corpus`
+    * (plan text by corpus name, as [[plans]] builds it). */
+  def render(corpus: Map[String, String], sf: String): String = {
     val headline = Seq(
       "agg_group" -> "flagship: pushed filter -> partial/final hash agg",
       "join_dim" -> "broadcast dimension join",
@@ -131,40 +136,22 @@ object ExplainDump {
       "gap_stats" -> "window + aggregate sharing one exchange",
       "encode_bucket" -> "fit-then-transform: sort-based exact deciles embedded as literals, big side a pure projection (r12: replaces the percentile-aggregate fit + cut-array broadcast + interpreted per-row fold)",
       "agg_salted" -> "salted two-phase skew aggregate (r12): phase-1 partials keyed on (key, salt) spread a hot key over 16 reducers, phase-2 combines |keys|x16 rows — both aggregates map-side combine, so the second exchange carries partials only",
-      "scrub_spans" -> "corpus exact-substring scrub (r13): ShingleHash2 emits 128-bit gram fingerprints in one codegen'd pass (no gram strings anywhere), first occurrence = min over a packed (doc_id << 21 | p) long so the per-gram aggregate stays a map-side-combined HashAggregate, join-back keyed on the fingerprint, <= n-row sequence explode per scrubbed occurrence, and reassembly is an indexed filter over the in-row words array (no corpus-sized token explode) — every exchange keyed, nothing pairwise; 279 -> 42 s at 1M docs across the three plan generations")
-    // Queries whose public entry point materializes through an eager
-    // localCheckpoint (the returned lineage is just a checkpoint
-    // scan): dump the un-materialized pipeline the checkpoint runs.
-    val pipeline = pipelines(spark, sf).toMap
-    val checkpointed = Seq(
-      ("dedup_containment",
-        "posting-list candidates with RIDING denominators (r7: per-doc gram " +
-          "counts travel inside the posting structs — one shingle pass, two " +
-          "keyed exchanges, zero joins). Public API materializes this via " +
-          "localCheckpoint",
-        () => pipeline("dedup_containment_pipeline")()),
-      ("dedup_cluster",
-        "candidate-EDGE pipeline feeding connected components (shared-rare-" +
-          "shingle postings -> bounded pair expansion -> Jaccard filter). The " +
-          "CC loop then runs per-round equi-join + hash-aggregate over the " +
-          "symmetrized, checkpointed edges at graph-sized shuffle partitions; " +
-          "plan depth stays constant via localCheckpoint, so the loop has no " +
-          "single static plan to print — this is the one-shot pipeline it " +
-          "iterates over",
-        () => pipeline("dedup_ngram_pipeline")().select("doc_a", "doc_b")))
+      "scrub_spans" -> "corpus exact-substring scrub (r13): ShingleHash2 emits 128-bit gram fingerprints in one codegen'd pass (no gram strings anywhere), first occurrence = min over a packed (doc_id << 21 | p) long so the per-gram aggregate stays a map-side-combined HashAggregate, join-back keyed on the fingerprint, <= n-row sequence explode per scrubbed occurrence, and reassembly is an indexed filter over the in-row words array (no corpus-sized token explode) — every exchange keyed, nothing pairwise; 279 -> 42 s at 1M docs across the three plan generations",
+      // the eager entry points below return a checkpoint scan: show the
+      // un-materialized pipeline the checkpoint runs
+      "dedup_containment_pipeline" -> "dedup_containment's posting-list candidates with RIDING denominators (r7: per-doc gram counts travel inside the posting structs — one shingle pass, two keyed exchanges, zero joins). Public API materializes this via localCheckpoint",
+      "dedup_ngram_pipeline" -> "the candidate-EDGE pipeline feeding dedup_cluster's connected components (shared-rare-shingle postings -> bounded pair expansion -> Jaccard filter). The CC loop then runs per-round equi-join + hash-aggregate over the symmetrized, checkpointed edges of its (doc_a, doc_b) at graph-sized shuffle partitions; plan depth stays constant via localCheckpoint, so the loop has no single static plan to print — this is the one-shot pipeline it iterates over")
     val sb = new StringBuilder
     sb.append("# EXPLAINS — formatted physical plans for the headline queries\n\n")
     sb.append(s"Generated by `graft.ExplainDump` at sf dir `$sf`; SCALE.md's\n")
     sb.append("audit table is the summary, this file is the raw evidence.\n")
     sb.append("Expression/plan ids are normalized to per-plan sequential values\n")
     sb.append("so the file is a deterministic function of the plan shapes;\n")
-    sb.append("`ExplainsSyncSpec` regenerates it and fails on any drift.\n")
-    def dump(name: String, note: String, df: DataFrame): Unit =
-      sb.append(s"\n## `$name` — $note\n\n```\n${formatted(df)}```\n")
+    sb.append("each block is the text of `plans/current/<name>.txt`, and\n")
+    sb.append("`ExplainsSyncSpec` regenerates both and fails on any drift.\n")
     headline.foreach { case (name, note) =>
-      dump(name, note, SparkEntry.queries(name)(spark, sf))
+      sb.append(s"\n## `$name` — $note\n\n```\n${corpus(name)}```\n")
     }
-    checkpointed.foreach { case (name, note, mk) => dump(name, note, mk()) }
     sb.toString
   }
 
@@ -189,21 +176,27 @@ object ExplainDump {
         "RoundRobinPartitioning(defaultParallelism)")
   }
 
-  /** The un-materialized pipelines behind entry points that materialize
-    * through an eager localCheckpoint (whose returned plan is just a
-    * checkpoint scan), keyed by their [[PlanSnap]] name and built via
-    * the same package-private `*Plan` builders the entry points run,
-    * with the declared queries' arguments. Building one runs nothing:
-    * the cache each builder marks is released unused.
+  /** The un-materialized pipelines behind the eager entry points,
+    * whose returned plan is just a checkpoint scan, keyed
+    * `<query>_pipeline` and built by the same package-private `*Plan`
+    * builders the entry points run, with the declared queries'
+    * arguments. Where an entry point runs jobs before its plan exists
+    * (the bloom filter build, the k-means train), its builder takes
+    * that step's result, and the dump passes a driver-side stand-in:
+    * an empty filter, or a zero matrix of the declared k = 8 centroids
+    * over the fixtures' 64 embedding dimensions. Plan text shows the
+    * filter not at all and the matrix by its shape (`BloomProbe`,
+    * `CentroidArgmin`), so the stand-in renders as the real result
+    * does. Building one runs nothing: each cache a builder marks is
+    * released unused.
     */
   def pipelines(spark: SparkSession,
                 sf: String): Seq[(String, () => DataFrame)] = {
     import graft.ops.NearDup._
+    import graft.ops.Cluster.{kmeansAssignPlan, vectors}
     def docs = graft.ops.Sources.table(spark, sf, "documents")
-    def released(planned: (DataFrame, DataFrame)): DataFrame = {
-      planned._2.unpersist(blocking = false)
-      planned._1
-    }
+    def embeddings = vectors(graft.ops.Sources.table(spark, sf, "embeddings"))
+    def centroids = Array.fill(8, 64)(0.0)
     Seq(
       "dedup_ngram_pipeline" -> (() => released(
         dedupNgramPlan(docs, 3, DefaultMaxDf, DefaultMinJaccard))),
@@ -218,17 +211,61 @@ object ExplainDump {
         dedupMinhashIncrPlan(docs, PortableNumHashes, PortableBands,
           PortableMinSim))),
       "dedup_simhash_pairs_pipeline" -> (() => released(
-        dedupSimhashPairsPlan(docs, PortableMaxHamming))))
+        dedupSimhashPairsPlan(docs, PortableMaxHamming))),
+      "dedup_bloom_pipeline" -> { () =>
+        val (d, exact) = bloomSides(docs)
+        released(dedupBloomPlan(d, exact, spark.sparkContext.broadcast(
+          org.apache.spark.util.sketch.BloomFilter.create(1))), exact, d)
+      },
+      "dedup_semantic_pipeline" -> (() => released(
+        dedupSemanticPlan(spark, embeddings, centroids, 8, 0.4))),
+      "cluster_kmeans_pipeline" -> (() =>
+        kmeansAssignPlan(embeddings, centroids)))
+  }
+
+  /** `plan`, after releasing the caches its builder marked. */
+  private def released(plan: DataFrame, cached: DataFrame*): DataFrame = {
+    cached.foreach(_.unpersist(blocking = false))
+    plan
+  }
+
+  private def released(planned: (DataFrame, DataFrame)): DataFrame =
+    released(planned._1, planned._2)
+
+  /** Every plan the records hold, formatted once, by corpus name: the
+    * declared queries, then the [[pipelines]]. */
+  def plans(spark: SparkSession, sf: String): Seq[(String, String)] =
+    (SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (() => fn(spark, sf))
+    } ++ pipelines(spark, sf)).map { case (name, mk) =>
+      name -> formatted(mk())
+    }
+
+  /** The corpus directory, relative to the repository root. */
+  val CorpusDir = "plans/current"
+
+  /** A corpus directory's files: text by file name (`<name>.txt`). */
+  def readCorpus(dir: Path): Map[String, String] = {
+    val files = Files.list(dir)
+    try files.iterator.asScala.map(p =>
+      p.getFileName.toString -> Files.readString(p)).toMap
+    finally files.close()
   }
 
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("EXPLAINS.md")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSf)
     val (spark, owned) = acquire()
     spark.sparkContext.setLogLevel("ERROR")
-    val text = render(spark, sf)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), text)
-    println(s"wrote $out")
+    val corpus = plans(spark, sf)
+    val dir = Paths.get(CorpusDir)
+    if (Files.isDirectory(dir))
+      readCorpus(dir).keys.foreach(f => Files.delete(dir.resolve(f)))
+    Files.createDirectories(dir)
+    corpus.foreach { case (name, text) =>
+      Files.writeString(dir.resolve(s"$name.txt"), text)
+    }
+    Files.writeString(Paths.get("EXPLAINS.md"), render(corpus.toMap, sf))
+    println(s"wrote EXPLAINS.md and ${corpus.size} plans under $CorpusDir")
     if (owned) spark.stop()
   }
 }

@@ -21,7 +21,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * whole-stage codegen — no UDF dispatch, no boxing, and the probe
   * column stays visible to the optimizer as a deterministic
   * expression. Null semantics: null hash → null (standard unary null
-  * propagation).
+  * propagation). The plan text shows the probed column only: the
+  * handle's broadcast id is a SparkContext counter, so it would make
+  * the same plan render differently from one JVM to the next.
   */
 case class BloomProbe(child: Expression, bf: Broadcast[BloomFilter])
     extends UnaryExpression {
@@ -33,6 +35,7 @@ case class BloomProbe(child: Expression, bf: Broadcast[BloomFilter])
   }
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_might_contain"
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
 
   override protected def nullSafeEval(h: Any): Any =
     bf.value.mightContainString(h.asInstanceOf[UTF8String].toString)

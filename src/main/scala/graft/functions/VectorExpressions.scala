@@ -916,7 +916,9 @@ case class DoubleOrderBits(child: Expression)
   *
   * Null semantics: null vector → null result; vectors shorter than
   * `d` dot only their first `n` components (DotProduct's min-length
-  * rule). Returns `struct(d2: double, cid: int)`.
+  * rule). Returns `struct(d2: double, cid: int)`. The plan text shows
+  * the matrix as its shape, `graft_argmin_centroid(v, k, d)`: an
+  * array renders as its identity hash, which differs between JVMs.
   */
 case class CentroidArgmin(child: Expression, cents: Array[Double],
                           norms: Array[Double], d: Int)
@@ -939,6 +941,7 @@ case class CentroidArgmin(child: Expression, cents: Array[Double],
       org.apache.spark.sql.types.StructField("cid",
         org.apache.spark.sql.types.IntegerType)))
   override def prettyName: String = "graft_argmin_centroid"
+  override protected def stringArgs: Iterator[Any] = Iterator(child, k, d)
 
   override protected def nullSafeEval(input: Any): Any =
     CentroidArgmin.nearest(input.asInstanceOf[ArrayData], cents, norms)

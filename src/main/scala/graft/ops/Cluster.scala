@@ -50,22 +50,29 @@ object Cluster {
     // before returning — the file's standard entry-point discipline.
     val e = vectors(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val centroids = kmeansCentroidsOn(e, k, iters, loop = loop)
-      e.select(col("vec_id"), col("v"),
-          assignExpr(centroids).getField("cid").as("cluster_id"),
-          assignExpr(centroids).getField("d2").as("vd2"))
-        // d2 above omits |v|^2 (constant per vector, irrelevant to the
-        // argmin); add it back so the reported distance is the true one
-        .select(col("vec_id"), col("cluster_id"),
-          (col("vd2") + expr(
-            "aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)"))
-            .as("dist2"))
-        .localCheckpoint()
-    } finally e.unpersist(blocking = false)
+    try kmeansAssignPlan(e, kmeansCentroidsOn(e, k, iters, loop = loop))
+      .localCheckpoint()
+    finally e.unpersist(blocking = false)
   }
 
-  private[ops] def vectors(emb: DataFrame): DataFrame =
+  /** The `(vec_id, cluster_id, dist2)` assignment [[kmeansAssign]]
+    * materializes: the `(vec_id, v)` relation `e` under the trained
+    * `centroids`. Runs no job.
+    */
+  private[graft] def kmeansAssignPlan(e: DataFrame,
+                                      centroids: Array[Array[Double]])
+      : DataFrame =
+    e.select(col("vec_id"), col("v"),
+        assignExpr(centroids).getField("cid").as("cluster_id"),
+        assignExpr(centroids).getField("d2").as("vd2"))
+      // d2 above omits |v|^2 (constant per vector, irrelevant to the
+      // argmin); add it back so the reported distance is the true one
+      .select(col("vec_id"), col("cluster_id"),
+        (col("vd2") + expr(
+          "aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)"))
+          .as("dist2"))
+
+  private[graft] def vectors(emb: DataFrame): DataFrame =
     // spread off the single fixture split; split-gated (r22) so a
     // many-split embeddings scan feeds the train with no exchange
     Sources.spreadIfNarrow(

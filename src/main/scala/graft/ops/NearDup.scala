@@ -1065,9 +1065,9 @@ object NearDup {
 
   /** [[dedupBloom]] over any `(doc_id, text)` relation.
     *
-    * Eager (the result is a 1-row summary): runs [[dedupBloomPlan]]
-    * through `localCheckpoint` and releases its cached intermediates
-    * before returning.
+    * Eager (the result is a 1-row summary): builds the filter, runs
+    * [[dedupBloomPlan]] over it through `localCheckpoint` and releases
+    * the cached sides before returning.
     */
   def dedupBloom(s: SparkSession, docs: DataFrame, fpp: Double): DataFrame =
     dedupBloom(s, docs, fpp, None)
@@ -1084,8 +1084,17 @@ object NearDup {
     */
   def dedupBloom(s: SparkSession, docs: DataFrame, fpp: Double,
                  expectedItems: Option[Long]): DataFrame = {
-    val (plan, cached) = dedupBloomPlan(s, docs, fpp, expectedItems)
-    materialize(plan, cached: _*)
+    require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
+    val (d, exact) = bloomSides(docs)
+    // the two jobs of the entry point: the distinct corpus-hash count
+    // that sizes the filter and the `stat.bloomFilter` build; the
+    // broadcast filter must exist before the summary plan can probe it
+    val bf = releasingOnFailure(exact, d) {
+      exact.stat.bloomFilter("h",
+        math.max(expectedItems.getOrElse(exact.count()), 1L), fpp)
+    }
+    materialize(dedupBloomPlan(d, exact, s.sparkContext.broadcast(bf)),
+      exact, d)
   }
 
   /** The hashed corpus/new split every exact-membership surface
@@ -1129,41 +1138,31 @@ object NearDup {
       coalesce(col("in_corpus"), lit(false)).as("in_corpus"))
   }
 
-  /** The plan behind [[dedupBloom]] plus the caches to release. NOT
-    * fully lazy: constructing it RUNS two Spark actions — the distinct
-    * corpus-hash `count()` that sizes the bloom filter and the
-    * `stat.bloomFilter` build itself — because the broadcast filter
-    * must exist before the summary plan can reference it. Callers
-    * wanting plan-shape inspection only still pay those two jobs
-    * (bounded: one long and one `-log2(fpp)·n`-bit filter on the
-    * driver); the returned DataFrame is lazy from there. If either
-    * job throws, the caches are released before the exception leaves.
-    *
-    * persist: the hashed split feeds FOUR consumers (distinct count,
-    * bloom build, exact join side, probe side). The filter sizes from
-    * the DISTINCT corpus hash count: a dedup corpus is full of exact
-    * duplicates, which the filter stores once.
+  /** The sides [[dedupBloom]] reads, both persisted: the hashed split
+    * `d` feeds four consumers (distinct count, bloom build, exact join
+    * side, probe side) and `exact`, its DISTINCT corpus hashes, sizes
+    * and fills the filter (a dedup corpus is full of exact duplicates,
+    * which the filter stores once) and is the exact join side.
     */
-  private[graft] def dedupBloomPlan(s: SparkSession, docs: DataFrame,
-                                    fpp: Double,
-                                    expectedItems: Option[Long] = None)
-      : (DataFrame, Seq[DataFrame]) = {
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
+  private[graft] def bloomSides(docs: DataFrame): (DataFrame, DataFrame) = {
     val d = hashedSplit(docs).persist(MEMORY_AND_DISK)
-    val exact = corpusHashes(d).persist(MEMORY_AND_DISK)
-    val bf = releasingOnFailure(exact, d) {
-      exact.stat.bloomFilter("h",
-        math.max(expectedItems.getOrElse(exact.count()), 1L), fpp)
-    }
-    val bfB = s.sparkContext.broadcast(bf)
-    val probe = graft.functions.VectorFunctions.mightContain(col("h"), bfB)
-    val plan = newVsCorpus(d, exact)
+    (d, corpusHashes(d).persist(MEMORY_AND_DISK))
+  }
+
+  /** The summary [[dedupBloom]] materializes over its [[bloomSides]]
+    * and broadcast filter `bf`: every new-batch row probed against the
+    * filter and left-joined to the exact corpus hashes. Runs no job.
+    */
+  private[graft] def dedupBloomPlan(d: DataFrame, exact: DataFrame,
+      bf: org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.util.sketch.BloomFilter]): DataFrame = {
+    val probe = graft.functions.VectorFunctions.mightContain(col("h"), bf)
+    newVsCorpus(d, exact)
       .agg(count(lit(1)).as("n_new"),
         sum(when(probe, 1L).otherwise(0L))
           .as("n_bloom_flagged"),
         sum(when(col("in_corpus").isNotNull, 1L).otherwise(0L))
           .as("n_exact_dup"))
-    (plan, Seq(exact, d))
   }
 
   /** `dedup_chunk` — span-level exact dedup: cut each document into
@@ -1352,14 +1351,6 @@ object NearDup {
       InternalRows.rebind(sess, out)
     }
   }
-
-  /** TEST PROBE (package-private): the cached child session's view of
-    * `key`, so the conf copy-AND-UNDO contract (r20 ADVICE) is
-    * assertable without exposing the child session itself. Delegates
-    * to [[SessionIso]], which owns the cached-child machinery. */
-  private[graft] def ccChildConf(sess: SparkSession,
-                                 key: String): Option[String] =
-    SessionIso.childConf(sess, key)
 
   /** The label-propagation rounds themselves, running entirely at the
     * conf of `edges`' own session — [[ccOnEdges]] owns the sizing. */
@@ -1838,8 +1829,6 @@ object NearDup {
     // assume identical nonzero vectors always pair; a minSim above 1
     // would silently break that assumption
     require(minSim <= 1.0, s"dedupSemantic: minSim must be <= 1, got $minSim")
-    val nd = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      graft.functions.VectorFunctions.dot(a, b)
     // train once on the driver (k×d doubles), assign via ONE broadcast
     // argmin projection — vectors never pair during clustering. The
     // Lloyd train and the assignment share ONE persisted vector
@@ -1852,6 +1841,20 @@ object NearDup {
     val centroids = releasingOnFailure(vecs) {
       Cluster.kmeansCentroidsOn(vecs, k, iters, warmStart)
     }
+    val (plan, marked) = dedupSemanticPlan(s, vecs, centroids, k, minSim)
+    materialize(plan, marked, vecs)
+  }
+
+  /** The `(vec_id, cluster_id, kept)` plan [[dedupSemantic]]
+    * materializes over the `(vec_id, v)` relation `vecs` and its trained
+    * `centroids`, and the cache it marks. Runs no job.
+    */
+  private[graft] def dedupSemanticPlan(s: SparkSession, vecs: DataFrame,
+                                       centroids: Array[Array[Double]],
+                                       k: Int, minSim: Double)
+      : (DataFrame, DataFrame) = {
+    val nd = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
+      graft.functions.VectorFunctions.dot(a, b)
     val assigned = Cluster.assignOn(vecs, centroids)
       .withColumn("nrm", sqrt(nd(col("v"), col("v"))))
     // EXACT-VECTOR PRE-COLLAPSE: a real dedup corpus has massive
@@ -1878,8 +1881,8 @@ object NearDup {
     // collapse window) feeds FOUR subtrees — both pair-join sides,
     // exactDropped, and the final verdict join. Without the persist
     // each re-runs the assignment and the window (r17 review); the
-    // eager localCheckpoint below releases the cache before returning,
-    // the file's standard entry-point discipline.
+    // entry point's eager localCheckpoint releases the cache before
+    // returning, the file's standard entry-point discipline.
     // `nrm > 0` alone is not the pair-stage health gate: NaN compares
     // GREATER than every double, so a NaN norm passes it AND its NaN
     // cosine passes `>= minSim` — a NaN vector would be silently
@@ -1919,11 +1922,11 @@ object NearDup {
     // disjoint by construction (pairDropped ⊆ representatives,
     // exactDropped = non-representatives), so plain union-all — a
     // distinct here would be a whole extra shuffle for nothing
-    materialize(marked
+    (marked
       .join(pairDropped.union(exactDropped)
         .withColumn("dup", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster_id").cast(LongType),
         coalesce(!col("dup"), lit(true)).as("kept")),
-      marked, vecs)
+      marked)
   }
 }

@@ -1,52 +1,125 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** EXPLAINS.md staleness guard (r8 VERDICT #1): stale plans shipped
-  * two rounds running because the document was refreshed by hand.
-  * This spec regenerates the document from HEAD under ExplainDump's
-  * canonical session config and fails on ANY diff — a plan-affecting
+/** The plan gate: regenerates both plan records from HEAD — EXPLAINS.md
+  * and the `plans/current/` corpus, one file per declared query and
+  * per `ExplainDump.pipelines` entry — by running ExplainDump's main
+  * in a fresh JVM, and fails on ANY difference. A plan-affecting
   * change cannot land without `sbt "runMain graft.ExplainDump"`
-  * rewriting the committed file. ID normalization inside
-  * `ExplainDump.render` is what makes this comparison JVM-order
-  * independent (expression ids are global counters).
+  * rewriting the committed records, and the PR diff under
+  * `plans/current/` shows the change. (The gate exists because stale
+  * EXPLAINS.md plans shipped two rounds running when the document was
+  * refreshed by hand.) ID normalization inside `ExplainDump.formatted`
+  * makes the text a function of plan shape, not of id values.
   *
-  * Deliberately NOT extending SparkSpec: the recorded plans are the
+  * Deliberately NOT extending SparkSpec: the in-JVM case dumps the
   * bench session's static shapes (AQE off, 8 shuffle partitions),
   * not the test session's. `ExplainDump.acquire()` hands back an
   * isolated `newSession()` child when the shared test session is
   * active (owned = false) — the shared session's confs are never
   * touched and it is never stopped from here.
   */
-class ExplainsSyncSpec extends AnyFunSuite {
+class ExplainsSyncSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import ExplainsSyncSpec.corpusDiff
+
+  private val Regen =
+    "sbt \"runMain graft.ExplainDump\"   (then: git diff --stat plans/current, and commit)"
+
+  /** Both records as `sbt "runMain graft.ExplainDump"` writes them:
+    * the same main, in a fresh JVM with this JVM's options and class
+    * path, run in a scratch directory. Not in this JVM: expression ids
+    * are JVM-global counters and Spark orders some plan parts by
+    * hashes of them (RewriteDistinctAggregates' distinct groups, so
+    * `agg_distinct`'s Expand), so after the suite's other specs the
+    * same plan can render reordered. A fresh JVM builds every plan
+    * from the same ids every time. */
+  private lazy val regenerated: Path = {
+    val dir = Files.createTempDirectory("explaindump")
+    scratch = Some(dir)
+    val log = dir.resolve("explaindump.log")
+    val jvm = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+    val cmd = Paths.get(sys.props("java.home"), "bin", "java").toString +:
+      jvm.toSeq :++ Seq("-cp", sys.props("java.class.path"), "graft.ExplainDump")
+    val proc = new ProcessBuilder(cmd.asJava).directory(dir.toFile)
+      .redirectErrorStream(true).redirectOutput(log.toFile).start()
+    val done = proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
+    if (!done) proc.destroyForcibly()
+    assert(done && proc.exitValue == 0, s"ExplainDump failed:\n" +
+      Files.readAllLines(log).asScala.takeRight(40).mkString("\n"))
+    dir
+  }
+  private var scratch: Option[Path] = None
+
+  override def afterAll(): Unit = try scratch.foreach { dir =>
+    val paths = Files.walk(dir)
+    try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+    finally paths.close()
+  } finally super.afterAll()
+
+  /** Fails listing every file of `committed` (text by file name) that
+    * differs from `generated`, with the regen command. */
+  private def gate(committed: Map[String, String],
+                   generated: Map[String, String]): Unit = {
+    val problems = corpusDiff(committed, generated)
+    if (problems.nonEmpty)
+      fail(s"${problems.size} plan record(s) differ from the plans " +
+        "regenerated from HEAD:\n" + problems.mkString("\n") +
+        s"\nRegenerate with: $Regen")
+  }
 
   test("EXPLAINS.md matches the plans regenerated from HEAD") {
-    val committedPath = java.nio.file.Paths.get("EXPLAINS.md")
-    assert(java.nio.file.Files.exists(committedPath),
-      "EXPLAINS.md missing — run: sbt \"runMain graft.ExplainDump\"")
-    val committed = java.nio.file.Files.readString(committedPath)
+    val committed = Paths.get("EXPLAINS.md")
+    assert(Files.exists(committed), s"EXPLAINS.md missing — run: $Regen")
+    gate(Map("EXPLAINS.md" -> Files.readString(committed)),
+      Map("EXPLAINS.md" -> Files.readString(regenerated.resolve("EXPLAINS.md"))))
+  }
+
+  test("plans/current matches the plans regenerated from HEAD") {
+    val dir = Paths.get(ExplainDump.CorpusDir)
+    assert(Files.isDirectory(dir), s"${ExplainDump.CorpusDir} missing — run: $Regen")
+    gate(ExplainDump.readCorpus(dir),
+      ExplainDump.readCorpus(regenerated.resolve(ExplainDump.CorpusDir)))
+  }
+
+  test("the stand-in kernels render the same text in two independently " +
+    "built frames") {
+    // a broadcast id and a matrix identity hash differ per frame (and
+    // per JVM); the bloom probe and the centroid argmin render neither
+    val names = Set("dedup_bloom_pipeline", "dedup_semantic_pipeline",
+      "cluster_kmeans_pipeline")
     val (spark, owned) = ExplainDump.acquire()
     spark.sparkContext.setLogLevel("ERROR")
-    val regenerated =
-      try ExplainDump.render(spark, ExplainDump.DefaultSf)
-      finally if (owned) spark.stop()
-    if (committed != regenerated) {
-      val cl = committed.linesIterator.toVector
-      val rl = regenerated.linesIterator.toVector
-      val firstDiff = cl.zip(rl).indexWhere { case (a, b) => a != b } match {
-        case -1 => math.min(cl.size, rl.size) // one is a prefix of the other
-        case i  => i
-      }
-      val ctx = (math.max(0, firstDiff - 2) until
-        math.min(math.max(cl.size, rl.size), firstDiff + 4)).map { i =>
-        f"$i%5d | ${cl.lift(i).getOrElse("<EOF>")}%-60.60s | ${rl.lift(i).getOrElse("<EOF>")}"
-      }.mkString("\n")
-      fail(
-        s"""EXPLAINS.md is stale: a plan or note changed without regenerating the doc.
-           |Refresh it with: sbt "runMain graft.ExplainDump"   (then commit the diff)
-           |First divergence at line $firstDiff (committed | regenerated):
-           |$ctx""".stripMargin)
-    }
+    try {
+      def build() = ExplainDump.pipelines(spark, ExplainDump.DefaultSf)
+        .collect { case (n, mk) if names(n) => n -> ExplainDump.formatted(mk()) }
+      val (a, b) = (build(), build())
+      assert(a.map(_._1).toSet == names)
+      val differing = a.zip(b).collect { case ((n, x), (_, y)) if x != y => n }
+      assert(differing.isEmpty,
+        s"rendered differently in two frames: ${differing.mkString(", ")}")
+    } finally if (owned) spark.stop()
+  }
+
+  test("corpusDiff names every missing, extra and changed file with its " +
+    "first differing line") {
+    val committed = Map("a.txt" -> "x\ny\nz\n", "b.txt" -> "same\n",
+      "gone.txt" -> "old\n")
+    val regenerated = Map("a.txt" -> "x\nY\nz\n", "b.txt" -> "same\n",
+      "new.txt" -> "fresh\n")
+    assert(corpusDiff(committed, regenerated) == Seq(
+      "changed a.txt at line 2: committed `y`, regenerated `Y`",
+      "extra   gone.txt (committed, no longer generated)",
+      "missing new.txt (generated, not committed)"))
+    assert(corpusDiff(regenerated, regenerated).isEmpty)
+    // a file that only grew differs where the shorter one ends
+    assert(corpusDiff(Map("c.txt" -> "x\n"), Map("c.txt" -> "x\ny\n")) ==
+      Seq("changed c.txt at line 2: committed `<EOF>`, regenerated `y`"))
   }
 
   test("normalize masks typed-Dataset closure identities") {
@@ -79,4 +152,31 @@ class ExplainsSyncSpec extends AnyFunSuite {
     assert(a == plan(1, 0, 1).replace("NearDup.scala:0", "NearDup.scala:_"),
       s"unexpected masking:\n$a")
   }
+}
+
+object ExplainsSyncSpec {
+
+  /** One line per file that differs between the committed and the
+    * regenerated records (text by file name), sorted by file name:
+    * a changed file with its first differing line (1-based), a
+    * committed file no longer generated, a generated file not
+    * committed. Empty when the two agree. */
+  def corpusDiff(committed: Map[String, String],
+                 regenerated: Map[String, String]): Seq[String] =
+    (committed.keySet ++ regenerated.keySet).toSeq.sorted.flatMap { f =>
+      (committed.get(f), regenerated.get(f)) match {
+        case (Some(c), Some(r)) if c != r =>
+          val (cl, rl) = (c.linesIterator.toVector, r.linesIterator.toVector)
+          val i = cl.indices.find(i => rl.lift(i) != Some(cl(i)))
+            .getOrElse(cl.size)
+          def at(ls: Vector[String]) = ls.lift(i).getOrElse("<EOF>")
+          Some(s"changed $f at line ${i + 1}: committed `${at(cl)}`, " +
+            s"regenerated `${at(rl)}`")
+        case (Some(_), None) =>
+          Some(s"extra   $f (committed, no longer generated)")
+        case (None, Some(_)) =>
+          Some(s"missing $f (generated, not committed)")
+        case _ => None
+      }
+    }
 }

@@ -170,4 +170,13 @@ class PathologicalCorpusSpec extends SparkSpec {
         "ELSE array(1.0f, 2.0f) END").as("embedding"))
     releasesOnFailure(NearDup.dedupSemantic(spark, poisoned, 2, 2, 0.9))
   }
+
+  test("a failing k-means training job releases kmeansAssign's cache") {
+    // the train runs over the persisted vector relation the assignment
+    // then reads; a failed train must not leave it cached
+    val poisoned = spark.range(8).select(col("id").as("vec_id"),
+      expr("CASE WHEN id >= 0 THEN raise_error('poisoned vector') " +
+        "ELSE array(1.0f, 2.0f) END").as("embedding"))
+    releasesOnFailure(graft.ops.Cluster.kmeansAssign(poisoned, 2, 2))
+  }
 }

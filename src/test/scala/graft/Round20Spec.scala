@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{NearDup, Relational}
+import graft.ops.{NearDup, Relational, SessionIso}
 import org.apache.spark.sql.functions._
 
 /** Round-20 contract pins: the explicit fewKeySaltedJoin fan override
@@ -70,13 +70,13 @@ class Round20Spec extends SparkSpec {
     spark.conf.set(key, "set-before-first-call")
     try {
       NearDup.connectedComponents(pairs).collect()
-      assert(NearDup.ccChildConf(spark, key)
+      assert(SessionIso.childConf(spark, key)
         .contains("set-before-first-call"),
         "the conf copy must carry a parent runtime key onto the child")
       // the footgun: unset on the parent, then reuse the cached child
       spark.conf.unset(key)
       NearDup.connectedComponents(pairs).collect()
-      assert(NearDup.ccChildConf(spark, key).isEmpty,
+      assert(SessionIso.childConf(spark, key).isEmpty,
         "a key unset on the parent survived on the cached child — " +
           "the CC loop would plan under drifted semantics")
     } finally spark.conf.unset(key)
@@ -92,7 +92,7 @@ class Round20Spec extends SparkSpec {
       NearDup.connectedComponents(pairs).collect()
       spark.conf.set(key, "v2")
       NearDup.connectedComponents(pairs).collect()
-      assert(NearDup.ccChildConf(spark, key).contains("v2"))
+      assert(SessionIso.childConf(spark, key).contains("v2"))
     } finally spark.conf.unset(key)
   }
 }

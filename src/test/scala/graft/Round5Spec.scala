@@ -594,9 +594,11 @@ class Round5Spec extends SparkSpec {
     // the probe must appear as the named catalyst expression, not as
     // an opaque ScalaUDF black box (the eager dedupBloom checkpoints
     // its 1-row result, so the assertion targets the lazy plan half)
-    val (bloomPlan, cached) = NearDup.dedupBloomPlan(spark, docs, 0.01)
-    val plan = bloomPlan.queryExecution.executedPlan.toString
-    cached.foreach(_.unpersist(blocking = false))
+    val (d, exact) = NearDup.bloomSides(docs)
+    val plan = NearDup.dedupBloomPlan(d, exact, spark.sparkContext.broadcast(
+        org.apache.spark.util.sketch.BloomFilter.create(100)))
+      .queryExecution.executedPlan.toString
+    Seq(exact, d).foreach(_.unpersist(blocking = false))
     assert(plan.contains("graft_might_contain"),
       s"expected the codegen'd BloomProbe in the plan\n$plan")
     assert(!plan.contains("ScalaUDF") && !plan.contains("UDF("),
