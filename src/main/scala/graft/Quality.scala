@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.VectorFunctions.callValue
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -68,8 +69,11 @@ object Quality {
     val outlier =
       if (base.isNullAt(2)) lit(false)
       else {
+        // the fences are read at run time, not compiled in, so a new
+        // drop reuses the classes of the last one
         val (q1, q3) = (base.getDouble(2), base.getDouble(3))
-        c < lit(q1 - (q3 - q1) * 1.5) || c > lit(q3 + (q3 - q1) * 1.5)
+        c < callValue("outlier_below", q1 - (q3 - q1) * 1.5) ||
+          c > callValue("outlier_above", q3 + (q3 - q1) * 1.5)
       }
     val counts = df.groupBy(dupKeys.map(col): _*)
       .agg(count(lit(1)).as("group_rows"), count_if(outlier).as("outliers"))

@@ -1342,4 +1342,12 @@ object VectorFunctions {
       bf: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.sketch.BloomFilter]): Column =
     column(BloomProbe(expression(h), bf))
+
+  /** `v` (any value `lit` takes) as a value fixed for the call, kept
+    * out of the generated source ([[CallValue]]).
+    */
+  def callValue(label: String, v: Any): Column = {
+    val l = org.apache.spark.sql.catalyst.expressions.Literal(v)
+    column(CallValue(label, l.value, l.dataType))
+  }
 }

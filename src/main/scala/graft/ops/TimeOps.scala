@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Replan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -612,15 +613,24 @@ object TimeOps {
     * transform, idempotent per batchId (the engine analog of the
     * transactional batch insert at etl_2025.py:144-156). Parquet's
     * atomic commit protocol replaces the SQL transaction.
+    *
+    * Each batch is transformed and written on the session that started
+    * the stream (`df.sparkSession`, through [[Replan.onto]]: no job),
+    * not on the clone the query runs on. Spark keys its codegen cache
+    * by the session's class loader as well as the source, and a query
+    * clones its session at every start, so batch writes on the clone
+    * compiled their classes again on every start.
     */
   def foreachBatchSink(df: DataFrame, outDir: String, checkpoint: String)(
       transform: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val owner = df.sparkSession
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        transform(batch)
+        transform(Replan.onto(owner, batch))
           .write.mode("overwrite")
           .parquet(s"$outDir/batch_id=$batchId"): Unit
       }
+  }
 }

@@ -177,4 +177,36 @@ class GraftBridgeContractSpec extends SparkSpec {
     assert(widths == Seq(3), replanDrift(
       s"child exchanges planned at $widths, not the child's 3"))
   }
+
+  test("Replan.onto a foreachBatch batch's starting session: same rows, " +
+      "no job added") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[(Long, String)]
+    stream.addData((1L, "a"), (2L, "b"), (3L, "a"))
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    @volatile var seen: Option[(Boolean, Boolean, Int, Int, Int)] = None
+    val q = stream.toDF().writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (seen.isEmpty) {
+          // the batch frame lives on the clone the query started on
+          val moved = Replan.onto(spark, batch)
+          val handoff = jobsOf(moved.queryExecution.executedPlan)
+          seen = Some((batch.sparkSession ne spark,
+            (moved.sparkSession eq spark) && rows(moved) == rows(batch),
+            handoff, jobsOf(rows(batch)), jobsOf(rows(moved))))
+        }
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    val (onClone, sameRows, handoff, direct, replanned) =
+      seen.getOrElse(fail("no batch ran"))
+    assert(onClone, "the batch frame is no longer on the query's clone")
+    assert(sameRows, replanDrift("the moved batch's rows differ"))
+    assert(handoff == 0 && replanned == direct, replanDrift(
+      s"the moved batch ran $handoff jobs to plan and $replanned to " +
+        s"collect, the batch itself $direct"))
+  }
 }
