@@ -185,10 +185,11 @@ object ExplainDump {
     * that step's result, and the dump passes a driver-side stand-in:
     * an empty filter, or a zero matrix of the declared k = 8 centroids
     * over the fixtures' 64 embedding dimensions. Plan text shows the
-    * filter not at all and the matrix by its shape (`BloomProbe`,
-    * `CentroidArgmin`), so the stand-in renders as the real result
-    * does. Building one runs nothing: each cache a builder marks is
-    * released unused.
+    * filter not at all (`BloomProbe`) and the matrix and its norms by
+    * their labels only (`graft_call_value(centroids)`,
+    * `graft_call_value(centroid_norms)`), so the stand-in renders as
+    * the real result does. Building one runs nothing: each cache a
+    * builder marks is released unused.
     */
   def pipelines(spark: SparkSession,
                 sf: String): Seq[(String, () => DataFrame)] = {

@@ -7,9 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.DataType
 
 /** A value fixed for one pipeline call — `graft_call_value(label)`:
-  * the processing instant an era stamps on every row, or a figure the
+  * the processing instant an era stamps on every row, a figure the
   * call derived from its own data (the 2022 era's quality score, age
-  * fill value and outlier fences).
+  * fill value and outlier fences), or the trained centroid matrix and
+  * its norms that [[VectorFunctions.centroidArgmin]] assigns against.
   *
   * A numeric or timestamp `Literal` is written into the generated
   * Java source, so every call with a new value compiled new classes
@@ -20,8 +21,11 @@ import org.apache.spark.sql.types.DataType
   * compiles to the same source on every call. It is deterministic —
   * every row of a call reads the same value, on every partition — and
   * the plan text shows the label only, so two calls render alike.
-  * `value` is Catalyst's internal form for `dataType` (micros for a
-  * timestamp); build it with [[VectorFunctions.callValue]].
+  * Equality compares the value by content (`ArrayData` included), so
+  * two independent builds over one matrix stay one common
+  * subexpression. `value` is Catalyst's internal form for `dataType`
+  * (micros for a timestamp); build it with
+  * [[VectorFunctions.callValue]].
   */
 case class CallValue(label: String, value: Any, dataType: DataType)
     extends LeafExpression {

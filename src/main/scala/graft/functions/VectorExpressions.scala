@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Columns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -889,95 +889,114 @@ case class DoubleOrderBits(child: Expression)
 
 /** Argmin-over-centroids assignment — the codegen'd core of every
   * coarse quantizer (k-means assignment, IVF cell routing, SemDeDup
-  * blocking). Semantics are EXACTLY the `least(struct(d2, cid)...)`
-  * formulation it replaces ([[graft.ops.Cluster]] r6–r12): for each
-  * centroid `c`, `d2 = |c|² − 2·(v·c)` (the |v|²-free argmin form,
-  * norms and dots summed left-to-right), ties and NaNs resolved the
-  * way Spark's struct ordering resolves them (lower cid on ties; NaN
-  * greater than every real, NaN equal to NaN) — CentroidParitySpec
-  * pins bit-equality against the old expression tree.
+  * blocking, the chained Lloyd train). Semantics are EXACTLY the
+  * `least(struct(d2, cid)...)` formulation it replaces
+  * ([[graft.ops.Cluster]] r6–r12): for each centroid `c`,
+  * `d2 = |c|² − 2·(v·c)` (the |v|²-free argmin form, norms and dots
+  * summed left-to-right), ties and NaNs resolved the way Spark's
+  * struct ordering resolves them (lower cid on ties; NaN greater than
+  * every real, NaN equal to NaN) — CentroidParitySpec pins
+  * bit-equality against the old expression tree.
   *
   * Why it exists: `least` over k struct expressions embeds k separate
   * dot-product loops in the generated code, so plan size grows O(k)
   * and Janino falls off whole-stage codegen in the low hundreds —
   * measured 4× SLOWER at k=64 than k=32 on the same data. Real
   * quantizers need k in the thousands (SemDeDup: 110k cells). This
-  * expression is ONE loop ([[CentroidArgmin.nearest]]) over a packed
-  * `double[]` matrix carried as a codegen reference object, so
-  * generated-code size is O(1) in k and the matrix lives flat in
-  * memory (sequential access, no per-centroid object graph).
+  * expression is ONE loop ([[CentroidArgminCol.nearest]]) over a
+  * packed row-major `double[]` matrix, so generated-code size is O(1)
+  * in k and the matrix lives flat in memory.
   *
-  * The matrix travels plan-side as this node's own flat `double[]`
-  * field — one expression regardless of k, where the
-  * `array(array(lit…))` form would be k·d Literal nodes and die in
-  * analysis long before 110k cells. It is a Column-only kernel
-  * ([[VectorFunctions.centroidArgmin]]); SQL text reaches the same
-  * loop through `graft_argmin_centroid_col`.
+  * The matrix and the per-centroid squared norms are expressions:
+  * k = `norms.numElements()`, d = `mat.numElements() / k`. Two
+  * spellings:
+  *   - `cached = true`: both are constant within a partition. Either
+  *     a per-call [[CallValue]] ([[VectorFunctions.centroidArgmin]]:
+  *     one leaf regardless of k, where `array(array(lit…))` would be
+  *     k·d Literal nodes and die in analysis long before 110k cells),
+  *     or the chained trainer's 1-row cartesian side
+  *     ([[graft.ops.Cluster]] r20: round r+1 reads round r's means in
+  *     the same plan, so no per-round collect fires). Generated and
+  *     interpreted evaluation alike keep a per-task flat image
+  *     ([[CentroidArgminCol.MatCache]]), so nothing is copied per row.
+  *   - `cached = false`: arbitrary columns, the SQL function
+  *     `graft_argmin_centroid_col`. A recycled row buffer (same
+  *     base/offset/length, new bytes) could alias a per-row-varying
+  *     matrix past a storage-keyed cache, so this spelling copies the
+  *     matrix per row — correct for any input, and on no hot path.
   *
-  * Null semantics: null vector → null result; vectors shorter than
-  * `d` dot only their first `n` components (DotProduct's min-length
-  * rule). Returns `struct(d2: double, cid: int)`. The plan text shows
-  * the matrix as its shape, `graft_argmin_centroid(v, k, d)`: an
-  * array renders as its identity hash, which differs between JVMs.
+  * Null semantics: null vector → null result; vectors shorter than d
+  * dot only their first components (DotProduct's min-length rule). A
+  * matrix whose length is not k·d (a ragged seed) yields truncated
+  * offsets: [[VectorFunctions.centroidArgmin]] refuses one, and the
+  * chained trainer detects that shape on the driver after its single
+  * job and fails before anything is returned. Returns
+  * `struct(d2: double, cid: int)`.
   */
-case class CentroidArgmin(child: Expression, cents: Array[Double],
-                          norms: Array[Double], d: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+case class CentroidArgminCol(vec: Expression, mat: Expression,
+                             norms: Expression, cached: Boolean = false)
+    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
 
-  private def k: Int = norms.length
+  override def first: Expression = vec
+  override def second: Expression = mat
+  override def third: Expression = norms
 
   override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) if d >= 1 && cents.length == k * d =>
-        TypeCheckResult.TypeCheckSuccess
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckFailure(
-        s"graft_argmin_centroid: packed matrix length ${cents.length} " +
-          s"is not k*d (k=$k, d=$d)")
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"graft_argmin_centroid requires array<double>, got $t")
+    (vec.dataType, mat.dataType, norms.dataType) match {
+      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _),
+            ArrayType(DoubleType, _)) => TypeCheckResult.TypeCheckSuccess
+      case (v, m, n) => TypeCheckResult.TypeCheckFailure(
+        s"graft_argmin_centroid_col requires three array<double> " +
+          s"arguments, got ($v, $m, $n)")
     }
   override def dataType: DataType = org.apache.spark.sql.types.StructType(
     Seq(org.apache.spark.sql.types.StructField("d2", DoubleType),
       org.apache.spark.sql.types.StructField("cid",
         org.apache.spark.sql.types.IntegerType)))
-  override def prettyName: String = "graft_argmin_centroid"
-  override protected def stringArgs: Iterator[Any] = Iterator(child, k, d)
+  override def prettyName: String = "graft_argmin_centroid_col"
 
-  override protected def nullSafeEval(input: Any): Any =
-    CentroidArgmin.nearest(input.asInstanceOf[ArrayData], cents, norms)
+  // the interpreted twin of the generated code's per-task caches
+  @transient private lazy val matCache = new CentroidArgminCol.MatCache
+  @transient private lazy val normCache = new CentroidArgminCol.MatCache
+
+  override protected def nullSafeEval(vv: Any, mm: Any, nn: Any): Any = {
+    val m = mm.asInstanceOf[ArrayData]
+    val n = nn.asInstanceOf[ArrayData]
+    CentroidArgminCol.nearest(vv.asInstanceOf[ArrayData],
+      if (cached) matCache.get(m) else m.toDoubleArray(),
+      if (cached) normCache.get(n) else n.toDoubleArray())
+  }
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("argminCents", cents, "double[]")
-    val normsRef = ctx.addReferenceObj("argminNorms", norms, "double[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = ${CentroidArgmin.Nearest}($v, $centsRef, $normsRef);")
+    // cached = true: per-task flat-array reuse (the matrix is
+    // partition-constant). cached = false: copy per row — the only
+    // always-correct choice for arbitrary columns.
+    val (matImg, nrmImg): (String => String, String => String) =
+      if (cached) {
+        val cacheCls = classOf[CentroidArgminCol.MatCache].getName
+        val matCache = ctx.addMutableState(cacheCls, "argminMatCache",
+          v => s"$v = new $cacheCls();")
+        val normCache = ctx.addMutableState(cacheCls, "argminNormCache",
+          v => s"$v = new $cacheCls();")
+        (m => s"$matCache.get($m)", nm => s"$normCache.get($nm)")
+      } else {
+        (m => s"$m.toDoubleArray()", nm => s"$nm.toDoubleArray()")
+      }
+    nullSafeCodeGen(ctx, ev, (v, m, nm) =>
+      s"${ev.value} = ${CentroidArgminCol.Nearest}($v, ${matImg(m)}, " +
+        s"${nrmImg(nm)});")
   }
 
-  // case-class equality over Array fields is REFERENCE equality, so
-  // two independently-built assignments over the same matrix would
-  // compare unequal and defeat Catalyst's subexpression elimination
-  // ([[graft.ops.Cluster.kmeansAssign]] builds the expression twice —
-  // once per projected field); compare by content like the
-  // least(struct…) tree this replaced did
-  override def equals(o: Any): Boolean = o match {
-    case that: CentroidArgmin =>
-      child == that.child && d == that.d &&
-        java.util.Arrays.equals(cents, that.cents) &&
-        java.util.Arrays.equals(norms, that.norms)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * (31 * child.hashCode() + d) + java.util.Arrays.hashCode(cents)
-
-  override protected def withNewChildInternal(c: Expression): CentroidArgmin =
-    copy(child = c)
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): CentroidArgminCol =
+    copy(vec = f, mat = s, norms = t)
 }
 
-object CentroidArgmin {
-  /** The argmin loop of [[CentroidArgmin]] and [[CentroidArgminCol]],
-    * interpreted and generated alike (generated code calls it through
-    * [[Nearest]]): `struct(d2, cid)` of the nearest of the k =
+object CentroidArgminCol {
+  /** The one argmin loop, interpreted and generated alike (generated
+    * code calls it through [[Nearest]]): `struct(d2, cid)` of the
+    * nearest of the k =
     * `norms.length` centroids packed row-major in `cents`
     * (d = `cents.length / k`), `d2 = |c|² − 2·(v·c)` with norms and
     * dots summed left-to-right. Ordered as `least(struct…)` orders:
@@ -1011,93 +1030,8 @@ object CentroidArgmin {
 
   /** [[nearest]] as generated code spells the static call. */
   private[functions] val Nearest: String =
-    classOf[CentroidArgmin].getName + ".nearest"
-}
+    classOf[CentroidArgminCol].getName + ".nearest"
 
-/** [[CentroidArgmin]] with the packed centroid matrix and norms read
-  * from COLUMNS instead of plan-time literals — the device that lets a
-  * whole Lloyd iteration chain inside ONE Spark plan
-  * ([[graft.ops.Cluster]] r20 job-count pass): round r+1's assignment
-  * references round r's means as a 1-row cartesian side, so no
-  * per-round driver collect (and no per-round broadcast-exchange job)
-  * ever fires. It runs [[CentroidArgmin]]'s loop
-  * ([[CentroidArgmin.nearest]]), so the two are bit-identical — pinned
-  * by CentroidParitySpec/KmeansChainSpec.
-  *
-  * k = `norms.numElements()`; d = `mat.numElements() / k`. A matrix
-  * whose length is not k·d (a ragged seed) yields truncated offsets —
-  * the chained trainer detects that shape on the driver after the
-  * single train job and fails loudly before anything is returned.
-  *
-  * Hot-path note: in the chained trainer the matrix column is
-  * CONSTANT within a partition (it comes from a 1-row join side), so
-  * the trainer's spelling (`cached = true`, reachable only from the
-  * Column helper) keeps a per-task flat
-  * `double[]` image keyed on the backing storage plus a first/last-
-  * word content fingerprint — the inner loop then runs over primitive
-  * arrays exactly like [[CentroidArgmin]]. The SQL function
-  * `graft_argmin_centroid_col` takes arbitrary columns, where a
-  * recycled row buffer (same base/offset/length, new bytes) could
-  * alias a per-row-varying matrix past a storage-keyed cache; that
-  * spelling therefore copies the matrix per row (`cached = false`) —
-  * correct for any input, and not on any hot path.
-  */
-case class CentroidArgminCol(vec: Expression, mat: Expression,
-                             norms: Expression, cached: Boolean = false)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def first: Expression = vec
-  override def second: Expression = mat
-  override def third: Expression = norms
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (vec.dataType, mat.dataType, norms.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _),
-            ArrayType(DoubleType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (v, m, n) => TypeCheckResult.TypeCheckFailure(
-        s"graft_argmin_centroid_col requires three array<double> " +
-          s"arguments, got ($v, $m, $n)")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(
-    Seq(org.apache.spark.sql.types.StructField("d2", DoubleType),
-      org.apache.spark.sql.types.StructField("cid",
-        org.apache.spark.sql.types.IntegerType)))
-  override def prettyName: String = "graft_argmin_centroid_col"
-
-  override protected def nullSafeEval(vv: Any, mm: Any, nn: Any): Any =
-    // interpreted path (off the hot path — codegen carries the cached
-    // variant): flat copies per call
-    CentroidArgmin.nearest(vv.asInstanceOf[ArrayData],
-      mm.asInstanceOf[ArrayData].toDoubleArray(),
-      nn.asInstanceOf[ArrayData].toDoubleArray())
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // cached = true: per-task flat-array reuse (trainer-only spelling;
-    // the matrix is partition-constant there). cached = false: copy
-    // per row — the only always-correct choice for arbitrary columns.
-    val (matImg, nrmImg): (String => String, String => String) =
-      if (cached) {
-        val cacheCls = classOf[CentroidArgminCol.MatCache].getName
-        val matCache = ctx.addMutableState(cacheCls, "argminMatCache",
-          v => s"$v = new $cacheCls();")
-        val normCache = ctx.addMutableState(cacheCls, "argminNormCache",
-          v => s"$v = new $cacheCls();")
-        (m => s"$matCache.get($m)", nm => s"$normCache.get($nm)")
-      } else {
-        (m => s"$m.toDoubleArray()", nm => s"$nm.toDoubleArray()")
-      }
-    nullSafeCodeGen(ctx, ev, (v, m, nm) =>
-      s"${ev.value} = ${CentroidArgmin.Nearest}($v, ${matImg(m)}, " +
-        s"${nrmImg(nm)});")
-  }
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): CentroidArgminCol =
-    copy(vec = f, mat = s, norms = t)
-}
-
-object CentroidArgminCol {
   /** Per-task flat-array cache for a column that is constant within a
     * partition: keyed on the backing storage (base object + offset +
     * length for UnsafeArrayData, reference identity + length
@@ -1106,10 +1040,11 @@ object CentroidArgminCol {
     * allocation. The fingerprint is insurance against a recycled
     * buffer presenting the old key over new bytes (UnsafeRow buffer
     * reuse); it is cheap, not airtight — which is why only the
-    * trainer's partition-constant spelling uses this cache at all
-    * (the public function copies per row, see [[CentroidArgminCol]]).
-    * One instance per generated-code object — generated classes are
-    * per-task, so no cross-thread sharing.
+    * partition-constant spelling (`cached = true`) uses this cache at
+    * all (the public function copies per row, see
+    * [[CentroidArgminCol]]). One instance per generated-code object or
+    * interpreted expression — both are per-task, so no cross-thread
+    * sharing.
     */
   final class MatCache {
     private var base: AnyRef = null
@@ -1131,7 +1066,7 @@ object CentroidArgminCol {
       flat
     }
     def get(a: ArrayData): Array[Double] = a match {
-      case u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData =>
+      case u: UnsafeArrayData =>
         if ((u.getBaseObject eq base) && u.getBaseOffset == off &&
             u.numElements() == n && fingerprintOk(u)) flat
         else {
@@ -1277,8 +1212,9 @@ object VectorFunctions {
     column(ShingleHash2(expression(toks), n))
 
   /** Argmin centroid assignment as a Column: `struct(d2, cid)` of the
-    * nearest centroid per vector. The matrix rides in the expression
-    * as ONE flat `double[]`, so plan size is independent of k.
+    * nearest centroid per vector. The packed matrix and its norms ride
+    * in the plan as two [[CallValue]]s: plan size is independent of k,
+    * and the generated source of the values.
     */
   def centroidArgmin(vec: Column, centroids: Array[Array[Double]]): Column = {
     require(centroids.nonEmpty, "centroidArgmin: need at least 1 centroid")
@@ -1288,7 +1224,9 @@ object VectorFunctions {
     // norms summed left-to-right per row — the exact fold the
     // least(struct…) formulation used (`c.map(x => x*x).sum`)
     val norms = centroids.map(_.foldLeft(0.0)((acc, x) => acc + x * x))
-    column(CentroidArgmin(expression(vec), centroids.flatten, norms, d))
+    column(CentroidArgminCol(expression(vec),
+      expression(callValue("centroids", centroids.flatten)),
+      expression(callValue("centroid_norms", norms)), cached = true))
   }
 
   /** Column-matrix argmin assignment: `struct(d2, cid)` of the nearest
@@ -1344,10 +1282,14 @@ object VectorFunctions {
     column(BloomProbe(expression(h), bf))
 
   /** `v` (any value `lit` takes) as a value fixed for the call, kept
-    * out of the generated source ([[CallValue]]).
+    * out of the generated source ([[CallValue]]). A `double[]` is
+    * packed flat, where `lit`'s form boxes every element.
     */
-  def callValue(label: String, v: Any): Column = {
-    val l = org.apache.spark.sql.catalyst.expressions.Literal(v)
-    column(CallValue(label, l.value, l.dataType))
-  }
+  def callValue(label: String, v: Any): Column = column(v match {
+    case a: Array[Double] => CallValue(label,
+      UnsafeArrayData.fromPrimitiveArray(a), ArrayType(DoubleType, false))
+    case _ =>
+      val l = org.apache.spark.sql.catalyst.expressions.Literal(v)
+      CallValue(label, l.value, l.dataType)
+  })
 }

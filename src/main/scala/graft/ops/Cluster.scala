@@ -168,7 +168,6 @@ object Cluster {
           s"${dims.sorted.mkString(",")} — all k rows must share the " +
           "embedding dimensionality")
     }
-    val s = e.sparkSession
     // train on HEALTHY vectors only (finite positive norm): a null
     // embedding NPEs the seed collect below, and a NaN/Inf element
     // would propagate through the per-dimension means into every
@@ -303,14 +302,15 @@ object Cluster {
     SessionIso.withChild(caller, Map(
       "spark.sql.shuffle.partitions" -> parts.toString,
       "spark.sql.codegen.useIdInClassName" -> "false")) { s =>
+      // the child re-plans `healthy` (Replan.onto, no job) and reads
+      // the caller's persisted vectors through the shared cache
       chainedCentroidsOn(s,
-        org.apache.spark.sql.graftbridge.InternalRows.rebind(s, healthy),
-        k, iters)
+        org.apache.spark.sql.graftbridge.Replan.onto(s, healthy), k, iters)
     }
   }
 
-  /** The chained train itself, on an already-rebound `healthy` whose
-    * session carries the train-sized conf. */
+  /** The chained train itself, on a `healthy` moved to the session
+    * that carries the train-sized conf. */
   private def chainedCentroidsOn(s: SparkSession, healthy: DataFrame,
                                  k: Int, iters: Int): Array[Array[Double]] = {
     def nl(df: DataFrame): DataFrame = df.hint("shuffle_replicate_nl")
@@ -513,7 +513,7 @@ object Cluster {
     val cents = e.orderBy("vec_id").limit(k).collect()
       .zipWithIndex.map { case (r, i) => i -> r.getSeq[Double](1).toArray }
     val candidates = cents.map { case (cid, c) =>
-      val cLit = array(c.map(lit): _*)
+      val cLit = array(c.toIndexedSeq.map(lit): _*)
       struct(
         aggregate(zip_with(col("v"), cLit, (x, y) => (x - y) * (x - y)),
           lit(0.0), (acc, x) => acc + x).as("d2"),
@@ -527,7 +527,8 @@ object Cluster {
     // passes the scan through untouched, so real-scale plans are
     // unchanged.
     Sources.spreadIfNarrow(e)
-      .select(col("vec_id"), array_min(array(candidates: _*)).as("best"))
+      .select(col("vec_id"),
+        array_min(array(candidates.toIndexedSeq: _*)).as("best"))
       .select(col("vec_id"), col("best.cid").as("cluster_id"),
         col("best.d2").as("dist2"))
   }

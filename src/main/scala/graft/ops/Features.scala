@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.ops.Num.{dsum, fromUnits, lsum, units}
+import graft.ops.Num.{fromUnits, lsum, units}
 
 /** ML feature preparation — the column transforms a training-data
   * pipeline applies just before model ingest: numeric scaling,

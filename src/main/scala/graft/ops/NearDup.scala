@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Columns.{column, expression}
+import org.apache.spark.sql.graftbridge.Replan
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
@@ -1306,21 +1307,17 @@ object NearDup {
     * `newSession()` shares the SparkContext and cached blocks but
     * owns its conf, so the loop's partition override
     * can never race a caller's concurrent queries on the shared
-    * session — the footgun the conf-mutation spelling documented is
-    * deleted rather than documented. Getting the isolation to parity
-    * took three measured fixes (NOTES_r19 #5: the CC-alone A/B over a
-    * 1M-doc ngram pair set, interleaved min-of-3 per arm; its main is
-    * retired, reproducible from commit 53c0810): the naive
-    * `createDataFrame(edges.rdd, schema)` handoff re-encoded every
-    * edge per scan (+0.9 s/call); a stats-less `LogicalRDD` degraded the loop's
-    * broadcast joins to sort-merge (round job 2×); and a fresh
-    * `newSession()` per call re-paid first-analysis warmup
-    * (+0.3–0.5 s). With the internal-row bridge carrying
-    * stats+partitioning and one cached child per caller session, the
-    * final pairing is isolated 1.08–1.14 s vs legacy conf-mutation
-    * 1.10–1.15 s — parity, so the isolation is free. Runtime session
-    * confs (timezone, ANSI flags) are copied onto the child so plan
-    * semantics cannot drift; immutable/static keys are skipped.
+    * session. The edges move to the child, and the labels back, with
+    * `graftbridge.Replan.onto`: a checkpointed frame's analyzed plan
+    * IS its checkpoint's `LogicalRDD`, so the move re-encodes no row,
+    * recomputes no lineage, and keeps the origin stats (the loop's
+    * joins still plan broadcast) and the checkpoint's partitioning
+    * (SCALE.md "Cross-session handoff"). One cached child per caller
+    * session ([[SessionIso]]) spares the first-analysis warmup a fresh
+    * `newSession()` per call re-paid (+0.3–0.5 s, NOTES_r19 #5).
+    * Runtime session confs (timezone, ANSI flags) are copied onto the
+    * child so plan semantics cannot drift; immutable/static keys are
+    * skipped.
     */
   private def ccOnEdges(edges: DataFrame, edgeCount: Long,
                         maxIters: Int): DataFrame = {
@@ -1328,27 +1325,13 @@ object NearDup {
     val parts = ShuffleWidth.forEdges(edgeCount, ShuffleWidth.cap(sess))
     // the isolated-child machinery (cached child, conf copy-AND-UNDO,
     // monitor held for the loop so concurrent CC calls serialize
-    // their phases) lives in [[SessionIso]] since r20 — the chained
-    // k-means trainer shares it. The r20 ADVICE fix rides there: a
-    // key the caller set before an earlier CC call and later unset
-    // on the parent is unset on the reused child too, so the loop
-    // can never plan under drifted semantics.
+    // their phases) lives in [[SessionIso]]; the chained k-means
+    // trainer shares it
     SessionIso.withChild(sess,
       Map("spark.sql.shuffle.partitions" -> parts.toString)) { loopSess =>
-      // internal-row handoff with stats + partitioning preserved —
-      // NOT `createDataFrame(edges.rdd, schema)`: the external-Row
-      // spelling deserializes + re-encodes every edge per scan
-      // (measured +0.9 s per CC call, NOTES_r19 #5), and a stats-less
-      // handoff degrades the loop's broadcast joins to sort-merge
-      // (measured: round job doubled). See the bridge's scaladoc.
-      import org.apache.spark.sql.graftbridge.InternalRows
-      val loopEdges = InternalRows.rebind(loopSess, edges)
-      val out = ccLoop(loopEdges, maxIters)
-      // re-bind the (checkpointed or lazily-planned) result to the
-      // caller's session: the RDD lineage was compiled under the
-      // child's conf, so downstream consumers can join it with
-      // parent-session frames while the loop's sizing stays baked in
-      InternalRows.rebind(sess, out)
+      // the labels are the last round's checkpoint, computed at the
+      // child's width; moved back, they join parent-session frames
+      Replan.onto(sess, ccLoop(Replan.onto(loopSess, edges), maxIters))
     }
   }
 

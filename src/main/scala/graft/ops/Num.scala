@@ -419,23 +419,6 @@ object Num {
     */
   val maxInterior: Long = 2000000L
 
-  /** Sampled percentile brackets for several columns in ONE codegen'd
-    * job: returns per column the (lo, hi) values guaranteed (up to the
-    * ~5σ sample bound; violations are caught by the refine counts, not
-    * trusted) to straddle percentile p. Columns with no non-null
-    * sampled rows are absent from the result. Group-aware variant:
-    * pass `groupCol` to get brackets per (group, column).
-    */
-  def sampleBrackets(df: org.apache.spark.sql.DataFrame,
-                     cols: Seq[String], p: Double,
-                     fraction: Double = 0.02,
-                     seed: Long = 42L): Map[String, (Double, Double)] =
-    sampleBracketsGrouped(df, None, cols, p, fraction, seed)
-      .map { case ((_, c), b) => c -> b }
-
-  /** [[sampleBrackets]] keyed by an integer group column (e.g. the
-    * profile-drift snapshot half): brackets per (group, column).
-    */
   /** Driver-side cap on the bracket sample collect: `fraction·n` rows
     * land on the driver, so at corpus scales the CALLER must shrink
     * `fraction` (≈ 10⁶/n); the guard below turns an OOM-in-waiting
@@ -443,6 +426,14 @@ object Num {
     */
   val maxBracketSample: Int = 4000000
 
+  /** Sampled percentile brackets for several columns in ONE codegen'd
+    * job, keyed by an integer group column (e.g. the profile-drift
+    * snapshot half; `None` puts every row in group 0): per (group,
+    * column), the (lo, hi) values guaranteed (up to the ~5σ sample
+    * bound; violations are caught by the refine counts, not trusted)
+    * to straddle percentile p. Columns with no non-null sampled rows
+    * are absent from the result.
+    */
   def sampleBracketsGrouped(df: org.apache.spark.sql.DataFrame,
                             groupCol: Option[Column], cols: Seq[String],
                             p: Double, fraction: Double = 0.02,
@@ -467,14 +458,14 @@ object Num {
       rows.length > cap && attempts < 4
     }) f /= 64
     require(rows.length <= cap,
-      s"sampleBrackets: ${rows.length} sampled rows exceed the driver " +
+      s"sampleBracketsGrouped: ${rows.length} sampled rows exceed the driver " +
         s"cap $cap even at fraction $f — pass a smaller " +
         s"`fraction` (target ~$cap rows)")
     // getInt on a NULL key silently reads 0 and would merge the null
     // group into group 0 — reject loudly instead (current callers'
     // keys are non-null by construction; this guards future ones)
     require(rows.forall(!_.isNullAt(0)),
-      "sampleBrackets: NULL group key in sample — filter or coalesce " +
+      "sampleBracketsGrouped: NULL group key in sample — filter or coalesce " +
         "the group column before fitting")
     (for {
       g <- rows.map(_.getInt(0)).distinct

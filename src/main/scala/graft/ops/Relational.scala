@@ -388,19 +388,7 @@ object Relational {
     */
   def fewKeySaltedJoin(s: SparkSession, left: DataFrame, right: DataFrame,
                        keys: Seq[String], saltOn: Column,
-                       nKeys: Int): DataFrame =
-    fewKeySaltedJoin(s, left, right, keys, saltOn, nKeys, None)
-
-  /** [[fewKeySaltedJoin]] with an EXPLICIT fan-out (r19 VERDICT ask
-    * #7): cluster callers under dynamic allocation aren't pinned to
-    * the `defaultParallelism` snapshot taken at plan build — pass the
-    * parallelism the job will actually have. `fan <= 1` degrades to
-    * the plain join, same as the derived path. `None` preserves the
-    * derived default exactly.
-    */
-  def fewKeySaltedJoin(s: SparkSession, left: DataFrame, right: DataFrame,
-                       keys: Seq[String], saltOn: Column,
-                       nKeys: Int, fanOverride: Option[Int]): DataFrame = {
+                       nKeys: Int): DataFrame = {
     // the salt column is appended to BOTH inputs: a caller whose
     // relation already carries __salt would get an ambiguous
     // reference (or a silently wrong join key set), so refuse loudly
@@ -408,11 +396,8 @@ object Relational {
       !right.columns.contains("__salt"),
       "fewKeySaltedJoin reserves the column name __salt; rename it on " +
         "the input before joining")
-    val fan = fanOverride match {
-      case Some(f) => math.max(1, f)
-      case None => math.max(1,
-        s.sparkContext.defaultParallelism / math.max(nKeys, 1))
-    }
+    val fan = math.max(1,
+      s.sparkContext.defaultParallelism / math.max(nKeys, 1))
     if (fan == 1) left.join(right, keys)
     else {
       // Width the salted exchange to the cores the salt exists to

@@ -4,8 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** The second `private[sql]` access point (the first is
-  * [[InternalRows]]): a Catalyst expression as a `Column` and back, so
+/** One of graft's three access points to Spark internals, all kept
+  * in this bridge package ([[Replan]] and [[ListenerDrain]] are the
+  * others): a Catalyst expression as a `Column` and back, so
   * graft's Column helpers wrap their kernels directly —
   * `column(Kernel(expression(a)))` — instead of registering a SQL name
   * and resolving it again through `call_function`. Pinned by

@@ -2,7 +2,8 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
 
-/** The third `private[spark]` access point: `SparkContext.listenerBus`.
+/** One of graft's three access points to Spark internals ([[Columns]]
+  * and [[Replan]] are the others): `SparkContext.listenerBus`.
   * Listener events arrive asynchronously, so a counter read right after
   * an action can miss that action's job-start or task-end events, and
   * a late event from an earlier action can land in the next window. A

@@ -1,7 +1,6 @@
 package graft
 
-import graft.ops.{Ann, Sources, TextSim}
-import org.apache.spark.sql.functions._
+import graft.ops.{Ann, TextSim}
 
 /** Recall gates for the on-the-fly ANN query paths (r13 VERDICT #8:
   * the r12 sweep recorded in SCALE.md measured recall but nothing

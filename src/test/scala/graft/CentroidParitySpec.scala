@@ -4,8 +4,9 @@ import graft.functions.VectorFunctions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** CentroidArgmin must be a drop-in for the least(struct(d2, cid)…)
-  * expression tree it replaced: same fold order, same tie-break, same
+/** The centroid argmin (`CentroidArgminCol`, through
+  * `VectorFunctions.centroidArgmin`) must be a drop-in for the
+  * least(struct(d2, cid)…) expression tree it replaced: same fold order, same tie-break, same
   * NaN ordering, same short-vector rule — bit for bit, so every
   * recorded k-means/IVF/SemDeDup artifact reproduces across the swap.
   */
@@ -94,10 +95,48 @@ class CentroidParitySpec extends SparkSpec {
         VectorFunctions.centroidArgmin(col("v"), m.map(_.clone()))
           .getField("d2").as("b"))
     val nodes = df.queryExecution.analyzed.expressions.flatMap(_.collect {
-      case c: graft.functions.CentroidArgmin => c })
+      case c: graft.functions.CentroidArgminCol => c })
     assert(nodes.length == 2)
     assert(nodes(0) == nodes(1), "content equality")
     assert(nodes(0).semanticEquals(nodes(1)), "semantic equality")
+  }
+
+  test("interpreted evaluation reads a per-call matrix without copying " +
+      "it per row") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.functions.{CallValue, CentroidArgminCol}
+    // a matrix that counts its flat copies
+    final class Counted(xs: Array[Double]) extends GenericArrayData(
+        xs.map(x => x: Any)) {
+      var copies = 0
+      override def toDoubleArray(): Array[Double] = {
+        copies += 1; super.toDoubleArray()
+      }
+    }
+    val t = ArrayType(DoubleType, containsNull = false)
+    def run(cached: Boolean): (Seq[Int], Int) = {
+      val mat = new Counted(Array(0.0, 0.0, 4.0, 4.0))
+      val norms = new Counted(Array(0.0, 32.0))
+      val e = CentroidArgminCol(BoundReference(0, t, nullable = true),
+        CallValue("centroids", mat, t), CallValue("centroid_norms", norms, t),
+        cached)
+      val cids = (0 until 64).map { i =>
+        val v = new GenericArrayData(Array[Any](i / 16.0, i / 16.0))
+        e.eval(InternalRow(v)).asInstanceOf[InternalRow].getInt(1)
+      }
+      (cids, mat.copies + norms.copies)
+    }
+    val (cached, cachedCopies) = run(cached = true)
+    val (copied, rowCopies) = run(cached = false)
+    assert(cached == copied, "cached and copying spellings disagree")
+    assert(cached.toSet == Set(0, 1))
+    assert(rowCopies == 128, s"the copying spelling copied $rowCopies times")
+    assert(cachedCopies == 2,
+      s"the cached spelling copied the matrix and norms $cachedCopies " +
+        "times over 64 rows; once each per task is the contract")
   }
 
   test("generated code size is O(1) in k: k=256 plans and evaluates") {

@@ -1,116 +1,178 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{Columns, InternalRows, Replan}
+import org.apache.spark.sql.graftbridge.{Columns, Replan}
 
 /** The upgrade contract for the `private[sql]` bridges the library
-  * ships (r19 VERDICT ask #4): every behavioral promise
-  * `InternalRows.rebind` makes is asserted HERE, against a
-  * checkpointed frame — the exact shape the CC loop hands across
-  * sessions — so a Spark upgrade that silently changes `LogicalRDD` /
-  * `internalCreateDataFrame` semantics fails this suite with a message
-  * pointing at the bridge and its fallback, not as a mystery perf
-  * regression three layers up. (A SIGNATURE change fails the bridge's
-  * compile, which is the loudest possible message.) The last case
-  * pins `Columns`, the expression <-> Column bridge every graft Column
-  * helper builds its kernel through; the `Replan` cases pin the
-  * analyzed-plan handoff the eager pipelines run their child session
-  * on.
+  * ships (r19 VERDICT ask #4), so a Spark upgrade that silently
+  * changes their semantics fails this suite with a message pointing
+  * at the bridge, not as a mystery perf regression three layers up.
+  * (A SIGNATURE change fails the bridge's compile, which is the
+  * loudest possible message.) `Columns` is the expression <-> Column
+  * bridge every graft Column helper builds its kernel through.
+  * `Replan.onto` is the one session hand-off: the eager pipelines run
+  * their child session on it, the stream batches return to their
+  * starting session through it, and the CC loop and the chained
+  * k-means train move CHECKPOINTED and PERSISTED frames to their
+  * child with it — what those two rely on (rows, no recompute,
+  * stats, partitioning, the shared cache) is asserted case by case.
   */
 class GraftBridgeContractSpec extends SparkSpec {
 
-  private def upgrade(what: String): String =
-    s"graftbridge upgrade contract violated: $what — the LogicalRDD/" +
-      "internalCreateDataFrame surface drifted under this Spark " +
-      "version; see InternalRows.scala's scaladoc (fallback: " +
-      "InternalRows.rebindPortable, public API, slower but correct)"
-
-  private def checkpointed = {
+  /** A parquet read on the shared session. */
+  private def parquetFrame = {
     import spark.implicits._
-    Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 2L))
-      .toDF("doc_a", "doc_b").localCheckpoint()
+    val dir = java.nio.file.Files.createTempDirectory("replan").toString
+    Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "a", 3.0), (4L, "c", 4.0))
+      .toDF("id", "k", "v").write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
   }
 
-  test("rebind a checkpointed frame: row parity on the child session") {
-    val src = checkpointed
+  private def replanDrift(what: String): String =
+    s"graftbridge upgrade contract violated: $what — the " +
+      "Dataset.ofRows/analyzed-plan surface drifted under this Spark " +
+      "version; see Replan.scala"
+
+  /** A session with plain, predictable physical planning: AQE off,
+    * 4 shuffle partitions, and broadcast as `broadcast` says. */
+  private def planned(broadcast: Boolean): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    if (!broadcast) s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
+
+  /** The CC loop's edge shape, hash-partitioned by `doc_a` and
+    * checkpointed on `home`. */
+  private def checkpointed(home: SparkSession): DataFrame = {
+    import home.implicits._
+    Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 2L)).toDF("doc_a", "doc_b")
+      .repartition(4, col("doc_a")).localCheckpoint()
+  }
+
+  private def pairs(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
+  test("Replan.onto a checkpointed frame: row parity on the child " +
+      "session") {
+    val src = checkpointed(spark)
     val child = spark.newSession()
-    val re = InternalRows.rebind(child, src)
+    val re = Replan.onto(child, src)
     assert(re.sparkSession eq child)
-    assert(re.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      === src.collect().map(r => (r.getLong(0), r.getLong(1))).sorted,
-      upgrade("rebound rows differ from the source frame"))
+    assert(pairs(re) == pairs(src),
+      replanDrift("moved checkpoint rows differ from the source frame"))
   }
 
-  test("rebind reuses the checkpointed LogicalRDD verbatim: same RDD," +
-      " same attribute ids, partitioning and ordering carried") {
-    val src = checkpointed
-    val srcLr = src.queryExecution.logical match {
-      case lr: LogicalRDD => lr
-      case other => fail(upgrade(
-        s"localCheckpoint no longer plans a LogicalRDD (got " +
-          s"${other.getClass.getSimpleName})"))
+  test("Replan.onto a checkpointed frame re-reads its checkpoint: same " +
+      "RDD, no lineage recompute") {
+    val runs = spark.sparkContext.longAccumulator("upstream rows")
+    val upstream = udf((x: Long) => { runs.add(1); x })
+    val src = spark.range(8).select(upstream(col("id")).as("doc_a"),
+      (col("id") + 1).as("doc_b")).localCheckpoint()
+    val srcRdd = src.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd
+      case other => fail(replanDrift("localCheckpoint no longer plans a " +
+        s"LogicalRDD (got ${other.getClass.getSimpleName})"))
     }
-    val child = spark.newSession()
-    val re = InternalRows.rebind(child, src)
-    re.queryExecution.logical match {
-      case lr: LogicalRDD =>
-        assert(lr.rdd eq srcLr.rdd,
-          upgrade("rebind recomputed the RDD instead of reusing the " +
-            "checkpointed one — the no-recompute promise is broken"))
-        assert(lr.output.map(_.exprId) == srcLr.output.map(_.exprId),
-          upgrade("attribute ids were re-minted; downstream exchange " +
-            "elision on the reused partitioning is broken"))
-        assert(lr.outputPartitioning == srcLr.outputPartitioning,
-          upgrade("outputPartitioning was dropped"))
-        assert(lr.outputOrdering == srcLr.outputOrdering,
-          upgrade("outputOrdering was dropped"))
-      case other => fail(upgrade(
-        s"rebind no longer plans a LogicalRDD (got " +
-          s"${other.getClass.getSimpleName})"))
+    val computed = runs.value
+    assert(computed >= 8L)
+    val re = Replan.onto(spark.newSession(), src)
+    re.queryExecution.analyzed match {
+      case lr: LogicalRDD => assert(lr.rdd eq srcRdd, replanDrift(
+        "the moved frame no longer reads the checkpoint's own RDD"))
+      case other => fail(replanDrift("the moved checkpoint no longer " +
+        s"plans a LogicalRDD (got ${other.getClass.getSimpleName})"))
     }
+    assert(pairs(re) == pairs(src))
+    assert(runs.value == computed, replanDrift(
+      s"re-reading the moved checkpoint ran its lineage again " +
+        s"(${runs.value - computed} upstream rows recomputed)"))
   }
 
-  test("rebind carries the source stats (broadcast decisions survive " +
-      "the handoff)") {
-    val src = checkpointed
-    val srcStats = src.queryExecution.optimizedPlan.stats
-    val child = spark.newSession()
-    val re = InternalRows.rebind(child, src)
-    val reStats = re.queryExecution.optimizedPlan.stats
-    assert(reStats.sizeInBytes == srcStats.sizeInBytes,
-      upgrade(s"sizeInBytes ${reStats.sizeInBytes} != source " +
-        s"${srcStats.sizeInBytes}; a stats-less handoff degrades " +
-        "downstream broadcast joins to sort-merge (measured 2x on " +
-        "the CC round job)"))
-    assert(reStats.rowCount == srcStats.rowCount,
-      upgrade("rowCount was dropped from the handoff stats"))
-  }
-
-  test("rebind of a lazily-planned (non-checkpointed) frame: rows and " +
-      "stats still carried") {
-    import spark.implicits._
-    val src = Seq((1L, 10L), (2L, 20L)).toDF("a", "b")
-      .filter(col("a") > 0)
-    val child = spark.newSession()
-    val re = InternalRows.rebind(child, src)
-    assert(re.collect().map(_.getLong(1)).sorted === Array(10L, 20L),
-      upgrade("rebound rows differ (lazy-plan path)"))
+  test("Replan.onto a checkpointed frame carries its stats: a join on " +
+      "the child plans broadcast, as on the home session") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // the checkpoint is tiny, the other side is 80 MB by estimate: only
+    // the checkpoint's origin stats make it the broadcast side (a
+    // stats-less LogicalRDD estimates defaultSizeInBytes, measured in
+    // r19 to degrade the CC round joins to sort-merge and double them)
+    def broadcasts(df: DataFrame): Boolean = df.join(
+        df.sparkSession.range(10000000L).select(col("id").as("doc_b")),
+        "doc_b").queryExecution.executedPlan
+      .collect { case j: BroadcastHashJoinExec => j }.nonEmpty
+    val home = planned(broadcast = true)
+    val src = checkpointed(home)
+    val child = planned(broadcast = true)
+    val re = Replan.onto(child, src)
+    assert(broadcasts(src), "the home session no longer broadcasts the " +
+      "checkpoint; the case is moot")
     assert(re.queryExecution.optimizedPlan.stats.sizeInBytes ==
       src.queryExecution.optimizedPlan.stats.sizeInBytes,
-      upgrade("stats dropped on the lazy-plan path"))
+      replanDrift("the moved checkpoint lost its origin sizeInBytes"))
+    assert(re.queryExecution.optimizedPlan.stats.rowCount ==
+      src.queryExecution.optimizedPlan.stats.rowCount,
+      replanDrift("the moved checkpoint lost its origin rowCount"))
+    assert(broadcasts(re), replanDrift("a join of the moved checkpoint " +
+      "no longer plans broadcast on the child"))
   }
 
-  test("rebindPortable (the public-API fallback) row-matches rebind") {
-    val src = checkpointed
-    val child = spark.newSession()
-    val a = InternalRows.rebind(child, src).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted
-    val b = InternalRows.rebindPortable(child, src).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(a === b,
-      "rebindPortable diverged from rebind — the documented fallback " +
-        "is not a drop-in")
+  test("Replan.onto a checkpointed frame keeps its partitioning: a join " +
+      "keyed on it adds no exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // sort-merge on doc_a: the checkpoint is hash-partitioned on it,
+    // so only the other side needs an exchange
+    def exchanges(df: DataFrame): Int = df.join(
+        df.sparkSession.range(100).select(col("id").as("doc_a")),
+        "doc_a").queryExecution.executedPlan
+      .collect { case e: ShuffleExchangeExec => e }.length
+    val src = checkpointed(planned(broadcast = false))
+    val re = Replan.onto(planned(broadcast = false), src)
+    assert(exchanges(src) == 1,
+      s"the home session plans ${exchanges(src)} exchanges; the case is moot")
+    assert(exchanges(re) == 1, replanDrift(s"the child plans " +
+      s"${exchanges(re)} exchanges: the checkpoint's partitioning was " +
+      "dropped in the move"))
+  }
+
+  test("Replan.onto keeps the shared cache: the chained k-means train " +
+      "reads the persisted vectors, not parquet") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    // the leaves a plan reads, not descending into a cached relation's
+    // own plan (which the plan info may carry below the scan)
+    def leaves(p: SparkPlanInfo): Seq[String] =
+      if (p.nodeName.startsWith("InMemoryTableScan")) Seq(p.nodeName)
+      else if (p.children.isEmpty) Seq(p.nodeName)
+      else p.children.toSeq.flatMap(leaves)
+    val emb = ops.Sources.table(spark, sf, "embeddings")
+    // the scan-width gate plans the vectors' scan once per session
+    // (`Sources.scanSplits`, no job): take that out of the window
+    ops.Cluster.vectors(emb)
+    org.apache.spark.sql.graftbridge.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ops.Cluster.kmeansCentroids(emb, 8, 3)
+      org.apache.spark.sql.graftbridge.ListenerDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val read = plans.asScala.toSeq.map(leaves)
+    assert(read.nonEmpty && read.forall(_.exists(
+      _.startsWith("InMemoryTableScan"))),
+      s"a train execution read no cached relation: $read")
+    assert(!read.flatten.exists(_.toLowerCase.contains("parquet")),
+      replanDrift(s"the train on its child session scanned parquet " +
+        s"again: $read"))
   }
 
   test("Columns: a graft kernel built through column/expression " +
@@ -131,26 +193,27 @@ class GraftBridgeContractSpec extends SparkSpec {
     assert(got.toSeq == Seq(11.0, 2.0), s"$drift (rows: ${got.toSeq})")
   }
 
-  /** A parquet read on the shared session. */
-  private def parquetFrame = {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("replan").toString
-    Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "a", 3.0), (4L, "c", 4.0))
-      .toDF("id", "k", "v").write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
-  }
-
-  private def replanDrift(what: String): String =
-    s"graftbridge upgrade contract violated: $what — the " +
-      "Dataset.ofRows/analyzed-plan surface drifted under this Spark " +
-      "version; see Replan.scala"
-
   test("Replan.onto: the child's rows equal the parent's") {
     val src = parquetFrame.filter(col("v") > 1.5).select("id", "k")
     val re = Replan.onto(spark.newSession(), src)
     assert(re.collect().map(r => (r.getLong(0), r.getString(1))).sorted
       === src.collect().map(r => (r.getLong(0), r.getString(1))).sorted,
       replanDrift("replanned rows differ from the source frame"))
+  }
+
+  test("Replan.onto a lazily-planned (non-checkpointed) frame: rows and " +
+      "stats still carried") {
+    import spark.implicits._
+    val src = Seq((1L, 10L), (2L, 20L)).toDF("a", "b")
+      .filter(col("a") > 0)
+    val child = spark.newSession()
+    val re = Replan.onto(child, src)
+    assert(re.sparkSession eq child)
+    assert(re.collect().map(_.getLong(1)).sorted === Array(10L, 20L),
+      replanDrift("moved rows differ (lazy-plan path)"))
+    assert(re.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      src.queryExecution.optimizedPlan.stats.sizeInBytes,
+      replanDrift("stats dropped on the lazy-plan path"))
   }
 
   test("Replan.onto runs no job: handoff and planning on the child") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Lloyd-chaining (r19 VERDICT ask #3): the cold-start k-means train
   * compiles the seed + every iteration into ONE Spark job via the

@@ -51,8 +51,8 @@ class ProfileFitSpec extends SparkSpec {
     val fitTag = "-987654.25"
     val li = Sources.table(spark, sf, "lineitem")
       .filter(col("l_quantity") > fitTag.toDouble)
+    @volatile var sawObjectHash = false
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      @volatile var sawObjectHash = false
       override def onSuccess(f: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              d: Long): Unit = {
@@ -92,7 +92,7 @@ class ProfileFitSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(50)
       assert(sentinelSeen, "listener bus never drained to the sentinel")
-      assert(!listener.sawObjectHash,
+      assert(!sawObjectHash,
         "profile fit must stay in codegen'd HashAggregate " +
           "(a TypedImperativeAggregate aboard demotes the whole pass)")
     } finally {

@@ -87,7 +87,7 @@ class RepetitionSubstitutionSpec extends SparkSpec {
       (Seq("a", "b"), 1L),                          // one bigram
       (Seq("a", "a", "a", "a"), 3L),                // (a,a) ×3
       (Seq("x", "y", "x", "y", "x"), 2L),           // (x,y) ×2, (y,x) ×2
-      (Seq("a b".split(" "): _*), 1L),              // sanity
+      ("a b".split(" ").toSeq, 1L),                 // sanity
       // concat-injectivity probe: tokens never contain spaces after a
       // whitespace split, so componentwise equality is the right rule
       (Seq("p", "q", "p", "q", "p", "q"), 3L))

@@ -46,7 +46,6 @@ class SaltedJoinSpec extends SparkSpec {
   }
 
   test("hot-key detection finds exactly the heavy hitters") {
-    import spark.implicits._
     // key 1: 5000 rows; keys 2..100: 10 rows each
     val hot = spark.range(5000).select(lit(1L).as("k"))
     val cold = spark.range(990)
@@ -74,7 +73,6 @@ class SaltedJoinSpec extends SparkSpec {
   }
 
   test("hot-key-aware salting: cold keys are NOT replicated, hot keys are") {
-    import spark.implicits._
     // hot key 1 (6000 rows) + cold keys 2..50 (20 rows each)
     val fact = spark.range(6000).select(lit(1L).as("k"),
         col("id").as("payload"))
@@ -156,6 +154,68 @@ class SaltedJoinSpec extends SparkSpec {
     assert(wW.nonEmpty && wW.forall(_ == 16),
       s"production regime must keep the conf width, got $wW")
     assert(nW == 2, s"exactly the join's two exchanges, got $nW")
+  }
+
+  // the fan comes from the nKeys argument: on local[4], nKeys 1 and 2
+  // derive fans 4 and 2
+  private def fewKeySides = {
+    import spark.implicits._
+    val l = Seq((1L, 10L), (1L, 11L), (2L, 20L), (3L, 30L))
+      .toDF("k", "lv")
+    val r = Seq((1L, 100L), (2L, 200L), (2L, 201L), (4L, 400L))
+      .toDF("k", "rv")
+    (l, r)
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.select("k", "lv", "rv").collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).sorted.toSeq
+
+  test("fewKeySaltedJoin at a derived fan above 1 matches the plain " +
+      "join row for row") {
+    val (l, r) = fewKeySides
+    val cores = spark.sparkContext.defaultParallelism
+    val plain = rowsOf(l.join(r, Seq("k")))
+    for (nKeys <- Seq(1, 2)) {
+      assert(cores / nKeys > 1, s"nKeys=$nKeys must derive a fan above 1")
+      val salted = Relational.fewKeySaltedJoin(spark, l, r, Seq("k"),
+        col("lv"), nKeys)
+      assert(salted.queryExecution.analyzed.toString.contains("__salt"),
+        s"nKeys=$nKeys on $cores cores must plan the salted join")
+      assert(rowsOf(salted) == plain,
+        s"nKeys=$nKeys diverged from the plain join")
+    }
+  }
+
+  test("a derived fan above 1 salts: the right side is replicated fan " +
+      "ways in the plan") {
+    val (l, r) = fewKeySides
+    val fan = spark.sparkContext.defaultParallelism // nKeys = 1
+    val replicas = Relational.fewKeySaltedJoin(spark, l, r, Seq("k"),
+        col("lv"), 1).queryExecution.analyzed.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate =>
+        g.generator.children.head match {
+          case a: org.apache.spark.sql.catalyst.expressions.CreateArray =>
+            a.children.length
+          case other => fail(s"unexpected salt generator input $other")
+        }
+    }
+    assert(replicas == Seq(fan),
+      s"expected one explode over $fan salts, got $replicas")
+  }
+
+  test("a derived fan <= 1 degrades to the plain join (no __salt in " +
+      "the plan)") {
+    val (l, r) = fewKeySides
+    val cores = spark.sparkContext.defaultParallelism
+    val plain = rowsOf(l.join(r, Seq("k")))
+    for (nKeys <- Seq(cores, cores * 8)) {
+      val joined = Relational.fewKeySaltedJoin(spark, l, r, Seq("k"),
+        col("lv"), nKeys)
+      assert(!joined.queryExecution.analyzed.toString.contains("__salt"),
+        s"nKeys=$nKeys >= $cores cores must plan the plain join")
+      assert(rowsOf(joined) == plain)
+    }
   }
 
   test("fewKeySaltedJoin refuses inputs that already carry __salt") {

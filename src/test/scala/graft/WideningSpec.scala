@@ -207,7 +207,7 @@ class WideningSpec extends SparkSpec {
     }
     // top-k really is the top: every kept count >= every dropped count
     val minKept = got.map(_._2).min
-    val dropped = counts.filterKeys(k => !got.exists(_._1 == k)).values
+    val dropped = counts.view.filterKeys(k => !got.exists(_._1 == k)).values
     assert(dropped.forall(_ <= minKept))
   }
 
