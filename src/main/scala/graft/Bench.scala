@@ -6,71 +6,11 @@ object Bench {
     run(session(sfDir), sfDir)
   }
 
-  /** The bench session's SQL confs — also the canonical session
-    * ExplainDump records every plan under (EXPLAINS.md and the
-    * `plans/current/` corpus, through `ExplainDump.formatted`, which
-    * ExplainsSyncSpec regenerates in the test suite). Two deliberate
-    * deviations from the engine defaults (Verify runs the stock
-    * config), both measured at sf0.1 (see README "bench recipe" +
-    * SCALE.md):
-    *  - AQE off: its per-exchange materialize-and-replan cycle buys
-    *    nothing at this scale (fixed partitions, sub-second stages)
-    *    and costs driver latency on every shuffle. Same static plans
-    *    Verify proved correct, minus runtime re-planning.
-    *    58.6 s -> 38.0 s on the full 147-query pass.
-    *  - 8 shuffle partitions: the static equivalent of what AQE
-    *    coalescing picks for a few-MB shuffle (32 tasks of <25k rows
-    *    each pay more per-task launch than they win in parallelism;
-    *    scans still split by file). 38.0 s -> 32.4 s. A production
-    *    deployment sizes this to data volume — that sizing IS the
-    *    knob, not a bench trick. r6 swept the neighborhood under one
-    *    load window: 4 -> 30.5 s, 8 -> 31.1 s, 16 -> 32.5 s; the
-    *    r12 re-sweep under noop forcing (full materialization)
-    *    confirmed the shape: 8 -> 51.4 oracle-subset (min-of-3),
-    *    single passes 16 -> 63.2, 32 -> 81.3. 8 stays.
-    *    r22 re-audit of the static 8 at the sf1 rung (heavy-subset
-    *    min-of-pairs, 32 cores): parts=8 total 196.1 s, parts=32
-    *    144.0 (sim_knn_bucketed_full 1.76x BUT
-    *    dedup_ngram/dedup_survivor 0.44x — their surviving pair sets
-    *    are small and 32-wide shuffles are pure overhead), AQE+32
-    *    154.2 (re-planning latency on every exchange). No
-    *    session-wide constant wins both regimes, so the width fix
-    *    lives in the OPERATOR that needs it, every rule in
-    *    [[graft.ops.ShuffleWidth]] (fewKeySaltedJoin widens its
-    *    salted exchange to max(conf, cores); the CC loop, the k-means
-    *    train and the eager pipelines narrow under the conf) and the
-    *    session default stays 8 — best observed on everything else at BOTH
-    *    rungs, and the committed numbers stay methodology-identical
-    *    across rounds.
-    *  - UTC, like Verify: events.ts loads as TIMESTAMP_NTZ on the µs
-    *    fixtures and the cast to TimestampType is
-    *    session-timezone-dependent — an unpinned bench on a non-UTC
-    *    host would time DIFFERENT row sets than Verify verifies.
-    */
-  val defaultConfs: Seq[(String, String)] = Seq(
-    "spark.sql.shuffle.partitions" -> "8",
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.session.timeZone" -> "UTC")
-
-  /** The bench session — confs, fixture schema check, table warm-up.
-    * [[run]] installs the engine's one [[MetricsListener]] on it and
+  /** The bench session — [[EngineSession]], fixture schema check,
+    * table warm-up. [[run]] installs the engine's one [[MetricsListener]] on it and
     * records every query's [[Layers]] from that listener's counters. */
   def session(sfDir: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Overrides of [[defaultConfs]] (or extra SQL confs) for A/B runs,
-    // semicolon-separated: SPARK_GRAFT_CONF=
-    //   "spark.sql.shuffle.partitions=32;spark.sql.adaptive.enabled=true"
-    val overrides =
-      sys.env.get("SPARK_GRAFT_CONF").toSeq
-        .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-        .map { kv => val i = kv.indexOf('=')
-          (kv.take(i).trim, kv.drop(i + 1).trim) } // "k = v" spacing ok
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-    (defaultConfs ++ overrides).foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession.build(EngineSession.cpus)
     // fail fast with one clear message on fixture schema drift
     // (r10: 51 queries failed individually on a regenerated events.ts)
     graft.ops.Sources.assertFixtureSchemas(spark, sfDir)

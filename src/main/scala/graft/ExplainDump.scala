@@ -13,6 +13,9 @@ import scala.jdk.CollectionConverters._
   *   - EXPLAINS.md, the headline plans SCALE.md's audit table
   *     summarizes, each block the same text as its corpus file.
   *
+  * Every plan is built on the [[EngineSession]], the session Verify
+  * checks and Bench times.
+  *
   * Both are GENERATED, not hand-maintained — stale plans shipped two
   * rounds running when EXPLAINS.md was refreshed by hand — and
   * `ExplainsSyncSpec` regenerates both by running this main in a
@@ -27,35 +30,6 @@ import scala.jdk.CollectionConverters._
   */
 object ExplainDump {
   val DefaultSf = "/root/testdata/sf0.01"
-
-  /** The canonical session the recorded plans come from:
-    * [[Bench.defaultConfs]] as is — AQE off so they are the static
-    * plans the bench executes (and the ones a plan reviewer can reason
-    * about without runtime re-planning in the way), 8 shuffle
-    * partitions (the bench session's sizing), UTC so time expressions
-    * render identically everywhere. Verify still runs stock config.
-    *
-    * Returns (session, owned). If a SparkSession is already active in
-    * this JVM (the shared test session), the canonical confs are
-    * applied to an isolated `newSession()` child — own SQLConf, shared
-    * SparkContext — so the parent's confs are never mutated and
-    * `owned = false` tells the caller it must NOT stop it. A fresh
-    * JVM (`sbt runMain`) builds its own session and owns it.
-    */
-  def acquire(): (SparkSession, Boolean) =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .filterNot(_.sparkContext.isStopped) match {
-      case Some(parent) =>
-        val s = parent.newSession()
-        Bench.defaultConfs.foreach { case (k, v) => s.conf.set(k, v) }
-        (s, false)
-      case None =>
-        val b = SparkSession.builder()
-          .master("local[8]")
-          .config("spark.ui.enabled", "false")
-        Bench.defaultConfs.foreach { case (k, v) => b.config(k, v) }
-        (b.getOrCreate(), true)
-    }
 
   /** Remap every JVM-global counter that leaks into `explain` text to
     * per-plan sequential values in order of first appearance, so the
@@ -234,9 +208,13 @@ object ExplainDump {
     released(planned._1, planned._2)
 
   /** Every plan the records hold, formatted once, by corpus name: the
-    * declared queries, then the [[pipelines]]. */
+    * declared queries, then the [[pipelines]]. `agg_distinct` and
+    * `agg_distinct_bound` build first: their Expand's order follows
+    * hashes of expression ids, so of the ids minted before them. */
   def plans(spark: SparkSession, sf: String): Seq[(String, String)] =
-    (SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    (SparkEntry.queries.toSeq.sortBy { case (name, _) =>
+      (!Set("agg_distinct", "agg_distinct_bound")(name), name)
+    }.map { case (name, fn) =>
       name -> (() => fn(spark, sf))
     } ++ pipelines(spark, sf)).map { case (name, mk) =>
       name -> formatted(mk())
@@ -255,7 +233,7 @@ object ExplainDump {
 
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSf)
-    val (spark, owned) = acquire()
+    val spark = EngineSession.build(8)
     spark.sparkContext.setLogLevel("ERROR")
     val corpus = plans(spark, sf)
     val dir = Paths.get(CorpusDir)
@@ -267,6 +245,6 @@ object ExplainDump {
     }
     Files.writeString(Paths.get("EXPLAINS.md"), render(corpus.toMap, sf))
     println(s"wrote EXPLAINS.md and ${corpus.size} plans under $CorpusDir")
-    if (owned) spark.stop()
+    spark.stop()
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 /** Cluster-deployment registration of the engine's custom Catalyst
   * expressions: set `spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`) and
+  * `withExtensions(new GraftExtensions)` on a session builder) and
   * every function in [[VectorFunctions.functions]] resolves in every
   * session on the cluster — no per-session `registerAll` call needed.
   * Both paths read that one table.

@@ -228,6 +228,9 @@ object Transforms {
       // the whole table, the split accumulator's headroom case
       .agg(count(lit(1)).as("n_orders"),
         lsumWide(col("o_totalprice"), 2).as("total_price"))
+      // rows in status order: hash-aggregate output order otherwise
+      // follows the shuffle width (3 rows, so the sort is free)
+      .orderBy("o_orderstatus")
   }
 
   /** `union_distinct` — U1's distinct-semantics counterpart (SQL

@@ -2,8 +2,6 @@ package graft
 
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Path, Paths}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The plan gate: regenerates both plan records from HEAD — EXPLAINS.md
@@ -15,16 +13,11 @@ import scala.jdk.CollectionConverters._
   * `plans/current/` shows the change. (The gate exists because stale
   * EXPLAINS.md plans shipped two rounds running when the document was
   * refreshed by hand.) ID normalization inside `ExplainDump.formatted`
-  * makes the text a function of plan shape, not of id values.
-  *
-  * Deliberately NOT extending SparkSpec: the in-JVM case dumps the
-  * bench session's static shapes (AQE off, 8 shuffle partitions),
-  * not the test session's. `ExplainDump.acquire()` hands back an
-  * isolated `newSession()` child when the shared test session is
-  * active (owned = false) — the shared session's confs are never
-  * touched and it is never stopped from here.
+  * makes the text a function of plan shape, not of id values. The
+  * in-JVM case builds on the shared test session: it is the same
+  * [[EngineSession]] the dump runs on, at 4 cores.
   */
-class ExplainsSyncSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExplainsSyncSpec extends SparkSpec {
   import ExplainsSyncSpec.corpusDiff
 
   private val Regen =
@@ -93,17 +86,13 @@ class ExplainsSyncSpec extends AnyFunSuite with BeforeAndAfterAll {
     // per JVM); the bloom probe and the centroid argmin render neither
     val names = Set("dedup_bloom_pipeline", "dedup_semantic_pipeline",
       "cluster_kmeans_pipeline")
-    val (spark, owned) = ExplainDump.acquire()
-    spark.sparkContext.setLogLevel("ERROR")
-    try {
-      def build() = ExplainDump.pipelines(spark, ExplainDump.DefaultSf)
-        .collect { case (n, mk) if names(n) => n -> ExplainDump.formatted(mk()) }
-      val (a, b) = (build(), build())
-      assert(a.map(_._1).toSet == names)
-      val differing = a.zip(b).collect { case ((n, x), (_, y)) if x != y => n }
-      assert(differing.isEmpty,
-        s"rendered differently in two frames: ${differing.mkString(", ")}")
-    } finally if (owned) spark.stop()
+    def build() = ExplainDump.pipelines(spark, ExplainDump.DefaultSf)
+      .collect { case (n, mk) if names(n) => n -> ExplainDump.formatted(mk()) }
+    val (a, b) = (build(), build())
+    assert(a.map(_._1).toSet == names)
+    val differing = a.zip(b).collect { case ((n, x), (_, y)) if x != y => n }
+    assert(differing.isEmpty,
+      s"rendered differently in two frames: ${differing.mkString(", ")}")
   }
 
   test("corpusDiff names every missing, extra and changed file with its " +

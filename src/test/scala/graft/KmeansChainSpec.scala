@@ -87,15 +87,11 @@ class KmeansChainSpec extends SparkSpec {
       "per-exchange jobs for chained and legacy alike)") {
     // warm the relation cache first so table-listing jobs don't count
     embeddings.count()
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val jobs = jobsOf(ops.Cluster.kmeansCentroids(embeddings, 8, 3))
-      assert(jobs == 1,
-        s"chained train fired $jobs jobs, expected 1 — a broadcast " +
-          "or subquery crept into the chain (the shuffle_replicate_nl" +
-          " cartesian must keep the matrix side in-job)")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    val jobs = jobsOf(ops.Cluster.kmeansCentroids(embeddings, 8, 3))
+    assert(jobs == 1,
+      s"chained train fired $jobs jobs, expected 1 — a broadcast " +
+        "or subquery crept into the chain (the shuffle_replicate_nl" +
+        " cartesian must keep the matrix side in-job)")
   }
 
   test("empty healthy corpus fails loudly on the chained path") {

@@ -144,10 +144,6 @@ class PipelinesSpec extends SparkSpec {
     }
   }
 
-  /** [[jobsOf]] at the bench's settings (AQE off). */
-  private def benchJobsOf(body: => Any): Int =
-    withConfs(Bench.defaultConfs: _*)(jobsOf(body))
-
   /** The packed rows `curationOver` wrote to `dir`, sorted. */
   private def packed(dir: String): Seq[(Long, String, Long)] =
     spark.read.parquet(dir).select("doc_id", "text", "bin_id").collect()
@@ -155,12 +151,12 @@ class PipelinesSpec extends SparkSpec {
 
   test("each era and curationOver count what they write: job budget") {
     val in = writeCsv(tmp("pj"), "users.csv", goodRows ++ badRows)
-    assert(benchJobsOf(Pipelines.basic2016(spark, in, tmp("pja"))) == 1)
-    assert(benchJobsOf(Pipelines.validated2018(spark, in, tmp("pjb"),
+    assert(jobsOf(Pipelines.basic2016(spark, in, tmp("pja"))) == 1)
+    assert(jobsOf(Pipelines.validated2018(spark, in, tmp("pjb"),
       tmp("pjr"))) == 2)
-    assert(benchJobsOf(Pipelines.quality2022(spark, in, tmp("pjq"))) == 3)
+    assert(jobsOf(Pipelines.quality2022(spark, in, tmp("pjq"))) == 3)
     val docs = graft.ops.Sources.table(spark, sf, "documents")
-    val n = benchJobsOf(Pipelines.curationOver(spark, docs, None, tmp("pjc")))
+    val n = jobsOf(Pipelines.curationOver(spark, docs, None, tmp("pjc")))
     assert(n <= 11, s"curationOver ran $n jobs")
   }
 

@@ -4,18 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites. One session per JVM —
-  * scalatest suites reuse it via getOrCreate, so the fixture cost is
-  * paid once.
+/** Shared local SparkSession for all suites: the [[EngineSession]]
+  * Verify checks and Bench times, at 4 cores, so the tests run the
+  * same static plans (AQE off, 8 shuffle partitions). One session per
+  * JVM — scalatest suites reuse it via getOrCreate, so the fixture
+  * cost is paid once.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val spark: SparkSession = EngineSession.build(4)
 
   /** Smallest scale factor — fast enough for unit tests. */
   val sf = "/root/testdata/sf0.001"
