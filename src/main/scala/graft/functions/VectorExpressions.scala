@@ -406,8 +406,8 @@ object BigramTopCount {
     java.util.Arrays.sort(idx, new java.util.Comparator[Integer] {
       override def compare(x: Integer, y: Integer): Int = {
         val xi = x.intValue(); val yi = y.intValue()
-        val c = w(xi).compareTo(w(yi))
-        if (c != 0) c else w(xi + 1).compareTo(w(yi + 1))
+        val c = w(xi).binaryCompare(w(yi))
+        if (c != 0) c else w(xi + 1).binaryCompare(w(yi + 1))
       }
     })
     var best = 1L
@@ -517,7 +517,7 @@ private[functions] object TokenRuns {
       new java.util.Comparator[org.apache.spark.unsafe.types.UTF8String] {
         override def compare(
             x: org.apache.spark.unsafe.types.UTF8String,
-            y: org.apache.spark.unsafe.types.UTF8String): Int = x.compareTo(y)
+            y: org.apache.spark.unsafe.types.UTF8String): Int = x.binaryCompare(y)
       })
     var run = 1L
     var i = 1

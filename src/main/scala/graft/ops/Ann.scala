@@ -314,7 +314,7 @@ object Ann {
     // 0/0, the centroid sort order would be NaN-unspecified and every
     // cos_sim null — refuse loudly instead (matches simSearch)
     require(qNorm > 0, "ivfIndexProbe needs a non-zero query vector")
-    val probed = s.read.parquet(s"$indexDir/centroids").collect()
+    val probed = Sources.parquet(s, s"$indexDir/centroids").collect()
       .map { r =>
         val c = r.getSeq[Double](r.fieldIndex("centroid"))
         val cos = c.zip(queryVec).map { case (a, b) => a * b }.sum /
@@ -327,7 +327,7 @@ object Ann {
       .sortBy { case (id, cos) => (-cos, id) }
       .take(nProbe).map(_._1)
     val qLit = array(queryVec.map(lit): _*)
-    s.read.parquet(s"$indexDir/lists")
+    Sources.parquet(s, s"$indexDir/lists")
       .filter(col("list_id").isin(probed.toIndexedSeq: _*))
       .select(col("vec_id"),
         round(nd(col("v"), qLit) /

@@ -595,7 +595,7 @@ object NearDup {
                         newDocs: DataFrame, numHashes: Int = 64,
                         bands: Int = 16,
                         minSim: Double = 0.4): DataFrame = {
-    val meta = s.read.parquet(s"$path/meta")
+    val meta = Sources.parquet(s, s"$path/meta")
       .select("num_hashes", "bands").collect()(0)
     require(meta.getInt(0) == numHashes && meta.getInt(1) == bands,
       s"index at $path was written with numHashes=${meta.getInt(0)}, " +
@@ -610,10 +610,10 @@ object NearDup {
     // the exact per-batch cost this index exists to amortize away
     val cand = bandCandidates(
       broadcast(bandRows(Xxhash64, newSigs, numHashes, bands)),
-      s.read.parquet(s"$path/bands"), "probe_doc", "corpus_doc",
+      Sources.parquet(s, s"$path/bands"), "probe_doc", "corpus_doc",
       ordered = false)
     materialize(estJaccard(agreement(cand, newSigs,
-      s.read.parquet(s"$path/sigs"), "probe_doc", "corpus_doc", numHashes,
+      Sources.parquet(s, s"$path/sigs"), "probe_doc", "corpus_doc", numHashes,
       minSim), numHashes), newSigs)
   }
 

@@ -147,7 +147,7 @@ object Sinks {
         .map(_.group(1).toLong)
         .getOrElse(throw new IllegalStateException(
           s"$dir: unparseable $manifestName"))
-    val df = spark.read.parquet(dir)
+    val df = Sources.parquet(spark, dir)
     val actual = df.count()
     require(actual == declared,
       s"$dir: manifest declares $declared rows but parquet holds $actual")
@@ -194,7 +194,7 @@ object Sinks {
     val bytes = parts.map(_.getLen).sum
     val nOut = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
       .toInt
-    spark.read.parquet(inDir)
+    Sources.parquet(spark, inDir)
       .repartition(nOut)
       .write.mode("overwrite").parquet(outDir)
     val outParts = fs.listStatus(new org.apache.hadoop.fs.Path(outDir))

@@ -1,20 +1,33 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, SubqueryAlias, Union}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{expr, input_file_name}
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Table catalog + readers for the engine.
   *
-  * Schemas are declared explicitly (never inferred at scale — schema
-  * inference forces an extra pass over 100 TB of input). The reference
-  * infers CSV schemas at runtime (`src/etl_2016.py:4-10`,
-  * `src/etl_2020.py:79-84`); here every source is a typed, pruned,
-  * pushdown-capable Parquet/CSV scan.
+  * No source is opened with a Spark inference job. CSV and JSON take
+  * declared schemas (inferring them costs a full extra pass over the
+  * input). Parquet is self-describing: [[parquet]] reads the schema
+  * from one footer on the driver, after a listing that stops at the
+  * first data file, so a 100 TB table is never listed twice before
+  * its scan lists it. Those are the bytes Spark's own inference reads,
+  * without the one-task job it runs to read them. The declared
+  * fixture schemas below are the contract the loaded ones are checked
+  * against ([[assertFixtureSchemas]]). The reference infers CSV
+  * schemas at runtime (`src/etl_2016.py:4-10`, `src/etl_2020.py:79-84`);
+  * here every source is a typed, pruned, pushdown-capable Parquet/CSV
+  * scan.
   */
 object Sources {
 
@@ -92,7 +105,7 @@ object Sources {
     StructField("label", IntegerType)))
 
   /** Parquet scan of one named table under a scale-factor directory.
-    * Plain `spark.read.parquet` so Catalyst gets predicate pushdown,
+    * A [[parquet]] read, so Catalyst gets predicate pushdown,
     * column pruning and partition pruning for free; works unchanged
     * against s3a:// URIs on a real cluster (`src/etl_2025.py:53-84`'s
     * S3 download step disappears into the DataSource layer).
@@ -129,7 +142,7 @@ object Sources {
     tableCache.computeIfAbsent((spark, sfDir, name), _ =>
       if (name == "events") {
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val raw = spark.read.parquet(s"$sfDir/events.parquet")
+        val raw = parquet(spark, s"$sfDir/events.parquet")
         raw.schema("ts").dataType match {
           case LongType => // TIMESTAMP(NANOS) file loaded as ns-since-epoch
             raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -137,8 +150,88 @@ object Sources {
             raw.withColumn("ts", expr("cast(ts as timestamp)"))
           case _ => raw // already µs TimestampType
         }
-      } else spark.read.parquet(s"$sfDir/$name.parquet"))
+      } else parquet(spark, s"$sfDir/$name.parquet"))
   }
+
+  /** `spark.read.parquet(path)` with the schema Spark's non-merging
+    * inference would find, read without a Spark job.
+    *
+    * Spark infers a parquet schema in a one-task job
+    * (`SchemaMergeUtils.mergeSchemasInParallel`) that reads a single
+    * footer: `_common_metadata`, else `_metadata`, else the first data
+    * file in path order. This reader finds that same file with a
+    * listing that stops there (descending into the first partition
+    * directory when the data sits under `key=value/` dirs), reads its
+    * footer on the driver, converts it with Spark's own
+    * `readSchemaFromFooter` under the session's conf, and hands the
+    * result to `spark.read.schema`. Partition columns are still
+    * discovered by the scan's own listing and come last, as inferred.
+    * Summary files are looked for at the root only, where Parquet's
+    * committer writes them.
+    *
+    * Whatever it cannot settle on the driver falls back to the plain
+    * read, so Spark decides it exactly as before: a missing path or
+    * glob, a directory without a data file (Spark's
+    * `UNABLE_TO_INFER_SCHEMA`), an unreadable footer, and sessions
+    * that merge schemas (`spark.sql.parquet.mergeSchema`), which must
+    * read every footer.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) None
+    else {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      schemaFile(root.getFileSystem(hadoopConf), root).flatMap { f =>
+        try {
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, hadoopConf),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          Some(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+            new ParquetToSparkSchemaConverter(conf)))
+        } catch { case NonFatal(_) => None }
+      }
+    }
+  }
+
+  // the one file Spark's non-merging inference reads under `root`
+  private def schemaFile(fs: FileSystem, root: Path): Option[FileStatus] = {
+    val status =
+      try Some(fs.getFileStatus(root))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.flatMap { st =>
+      if (!st.isDirectory) Some(st)
+      else {
+        val top = fs.listStatus(root)
+        Seq("_common_metadata", "_metadata").iterator
+          .flatMap(n => top.find(_.getPath.getName == n))
+          .nextOption()
+          .orElse(firstDataFile(fs, top))
+      }
+    }
+  }
+
+  // Spark picks the first leaf by full path string: a directory's
+  // leaves sort as `name/...`, hence the `/` in the key. The iterator
+  // is lazy, so listing stops at the first file found.
+  private def firstDataFile(fs: FileSystem,
+                            entries: Array[FileStatus]): Option[FileStatus] =
+    entries.filterNot(e => hiddenName(e.getPath.getName))
+      .sortBy(e => e.getPath.getName + (if (e.isDirectory) "/" else ""))
+      .iterator
+      .flatMap(e =>
+        if (e.isDirectory) firstDataFile(fs, fs.listStatus(e.getPath))
+        else Some(e))
+      .nextOption()
+
+  // the names Spark's file listing skips (HadoopFSUtils.shouldFilterOutPathName)
+  private def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
 
   /** All declared fixture table schemas, keyed by table name — the
     * contract [[assertFixtureSchemas]] and SchemaContractSpec both
@@ -204,7 +297,7 @@ object Sources {
   /** How many partitions the physical scan of `df` produces. */
   def scanSplits(df: DataFrame): Int =
     splitCache.computeIfAbsent((df.sparkSession, df.semanticHash()),
-      _ => df.rdd.getNumPartitions)
+      _ => df.queryExecution.toRdd.getNumPartitions)
 
   /** Round-robin-spread `df` across the session's cores ONLY when its
     * backing scan has fewer splits than cores.

@@ -156,9 +156,6 @@ class GraftBridgeContractSpec extends SparkSpec {
       else if (p.children.isEmpty) Seq(p.nodeName)
       else p.children.toSeq.flatMap(leaves)
     val emb = ops.Sources.table(spark, sf, "embeddings")
-    // the scan-width gate plans the vectors' scan once per session
-    // (`Sources.scanSplits`, no job): take that out of the window
-    ops.Cluster.vectors(emb)
     org.apache.spark.sql.graftbridge.ListenerDrain.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {

@@ -85,8 +85,6 @@ class KmeansChainSpec extends SparkSpec {
   test("chained cold-start train runs exactly ONE job (AQE off — " +
       "with AQE on, stage materialization splits ONE query into " +
       "per-exchange jobs for chained and legacy alike)") {
-    // warm the relation cache first so table-listing jobs don't count
-    embeddings.count()
     val jobs = jobsOf(ops.Cluster.kmeansCentroids(embeddings, 8, 3))
     assert(jobs == 1,
       s"chained train fired $jobs jobs, expected 1 — a broadcast " +

@@ -16,8 +16,6 @@ class PlanAuditSpec extends SparkSpec {
   test("building every ExplainDump pipeline runs no job and leaves no " +
     "cached plan") {
     def cachedPlans: Int = org.apache.spark.sql.grafttest.CachedPlans.count(spark)
-    // the tables' one-time schema reads stay outside the windows
-    Seq("documents", "embeddings").foreach(graft.ops.Sources.table(spark, sf, _))
     ExplainDump.pipelines(spark, sf).foreach { case (name, mk) =>
       val before = cachedPlans
       assert(jobsOf(mk()) == 0, s"$name ran jobs while building its plan")

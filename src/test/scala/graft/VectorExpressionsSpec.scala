@@ -47,4 +47,21 @@ class VectorExpressionsSpec extends SparkSpec {
       .filter(abs(col("c") - 1.0) > 1e-9).count()
     assert(bad == 0)
   }
+
+  test("src/main orders UTF8String with binaryCompare, never compareTo") {
+    // Spark's UTF8String.compareTo checks SPARK_TESTING (a getenv) on
+    // every call and throws when it is set; binaryCompare is the same
+    // order without the check. Flags any `.compareTo(` in a source
+    // that handles UTF8String.
+    val offenders = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .filter { f =>
+        val src = java.nio.file.Files.readString(f)
+        src.contains("UTF8String") && src.contains(".compareTo(")
+      }.map(_.getFileName.toString)
+    assert(offenders.isEmpty,
+      s"compareTo in UTF8String sources: ${offenders.mkString(", ")}")
+  }
 }
